@@ -72,9 +72,9 @@ def _warm_python_workers(spark, cores: int):
     )
 
 
-def _extract_tf_job(spark, docs, n_salts: int, full: bool, repeats: int = 1):
-    """The measured job: parse every page, tokenize, salted corpus TF +
-    per-domain top-k; returns (n_docs, wall_sec).
+def _extract_tf_job(spark, docs, full: bool, repeats: int = 1):
+    """The measured job: parse every page, tokenize, corpus TF top-50;
+    returns (n_docs, wall_sec).
 
     ``repeats>1`` times the job that many times and keeps the BEST wall —
     this sandbox shares physical CPUs with other tenants and single runs at
@@ -95,7 +95,7 @@ def _extract_tf_job(spark, docs, n_salts: int, full: bool, repeats: int = 1):
         # `full` parses + materializes every page_data field; both paths
         # feed TF via the space-joined tokens_str (literal split, codegen)
         ex = extract_pages(d) if full else extract_token_strings(d)
-        tfops.corpus_tf(ex, n_salts=n_salts).limit(50).collect()
+        tfops.corpus_tf(ex).limit(50).collect()
 
     # warm the pipeline *shape* (codegen compile, broadcasts, AQE paths)
     # on a slice so the timed window measures throughput, not JIT
@@ -309,10 +309,8 @@ def main() -> None:
 
     # headline: full extraction+TF throughput
     docs = _replicated_docs(spark, SF_DIR, REPS).repartition(CPUS * 4)
-    n, walls_full = _extract_tf_job(spark, docs, n_salts=CPUS, full=True,
-                                    repeats=3)
-    _, walls_text = _extract_tf_job(spark, docs, n_salts=CPUS, full=False,
-                                    repeats=3)
+    n, walls_full = _extract_tf_job(spark, docs, full=True, repeats=3)
+    _, walls_text = _extract_tf_job(spark, docs, full=False, repeats=3)
     wall_full, wall_text = min(walls_full), min(walls_text)
     med_full = statistics.median(walls_full)
     med_text = statistics.median(walls_text)

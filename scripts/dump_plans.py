@@ -52,21 +52,20 @@ def main() -> None:
             extract_pages(docs),
         ),
         (
-            "Corpus TF (salted two-stage)",
+            "Corpus TF (one shuffle)",
             "ArrowEvalPython ships ONE tokens_str per page; JVM literal "
-            "split+explode; partial HashAggregate on (word, salt) before the "
-            "only shuffle, tiny final combine after. Salt spreads Zipf-head "
-            "words across reducers.",
-            tfops.corpus_tf(extract_token_strings(docs), n_salts=8),
+            "split+explode; partial HashAggregate (partial_count) before the "
+            "only shuffle, final count after. The map-side partial bounds a "
+            "Zipf-head word's reducer fan-in to the number of map tasks.",
+            tfops.corpus_tf(extract_token_strings(docs)),
         ),
         (
-            "Per-domain top-k keywords (window after salted agg)",
-            "Window partition key (domain) is applied AFTER aggregation has "
-            "collapsed rows to |domain × word|, so the skewed raw token "
-            "stream never hits the window sort.",
-            tfops.domain_top_keywords(
-                extract_pages(docs, tokens=True), k=10, n_salts=8
-            ),
+            "Per-domain top-k keywords (partial window limit)",
+            "parse_url runs once per page, in the Project below the explode; "
+            "one partial+final count on (domain, word); a partial "
+            "WindowGroupLimit below the domain exchange sends at most k rows "
+            "per map partition of a skewed domain into the window sort.",
+            tfops.domain_top_keywords(extract_pages(docs, tokens=True), k=10),
         ),
         (
             "Pricing summary (q12): pushdown + pruning",

@@ -91,8 +91,7 @@ def soak_level(sf_dir: str, timeout: float, repeats: int,
 
     # extraction headline (extract+TF, REPS-replicated pages)
     docs = bench._replicated_docs(spark, sf_dir, extract_reps).repartition(128)
-    n, walls = bench._extract_tf_job(spark, docs, n_salts=32, full=True,
-                                     repeats=repeats)
+    n, walls = bench._extract_tf_job(spark, docs, full=True, repeats=repeats)
     out["extract_tf_full"] = {"wall": min(walls), "docs": n,
                               "docs_per_sec": round(n / min(walls), 1)}
     print(f"  extract_tf_full: {min(walls):.2f}s over {n} docs "

@@ -82,10 +82,10 @@ def main() -> None:
                 ex.write.mode("overwrite").parquet(args.out)
                 top = []
             else:
-                top = tfops.corpus_tf(ex, n_salts=cores).limit(20).collect()
+                top = tfops.corpus_tf(ex).limit(20).collect()
         else:
             ex = extract_token_strings(docs)
-            top = tfops.corpus_tf(ex, n_salts=cores).limit(20).collect()
+            top = tfops.corpus_tf(ex).limit(20).collect()
         wall = min(wall, time.time() - t0)
 
     print(

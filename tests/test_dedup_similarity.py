@@ -1013,6 +1013,22 @@ def test_semdedup_auto_k(spark):
     assert out[3] is True and out[100] is False
 
 
+def test_semdedup_rejects_unknown_k(spark):
+    """A k that is neither an int nor 'auto' fails fast, naming the value,
+    before any Spark job runs."""
+    import re
+
+    from tribeca_insights_spark.operators.semdedup import semdedup
+
+    emb = spark.createDataFrame([(0, [1.0, 0.0])], ["vec_id", "embedding"])
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup())
+    for bad in ("Auto", 8.0, None, True):
+        with pytest.raises(TypeError, match=re.escape(repr(bad))):
+            semdedup(emb, k=bad)
+    assert set(tracker.getJobIdsForGroup()) == jobs_before
+
+
 def test_survivor_weights_exact_inverse_counts(spark):
     from pyspark.sql import Row
 

@@ -54,15 +54,46 @@ def test_stopword_dim_broadcasts(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_corpus_tf_two_stage_salted(spark, docs):
-    """Salted TF = partial agg on (word, salt) + final agg on word: at
-    least three HashAggregate nodes (partial+final × two stages)."""
+def test_corpus_tf_one_shuffle(spark, docs):
+    """Corpus TF shuffles once, on word, with the map-side partial count
+    directly beneath the exchange — no salt round, no SortAggregate."""
     from tribeca_insights_spark.operators.extract import extract_token_strings
     from tribeca_insights_spark.operators import tf as tfops
 
-    p = _plan(tfops.corpus_tf(extract_token_strings(docs), n_salts=8))
-    assert p.count("HashAggregate") >= 3
+    p = _plan(tfops.corpus_tf(extract_token_strings(docs)))
+    lines = p.splitlines()
+    ex = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(" in ln]
+    assert len(ex) == 1 and "hashpartitioning(word#" in lines[ex[0]]
+    assert "partial_count" in lines[ex[0] + 1]
     assert "SortAggregate" not in p
+
+
+def test_domain_top_keywords_parse_once_one_shuffle_partial_limit(spark, docs):
+    """On the executed (AQE final) plan: the domain is parsed once per page
+    (a Project below the Generate), (domain, word) is counted with one
+    shuffle, and a partial WindowGroupLimit below the domain exchange bounds
+    a hot domain's rows into the window — the skew bound salting gave."""
+    import re
+
+    from tribeca_insights_spark.operators.extract import extract_token_strings
+    from tribeca_insights_spark.operators import tf as tfops
+
+    q = tfops.domain_top_keywords(extract_token_strings(docs), k=3)
+    q.collect()
+    final = _plan(q).split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    gen = [i for i, ln in enumerate(lines) if "Generate explode" in ln]
+    parse = [i for i, ln in enumerate(lines) if "ParseUrl" in ln]
+    assert len(gen) == 1 and parse
+    assert all(i > gen[0] and "Project [" in lines[i] for i in parse)
+    agg = [i for i, ln in enumerate(lines)
+           if re.search(r"Exchange hashpartitioning\(domain#\d+, word#", ln)]
+    assert len(agg) == 1 and "partial_count" in lines[agg[0] + 1]
+    win = [i for i, ln in enumerate(lines)
+           if re.search(r"Exchange hashpartitioning\(domain#\d+, \d+\)", ln)]
+    assert len(win) == 1
+    assert "WindowGroupLimit" in lines[win[0] + 1]
+    assert lines[win[0] + 1].rstrip().endswith("Partial")
 
 
 def test_resume_anti_join_is_hash_based(spark, tmp_path, docs):

@@ -62,15 +62,13 @@ def test_corpus_tf_partial_aggregation(spark):
     from tribeca_insights_spark.operators.tf import corpus_tf
 
     docs = corpus_df(spark, 8)
-    p = plan_str(corpus_tf(extract_token_strings(docs), n_salts=4))
-    # partial (map-side) HashAggregate before the exchange, final after;
-    # salted two-stage adds a second (word,salt)→word combine
-    assert p.count("HashAggregate") >= 4
-    first_agg = p.index("HashAggregate")
-    first_exchange = p.index("Exchange")
-    # formatted mode lists operators leaf-first: the scan-side partial
-    # aggregate must appear before the first shuffle in the tree walk
-    assert "partial_count" in p or "partial_sum" in p
+    p = plan_str(corpus_tf(extract_token_strings(docs)), "simple")
+    # one shuffle, on word, fed by the map-side partial aggregate: the
+    # tree string prints an operator's child on the next line
+    lines = p.splitlines()
+    ex = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(" in ln]
+    assert len(ex) == 1 and "hashpartitioning(word#" in lines[ex[0]]
+    assert "partial_count" in lines[ex[0] + 1]
 
 
 def test_native_tokenizer_stays_in_codegen(spark):

@@ -149,13 +149,11 @@ def cmd_report(args) -> int:
     # everything O(n_docs) / O(n_domains) is written executor-side as a
     # distributed CSV directory — the driver never holds those rows.
     bounded = {
-        "corpus_tf": tfops.corpus_tf(ex, n_salts=args.salts).limit(args.top),
+        "corpus_tf": tfops.corpus_tf(ex).limit(args.top),
         "doc_frequency": tfops.doc_frequency(ex).limit(args.top),
     }
     unbounded = {
-        "domain_top_keywords": tfops.domain_top_keywords(
-            ex, k=10, n_salts=args.salts
-        ),
+        "domain_top_keywords": tfops.domain_top_keywords(ex, k=10),
         "link_counts": tfops.link_counts(ex),
         "index": tfops.index_entries(ex),
     }
@@ -262,7 +260,6 @@ def main(argv=None) -> int:
                                       "extracted table")
     r.add_argument("--project-dir", required=True)
     r.add_argument("--top", type=int, default=1000)
-    r.add_argument("--salts", type=int, default=8)
     r.add_argument("--master", default=None)
     r.add_argument("--shuffle-partitions", type=int, default=None)
 

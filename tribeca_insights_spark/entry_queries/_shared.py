@@ -829,10 +829,10 @@ _Q189_SNAPSHOT_CTE = """
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction+TF over synthesized pages at sf0.001 —
-    pandas-UDF parse → native tokenize → salted corpus TF."""
+    pandas-UDF parse → native tokenize → corpus TF."""
     docs = documents_as_pages(spark, "/root/testdata/sf0.001")
     ex = extract_pages(docs)
-    return tfops.corpus_tf(ex, n_salts=8).limit(1000)
+    return tfops.corpus_tf(ex).limit(1000)
 
 
 # ---------------------------------------------------------------------------

@@ -113,17 +113,11 @@ def q06_top5_words_per_doc(spark, sf_dir):
     """,
 )
 def q07_source_top_keywords(spark, sf_dir):
-    """Per-'domain' keyword report with explicit two-stage salted
-    aggregation (north_star skew handling; salted ≡ unsalted is tested)."""
+    """Per-'domain' keyword report: one count on (source, word), then a
+    window top-k — the skew bounds of ``tf.domain_top_keywords``."""
     t = _tokens_df(spark, sf_dir)
-    words = t.select("doc_id", "source", F.explode("tokens").alias("word"))
-    counts = (
-        words.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(8)))
-        .groupBy("source", "word", "_salt")
-        .agg(F.count("*").alias("_pf"))
-        .groupBy("source", "word")
-        .agg(F.sum("_pf").alias("freq"))
-    )
+    words = t.select("source", F.explode("tokens").alias("word"))
+    counts = words.groupBy("source", "word").agg(F.count("*").alias("freq"))
     w = Window.partitionBy("source").orderBy(F.desc("freq"), "word")
     return (
         counts.withColumn("rank", F.row_number().over(w))

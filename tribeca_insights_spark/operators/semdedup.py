@@ -66,7 +66,10 @@ def semdedup(
     (measured in BENCH_sf1.md: k=8 at 10× rows = ×22.5 wall, k scaled
     ×10 = ×8.7, linear). ``"auto"`` costs one count() action up front;
     at 10^12 rows pass the known row count as an explicit int instead.
-    Default stays 8 for oracle replayability at test SFs."""
+    Default stays 8 for oracle replayability at test SFs. Any other ``k``
+    raises ``TypeError`` before a Spark action runs."""
+    if k != "auto" and (not isinstance(k, int) or isinstance(k, bool)):
+        raise TypeError(f"semdedup: k must be an int or 'auto', got {k!r}")
     if k == "auto":
         k = max(8, emb.count() // 256)
     base, cents = kmeans_fit(emb, k=int(k), iters=iters, id_col=id_col,

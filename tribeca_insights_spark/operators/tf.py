@@ -3,17 +3,21 @@
 All native DataFrame ops — partial (map-side) aggregation, whole-stage
 codegen, AQE-coalesced shuffles come free. Scale notes per operator:
 
-* ``corpus_tf`` — ``explode → groupBy(word).sum`` with an explicit two-stage
-  salted variant: tokens are Zipfian, so at 10^12 docs the top words would
-  each land on one reducer. Stage 1 groups on (word, salt) — the partial
-  aggregation already collapses per-partition duplicates, the salt spreads
-  the per-word FINAL combine across ``n_salts`` reducers; stage 2 is a tiny
-  combine. (The reference concat-then-Counter at crawler.py:275 is
+* ``corpus_tf`` — ``explode → groupBy(word).count``, one shuffle. Tokens
+  are Zipfian, but the count's map-side partial ``HashAggregate`` reduces
+  each map task's rows for a word to one record before the exchange, so a
+  hot word's reducer fan-in is bounded by the number of map tasks. A salt
+  column would only add records, a second exchange and a second aggregate.
+  (The reference concat-then-Counter at crawler.py:275 is
   distribution-equivalent: tokens never span the " " join glue — SURVEY §R4.)
-* ``domain_top_keywords`` — per-domain keyword report (north_star): skewed
-  domains (one site = 40% of a crawl) are handled the same way: salted
-  partial agg on (domain, word, salt), final agg, then a window top-k whose
-  partition key (domain) is already aggregated down to |domains × words|.
+* ``domain_top_keywords`` — per-domain keyword report (north_star): the
+  domain is parsed once per page, before the explode; one partial+final
+  count on (domain, word); then a ``row_number`` top-k. Spark plans a
+  partial ``WindowGroupLimit`` below the ``hashpartitioning(domain)``
+  exchange, so a skewed domain (one site = 40% of a crawl) sends at most
+  ``k`` rows per map partition into the window.
+
+Salting stays where no map-side combine exists: ``joins.salted_skew_join``.
 """
 
 from __future__ import annotations
@@ -60,18 +64,14 @@ def per_page_tf(extracted: DataFrame) -> DataFrame:
 
 def corpus_tf(extracted: DataFrame, n_salts: int = 0) -> DataFrame:
     """Global (word, freq) desc — reference keyword_frequency table
-    (exporters/csv.py:40-53). ``n_salts>0`` → explicit two-stage salted agg."""
-    words = exploded_tokens(extracted)
-    if n_salts and n_salts > 1:
-        partial = (
-            words.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-            .groupBy("word", "_salt")
-            .agg(F.count("*").alias("_pf"))
-        )
-        agg = partial.groupBy("word").agg(F.sum("_pf").alias("freq"))
-    else:
-        agg = words.groupBy("word").agg(F.count("*").alias("freq"))
-    return agg.orderBy(F.desc("freq"), "word")
+    (exporters/csv.py:40-53). One shuffle; ``n_salts`` is accepted and
+    ignored (partial aggregation already bounds a hot word's fan-in)."""
+    return (
+        exploded_tokens(extracted)
+        .groupBy("word")
+        .agg(F.count("*").alias("freq"))
+        .orderBy(F.desc("freq"), "word")
+    )
 
 
 def merge_tf(existing: DataFrame, new: DataFrame) -> DataFrame:
@@ -111,20 +111,16 @@ def top_k_words_per_page(extracted: DataFrame, k: int = 50) -> DataFrame:
 def domain_top_keywords(
     extracted: DataFrame, k: int = 10, n_salts: int = 0
 ) -> DataFrame:
-    """Per-domain keyword top-k report (north_star). Optional explicit
-    salting for skewed domains: partial agg on (domain, word, salt) spreads
-    a hot domain's combine over ``n_salts`` reducers before the final agg."""
-    words = exploded_tokens(extracted).withColumn("domain", domain_col())
-    if n_salts and n_salts > 1:
-        counts = (
-            words.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-            .groupBy("domain", "word", "_salt")
-            .agg(F.count("*").alias("_pf"))
-            .groupBy("domain", "word")
-            .agg(F.sum("_pf").alias("freq"))
-        )
-    else:
-        counts = words.groupBy("domain", "word").agg(F.count("*").alias("freq"))
+    """Per-domain keyword top-k report (north_star). The domain is parsed
+    once per page, one count on (domain, word), then a window top-k whose
+    partial ``WindowGroupLimit`` bounds a hot domain's rows into the window
+    exchange. ``n_salts`` is accepted and ignored."""
+    pages = extracted.withColumn("domain", domain_col())
+    counts = (
+        exploded_tokens(pages, extra_cols=("domain",))
+        .groupBy("domain", "word")
+        .agg(F.count("*").alias("freq"))
+    )
     w = Window.partitionBy("domain").orderBy(F.desc("freq"), "word")
     return (
         counts.withColumn("rank", F.row_number().over(w))

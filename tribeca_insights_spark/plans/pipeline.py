@@ -8,9 +8,9 @@ killed-between-writes replays are absorbed by read-side last-wins dedup
 (one Iceberg transaction in production — see plans/state.py).
 
 Partitioning: ``bucket = pmod(xxhash64(url), n_buckets)`` — the explicit
-url-hash partitioning of the north_star. Salting for skewed *domains* lives
-in the aggregation layer (operators/tf.py) where the skew actually bites;
-extraction itself is per-row and needs no salt.
+url-hash partitioning of the north_star. Skew handling for hot *domains*
+lives in the aggregation layer (operators/tf.py) where the skew actually
+bites; extraction itself is per-row and needs none.
 """
 
 from __future__ import annotations
