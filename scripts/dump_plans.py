@@ -65,7 +65,7 @@ def main() -> None:
             "one partial+final count on (domain, word); a partial "
             "WindowGroupLimit below the domain exchange sends at most k rows "
             "per map partition of a skewed domain into the window sort.",
-            tfops.domain_top_keywords(extract_pages(docs, tokens=True), k=10),
+            tfops.domain_top_keywords(extract_pages(docs), k=10),
         ),
         (
             "Pricing summary (q12): pushdown + pruning",

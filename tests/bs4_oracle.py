@@ -16,8 +16,8 @@ implementations of exactly the soup operations the reference performs:
   attributes coerced to ``""``, duplicate attributes last-wins
   (``on_duplicate_attribute`` default REPLACE);
 * string containers (bs4 >= 4.9): text directly inside ``script`` /
-  ``style`` / ``template`` is typed Script/Stylesheet/TemplateString and
-  excluded from ``get_text()`` by the exact-type check in
+  ``style`` / ``template`` / ``rt`` / ``rp`` is typed Script/Stylesheet/
+  TemplateString/RubyTextString/RubyParenthesisString and excluded from ``get_text()`` by the exact-type check in
   ``Tag._all_strings`` — but text nested deeper (e.g. inside a ``<p>``
   within a ``<template>``) is a plain NavigableString and IS included;
 * comments / doctypes / CDATA / processing instructions: NavigableString
@@ -48,7 +48,7 @@ BS4_EMPTY_ELEMENT_TAGS = frozenset({
 # bs4 HTMLTreeBuilder.string_containers: tag -> typed string class for
 # text whose *immediate* parent is that tag
 STRING_CONTAINERS = {"script": "script", "style": "style",
-                     "template": "template"}
+                     "template": "template", "rt": "rt", "rp": "rp"}
 
 
 class Node:

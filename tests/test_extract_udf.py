@@ -62,6 +62,28 @@ def test_identical_tf_vectors(golden, spark_pages):
         assert s["word_frequency"] == g["word_frequency"], u
 
 
+def test_token_strings_match_golden_and_full_record(spark, golden):
+    """The tokens-only mode ships the same tokens as the full record: the
+    golden per-url tokens under ``compat``, and ``extract_pages``'s own
+    ``tokens_str`` under ``nltk``."""
+    from tribeca_insights_spark.operators.extract import (
+        extract_pages,
+        extract_token_strings,
+    )
+
+    docs = corpus_df(spark, N, SEED, partitions=8)
+    got = {r["url"]: r["tokens_str"]
+           for r in extract_token_strings(docs).collect()}
+    assert set(got) == set(golden)
+    for u, g in golden.items():
+        assert got[u] == " ".join(g["tokens"]), u
+    nltk = {r["url"]: r["tokens_str"]
+            for r in extract_token_strings(docs, profile="nltk").collect()}
+    full = {r["url"]: r["tokens_str"]
+            for r in extract_pages(docs, profile="nltk").collect()}
+    assert nltk == full
+
+
 def test_null_and_edge_rows(spark):
     """Null html/lang/url, empty html, and non-utf8 bytes must flow through
     the full extraction without error (reference returns an empty record on
@@ -93,14 +115,20 @@ def test_null_and_edge_rows(spark):
     assert "bad bytes" in out["https://x.com/d"]["text"]
 
 
-def test_charset_aware_decode(spark):
+def test_charset_aware_decode(spark, tmp_path):
     """Golden charset parity: a latin-1 page with a per-row declared
     charset decodes byte-for-byte like the reference's requests path
     (resp.text uses the Content-Type header charset, crawler.py:137-138) —
-    through the batch-UDF extraction, auto-detected from a `charset`
-    column. Without the column, legacy UTF-8(replace) applies. Bogus
-    charset names fall back to UTF-8 instead of raising."""
-    from tribeca_insights_spark.operators.extract import extract_pages
+    auto-detected from a `charset` column, through the batch-UDF
+    extraction, its tokens-only mode and the resumable pipeline. Without a
+    charset, UTF-8(replace) applies. Bogus charset names fall back to
+    UTF-8 instead of raising."""
+    from tribeca_insights_spark.operators.extract import (
+        extract_pages,
+        extract_token_strings,
+    )
+    from tribeca_insights_spark.plans.pipeline import run_extraction
+    from tribeca_insights_spark.plans.state import read_extracted
 
     body = "<html><title>Café résumé</title><p>çãé naïve</p></html>"
     latin1 = body.encode("latin-1")
@@ -116,15 +144,21 @@ def test_charset_aware_decode(spark):
     docs = spark.createDataFrame(
         rows, "url STRING, html BINARY, lang STRING, charset STRING"
     ).withColumn("warc_ts", F.lit(None).cast("timestamp"))
-    out = {r["url"]: r for r in extract_pages(docs).collect()}
-    assert out["https://x.com/l1"]["title"] == golden_title
-    assert "çãé naïve" in out["https://x.com/l1"]["text"]
-    assert "ü-señor" in out["https://x.com/cp"]["text"]
-    # bogus codec and no charset → utf-8 replace (é = 0xe9 → U+FFFD)
-    assert "�" in out["https://x.com/bogus"]["title"]
-    assert out["https://x.com/bogus"]["title"] == out[
-        "https://x.com/none"]["title"]
-    # forcing charset_col=None restores legacy utf-8-only behavior
-    legacy = {r["url"]: r for r in
-              extract_pages(docs, charset_col=None).collect()}
-    assert "�" in legacy["https://x.com/l1"]["title"]
+    pages = {r["url"]: r for r in extract_pages(docs).collect()}
+    root = str(tmp_path / "run")
+    run_extraction(spark, docs, root, n_buckets=2)
+    piped = {r["url"]: r for r in read_extracted(spark, root).collect()}
+    for out in (pages, piped):
+        assert set(out) == {u for u, *_ in rows}
+        assert out["https://x.com/l1"]["title"] == golden_title
+        assert "çãé naïve" in out["https://x.com/l1"]["text"]
+        assert "ü-señor" in out["https://x.com/cp"]["text"]
+        # bogus codec and no charset → utf-8 replace (é = 0xe9 → U+FFFD)
+        assert "�" in out["https://x.com/bogus"]["title"]
+        assert out["https://x.com/bogus"]["title"] == out[
+            "https://x.com/none"]["title"]
+    tokens = {r["url"]: r["tokens_str"]
+              for r in extract_token_strings(docs).collect()}
+    assert tokens["https://x.com/l1"] == "café résumé çãé naïve"
+    for out in (pages, piped):
+        assert tokens == {u: r["tokens_str"] for u, r in out.items()}

@@ -97,6 +97,11 @@ CASES = {
     "template_in_heading": "<h1><template>x</template>done</h1>",
     "heading_in_template": "<template><h2>tpl heading</h2></template>body",
     "nested_templates": "<template>o<template>i</template></template>v",
+    # --- ruby annotation string containers --------------------------------
+    "ruby_rt_rp": "<p>漢<ruby>字<rp>(</rp><rt>kan</rt><rp>)</rp></ruby>x</p>",
+    "rt_nested_elem_text": "<ruby>a<rt><b>shown</b></rt></ruby>b",
+    "rt_in_heading": "<h2>top<rt>hid</rt></h2>body",
+    "rt_as_title": "<title><rt>ruby title</rt></title><p>b</p>",
     # --- misc hostile ------------------------------------------------------
     "null_bytes_in_text": "a\x00b<p>c\x00</p>",
     "mixed_case_tags": "<DiV>x</dIv><A HREF='/P'>y</A>",
@@ -141,8 +146,9 @@ try:
 
     _TAGS = [
         "div", "p", "b", "i", "span", "title", "h1", "h2", "h3", "nav",
-        "header", "footer", "script", "style", "template", "table", "tr",
-        "td", "a", "img", "br", "meta", "frame", "image", "keygen",
+        "header", "footer", "script", "style", "template", "ruby", "rt",
+        "rp", "table", "tr", "td", "a", "img", "br", "meta", "frame",
+        "image", "keygen",
     ]
     _TEXTS = ["x", " ", "a b", "&amp;", "&bogus;", "<", ">", "5<6",
               "é中", "\t\n", "&#65;", "dup"]
@@ -199,7 +205,7 @@ def test_hostile_cases_through_spark_udf(spark):
     df = spark.createDataFrame(rows, DOCS_SCHEMA)
     got = {
         int(r["url"].rsplit("/", 1)[1]): r
-        for r in extract_pages(df, tokens=False).collect()
+        for r in extract_pages(df).collect()
     }
     assert len(got) == len(names)
     for i, n in enumerate(names):

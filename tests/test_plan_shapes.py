@@ -130,10 +130,10 @@ def test_interval_join_never_nested_loop(spark):
 def test_tf_idf_df_dim_broadcasts(spark, docs):
     """The |vocab|-sized df dim broadcasts onto TF; the only nested-loop
     allowed is the 1-row scalar-N crossJoin."""
-    from tribeca_insights_spark.operators.extract import extract_texts
+    from tribeca_insights_spark.operators.extract import extract_token_strings
     from tribeca_insights_spark.operators import tf as tfops
 
-    ex = extract_texts(docs.limit(100))
+    ex = extract_token_strings(docs.limit(100))
     p = _plan(tfops.tf_idf(ex))
     assert "BroadcastHashJoin" in p
 

@@ -1,6 +1,7 @@
 """Cross-micro-batch stateful dedup (streaming/stateful.py)."""
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -113,7 +114,16 @@ def test_first_seen_ttl_evicts_and_reemits(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        # a processing-time timeout runs a batch on every trigger, so this
+        # AvailableNow query never goes idle or terminates on its own: wait
+        # for the batches that read the three input rows, then stop it
+        deadline = time.monotonic() + 120
+        while (q.isActive and time.monotonic() < deadline
+               and sum(p["numInputRows"] for p in q.recentProgress) < 3):
+            time.sleep(0.1)
+    finally:
+        q.stop()
 
     rows = spark.read.parquet(out).collect()
     by_url = {}

@@ -101,7 +101,7 @@ _EXPECTED_TEXT = (
 
 def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_as_pages(spark, sf_dir)
-    return extract_pages(docs, tokens=False)
+    return extract_pages(docs)
 
 
 # ---------------------------------------------------------------------------

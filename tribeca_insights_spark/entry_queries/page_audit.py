@@ -37,7 +37,7 @@ def q70_seo_extended(spark, sf_dir):
     of the same single-pass tag walk as title/meta, first-occurrence-wins,
     with decoy tags proving the selection rules."""
     docs = documents_as_seo_pages(spark, sf_dir)
-    ex = extract_pages(docs, tokens=False)
+    ex = extract_pages(docs)
     return ex.select(
         F.regexp_extract("url", r"/docs/(\d+)$", 1).cast("bigint")
         .alias("doc_id"),

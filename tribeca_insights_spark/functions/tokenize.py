@@ -12,11 +12,13 @@ Cyrillic, 'Ā'…) is dropped.
 
 Two equivalent implementations:
 
-* :func:`clean_and_tokenize` — pure Python, used by the oracle/tests and
-  (optionally) inside the extraction pandas UDF.
+* :func:`clean_and_tokenize` — pure Python; the extraction pandas UDF
+  (operators/extract.py) runs it on every page right after the parse, so
+  this is the hot path. The oracle and tests use it too.
 * :func:`tokens_col` — native Spark Column expression (regexp_replace /
-  lower / split / filter) that stays entirely inside whole-stage codegen;
-  this is the hot path. The two are asserted identical in tests.
+  lower / split / filter, JVM-side) for documents that already carry
+  text: :func:`with_tokens` feeds it to the retrieval, dedup and
+  streaming queries. The two are asserted identical in tests.
 """
 
 from __future__ import annotations

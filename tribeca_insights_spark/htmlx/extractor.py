@@ -48,6 +48,10 @@ DECOMPOSED_TAGS = frozenset({"script", "style", "header", "footer", "nav"})
 # bs4 and never appears in get_text output even on the undecomposed tree.
 RAWTEXT_TAGS = frozenset({"script", "style"})
 
+# The other bs4 string containers: only text whose immediate parent is one
+# of these is typed (and so left out of get_text).
+_STRING_CONTAINERS = frozenset({"template", "rt", "rp"})
+
 # Void elements — never pushed on the open-tag stack. This is bs4's full
 # HTMLTreeBuilder.empty_element_tags: the HTML5 voids plus the legacy set
 # (basefont..spacer) that bs4 still treats as empty — a stray </frame> or
@@ -204,10 +208,11 @@ class _Walker(FastTagPaths, HTMLParser):
         in_rawtext = any(t in RAWTEXT_TAGS for t in self.stack)
         if in_rawtext:
             return  # Script/Stylesheet string containers: never in get_text
-        if self.stack and self.stack[-1] == "template":
+        if self.stack and self.stack[-1] in _STRING_CONTAINERS:
             # bs4 >= 4.9 string containers: text whose IMMEDIATE parent is
-            # <template> is a TemplateString — excluded from get_text by
-            # the exact-type check (deeper-nested text is a plain
+            # <template>/<rt>/<rp> is a TemplateString/RubyTextString/
+            # RubyParenthesisString — excluded from get_text by the
+            # exact-type check (deeper-nested text is a plain
             # NavigableString and stays visible)
             return
         if not any(t in DECOMPOSED_TAGS for t in self.stack):

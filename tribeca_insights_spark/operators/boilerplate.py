@@ -208,7 +208,6 @@ def content_spans(
     docs: DataFrame,
     html_col: str = "html",
     min_words: int = 3,
-    charset_col: str | None = "auto",
 ) -> DataFrame:
     """Per-document CONTENT-block source spans — one row per content
     block: ``(…, block_idx, tag, span_start, span_end, span_text)``
@@ -220,12 +219,12 @@ def content_spans(
     bytes without re-parsing.
 
     Charset/consistency contract (ADVICE r3): the decode honors the
-    per-page declared ``charset`` column exactly like ``extract_pages``
-    (``charset_col="auto"`` picks up a ``charset`` column when present),
-    and the JVM ``substring`` cuts the SAME decoded string the span
-    walker measured — the walker's page text rides back across Arrow
-    next to the offsets, so Python-vs-JVM replacement-character policy
-    on malformed bytes can never shift a span.
+    per-page declared ``charset`` column, when the input has one, exactly
+    like ``extract_pages``, and the JVM ``substring`` cuts the SAME
+    decoded string the span walker measured — the walker's page text
+    rides back across Arrow next to the offsets, so Python-vs-JVM
+    replacement-character policy on malformed bytes can never shift a
+    span.
 
     Shape: one Arrow-batched span-segmenter pass (htmlx/blocks.py
     ``_SpanWalker``), classification and the slice itself as JVM
@@ -234,7 +233,7 @@ def content_spans(
     the per-block span columns stay 2 ints, so the exploded width is
     slim at corpus scale.
     """
-    cs = _charset_expr(docs, charset_col)
+    cs = _charset_expr(docs)
     d = docs.withColumn("_sr", span_blocks_udf(F.col(html_col), cs))
     content = F.filter(
         F.col("_sr.blocks"), lambda b: _is_content(b, min_words)
@@ -430,7 +429,6 @@ tag_sequence_udf = pandas_udf(_tag_sequences_batch, StringType())
 def layout_fingerprint(
     docs: DataFrame,
     html_col: str = "html",
-    charset_col: str | None = "auto",
 ) -> DataFrame:
     """Per-page DOM structural fingerprint: input columns (minus the
     html payload) + ``layout_sig`` (the '>'-joined start-tag sequence),
@@ -449,7 +447,7 @@ def layout_fingerprint(
     smaller than the html payload it replaces); hashing stays in
     whole-stage codegen.
     """
-    cs = _charset_expr(docs, charset_col)
+    cs = _charset_expr(docs)
     d = docs.withColumn("layout_sig", tag_sequence_udf(F.col(html_col), cs))
     return d.select(
         *[c for c in docs.columns if c != html_col],
@@ -466,7 +464,6 @@ def layout_clusters(
     docs: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    charset_col: str | None = "auto",
 ) -> DataFrame:
     """Layout-cluster report: one row per distinct DOM skeleton —
     ``(layout_hash, n_pages, n_tags, min_id)``. The corpus-curation
@@ -480,7 +477,7 @@ def layout_clusters(
     a naive collect-per-key would hit never materializes; at 10^12
     pages this is one partial-agg shuffle of (hash, count) pairs.
     """
-    fp = layout_fingerprint(docs, html_col, charset_col)
+    fp = layout_fingerprint(docs, html_col)
     return fp.groupBy("layout_hash").agg(
         F.count("*").cast("long").alias("n_pages"),
         F.min("n_tags").cast("int").alias("n_tags"),

@@ -1,11 +1,15 @@
 """Extraction operators — the Arrow-batched hot path.
 
-One struct-returning pandas UDF performs a SINGLE parse per page and emits
-every per-page field the reference computes (SURVEY.md §2.2 O1, O2, O4-O11;
-reference crawler.py:104-183 does the same work row-at-a-time in threads).
-Batches arrive via Arrow (tune ``spark.sql.execution.arrow.maxRecordsPerBatch``
-down for fat HTML blobs — see session.py); everything downstream is native
-Catalyst (explode / joins / aggregations).
+One pandas UDF performs a SINGLE parse per page and emits every per-page
+field the reference computes (SURVEY.md §2.2 O1, O2, O4-O11; reference
+crawler.py:104-183 does the same work row-at-a-time in threads). Two entry
+points share it: :func:`extract_pages` returns the full record, and
+:func:`extract_token_strings` returns only ``tokens_str`` — the same batch
+body, which then skips links, slug, sha256 and the JSON encodings and ships
+one string per page. Batches arrive via Arrow (tune
+``spark.sql.execution.arrow.maxRecordsPerBatch`` down for fat HTML blobs —
+see session.py); everything downstream is native Catalyst (explode / joins
+/ aggregations).
 
 Tokenization is FUSED into the UDF (clean_and_tokenize — the line-faithful
 reference tokenizer, text_utils.py:99-116): measured on this Spark build,
@@ -40,7 +44,7 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType, StructType
 
 from ..functions.slug import url_slug
 from ..functions.tokenize import clean_and_tokenize
@@ -77,19 +81,21 @@ def _decode(h: Optional[object], charset: Optional[str] = None) -> str:
 
 
 def _extract_batch(url: pd.Series, html: pd.Series, lang: pd.Series,
-                   charset: pd.Series,
-                   profile: str = _TOKEN_PROFILE) -> pd.DataFrame:
-    out = {
-        "text": [], "title": [], "meta_description": [], "headings": [],
-        "images": [], "external_links": [], "internal_links": [],
-        "slug": [], "page_hash": [], "tokens_str": [],
-        "word_count": [], "wf_json": [], "seo_json": [],
-    }
+                   charset: pd.Series, profile: str = _TOKEN_PROFILE,
+                   tokens_only: bool = False) -> pd.DataFrame:
+    """One parse + tokenize per page → the EXTRACT_STRUCT columns, or only
+    ``tokens_str`` when ``tokens_only`` (links, slug, sha256 and both JSON
+    encodings are skipped)."""
+    fields = ("tokens_str",) if tokens_only else EXTRACT_STRUCT.fieldNames()
+    out = {f: [] for f in fields}
     for u, h, lg, cs in zip(url, html, lang, charset):
-        u = u or ""
         page = parse_page(_decode(h, cs))
-        dom = url_domain(u)
         toks = clean_and_tokenize(page.text, lg or "", profile)
+        out["tokens_str"].append(" ".join(toks))
+        if tokens_only:
+            continue
+        u = u or ""
+        dom = url_domain(u)
         out["text"].append(page.text)
         out["title"].append(page.title)
         out["meta_description"].append(page.meta_description)
@@ -101,7 +107,6 @@ def _extract_batch(url: pd.Series, html: pd.Series, lang: pd.Series,
         out["page_hash"].append(
             hashlib.sha256(page.text.encode("utf-8")).hexdigest()
         )
-        out["tokens_str"].append(" ".join(toks))
         out["word_count"].append(len(toks))
         # compact JSON (words are letter-class only — no escaping surprises);
         # rebuilt as MapType JVM-side via from_json (see extract_pages)
@@ -130,134 +135,65 @@ def _extract_batch(url: pd.Series, html: pd.Series, lang: pd.Series,
     return pd.DataFrame(out)
 
 
-def _charset_expr(docs: DataFrame, charset_col: str | None):
-    """Column feeding the UDF's charset series: the named column,
-    ``"auto"`` → a ``charset`` column when present, else NULL (= UTF-8)."""
-    if charset_col == "auto":
-        charset_col = "charset" if "charset" in docs.columns else None
-    if charset_col is None:
-        return F.lit(None).cast(StringType())
-    return F.col(charset_col)
+_TOKENS_STRUCT = StructType([EXTRACT_STRUCT["tokens_str"]])
 
 
 @lru_cache(maxsize=None)
-def make_extract_page_udf(profile: str = _TOKEN_PROFILE):
-    """Struct-returning extraction pandas UDF bound to a stopword profile
-    (the profile rides the closure; stopword sets are lru-cached per
+def _extract_udf(profile: str, tokens_only: bool):
+    """The extraction pandas UDF, bound to a stopword profile and an output
+    width (the profile rides the closure; stopword sets are lru-cached per
     executor — no per-batch reload)."""
 
     def batch(url: pd.Series, html: pd.Series, lang: pd.Series,
               charset: pd.Series) -> pd.DataFrame:
-        return _extract_batch(url, html, lang, charset, profile)
+        return _extract_batch(url, html, lang, charset, profile, tokens_only)
 
-    return pandas_udf(batch, returnType=EXTRACT_STRUCT)
-
-
-extract_page_udf = make_extract_page_udf(_TOKEN_PROFILE)
-
-
-def _extract_text_batch(html: pd.Series, charset: pd.Series) -> pd.Series:
-    from ..htmlx.extractor import extract_visible_text
-
-    return pd.Series(
-        [extract_visible_text(_decode(h, cs)) for h, cs in zip(html, charset)]
+    return pandas_udf(
+        batch, returnType=_TOKENS_STRUCT if tokens_only else EXTRACT_STRUCT
     )
 
 
-# Text-only fast path: parses once, ships ONE string column back over Arrow.
-extract_text_udf = pandas_udf(_extract_text_batch, returnType=StringType())
+def _charset_expr(docs: DataFrame):
+    """Column feeding a UDF's charset series: the input's ``charset``
+    column when present, else NULL (= UTF-8)."""
+    if "charset" in docs.columns:
+        return F.col("charset")
+    return F.lit(None).cast(StringType())
 
 
-@lru_cache(maxsize=None)
-def make_extract_tokens_udf(profile: str = _TOKEN_PROFILE):
-    """Tokens-only fast path for TF pipelines: parse + tokenize per page,
-    ship just the token array."""
-
-    def batch(html: pd.Series, lang: pd.Series,
-              charset: pd.Series) -> pd.Series:
-        from ..htmlx.extractor import extract_visible_text
-
-        return pd.Series(
-            [
-                clean_and_tokenize(extract_visible_text(_decode(h, cs)),
-                                   lg or "", profile)
-                for h, lg, cs in zip(html, lang, charset)
-            ]
-        )
-
-    return pandas_udf(batch, returnType=ArrayType(StringType()))
-
-
-extract_tokens_udf = make_extract_tokens_udf(_TOKEN_PROFILE)
-
-
-@lru_cache(maxsize=None)
-def make_extract_tokstr_udf(profile: str = _TOKEN_PROFILE):
-    """Fastest TF path: one space-joined token string per page over Arrow;
-    JVM explodes it with a literal-delimiter split (codegen, no regex)."""
-
-    def batch(html: pd.Series, lang: pd.Series,
-              charset: pd.Series) -> pd.Series:
-        from ..htmlx.extractor import extract_visible_text
-
-        return pd.Series(
-            [
-                " ".join(
-                    clean_and_tokenize(
-                        extract_visible_text(_decode(h, cs)), lg or "",
-                        profile
-                    )
-                )
-                for h, lg, cs in zip(html, lang, charset)
-            ]
-        )
-
-    return pandas_udf(batch, returnType=StringType())
-
-
-extract_tokstr_udf = make_extract_tokstr_udf(_TOKEN_PROFILE)
+def _extract_col(docs: DataFrame, profile: str, tokens_only: bool):
+    # the tokens-only body never reads the url, so it does not cross Arrow
+    url = F.lit(None).cast(StringType()) if tokens_only else F.col("url")
+    return _extract_udf(profile, tokens_only)(
+        url, F.col("html"), F.col("lang"), _charset_expr(docs)
+    )
 
 
 def extract_token_strings(docs: DataFrame,
                           profile: str = _TOKEN_PROFILE) -> DataFrame:
-    """(url, lang, tokens_str) — the corpus-TF hot path."""
+    """(url, lang, tokens_str) — the corpus-TF hot path: the same parse and
+    tokenizer as :func:`extract_pages`, shipping one string per page."""
     return docs.select(
         "url", "lang",
-        make_extract_tokstr_udf(profile)(
-            F.col("html"), F.col("lang"), _charset_expr(docs, "auto")
-        ).alias("tokens_str"),
+        _extract_col(docs, profile, True).getField("tokens_str")
+        .alias("tokens_str"),
     )
 
 
-def extract_pages(docs: DataFrame, tokens: bool = True,
-                  profile: str = "compat",
-                  charset_col: str | None = "auto") -> DataFrame:
-    """docs(url, warc_ts, html, text, lang) → extracted per-page DataFrame.
+def extract_pages(docs: DataFrame,
+                  profile: str = _TOKEN_PROFILE) -> DataFrame:
+    """docs(url, warc_ts, html, lang[, charset]) → extracted per-page
+    DataFrame.
 
     Plan shape: Scan → ArrowEvalPython (one parse+tokenize per page) →
     Project (flatten). No shuffle at all — extraction is embarrassingly
     parallel and stays that way at 10^12 docs; partitioning is inherited
     from the source (url-hash-bucketed Iceberg scan in production).
-
-    ``charset_col``: name of a per-page declared-charset column (the
-    WARC/WET reader emits one) used to decode ``html:binary`` with page
-    fidelity for non-UTF-8 corpora — the reference gets this for free from
-    requests (crawler.py:137-138). ``"auto"`` (default) uses a ``charset``
-    column when the input has one, else UTF-8; ``None`` forces legacy
-    UTF-8-only decode.
-
-    ``tokens=False`` drops token-derived columns from the projection (the
-    UDF output is pruned at the Arrow boundary only in the dedicated
-    fast-path helpers; here it trims the downstream row width).
+    A ``charset`` column, when the input has one, decodes ``html`` with
+    each page's declared charset.
     """
-    e = docs.withColumn(
-        "_x",
-        make_extract_page_udf(profile)(
-            F.col("url"), F.col("html"), F.col("lang"),
-            _charset_expr(docs, charset_col),
-        ),
-    )
-    cols = [
+    e = docs.withColumn("_x", _extract_col(docs, profile, False))
+    return e.select(
         "url",
         "warc_ts",
         "lang",
@@ -273,60 +209,20 @@ def extract_pages(docs: DataFrame, tokens: bool = True,
         # SEO extension struct (canonical/og_*/meta_robots/twitter_*/
         # hreflang); pruned by Catalyst when untouched
         F.from_json(F.col("_x.seo_json"), SEO_STRUCT).alias("seo"),
-    ]
-    if tokens:
         # tokens array and word_frequency map are derived JVM-side from the
         # two Arrow-shipped strings: literal split (codegen) + empty filter
         # ≡ the Python list; from_json ≡ the Python Counter dict. Consumers
         # that don't touch them get both pruned by Catalyst.
-        cols += [
-            F.filter(
-                F.split(F.col("_x.tokens_str"), " ", -1),
-                lambda t: F.length(t) > 0,
-            ).alias("tokens"),
-            F.col("_x.tokens_str").alias("tokens_str"),
-            F.col("_x.word_count").alias("word_count"),
-            F.from_json(F.col("_x.wf_json"), WORD_FREQUENCY_TYPE).alias(
-                "word_frequency"
-            ),
-        ]
-    return e.select(*cols)
-
-
-def extract_texts(docs: DataFrame, tokens: bool = True,
-                  profile: str = "compat") -> DataFrame:
-    """(url, lang, text[, tokens]) extraction fast path for TF pipelines."""
-    if tokens:
-        return docs.select(
-            "url", "lang",
-            make_extract_tokens_udf(profile)(
-                F.col("html"), F.col("lang"), _charset_expr(docs, "auto")
-            ).alias("tokens"),
-        )
-    return docs.select(
-        "url", "lang",
-        extract_text_udf(
-            F.col("html"), _charset_expr(docs, "auto")
-        ).alias("text"),
-    )
-
-
-def with_word_frequency(extracted: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """page_data ``word_frequency`` map from a tokens array, computed
-    per-row with higher-order functions (no shuffle, no Python). NOTE:
-    interpreted (non-codegen) — prefer the UDF-fused word_frequency column
-    from :func:`extract_pages`; this exists for token arrays produced by
-    other means. Key order is NOT first-occurrence (Counter) order; the
-    invariant is the unordered TF vector (SURVEY.md §7.3)."""
-    t = F.col(tokens_col)
-    entries = F.transform(
-        F.array_distinct(t),
-        lambda w: F.struct(
-            w.alias("key"),
-            F.size(F.filter(t, lambda x: x == w)).cast("int").alias("value"),
+        F.filter(
+            F.split(F.col("_x.tokens_str"), " ", -1),
+            lambda t: F.length(t) > 0,
+        ).alias("tokens"),
+        F.col("_x.tokens_str").alias("tokens_str"),
+        F.col("_x.word_count").alias("word_count"),
+        F.from_json(F.col("_x.wf_json"), WORD_FREQUENCY_TYPE).alias(
+            "word_frequency"
         ),
     )
-    return extracted.withColumn("word_frequency", F.map_from_entries(entries))
 
 
 def page_data(docs: DataFrame, profile: str = "compat") -> DataFrame:

@@ -183,7 +183,7 @@ def run_extraction_iceberg(
     is a MERGE upsert: a crash between the output append and the log MERGE
     re-extracts at most one run's urls (output rows are run_id-tagged;
     re-runs MERGE the same urls to done — idempotent)."""
-    from ..plans.pipeline import EXTRACT_OUT_SCHEMA, _extract_partitions
+    from ..plans.pipeline import _extract_pending, _partition_metrics
 
     _require(spark, catalog)
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -193,10 +193,7 @@ def run_extraction_iceberg(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
     )
     t0 = time.time()
-    extracted = todo.select(
-        "url", "warc_ts", "html", "lang", "bucket"
-    ).mapInPandas(_extract_partitions, schema=EXTRACT_OUT_SCHEMA)
-    out = extracted.withColumn("run_id", F.lit(run_id))
+    out = _extract_pending(todo).withColumn("run_id", F.lit(run_id))
 
     q = f"{catalog}.{db}"
     out.writeTo(f"{q}.extracted").append()  # snapshot commit #1
@@ -214,31 +211,7 @@ def run_extraction_iceberg(
     )
     upsert_log(spark, db, log_entries, catalog)  # snapshot commit #2 (MERGE)
 
-    metrics = (
-        written.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(
-                F.when(
-                    (F.length("text") == 0) & (F.col("bytes_in") > 0), 1
-                ).otherwise(0)
-            ).alias("n_empty"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.max("wall_ms").alias("wall_ms"),
-            F.min("url").alias("min_url"),
-            F.max("url").alias("max_url"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id").cast("int"),
-            F.col("n_docs").cast("long"),
-            F.col("n_empty").cast("long"),
-            F.col("bytes_in").cast("long"),
-            F.col("wall_ms").cast("long"),
-            "min_url",
-            "max_url",
-        )
-    )
+    metrics = _partition_metrics(written, run_id)
     metrics.writeTo(f"{q}.metrics").append()  # snapshot commit #3
 
     n = written.count()

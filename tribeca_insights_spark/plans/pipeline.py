@@ -70,6 +70,46 @@ def _extract_partitions(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield ex
 
 
+def _extract_pending(todo: DataFrame) -> DataFrame:
+    """todo(url, warc_ts, html, lang, bucket[, charset]) → EXTRACT_OUT_SCHEMA
+    rows, one parse per page; a declared ``charset`` column rides along."""
+    cols = ["url", "warc_ts", "html", "lang", "bucket"]
+    if "charset" in todo.columns:
+        cols.append("charset")
+    return todo.select(*cols).mapInPandas(
+        _extract_partitions, schema=EXTRACT_OUT_SCHEMA
+    )
+
+
+def _partition_metrics(written: DataFrame, run_id: str) -> DataFrame:
+    """Per-partition lineage + metrics rows of one run's written output."""
+    return (
+        written.groupBy("partition_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(
+                F.when(
+                    (F.length("text") == 0) & (F.col("bytes_in") > 0), 1
+                ).otherwise(0)
+            ).alias("n_empty"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.max("wall_ms").alias("wall_ms"),
+            F.min("url").alias("min_url"),
+            F.max("url").alias("max_url"),
+        )
+        .select(
+            F.lit(run_id).alias("run_id"),
+            F.col("partition_id").cast("int"),
+            F.col("n_docs").cast("long"),
+            F.col("n_empty").cast("long"),
+            F.col("bytes_in").cast("long"),
+            F.col("wall_ms").cast("long"),
+            "min_url",
+            "max_url",
+        )
+    )
+
+
 def run_extraction(
     spark: SparkSession,
     docs: DataFrame,
@@ -105,10 +145,7 @@ def run_extraction(
         todo = todo.repartition(n_buckets, "bucket")
 
     t0 = time.time()
-    extracted = todo.select(
-        "url", "warc_ts", "html", "lang", "bucket"
-    ).mapInPandas(_extract_partitions, schema=EXTRACT_OUT_SCHEMA)
-    out = extracted.withColumn("run_id", F.lit(run_id))
+    out = _extract_pending(todo).withColumn("run_id", F.lit(run_id))
 
     # 1) output (partitioned by bucket)
     out.write.mode("append").partitionBy("bucket").parquet(f"{root}/extracted")
@@ -130,32 +167,7 @@ def run_extraction(
     st.append_log(spark, root, log_entries)
 
     # 3) per-partition lineage + metrics
-    metrics = (
-        written.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(
-                F.when(
-                    (F.length("text") == 0) & (F.col("bytes_in") > 0), 1
-                ).otherwise(0)
-            ).alias("n_empty"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.max("wall_ms").alias("wall_ms"),
-            F.min("url").alias("min_url"),
-            F.max("url").alias("max_url"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id").cast("int"),
-            F.col("n_docs").cast("long"),
-            F.col("n_empty").cast("long"),
-            F.col("bytes_in").cast("long"),
-            F.col("wall_ms").cast("long"),
-            "min_url",
-            "max_url",
-        )
-    )
-    st.append_metrics(spark, root, metrics)
+    st.append_metrics(spark, root, _partition_metrics(written, run_id))
 
     n = written.count()
     return {

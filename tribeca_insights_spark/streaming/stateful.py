@@ -87,7 +87,11 @@ def dedup_first_seen(stream: DataFrame,
     state forever — exact first-seen, state grows with distinct urls; with
     a TTL, state for a url is evicted ``ttl_ms`` after its last arrival and
     a later re-arrival is emitted again (at-least-once per TTL window) —
-    the bounded-state mode an open-ended crawl stream needs."""
+    the bounded-state mode an open-ended crawl stream needs. With a TTL,
+    Spark runs a batch on every trigger to fire timeouts, so the query
+    never goes idle: under ``Trigger.AvailableNow`` it never terminates
+    and ``processAllAvailable()`` never returns. Watch its progress
+    (``recentProgress``) and ``stop()`` it."""
     return (
         stream.select("url", "warc_ts")
         .groupBy("url")

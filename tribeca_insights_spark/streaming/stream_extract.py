@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import _charset_expr, extract_page_udf
+from ..operators.extract import extract_pages
 from ..schemas import DOCS_SCHEMA
 
 
@@ -30,21 +30,9 @@ def read_docs_stream(spark: SparkSession, src_dir: str,
 
 
 def extracted_stream(docs_stream: DataFrame) -> DataFrame:
-    e = docs_stream.withColumn(
-        "_x",
-        extract_page_udf(
-            F.col("url"), F.col("html"), F.col("lang"),
-            _charset_expr(docs_stream, "auto"),
-        ),
-    )
-    return e.select(
-        "url", "warc_ts", "lang",
-        F.col("_x.text").alias("text"),
-        F.col("_x.title").alias("title"),
-        F.col("_x.slug").alias("slug"),
-        F.col("_x.page_hash").alias("page_hash"),
-        F.col("_x.tokens_str").alias("tokens_str"),
-        F.col("_x.word_count").alias("word_count"),
+    return extract_pages(docs_stream).select(
+        "url", "warc_ts", "lang", "text", "title", "slug", "page_hash",
+        "tokens_str", "word_count",
     )
 
 
