@@ -252,22 +252,12 @@ def test_fast_tag_paths_equivalence():
     from html.parser import HTMLParser
 
     from tribeca_insights_spark.fixtures import gen_corpus
-    from tribeca_insights_spark.htmlx.extractor import _WS_RE, _Walker
+    from tribeca_insights_spark.htmlx.extractor import _Walker
 
     class SlowWalker(_Walker, HTMLParser):
         # re-expose stdlib parse paths (skip the FastTagPaths overrides)
         parse_starttag = HTMLParser.parse_starttag
         parse_endtag = HTMLParser.parse_endtag
-
-    def run(cls, html):
-        w = cls()
-        try:
-            w.feed(html)
-            w.close()
-        except Exception:
-            w._end_data()
-            w._close_collectors(0)
-        return w
 
     cases = [r["html"].decode() for r in gen_corpus(300, seed=11)] + [
         "<P>upper</P>",
@@ -284,7 +274,7 @@ def test_fast_tag_paths_equivalence():
         "</stray></p><p>after stray ends</p>",
     ]
     for h in cases:
-        fast, slow = run(_Walker, h), run(SlowWalker, h)
+        fast, slow = _Walker().run(h), SlowWalker().run(h)
         assert fast.visible == slow.visible, h[:80]
         assert fast.headings == slow.headings, h[:80]
         assert fast.links == slow.links, h[:80]

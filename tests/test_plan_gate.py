@@ -20,6 +20,10 @@ sf0.001 and asserts the global 100-TB invariants:
 
 Queries that return a streaming DataFrame (no executed plan without a
 sink) assert the invariants on their optimized logical plan instead.
+
+The same built DataFrame also gates the output schema: every column is a
+scalar, because the driver canonicalizes results by sorting rows of
+values, and arrays, maps and structs do not sort.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from tribeca_insights_spark.entry_queries import QUERIES
 
@@ -84,9 +89,15 @@ def _unbounded_broadcast_builds(plan: str) -> list:
     return bad
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_global_plan_invariants(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
+@pytest.fixture(scope="module", params=sorted(QUERIES))
+def query(request, spark):
+    # module scope: pytest runs both tests of one query back to back on a
+    # single build, so the schema gate adds no query construction
+    return request.param, QUERIES[request.param](spark, SF_DIR)
+
+
+def test_global_plan_invariants(query):
+    name, df = query
     if df.isStreaming:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     else:
@@ -107,3 +118,12 @@ def test_global_plan_invariants(spark, name):
             f"{name}: BroadcastNestedLoopJoin with unproven build-side "
             f"bound: {bad[:2]}"
         )
+
+
+def test_scalar_output_columns(query):
+    name, df = query
+    nested = [
+        f.name for f in df.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    assert not nested, f"{name}: non-scalar output columns {nested}"

@@ -581,7 +581,7 @@ def _pq_oracle(m: int = 4, k: int = 4, iters: int = 1,
         f"JOIN p{s}af s{s} USING (vec_id)" for s in range(1, m)
     )
     return ",".join(chains) + f"""
-    SELECT s0.vec_id, [{codes}] AS codes,
+    SELECT s0.vec_id, array_to_string([{codes}], ',') AS codes,
            CAST({err} AS BIGINT) AS recon_err
     FROM p0af s0 {joins}
     """

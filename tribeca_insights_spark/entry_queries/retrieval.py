@@ -347,10 +347,10 @@ def q114_bm25_topk(spark, sf_dir):
       FROM h GROUP BY 1, 2
     )
     SELECT term, block, CAST(len(postings) AS BIGINT) AS df_block,
-           postings,
-           list_transform(range(1, len(postings) + 1),
+           array_to_string(postings, ',') AS postings,
+           array_to_string(list_transform(range(1, len(postings) + 1),
              i -> postings[i]
-                  - CASE WHEN i = 1 THEN 0 ELSE postings[i - 1] END)
+                  - CASE WHEN i = 1 THEN 0 ELSE postings[i - 1] END), ',')
              AS gaps
     FROM g
     """,
@@ -359,11 +359,16 @@ def q119_inverted_index(spark, sf_dir):
     """Blocked inverted index with gap-encoded postings
     (operators/retrieval.py:inverted_index): posting lists sharded by
     doc-id range so hot terms never funnel into one reducer; deltas in
-    the compressor-ready form. Two keyed shuffles, no window."""
+    the compressor-ready form. Two keyed shuffles, no window. The
+    ``postings``/``gaps`` arrays come out comma-joined, so every output
+    column is a scalar."""
     from ..operators.retrieval import inverted_index
 
-    return inverted_index(
-        _read(spark, sf_dir, "documents"), block_size=100
+    idx = inverted_index(_read(spark, sf_dir, "documents"), block_size=100)
+    return idx.select(
+        "term", "block", "df_block",
+        *[F.array_join(F.col(c).cast("array<string>"), ",").alias(c)
+          for c in ("postings", "gaps")],
     )
 
 

@@ -243,11 +243,13 @@ def q121_pq_codes(spark, sf_dir):
     the q112 zero-shuffle-assignment machinery per slice; the pivot
     back to one row per vector is a single groupBy(vec_id) over slim
     (vec_id, sub, cid) rows — never m self-joins. The oracle replays
-    all four trainings closed-form in one WITH clause."""
+    all four trainings closed-form in one WITH clause. ``codes`` comes
+    out comma-joined, so every output column is a scalar."""
     from ..operators.kmeans import pq_codes
 
-    return pq_codes(
-        _read(spark, sf_dir, "embeddings"), m=4, k=4, iters=1
+    pq = pq_codes(_read(spark, sf_dir, "embeddings"), m=4, k=4, iters=1)
+    return pq.withColumn(
+        "codes", F.array_join(F.col("codes").cast("array<string>"), ",")
     )
 
 

@@ -1,79 +1,69 @@
 """Anchor (href, visible text) pair extraction.
 
-A deliberately tiny, standalone ``html.parser`` subclass — separate from
-``extractor.PageWalker`` so the byte-parity visible-text path stays
-untouched. Mirrors what the reference would get from
+A small walker over the bs4 tree events of :class:`.tree.TreeWalker`,
+separate from the extractor's ``_Walker`` so the byte-parity visible-text
+path stays untouched. Mirrors what the reference would get from
 ``soup.find_all("a")`` over the FULL soup (crawler.py:93-101 iterates all
 anchors before boilerplate decomposition), i.e. nav/header/footer anchors
 ARE included: for link-graph work (anchor-text aggregation, PageRank
 seeding) boilerplate links are signal, not noise.
 
-Nested ``<a>`` is invalid HTML; html.parser still surfaces whatever tag
-soup arrives, so we keep a stack and credit text to every open anchor.
-Anchor text is whitespace-collapsed with the same ``\\s+``-to-space rule
-as the visible-text extractor (reference text_utils.py:133-134).
+Anchor text is ``a.get_text()``: the anchor element's untyped string
+nodes (script/style content is left out), closed wherever the tree closes
+the element, so an end tag that pops an open ``<a>`` ends its text.
+Nested ``<a>`` is invalid HTML, but html.parser surfaces whatever tag soup
+arrives: text is credited to every open anchor, and pairs come out in
+document order of the start tags (find_all order). Anchor text is
+whitespace-collapsed with the same ``\\s+``-to-space rule as the
+visible-text extractor (reference text_utils.py:133-134).
 """
 
 from __future__ import annotations
 
-import re
-from html.parser import HTMLParser
-from typing import List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
-_WS = re.compile(r"\s+")
+from .tree import TreeWalker
 
 
-class _AnchorWalker(HTMLParser):
+class _AnchorWalker(TreeWalker):
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.pairs: List[Tuple[str, str]] = []
-        self._open: List[Tuple[Optional[str], List[str]]] = []
+        super().__init__()
+        self.pairs: List[tuple] = []  # one slot per anchor with an href
+        # one (slot, attrs, text parts) per open <a>, innermost last
+        self._open: List[Tuple[Optional[int], Dict[str, str], List[str]]] = []
 
-    def handle_starttag(self, tag, attrs):
+    def start(self, tag, attrs):
         if tag == "a":
-            href = None
-            for k, v in attrs:
-                if k == "href" and href is None:
-                    href = v
-            self._open.append((href, []))
+            slot = None
+            if "href" in attrs:  # reserve the document-order slot
+                slot = len(self.pairs)
+                self.pairs.append(())
+            self._open.append((slot, attrs, []))
 
-    def handle_startendtag(self, tag, attrs):
-        if tag == "a":  # <a/> — empty anchor, emit immediately
-            self.handle_starttag(tag, attrs)
-            self.handle_endtag(tag)
+    def text(self, data):
+        for _, _, parts in self._open:
+            parts.append(data)
 
-    def handle_data(self, data):
-        if data and self._open:
-            for _, parts in self._open:
-                parts.append(data)
-
-    def handle_endtag(self, tag):
-        if tag == "a" and self._open:
-            href, parts = self._open.pop()
-            if href is not None:
-                self.pairs.append(
-                    (href, _WS.sub(" ", "".join(parts)).strip())
+    def end(self, depth):
+        for _ in range(self.stack[depth:].count("a")):
+            slot, attrs, parts = self._open.pop()
+            if slot is not None:
+                self.pairs[slot] = self._pair(
+                    attrs, " ".join("".join(parts).split())
                 )
 
-    def close(self):
-        super().close()
-        while self._open:  # EOF with unclosed <a>
-            self.handle_endtag("a")
+    def _pair(self, attrs: Dict[str, str], text: str) -> tuple:
+        return attrs["href"], text
 
 
 def extract_anchors(html: str) -> List[Tuple[str, str]]:
     """All ``(href, collapsed anchor text)`` pairs in document order.
 
     Anchors without an ``href`` attribute are skipped (they are jump
-    targets, not links). Tolerant of malformed HTML — never raises.
+    targets, not links); a valueless ``href`` is ``""``, as in bs4.
+    Tolerant of malformed HTML — never raises.
     """
-    w = _AnchorWalker()
-    try:
-        w.feed(html)
-        w.close()
-    except Exception:  # pragma: no cover — html.parser is tolerant already
-        pass
-    return w.pairs
+    return _AnchorWalker().run(html).pairs
 
 
 class _RelAnchorWalker(_AnchorWalker):
@@ -81,34 +71,12 @@ class _RelAnchorWalker(_AnchorWalker):
     (lowercased, space-split — ``rel="ugc nofollow"`` is a token LIST
     per the HTML spec, not a literal)."""
 
-    def handle_starttag(self, tag, attrs):
-        if tag == "a":
-            href = rel = None
-            for k, v in attrs:
-                if k == "href" and href is None:
-                    href = v
-                elif k == "rel" and rel is None:
-                    rel = v
-            self._open.append(((href, rel), []))
-
-    def handle_endtag(self, tag):
-        if tag == "a" and self._open:
-            (href, rel), parts = self._open.pop()
-            if href is not None:
-                toks = (rel or "").lower().split()
-                self.pairs.append(
-                    (href, _WS.sub(" ", "".join(parts)).strip(), toks)
-                )
+    def _pair(self, attrs, text):
+        return attrs["href"], text, attrs.get("rel", "").lower().split()
 
 
 def extract_anchors_rel(html: str) -> List[tuple]:
     """All ``(href, text, rel_tokens)`` triples in document order —
     the link-graph needs ``rel`` to honor nofollow/ugc/sponsored
     edge semantics."""
-    w = _RelAnchorWalker()
-    try:
-        w.feed(html)
-        w.close()
-    except Exception:  # pragma: no cover
-        pass
-    return w.pairs
+    return _RelAnchorWalker().run(html).pairs

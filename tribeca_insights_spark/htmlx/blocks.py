@@ -8,10 +8,11 @@ on real pages. This module segments a page into text BLOCKS (the jusText /
 trafilatura unit of classification — Pomikálek 2011) so the Spark layer can
 classify each block by link density and length and keep only main content.
 
-Single pass over the same html.parser event stream the extractor uses
-(htmlx/extractor.py:150), with the same FastTagPaths speedups and the same
-script/style decomposition semantics, so block text is consistent with
-`extract_visible_text` (a block split of the identical string-node stream).
+Single pass over the bs4 tree events of :class:`.tree.TreeWalker`, the core
+the extractor also sits on, so block text is consistent with
+`extract_visible_text`: a block split of the same untyped string-node
+stream (script/style/template/ruby-annotation text is typed and never
+seen here).
 
 Classification itself happens JVM-side in operators/boilerplate.py — this
 walker only produces the per-block facts (text, word count, link-word
@@ -21,17 +22,15 @@ count), keeping the Python stage a pure parser exactly like extract_pages.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from html.parser import HTMLParser
 from typing import List, Optional
 
-from .extractor import RAWTEXT_TAGS, VOID_TAGS, FastTagPaths
+from .tree import TreeWalker
 
 # Unlike the reference's visible-text extraction (which decomposes
 # header/footer/nav wholesale, extractor.py DECOMPOSED_TAGS — crawler.py:160
-# removes them before get_text), block segmentation must KEEP those
-# subtrees: they are precisely the blocks the classifier needs to see and
-# score as boilerplate. Only true non-content containers are dropped.
-_DROPPED = frozenset({"script", "style"})
+# removes them before get_text), block segmentation KEEPS those subtrees:
+# they are precisely the blocks the classifier needs to see and score as
+# boilerplate.
 
 # HTML block-level elements: opening or closing one of these starts a new
 # block. Inline elements (a, span, b, em, …) flow within the current block.
@@ -46,6 +45,15 @@ BLOCK_TAGS = frozenset(
 _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
 
+def enclosing_block(open_tags: List[str]) -> str:
+    """Innermost block-level element among ``open_tags`` ("body" when
+    none is open)."""
+    for t in reversed(open_tags):
+        if t in BLOCK_TAGS:
+            return t
+    return "body"
+
+
 @dataclass
 class Block:
     """One segmented text block with the facts classification needs."""
@@ -58,31 +66,21 @@ class Block:
     is_heading: bool
 
 
-class _BlockWalker(FastTagPaths, HTMLParser):
+class _BlockWalker(TreeWalker):
     """Splits the visible string-node stream on block-element boundaries."""
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.stack: List[str] = []
-        self._buf: List[str] = []
-        self._link_depth = 0
+        super().__init__()
+        self._link_depth = 0  # open <a> elements
         # current block accumulator: list of (string_node, was_in_link)
         self._parts: List[tuple] = []
         self._context = "body"
         self.blocks: List[Block] = []
 
-    # -- data-node handling (same merge discipline as the extractor) ------
-    def _end_data(self) -> None:
-        if not self._buf:
-            return
-        data = "".join(self._buf)
-        self._buf.clear()
-        if any(t in RAWTEXT_TAGS or t in _DROPPED for t in self.stack):
-            return
+    def text(self, data: str) -> None:
         self._parts.append((data, self._link_depth > 0))
 
     def _flush(self) -> None:
-        self._end_data()
         if not self._parts:
             return
         texts, n_words, n_link = [], 0, 0
@@ -109,77 +107,30 @@ class _BlockWalker(FastTagPaths, HTMLParser):
             )
         )
 
-    def _enclosing_block(self) -> str:
-        for t in reversed(self.stack):
-            if t in BLOCK_TAGS:
-                return t
-        return "body"
-
-    # -- tag events --------------------------------------------------------
-    def handle_starttag(self, tag, attrs) -> None:
+    def start(self, tag, attrs) -> None:
         if tag in BLOCK_TAGS:
             self._flush()
             self._context = tag
-        else:
-            self._end_data()
-        if tag == "a":
+        elif tag == "a":
             self._link_depth += 1
-        if tag not in VOID_TAGS:
-            self.stack.append(tag)
 
-    def handle_startendtag(self, tag, attrs) -> None:
-        self.handle_starttag(tag, attrs)
-        if tag not in VOID_TAGS:
-            self.handle_endtag(tag)
-
-    def handle_endtag(self, tag) -> None:
-        if tag in BLOCK_TAGS:
+    def end(self, depth) -> None:
+        closed = self.stack[depth:]
+        self._link_depth -= closed.count("a")
+        if not BLOCK_TAGS.isdisjoint(closed):
             self._flush()
-        else:
-            self._end_data()
-        if tag == "a" and self._link_depth > 0:
-            self._link_depth -= 1
-        if tag in VOID_TAGS:
-            return
-        for i in range(len(self.stack) - 1, -1, -1):
-            if self.stack[i] == tag:
-                del self.stack[i:]
-                break
-        if tag in BLOCK_TAGS:
-            self._context = self._enclosing_block()
+            self._context = enclosing_block(self.stack[:depth])
 
-    def close(self) -> None:
-        super().close()
+    def finish(self) -> None:
+        super().finish()
         self._flush()
-
-    # -- non-text events ---------------------------------------------------
-    def handle_comment(self, data) -> None:
-        self._end_data()
-
-    def handle_decl(self, decl) -> None:
-        self._end_data()
-
-    def handle_pi(self, data) -> None:
-        self._end_data()
-
-    def unknown_decl(self, data) -> None:
-        self._end_data()
-
-    def handle_data(self, data) -> None:
-        self._buf.append(data)
 
 
 def segment_blocks(html: Optional[str]) -> List[Block]:
     """Segment a page into text blocks (empty list for None/empty/broken)."""
     if not html:
         return []
-    w = _BlockWalker()
-    try:
-        w.feed(html)
-        w.close()
-    except Exception:
-        w._flush()  # keep whatever was segmented before the parse error
-    return w.blocks
+    return _BlockWalker().run(html).blocks
 
 
 # ---------------------------------------------------------------------------
@@ -205,16 +156,14 @@ class _SpanWalker(_BlockWalker):
     after consuming each token, and tokens are contiguous, so at the time
     any handler runs, the last ``updatepos`` end is exactly the current
     token's START offset. ``FastTagPaths`` discards the stdlib's
-    line/column bookkeeping (extractor.py:143), so this walker overrides
-    ``updatepos`` to keep the absolute index instead — O(1), no newline
-    scans. A visible data run opens at its token start and closes at the
-    start of the NEXT structural event (the ``<`` of the following
-    tag/comment/decl), with the raw slice between them stripped of
-    leading/trailing whitespace. Exact under ``convert_charrefs=True``
-    because all lengths are measured on the raw source slice, never on
-    the interpolated text. Single-``feed`` usage only (offsets are
-    indices into one fed string; ``segment_blocks_with_spans`` feeds
-    once).
+    line/column bookkeeping, so this walker overrides ``updatepos`` to
+    keep the absolute index instead — O(1), no newline scans. A data run
+    opens at the first non-blank data token of a string node and closes
+    when the core flushes that node, at the start of the NEXT structural
+    event (the ``<`` of the following tag/comment/decl, or EOF), with the
+    raw slice between them stripped of leading/trailing whitespace. Exact
+    under ``convert_charrefs=True`` because all lengths are measured on
+    the raw source slice, never on the interpolated text.
     """
 
     def __init__(self, html: str) -> None:
@@ -227,35 +176,27 @@ class _SpanWalker(_BlockWalker):
         self.spans: List[tuple] = []  # aligned with self.blocks
 
     def updatepos(self, i, j):  # called by goahead after every token
-        self._apos = j
+        # close() re-runs goahead on the unconsumed tail, indexed from 0
+        self._apos = j + len(self._html) - len(self.rawdata)
         return j
 
-    def _abs(self) -> int:
-        return self._apos
-
-    def _close_run(self, pos: int) -> None:
-        if self._run_start is None:
-            return
-        seg = self._html[self._run_start : pos]
-        st = self._run_start + (len(seg) - len(seg.lstrip()))
-        en = self._run_start + len(seg.rstrip())
-        self._run_start = None
-        if en <= st:
-            return
-        if self._blk_start is None:
-            self._blk_start = st
-        self._blk_end = en
-
     def handle_data(self, data) -> None:
-        if (
-            self._run_start is None
-            and data.strip()
-            and not any(
-                t in RAWTEXT_TAGS or t in _DROPPED for t in self.stack
-            )
-        ):
-            self._run_start = self._abs()
-        super().handle_data(data)
+        if not self._buf:  # first data event of a new string node
+            self._run_start = None
+        if self._run_start is None and data.strip():
+            self._run_start = self._apos
+        self._buf.append(data)
+
+    def text(self, data) -> None:
+        if self._run_start is not None:
+            seg = self._html[self._run_start : self._apos]
+            st = self._run_start + (len(seg) - len(seg.lstrip()))
+            en = self._run_start + len(seg.rstrip())
+            if en > st:
+                if self._blk_start is None:
+                    self._blk_start = st
+                self._blk_end = en
+        super().text(data)
 
     def _flush(self) -> None:
         n0 = len(self.blocks)
@@ -264,41 +205,6 @@ class _SpanWalker(_BlockWalker):
             self.spans.append((self._blk_start, self._blk_end))
         self._blk_start = None
         self._blk_end = None
-
-    # every structural event closes the open data run at its own position
-    def handle_starttag(self, tag, attrs) -> None:
-        self._close_run(self._abs())
-        super().handle_starttag(tag, attrs)
-
-    def handle_endtag(self, tag) -> None:
-        self._close_run(self._abs())
-        super().handle_endtag(tag)
-
-    def handle_startendtag(self, tag, attrs) -> None:
-        self._close_run(self._abs())
-        # _BlockWalker.handle_startendtag delegates to handle_starttag /
-        # handle_endtag (already-closed run → both _close_run calls no-op)
-        super().handle_startendtag(tag, attrs)
-
-    def handle_comment(self, data) -> None:
-        self._close_run(self._abs())
-        super().handle_comment(data)
-
-    def handle_decl(self, decl) -> None:
-        self._close_run(self._abs())
-        super().handle_decl(decl)
-
-    def handle_pi(self, data) -> None:
-        self._close_run(self._abs())
-        super().handle_pi(data)
-
-    def unknown_decl(self, data) -> None:
-        self._close_run(self._abs())
-        super().unknown_decl(data)
-
-    def close(self) -> None:
-        self._close_run(len(self._html))
-        super().close()
 
 
 def segment_blocks_with_spans(
@@ -311,11 +217,6 @@ def segment_blocks_with_spans(
     ``segment_blocks``."""
     if not html:
         return []
-    w = _SpanWalker(html)
-    try:
-        w.feed(html)
-        w.close()
-    except Exception:
-        w._flush()
+    w = _SpanWalker(html).run(html)
     # blocks/spans stay aligned because _flush appends to both
     return list(zip(w.blocks, w.spans))

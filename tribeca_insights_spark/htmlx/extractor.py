@@ -3,27 +3,21 @@
 Reproduces the reference extraction semantics (tribeca-insights,
 ``tribeca_insights/text_utils.py:119-135`` ``extract_visible_text`` and
 ``tribeca_insights/crawler.py:60-101`` metadata extraction) WITHOUT
-BeautifulSoup: a single pass over :class:`html.parser.HTMLParser` events —
-the exact same stdlib tokenizer bs4's ``html.parser`` tree builder consumes —
-replicating the handful of tree-building decisions bs4 makes on top of it:
+BeautifulSoup: a single pass over the bs4 ``html.parser`` tree events of
+:class:`.tree.TreeWalker`, which owns bs4's tree rules (pop-to-tag, void
+tags, data merging, string containers, non-text nodes, EOF close). On top
+of that event stream this walker makes the reference's own decisions:
 
-* end tags pop the open-tag stack up to the nearest matching start tag and
-  are ignored when unmatched (bs4 ``BeautifulSoup._popToTag``);
-* consecutive character-data events merge into one string node
-  (bs4 ``BeautifulSoup.endData``);
-* comments / doctype / CDATA / processing instructions are never part of
-  ``get_text`` output (bs4 ≥4.9 ``interesting_string_types`` is the exact
-  ``NavigableString`` type);
-* ``<script>``/``<style>`` content is never part of ``get_text`` output
-  (bs4 ``string_containers`` types `Script`/`Stylesheet`; the reference
-  additionally ``decompose()``s them — same observable result);
-* visible text = text nodes outside any ``script/style/header/footer/nav``
-  subtree (the reference decomposes those five: text_utils.py:130), joined
-  with a single space, whitespace-collapsed, stripped (text_utils.py:132-134);
+* visible text = untyped string nodes outside any
+  ``script/style/header/footer/nav`` subtree (the reference decomposes
+  those five: text_utils.py:130), joined with a single space,
+  whitespace-collapsed, stripped (text_utils.py:132-134);
 * metadata (title / meta description / headings / images / links) is
   extracted from the FULL tree — the reference parses a *fresh, undecomposed*
   soup for metadata (crawler.py:143-146), so e.g. headings inside ``<nav>``
-  ARE reported while their text is absent from the visible text.
+  ARE reported while their text is absent from the visible text;
+* the title is bs4 ``Tag.string`` of the first ``<title>``, which sees
+  typed strings and comments too.
 
 This module is dependency-free and is used both by the Spark pandas UDFs
 (:mod:`tribeca_insights_spark.operators.extract`) and by the golden-fixture
@@ -34,41 +28,17 @@ expectations (tests/test_text_utils.py:98-111, tests/test_crawler.py:11-41).
 from __future__ import annotations
 
 import hashlib
-import re
 from dataclasses import dataclass, field
-from html.parser import HTMLParser
 from typing import Dict, List, Optional, Set, Tuple
 from urllib.parse import urljoin, urlparse
+
+from .tree import VOID_TAGS, TreeWalker
 
 # Tags whose whole subtree is removed before visible-text extraction
 # (reference: text_utils.py:130).
 DECOMPOSED_TAGS = frozenset({"script", "style", "header", "footer", "nav"})
 
-# Raw-text ("CDATA") elements: their content is a string-container type in
-# bs4 and never appears in get_text output even on the undecomposed tree.
-RAWTEXT_TAGS = frozenset({"script", "style"})
-
-# The other bs4 string containers: only text whose immediate parent is one
-# of these is typed (and so left out of get_text).
-_STRING_CONTAINERS = frozenset({"template", "rt", "rp"})
-
-# Void elements — never pushed on the open-tag stack. This is bs4's full
-# HTMLTreeBuilder.empty_element_tags: the HTML5 voids plus the legacy set
-# (basefont..spacer) that bs4 still treats as empty — a stray </frame> or
-# <image> must not perturb pop-to-tag depth if parity is byte-exact.
-VOID_TAGS = frozenset(
-    {
-        "area", "base", "br", "col", "embed", "hr", "img", "input",
-        "keygen", "link", "menuitem", "meta", "param", "source", "track",
-        "wbr",
-        "basefont", "bgsound", "command", "frame", "image", "isindex",
-        "nextid", "spacer",
-    }
-)
-
-_HEADING_RE = re.compile(r"^h[1-6]$")
 _HEADING_LEVEL = {f"h{i}": i for i in range(1, 7)}  # dict beats regex 5×
-_WS_RE = re.compile(r"\s+")
 
 # meta property/name → SEO extension field (template keys the reference
 # never computes; see PageExtract). One dict lookup per <meta> tag.
@@ -116,54 +86,11 @@ class PageExtract:
     )
 
 
-_SIMPLE_START = re.compile(r"<([a-zA-Z][a-zA-Z0-9]*)>")
-_SIMPLE_END = re.compile(r"</([a-zA-Z][a-zA-Z0-9]*)>")
-
-
-class FastTagPaths:
-    """Fast paths for the two most common token shapes — ``<tag>`` with no
-    attributes and ``</tag>`` outside CDATA content — bypassing
-    html.parser's attribute regex machinery. Behavior replicated exactly
-    (tag lowercasing, ``lasttag``, CDATA entry for script/style); anything
-    else — attributes, whitespace, ``<tag/>``, bogus markup, in-CDATA end
-    tags (which need the match/clear logic) — falls back to the stdlib
-    implementation. Equivalence pinned by
-    tests/test_extractor.py::test_fast_tag_paths_equivalence; measured
-    ~13% whole-page parse speedup."""
-
-    def parse_starttag(self, i):  # noqa: D102 — see class docstring
-        m = _SIMPLE_START.match(self.rawdata, i)
-        if m:
-            tag = m.group(1).lower()
-            self.lasttag = tag
-            self.handle_starttag(tag, [])
-            if tag in self.CDATA_CONTENT_ELEMENTS:
-                self.set_cdata_mode(tag)
-            return m.end()
-        return super().parse_starttag(i)
-
-    def parse_endtag(self, i):
-        if self.cdata_elem is None:
-            m = _SIMPLE_END.match(self.rawdata, i)
-            if m:
-                self.handle_endtag(m.group(1).lower())
-                return m.end()
-        return super().parse_endtag(i)
-
-    def updatepos(self, i, j):
-        # stdlib tracks line/column purely for error reporting, scanning
-        # every consumed chunk for newlines (~8% of whole-page parse);
-        # this extractor never reads positions — skip the bookkeeping.
-        return j
-
-
-class _Walker(FastTagPaths, HTMLParser):
+class _Walker(TreeWalker):
     """Single-pass event consumer building every extraction output at once."""
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.stack: List[str] = []  # open non-void tags, bs4-style
-        self._buf: List[str] = []  # pending character data (merged node)
+        super().__init__()
         self.visible: List[str] = []  # string nodes outside decomposed subtrees
         # title capture: first <title>; emulates bs4 `.string` exactly —
         # None unless the element has exactly one child, a single string
@@ -195,40 +122,22 @@ class _Walker(FastTagPaths, HTMLParser):
         self.seo: Dict[str, str] = {}
         self.hreflang: List[Tuple[str, str]] = []
 
-    # -- bs4-style data-node merging -------------------------------------
-    def _end_data(self) -> None:
-        if not self._buf:
-            return
-        data = "".join(self._buf)
-        self._buf.clear()
+    def text(self, data: str) -> None:
         if self._t_stack is not None:
-            # inside the first <title>: every string child (even typed
-            # Script/Stylesheet containers) is a tree child for `.string`
             self._t_stack[-1].append(data)
-        in_rawtext = any(t in RAWTEXT_TAGS for t in self.stack)
-        if in_rawtext:
-            return  # Script/Stylesheet string containers: never in get_text
-        if self.stack and self.stack[-1] in _STRING_CONTAINERS:
-            # bs4 >= 4.9 string containers: text whose IMMEDIATE parent is
-            # <template>/<rt>/<rp> is a TemplateString/RubyTextString/
-            # RubyParenthesisString — excluded from get_text by the
-            # exact-type check (deeper-nested text is a plain
-            # NavigableString and stays visible)
-            return
         if not any(t in DECOMPOSED_TAGS for t in self.stack):
             self.visible.append(data)
         for _level, _depth, parts, _slot in self._open_headings:
             parts.append(data)
 
-    # -- tag events --------------------------------------------------------
-    def handle_starttag(self, tag: str, attrs: List[Tuple[str, Optional[str]]]) -> None:
-        self._end_data()
-        ad: Dict[str, Optional[str]] = {}
-        for k, v in attrs:  # duplicate attribute: last wins (bs4 default)
-            # bs4 handle_starttag: "Change None attribute values to ''"
-            # — a valueless attribute (<a href>) is present-with-empty,
-            # not absent (find_all(href=True) matches it)
-            ad[k] = v if v is not None else ""
+    def node(self, data: str) -> None:
+        # typed strings and Comment/Doctype/CData/PI are never part of
+        # get_text, but they ARE children: `.string` returns a lone one
+        # (safe_strip then strips it)
+        if self._t_stack is not None:
+            self._t_stack[-1].append(data)
+
+    def start(self, tag: str, ad: Dict[str, str]) -> None:
         if tag == "img":
             self.images.append((ad.get("src"), ad.get("alt")))
         elif tag == "a":
@@ -265,8 +174,6 @@ class _Walker(FastTagPaths, HTMLParser):
             self._t_stack[-1].append(("e", child))
             if tag not in VOID_TAGS:
                 self._t_stack.append(child)
-        if tag in VOID_TAGS:
-            return
         if tag == "title" and not self._title_seen:
             self._title_seen = True
             self._title_depth = len(self.stack)
@@ -278,32 +185,6 @@ class _Walker(FastTagPaths, HTMLParser):
             self._open_headings.append(
                 (level, len(self.stack), [], len(self.headings) - 1)
             )
-        self.stack.append(tag)
-
-    def handle_startendtag(self, tag: str, attrs: List[Tuple[str, Optional[str]]]) -> None:
-        # <tag/> → bs4 html.parser: start + immediate end
-        self.handle_starttag(tag, attrs)
-        if tag not in VOID_TAGS:
-            self.handle_endtag(tag)
-
-    def handle_endtag(self, tag: str) -> None:
-        self._end_data()
-        if tag in VOID_TAGS:
-            return
-        # bs4 _popToTag: find nearest matching open tag; ignore stray end tags
-        for i in range(len(self.stack) - 1, -1, -1):
-            if self.stack[i] == tag:
-                new_depth = i
-                del self.stack[i:]
-                self._close_collectors(new_depth)
-                return
-        # unmatched end tag → ignored
-
-    def close(self) -> None:  # EOF: implicit close of everything still open
-        super().close()
-        self._end_data()
-        self.stack.clear()
-        self._close_collectors(0)
 
     def _resolve_title_string(self) -> Optional[str]:
         """bs4 ``Tag.string`` on the captured title subtree: None unless
@@ -319,7 +200,7 @@ class _Walker(FastTagPaths, HTMLParser):
                 return c
             children = c[1]  # ('e', children) element node
 
-    def _close_collectors(self, depth: int) -> None:
+    def end(self, depth: int) -> None:
         if self._title_depth is not None:
             if depth <= self._title_depth:
                 self.title_value = self._resolve_title_string()
@@ -336,41 +217,10 @@ class _Walker(FastTagPaths, HTMLParser):
             text = "".join(p.strip() for p in parts if p.strip())
             self.headings[slot] = "#" * level + " " + text
 
-    # -- non-text events: never part of get_text, but Comment/Doctype/
-    # CData/PI are NavigableString subclasses in bs4 — they ARE children,
-    # and `.string` returns a lone one (safe_strip then strips it)
-    def _non_text_node(self, data: str) -> None:
-        self._end_data()
-        if self._t_stack is not None:
-            self._t_stack[-1].append(data)
-
-    def handle_comment(self, data: str) -> None:
-        self._non_text_node(data)
-
-    def handle_decl(self, decl: str) -> None:
-        self._non_text_node(decl)
-
-    def handle_pi(self, data: str) -> None:
-        self._non_text_node(data)
-
-    def unknown_decl(self, data: str) -> None:
-        self._non_text_node(data)
-
-    def handle_data(self, data: str) -> None:
-        self._buf.append(data)
-
 
 def parse_page(html: str) -> PageExtract:
     """Parse once; return every extraction output the reference computes."""
-    w = _Walker()
-    try:
-        w.feed(html)
-        w.close()
-    except Exception:
-        # html.parser raises only on truly pathological input; mirror the
-        # reference's behavior of producing a best-effort page (bs4 recovers).
-        w._end_data()
-        w._close_collectors(0)
+    w = _Walker().run(html)
     out = PageExtract()
     # visible text: join string nodes with " ", collapse \s+, strip
     # (text_utils.py:132-134). " ".join(s.split()) is byte-identical to

@@ -5,8 +5,8 @@ but extracts page text flat (crawler.py:163 ``get_text``); modern
 training-data pipelines increasingly keep the page's STRUCTURE in
 lightweight Markdown (headings, lists, links) because structure carries
 signal plain text loses. This walker is that converter: deterministic,
-dependency-free, same html.parser + FastTagPaths event stream as the
-other walkers.
+dependency-free, over the same bs4 tree events (:class:`.tree.TreeWalker`)
+as the other walkers.
 
 Scope (deterministic subset, documented):
 - ``h1``–``h6`` → ``#``-prefixed heading lines;
@@ -18,7 +18,8 @@ Scope (deterministic subset, documented):
 - ``<a href>`` → ``[text](href)``; nested markup inside the anchor is
   flattened to its text; anchors without href render as plain text;
 - ``<img>`` → ``![alt](src)`` inline tokens;
-- head/script/style/template subtrees dropped entirely;
+- head/template subtrees dropped entirely; typed text (script/style
+  content, ruby ``rt``/``rp`` annotations) is never seen;
 - text nodes are stripped and joined with single spaces (the extractor's
   whitespace discipline); Markdown metacharacters in source text are NOT
   escaped (web-corpus text rarely collides; an escaping pass is a
@@ -27,21 +28,21 @@ Scope (deterministic subset, documented):
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
 from typing import List, Optional
 
-from .blocks import BLOCK_TAGS
-from .extractor import FastTagPaths, RAWTEXT_TAGS, VOID_TAGS
+from .blocks import BLOCK_TAGS, enclosing_block
+from .tree import TreeWalker
 
-_DROPPED = frozenset({"script", "style", "head", "template"})
+_DROPPED = frozenset({"head", "template"})
 _HEADINGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 
 
-class _MarkdownWalker(FastTagPaths, HTMLParser):
+class _MarkdownWalker(TreeWalker):
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.stack: List[str] = []
-        self._drop_depth = 0
+        super().__init__()
+        # stack index of the outermost open dropped element, None when
+        # not inside one: every event beneath it is ignored
+        self._drop_at: Optional[int] = None
         self.blocks: List[str] = []
         self._parts: List[str] = []
         self._context = "body"
@@ -83,18 +84,12 @@ class _MarkdownWalker(FastTagPaths, HTMLParser):
         elif text:
             self._emit(text)
 
-    def _enclosing_block(self) -> str:
-        for t in reversed(self.stack):
-            if t in BLOCK_TAGS:
-                return t
-        return "body"
-
     # -- events -------------------------------------------------------------
-    def handle_starttag(self, tag, attrs) -> None:
-        if tag in _DROPPED or tag in RAWTEXT_TAGS:
-            self._drop_depth += 1
+    def start(self, tag, attrs) -> None:
+        if self._drop_at is not None:
             return
-        if self._drop_depth:
+        if tag in _DROPPED:
+            self._drop_at = len(self.stack)
             return
         if tag in BLOCK_TAGS:
             self._flush()
@@ -112,53 +107,39 @@ class _MarkdownWalker(FastTagPaths, HTMLParser):
         if tag == "a":
             if self._link is not None:
                 self._close_link()
-            href = next((v for k, v in attrs if k == "href"), None)
-            self._link = (href, [])
+            self._link = (attrs.get("href"), [])
         elif tag == "img":
-            alt = next((v for k, v in attrs if k == "alt"), "") or ""
-            src = next((v for k, v in attrs if k == "src"), "") or ""
-            self._emit(f"![{alt.strip()}]({src})")
-        if tag not in VOID_TAGS:
-            self.stack.append(tag)
+            alt = attrs.get("alt", "")
+            self._emit(f"![{alt.strip()}]({attrs.get('src', '')})")
 
-    def handle_startendtag(self, tag, attrs) -> None:
-        self.handle_starttag(tag, attrs)
-        if tag not in VOID_TAGS:
-            self.handle_endtag(tag)
-
-    def handle_endtag(self, tag) -> None:
-        if tag in _DROPPED or tag in RAWTEXT_TAGS:
-            if self._drop_depth:
-                self._drop_depth -= 1
-            return
-        if self._drop_depth:
-            return
-        if tag == "a" and self._link is not None:
+    def end(self, depth) -> None:
+        top = len(self.stack)
+        if self._drop_at is not None:
+            if depth > self._drop_at:
+                return
+            top, self._drop_at = self._drop_at, None
+        closed = self.stack[depth:top]
+        if "a" in closed and self._link is not None:
             self._close_link()
-        if tag in BLOCK_TAGS:
-            self._flush()
-        if tag in VOID_TAGS:
+        if BLOCK_TAGS.isdisjoint(closed):
             return
-        for i in range(len(self.stack) - 1, -1, -1):
-            if self.stack[i] == tag:
-                del self.stack[i:]
-                break
-        if tag in BLOCK_TAGS:
-            if tag == "ol" and self._ol:
+        self._flush()
+        for t in closed:
+            if t == "ol" and self._ol:
                 self._ol.pop()
-            elif tag == "blockquote" and self._quote_depth:
+            elif t == "blockquote" and self._quote_depth:
                 self._quote_depth -= 1
-            self._context = self._enclosing_block()
+        self._context = enclosing_block(self.stack[:depth])
 
-    def handle_data(self, data) -> None:
-        if self._drop_depth:
+    def text(self, data) -> None:
+        if self._drop_at is not None:
             return
-        s = data.strip()
-        if s:
-            self._emit(" ".join(s.split()))
+        t = " ".join(data.split())
+        if t:
+            self._emit(t)
 
-    def close(self) -> None:
-        super().close()
+    def finish(self) -> None:
+        super().finish()
         self._flush()
 
 
@@ -167,13 +148,4 @@ def html_to_markdown(html: Optional[str]) -> str:
     broken markup yields whatever was convertible — never raises)."""
     if not html:
         return ""
-    w = _MarkdownWalker()
-    try:
-        w.feed(html)
-        w.close()
-    except Exception:
-        try:
-            w._flush()
-        except Exception:
-            pass
-    return "\n\n".join(w.blocks)
+    return "\n\n".join(_MarkdownWalker().run(html).blocks)

@@ -7,9 +7,10 @@ This is the second extractor in the engine, complementary to
 the parity surface): here the goal is *main content* — the article body
 with boilerplate (nav chrome, sidebars, comment sections, link farms)
 classified out, the way arc90-readability-family algorithms do it. lxml is
-not available in this environment, so the DOM is built with the same
-stdlib ``html.parser`` event stream the parity extractor uses — identical
-tokenizer, real tree.
+not available in this environment, so the DOM is built from the same bs4
+tree events (:class:`.tree.TreeWalker`) the parity extractor uses: one
+ordered child list per element, merged string nodes, typed strings
+(script/style content, ruby ``rt``/``rp`` annotations) left out.
 
 Heuristics (classic readability family, tuned small):
 
@@ -34,10 +35,9 @@ Arrow-batched like every other extraction op.
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
 from typing import List, Optional, Tuple
 
-from .extractor import RAWTEXT_TAGS, VOID_TAGS, FastTagPaths
+from .tree import VOID_TAGS, TreeWalker
 
 CANDIDATE_TAGS = frozenset(
     {"div", "section", "article", "main", "td", "li", "blockquote", "body"}
@@ -56,85 +56,55 @@ _NEGATIVE_RE = re.compile(
 
 
 class Node:
-    __slots__ = ("tag", "attrs", "children", "texts", "parent")
+    __slots__ = ("tag", "attrs", "children", "parent")
 
     def __init__(self, tag: str, attrs: dict, parent: "Optional[Node]"):
         self.tag = tag
         self.attrs = attrs
-        self.children: List[Node] = []
-        self.texts: List[str] = []  # direct text chunks
+        # element children (Node) and string nodes (str), document order
+        self.children: list = []
         self.parent = parent
 
 
-class _TreeBuilder(FastTagPaths, HTMLParser):
-    """Same event semantics as the parity extractor's _Walker (stray end
-    tags ignored, void tags not pushed), but materializing a tree."""
+class _TreeBuilder(TreeWalker):
+    """Materializes the core's events as a tree."""
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
+        super().__init__()
         self.root = Node("#root", {}, None)
-        self.cur = self.root
-        self.stack: List[Node] = [self.root]
+        self._nodes: List[Node] = [self.root]  # root + self.stack's elements
 
-    def handle_starttag(self, tag, attrs):
-        ad = {}
-        for k, v in attrs:
-            ad[k] = v if v is not None else ""
-        node = Node(tag, ad, self.cur)
-        self.cur.children.append(node)
-        if tag in VOID_TAGS:
-            return
-        self.stack.append(node)
-        self.cur = node
-
-    def handle_startendtag(self, tag, attrs):
-        self.handle_starttag(tag, attrs)
+    def start(self, tag, attrs):
+        node = Node(tag, attrs, self._nodes[-1])
+        self._nodes[-1].children.append(node)
         if tag not in VOID_TAGS:
-            self.handle_endtag(tag)
+            self._nodes.append(node)
 
-    def handle_endtag(self, tag):
-        if tag in VOID_TAGS:
-            return
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                self.cur = self.stack[-1]
-                return
+    def end(self, depth):
+        del self._nodes[depth + 1:]
 
-    def handle_data(self, data):
-        if self.cur.tag in RAWTEXT_TAGS:
-            return
-        if data:
-            self.cur.texts.append(data)
+    def text(self, data):
+        self._nodes[-1].children.append(data)
 
 
 def build_tree(html: str) -> Node:
-    b = _TreeBuilder()
-    try:
-        b.feed(html)
-        b.close()
-    except Exception:
-        pass
-    return b.root
-
-
-def _collect(node: Node, out: List[str], in_link: bool,
-             links: List[str]) -> None:
-    if node.tag in STRIP_TAGS:
-        return
-    for t in node.texts:
-        out.append(t)
-        if in_link:
-            links.append(t)
-    for ch in node.children:
-        _collect(ch, out, in_link or ch.tag == "a", links)
+    return _TreeBuilder().run(html).root
 
 
 def node_text_stats(node: Node) -> Tuple[str, int, int]:
     """(collapsed_text, text_len, link_text_len) for a subtree."""
     out: List[str] = []
     links: List[str] = []
-    _collect(node, out, node.tag == "a", links)
+    todo = [(node, False)]
+    while todo:
+        n, in_link = todo.pop()
+        if isinstance(n, str):
+            out.append(n)
+            if in_link:
+                links.append(n)
+        elif n.tag not in STRIP_TAGS:
+            in_link = in_link or n.tag == "a"
+            todo.extend((c, in_link) for c in reversed(n.children))
     text = " ".join(" ".join(out).split())
     link_len = len(" ".join(" ".join(links).split()))
     return text, len(text), link_len
@@ -162,15 +132,19 @@ def score_tree(root: Node) -> List[Tuple[Node, float]]:
     scored candidate containers."""
     scores: dict = {}
 
-    def walk(node: Node) -> None:
+    todo = [root]  # iterative pre-order: adversarial pages nest 1000 deep
+    while todo:
+        node = todo.pop()
         if node.tag in STRIP_TAGS:
-            return
+            continue
+        texts = [ch for ch in node.children if isinstance(ch, str)]
         if node.tag == "p" or (
-            node.tag == "div" and node.texts and not any(
-                ch.tag in CANDIDATE_TAGS for ch in node.children
+            node.tag == "div" and texts and not any(
+                isinstance(ch, Node) and ch.tag in CANDIDATE_TAGS
+                for ch in node.children
             )
         ):
-            direct = " ".join(" ".join(node.texts).split())
+            direct = " ".join(" ".join(texts).split())
             s = _para_score(direct)
             if s > 0:
                 parent = node.parent
@@ -183,10 +157,10 @@ def score_tree(root: Node) -> List[Tuple[Node, float]]:
                         if gp not in scores:
                             scores[gp] = float(_class_weight(gp))
                         scores[gp] += s / 2.0
-        for ch in node.children:
-            walk(ch)
+        todo.extend(
+            ch for ch in reversed(node.children) if isinstance(ch, Node)
+        )
 
-    walk(root)
     out = []
     for node, s in scores.items():
         if node.tag not in CANDIDATE_TAGS and node.tag != "#root":

@@ -11,25 +11,24 @@ Semantics (browser-shaped, deterministic):
 - character data belongs to the INNERMOST open cell, so a table nested
   inside a ``<td>`` keeps its own rows and contributes nothing to the
   outer cell (its text is structure, not content, of the outer table);
-- an unclosed ``<td>``/``<tr>`` is auto-closed by the next ``<td>``,
-  ``<tr>``, or ``</table>`` (the html5 tree-builder recovery browsers
-  apply); ``<th>`` is a cell like ``<td>``;
-- script/style content inside cells is dropped, same as the extractor;
+- an unclosed ``<td>``/``<tr>`` is auto-closed by the next ``<td>`` or
+  ``<tr>`` (the html5 tree-builder recovery browsers apply), and any end
+  tag that pops it closes it too; ``<th>`` is a cell like ``<td>``;
+- typed text (script/style content, ruby ``rt``/``rp`` annotations) is
+  dropped, same as the extractor;
 - cell text is its string nodes stripped and joined with a single space.
 
-Same html.parser + FastTagPaths event stream as the other walkers, one
+Same bs4 tree events (:class:`.tree.TreeWalker`) as the other walkers, one
 pass per page, tolerant of broken markup (never raises).
 """
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
 from typing import List, Optional
 
-from .extractor import FastTagPaths, RAWTEXT_TAGS
+from .tree import TreeWalker
 
 _CELL_TAGS = frozenset({"td", "th"})
-_DROPPED = frozenset({"script", "style"})
 
 
 class _TableCtx:
@@ -41,13 +40,11 @@ class _TableCtx:
         self.cur_cell: Optional[List[str]] = None
 
 
-class _TableWalker(FastTagPaths, HTMLParser):
+class _TableWalker(TreeWalker):
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
+        super().__init__()
         self.tables: List[List[List[str]]] = []
-        self._stack: List[_TableCtx] = []
-        self._order: List[_TableCtx] = []
-        self._raw_depth = 0
+        self._stack: List[_TableCtx] = []  # open <table> elements
 
     # -- cell/row lifecycle -------------------------------------------------
     def _close_cell(self, t: _TableCtx) -> None:
@@ -68,14 +65,11 @@ class _TableWalker(FastTagPaths, HTMLParser):
             t.cur_row = None
 
     # -- events ---------------------------------------------------------------
-    def handle_starttag(self, tag, attrs) -> None:
-        if tag in _DROPPED or tag in RAWTEXT_TAGS:
-            self._raw_depth += 1
-            return
+    def start(self, tag, attrs) -> None:
         if tag == "table":
             ctx = _TableCtx()
             self._stack.append(ctx)
-            self._order.append(ctx)
+            self.tables.append(ctx.rows)
         elif self._stack:
             t = self._stack[-1]
             if tag == "tr":
@@ -85,39 +79,24 @@ class _TableWalker(FastTagPaths, HTMLParser):
                 self._close_cell(t)
                 t.cur_cell = []
 
-    def handle_startendtag(self, tag, attrs) -> None:
-        self.handle_starttag(tag, attrs)
-        self.handle_endtag(tag)
+    def end(self, depth) -> None:
+        for tag in reversed(self.stack[depth:]):  # innermost first
+            if not self._stack:
+                return
+            t = self._stack[-1]
+            if tag == "table":
+                self._close_row(t)
+                self._stack.pop()
+            elif tag == "tr":
+                self._close_row(t)
+            elif tag in _CELL_TAGS:
+                self._close_cell(t)
 
-    def handle_endtag(self, tag) -> None:
-        if tag in _DROPPED or tag in RAWTEXT_TAGS:
-            if self._raw_depth > 0:
-                self._raw_depth -= 1
-            return
-        if not self._stack:
-            return
-        t = self._stack[-1]
-        if tag == "table":
-            self._close_row(t)
-            self._stack.pop()
-        elif tag == "tr":
-            self._close_row(t)
-        elif tag in _CELL_TAGS:
-            self._close_cell(t)
-
-    def handle_data(self, data) -> None:
-        if self._raw_depth > 0 or not self._stack:
-            return
-        t = self._stack[-1]
-        if t.cur_cell is not None and data.strip():
-            t.cur_cell.append(data)
-
-    def close(self) -> None:
-        super().close()
-        while self._stack:  # unclosed tables at EOF
-            self._close_row(self._stack[-1])
-            self._stack.pop()
-        self.tables = [c.rows for c in self._order]
+    def text(self, data) -> None:
+        if self._stack:
+            t = self._stack[-1]
+            if t.cur_cell is not None and data.strip():
+                t.cur_cell.append(data)
 
 
 def extract_tables(html: Optional[str]) -> List[List[List[str]]]:
@@ -125,13 +104,4 @@ def extract_tables(html: Optional[str]) -> List[List[List[str]]]:
     empty list for None/empty/table-free/broken input (never raises)."""
     if not html:
         return []
-    w = _TableWalker()
-    try:
-        w.feed(html)
-        w.close()
-    except Exception:
-        try:
-            w.close()
-        except Exception:
-            pass
-    return w.tables
+    return _TableWalker().run(html).tables

@@ -25,7 +25,6 @@ straight into partial-agg groupBys like corpus TF.
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
 from typing import List
 
 import pandas as pd
@@ -41,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..htmlx.blocks import segment_blocks
+from ..htmlx.tree import TreeWalker
 from .extract import _charset_expr, _decode
 
 BLOCK_TYPE = ArrayType(
@@ -391,7 +391,7 @@ def main_content_site_aware(
 # DOM structural fingerprint — layout clustering
 
 
-class _TagSeq(HTMLParser):
+class _TagSeq(TreeWalker):
     """Collect the document-order START-tag sequence (lowercased by
     HTMLParser; void and self-closing elements included). Text, comments,
     attributes and end tags are ignored on purpose: two pages with the
@@ -400,27 +400,18 @@ class _TagSeq(HTMLParser):
     content key."""
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
+        super().__init__()
         self.tags: List[str] = []
 
-    def handle_starttag(self, tag, attrs):  # noqa: D102
-        self.tags.append(tag)
-
-    def handle_startendtag(self, tag, attrs):  # noqa: D102
+    def start(self, tag, attrs):  # noqa: D102
         self.tags.append(tag)
 
 
 def _tag_sequences_batch(html: pd.Series, charset: pd.Series) -> pd.Series:
-    out: List[str] = []
-    for h, cs in zip(html, charset):
-        p = _TagSeq()
-        try:
-            p.feed(_decode(h, cs))
-            p.close()
-        except Exception:
-            pass  # tolerant-parser discipline: keep what was collected
-        out.append(">".join(p.tags))
-    return pd.Series(out)
+    return pd.Series(
+        [">".join(_TagSeq().run(_decode(h, cs)).tags)
+         for h, cs in zip(html, charset)]
+    )
 
 
 tag_sequence_udf = pandas_udf(_tag_sequences_batch, StringType())

@@ -163,10 +163,6 @@ def ngram_jaccard_pairs(shingles: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _hex_digit_val(c):
-    return F.expr(f"instr('{HEX}', {c}) - 1")
-
-
 def simhash32(token_counts: DataFrame, id_col: str = "doc_id",
               word_col: str = "word", cnt_col: str = "cnt") -> DataFrame:
     """32-bit SimHash over weighted tokens: (id, simhash).

@@ -169,28 +169,6 @@ page_markdown_udf = pandas_udf(_md_batch, returnType=StringType())
 page_json_udf = pandas_udf(_json_batch, returnType=StringType())
 
 
-def _slug_batch(url: pd.Series) -> pd.Series:
-    return pd.Series([url_slug(u or "") for u in url])
-
-
-slug_udf = pandas_udf(_slug_batch, returnType=StringType())
-
-
-def page_reports(docs: DataFrame) -> DataFrame:
-    """(url, slug, md_report, page_json) — one Arrow pass per renderer.
-
-    Plan: Scan → ArrowEvalPython → Project; no shuffle (per-page render is
-    embarrassingly parallel; partitioning inherited from the source)."""
-    return docs.select(
-        "url",
-        slug_udf(F.col("url")).alias("slug"),
-        page_markdown_udf(F.col("url"), F.col("html")).alias("md_report"),
-        page_json_udf(F.col("url"), F.col("html"), F.col("lang")).alias(
-            "page_json"
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # native line/row projections
 # ---------------------------------------------------------------------------
@@ -273,16 +251,6 @@ def visited_urls_rows(
         date_col.alias("Data"),
         F.concat("slug", F.lit(".md")).alias("MD File"),
         F.concat("slug", F.lit(".json")).alias("JSON File"),
-    )
-
-
-def index_entries_json(extracted: DataFrame) -> DataFrame:
-    """index.json entries {slug,title,md_filename} (json.py:40-58) plus the
-    rendered compact JSON object per entry."""
-    return extracted.select(
-        "slug",
-        "title",
-        F.concat("slug", F.lit(".md")).alias("md_filename"),
     )
 
 
