@@ -51,8 +51,7 @@ def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    spark = get_spark(app_name="check-oracles", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="check-oracles")
 
     failures = []
     for name in sorted(entry_mod.queries()):

@@ -38,8 +38,7 @@ def main() -> None:
     )
     from tribeca_insights_spark.session import get_spark
 
-    spark = get_spark(app_name="dump-plans", master="local[4]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="dump-plans")
 
     docs = EQ.documents_as_pages(spark, SF_DIR)
 

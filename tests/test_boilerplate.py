@@ -356,24 +356,23 @@ def test_main_content_site_aware_small_host_guard(spark):
     assert "Title duo2.com 0" in out["https://duo2.com/p0"].main_text
 
 
-def test_tag_sequence_walker_pure():
+def test_tag_sequence_walker_pure(spark):
     """The signature is the start-tag stream only: text, attrs, end
     tags, comments and case must not affect it; void and self-closing
     elements count."""
     from tribeca_insights_spark.operators.boilerplate import (
-        _tag_sequences_batch,
+        layout_fingerprint,
     )
-    import pandas as pd
 
     a = '<DIV class="x"><P>hello</P><BR><img src="i.png"/></DIV>'
     b = "<div><p>totally different words</p><br><img src='j.jpg'></div>"
     c = "<div><p>x</p></div>"  # no br/img: different skeleton
-    sigs = list(
-        _tag_sequences_batch(
-            pd.Series([a.encode(), b.encode(), c.encode(), b"", None]),
-            pd.Series([None] * 5),
-        )
+    docs = spark.createDataFrame(
+        list(enumerate([a.encode(), b.encode(), c.encode(), b"", None])),
+        "doc_id int, html binary",
     )
+    sigs = [r.layout_sig for r in
+            layout_fingerprint(docs).orderBy("doc_id").collect()]
     assert sigs[0] == sigs[1] == "div>p>br>img"
     assert sigs[2] == "div>p"
     assert sigs[3] == "" and sigs[4] == ""

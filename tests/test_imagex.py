@@ -122,18 +122,14 @@ def test_unsupported_subsets_raise():
 
 
 def test_media_ops_real_png(spark):
-    """media_metadata / media_resize / media_features over REAL PNGs —
-    no deterministic_fake in the loop."""
+    """media_metadata over REAL PNGs — no deterministic_fake in the
+    loop."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
 
-    from tribeca_insights_spark.operators.multimodal import (
-        media_features,
-        media_metadata,
-        media_resize,
-    )
+    from tribeca_insights_spark.operators.multimodal import media_metadata
 
     @pandas_udf(BinaryType())
     def png_udf(i: pd.Series) -> pd.Series:
@@ -154,30 +150,10 @@ def test_media_ops_real_png(spark):
         assert r["width"] == 20 + i % 9 and r["height"] == 120 + i % 9
         assert r["n_bytes"] == 68 + r["height"] * (r["width"] + 1)
 
-    rs = {r["media_id"]: r for r in
-          media_resize(media, max_px=64,
-                       deterministic_fake=False).collect()}
-    for i in range(12):
-        w, h = 20 + i % 9, 120 + i % 9
-        scale = 64 / h  # height dominates
-        assert rs[i]["height"] == max(1, int(h * scale)) == 64
-        assert rs[i]["width"] == max(1, int(w * scale))
-        # output is itself a valid PNG with those dims
-        assert sniff_image(bytes(rs[i]["payload"])) == (
-            "png", rs[i]["width"], rs[i]["height"]
-        )
 
-    feats = media_features(media, dim=8,
-                           deterministic_fake=False).collect()
-    for r in feats:
-        assert len(r["embedding"]) == 8
-        assert abs(sum(x * x for x in r["embedding"]) - 1.0) < 1e-5
-
-
-def test_corrupt_payloads_fail_per_payload_not_per_job(spark):
+def test_corrupt_payloads_fail_per_payload_not_per_job():
     """Review findings: truncated PNG bodies must raise
-    UnsupportedImageError (not struct/zlib errors), and recognized-but-
-    dimensionless payloads must not crash media_resize."""
+    UnsupportedImageError (not struct/zlib errors)."""
     import struct as _s
 
     import pytest
@@ -189,21 +165,6 @@ def test_corrupt_payloads_fail_per_payload_not_per_job(spark):
         decode_png(truncated)
     # sniff still recognizes it as png (dims unreadable)
     assert sniff_image(truncated)[0] == "png"
-
-    from pyspark.sql import functions as F
-
-    from tribeca_insights_spark.operators.multimodal import media_resize
-
-    sofless_jpeg = b"\xff\xd8\xff\xd9"  # SOI+EOI, no SOF → dims None
-    media = spark.createDataFrame(
-        [(1, bytearray(truncated)), (2, bytearray(sofless_jpeg))],
-        "media_id long, payload binary",
-    ).select("media_id", F.col("payload").cast("binary").alias("payload"))
-    rows = {r["media_id"]: r
-            for r in media_resize(media, deterministic_fake=True).collect()}
-    assert bytes(rows[2]["payload"]) == sofless_jpeg  # passthrough
-    assert rows[2]["width"] is None and rows[2]["height"] is None
-    assert rows[1]["width"] is not None  # unsniffable-dims PNG → hash fake
 
 
 # --- perceptual dHash ---------------------------------------------------------

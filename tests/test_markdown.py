@@ -48,6 +48,16 @@ def test_drops_and_tolerance():
     assert md("<p>ok<div <<< busted") != ""  # never raises
 
 
+def test_unclosed_head_keeps_body():
+    """A never-closed <head> holds the body in bs4's html.parser tree:
+    the body's content survives the head drop, the title still goes."""
+    assert md(
+        "<html><head><title>T</title><body><p>text here</p></body></html>"
+    ) == "text here"
+    # a template's content stays dropped, even with a body inside it
+    assert md("<head><template><body>x</body></template></head><p>y</p>") == "y"
+
+
 def test_pages_to_markdown_operator(spark):
     html = "<h2>T</h2><p>body text</p>"
     df = spark.createDataFrame(

@@ -119,19 +119,6 @@ def test_mp4_sample_table_roundtrip():
     assert frame_sample_mp4(b64, every_n=2) == [1000, 2**33 + 5]
 
 
-def test_frame_sample_real_vs_fake():
-    import pytest
-
-    from tribeca_insights_spark.mediax import make_mp4_with_chunks
-    from tribeca_insights_spark.operators.multimodal import frame_sample_stub
-
-    b = make_mp4_with_chunks(1000, [10, 20, 30, 40])
-    assert frame_sample_stub(b, every_n=2) == [10, 30]  # real stco offsets
-    with pytest.raises(NotImplementedError):
-        frame_sample_stub(b"not video", deterministic_fake=False)
-    assert frame_sample_stub(b"x" * 100, every_n=10, deterministic_fake=True)
-
-
 def test_mp3_layer12_no_bogus_duration():
     """Layer I/II frames must not get Layer-III bitrate-table durations."""
     # MPEG1 Layer I (layer bits 11): FF FF 90 00

@@ -1,82 +1,14 @@
-"""Multimodal feature-extract / resize plumbing (stubbed decode, real
-mapInPandas dataflow — task-brief multimodal checklist)."""
-
-import math
+"""Multimodal metadata plumbing (stubbed decode, real mapInPandas
+dataflow — task-brief multimodal checklist)."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from tribeca_insights_spark.operators.multimodal import (
-    decode_image_stub,
-    frame_sample_stub,
-    media_features,
-    media_resize,
-)
-
-
-def _media(spark, n=20):
-    return spark.range(n).select(
-        F.col("id").alias("media_id"),
-        F.encode(F.concat(F.lit("payload-"), F.col("id").cast("string")
-                          ), "UTF-8").alias("payload"),
-    )
-
-
-def test_media_features_deterministic_unit_norm(spark):
-    out = media_features(_media(spark), dim=16).collect()
-    assert len(out) == 20
-    by_id = {r["media_id"]: r["embedding"] for r in out}
-    for vec in by_id.values():
-        assert len(vec) == 16
-        assert abs(math.sqrt(sum(x * x for x in vec)) - 1.0) < 1e-5
-    # deterministic across runs
-    again = {r["media_id"]: r["embedding"]
-             for r in media_features(_media(spark), dim=16).collect()}
-    assert by_id == again
-
-
-def test_media_features_feed_similarity(spark):
-    """Extracted features must plug straight into the ANN operator."""
-    from tribeca_insights_spark.operators.similarity import ann_bruteforce_topk
-
-    emb = media_features(_media(spark, 30)).withColumnRenamed(
-        "media_id", "vec_id"
-    )
-    top = ann_bruteforce_topk(emb, range(3), k=2).collect()
-    assert len(top) == 6  # 3 queries × top-2
-
-
-def test_media_resize_bounds(spark):
-    out = media_resize(_media(spark), max_px=96).collect()
-    for r in out:
-        assert 1 <= r["width"] <= 96 and 1 <= r["height"] <= 96
-        assert isinstance(r["payload"], (bytes, bytearray))
-
-
-def test_media_resize_real_mode_never_corrupts(spark):
-    """deterministic_fake=False + a recognized non-PNG container (no
-    re-encoder here): payload must pass through UNCHANGED with its true
-    dims — never the byte-truncated fake (which is test-plumbing only)."""
-    import struct
-
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 40
-    media = spark.createDataFrame([(1, bytearray(gif))],
-                                  "media_id LONG, payload BINARY")
-    (r,) = media_resize(media, max_px=96, deterministic_fake=False).collect()
-    assert bytes(r["payload"]) == gif  # untouched, not truncated
-    assert (r["width"], r["height"]) == (320, 200)  # true dims
-    # fake mode still byte-truncates + rescales (plumbing contract)
-    (rf,) = media_resize(media, max_px=96, deterministic_fake=True).collect()
-    assert rf["height"] == 60 and rf["width"] == 96
-    assert len(bytes(rf["payload"])) < len(gif)
+from tribeca_insights_spark.operators.multimodal import decode_image_stub
 
 
 def test_stubs_raise_without_fake():
     with pytest.raises(NotImplementedError):
         decode_image_stub(b"x", deterministic_fake=False)
-    with pytest.raises(NotImplementedError):
-        frame_sample_stub(b"x" * 100, deterministic_fake=False)
-    assert frame_sample_stub(b"x" * 100, every_n=10, deterministic_fake=True)
 
 
 def test_corrupt_payload_flagged_not_faked(spark):

@@ -52,17 +52,6 @@ def test_doc_frequency(golden, extracted):
     assert got == dict(oracle)
 
 
-def test_top_k_words_per_page(golden, extracted):
-    got = {}
-    for r in tfops.top_k_words_per_page(extracted, k=5).collect():
-        got.setdefault(r["url"], []).append((r["word"], r["freq"], r["rank"]))
-    for g in golden:
-        # oracle: freq desc, word asc, top 5
-        items = sorted(g["word_frequency"].items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-        expect = [(w, f, i + 1) for i, (w, f) in enumerate(items)]
-        assert sorted(got.get(g["url"], []), key=lambda t: t[2]) == expect, g["url"]
-
-
 def test_domain_top_keywords_salted_equals_plain(golden, extracted):
     plain = tfops.domain_top_keywords(extracted, k=3).collect()
     salted = tfops.domain_top_keywords(extracted, k=3, n_salts=8).collect()

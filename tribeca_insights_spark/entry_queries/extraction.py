@@ -83,12 +83,10 @@ def q02_extract_text_hash(spark, sf_dir):
 def q31_page_markdown(spark, sf_dir):
     """Per-page Markdown report (markdown.py:34-128 layout) rendered by an
     Arrow-batched pandas UDF; byte-exact vs the closed-form oracle."""
-    from ..operators.sinks import page_markdown_udf
+    from ..operators.sinks import page_markdown_column
 
     docs = documents_as_simple_pages(spark, sf_dir)
-    return docs.select(
-        "doc_id", page_markdown_udf(F.col("url"), F.col("html")).alias("md_doc")
-    )
+    return docs.select("doc_id", page_markdown_column(docs).alias("md_doc"))
 
 
 @q(
@@ -112,15 +110,10 @@ def q31_page_markdown(spark, sf_dir):
 def q32_page_json(spark, sf_dir):
     """pages_json/<slug>.json body (json.py:24-37: indent=2, key order =
     crawler.py:163-175, word_frequency = first-occurrence order)."""
-    from ..operators.sinks import page_json_udf
+    from ..operators.sinks import page_json_column
 
     docs = documents_as_simple_pages(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        page_json_udf(F.col("url"), F.col("html"), F.col("lang")).alias(
-            "page_json"
-        ),
-    )
+    return docs.select("doc_id", page_json_column(docs).alias("page_json"))
 
 
 @q(

@@ -24,10 +24,6 @@ CONTROL_CLASS = (
     "[\\u0000-\\u0008\\u000B\\u000C\\u000E-\\u001F\\u007F"
     "\\u200B-\\u200D\\uFEFF]"
 )
-# RE2 (DuckDB) form of the same class — for oracle SQL
-CONTROL_CLASS_RE2 = (
-    r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{200B}-\x{200D}\x{FEFF}]"
-)
 
 
 def strip_controls(col) -> Column:

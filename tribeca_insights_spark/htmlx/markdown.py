@@ -18,8 +18,9 @@ Scope (deterministic subset, documented):
 - ``<a href>`` → ``[text](href)``; nested markup inside the anchor is
   flattened to its text; anchors without href render as plain text;
 - ``<img>`` → ``![alt](src)`` inline tokens;
-- head/template subtrees dropped entirely; typed text (script/style
-  content, ruby ``rt``/``rp`` annotations) is never seen;
+- head/template subtrees dropped entirely, except a ``<body>`` opened
+  inside a never-closed ``<head>``; typed text (script/style content,
+  ruby ``rt``/``rp`` annotations) is never seen;
 - text nodes are stripped and joined with single spaces (the extractor's
   whitespace discipline); Markdown metacharacters in source text are NOT
   escaped (web-corpus text rarely collides; an escaping pass is a
@@ -87,7 +88,13 @@ class _MarkdownWalker(TreeWalker):
     # -- events -------------------------------------------------------------
     def start(self, tag, attrs) -> None:
         if self._drop_at is not None:
-            return
+            # an unclosed <head> holds the body in bs4's tree: the body's
+            # content is still the page, so the head drop ends there
+            # (not inside a template, whose content stays dropped)
+            dropped = self.stack[self._drop_at:]
+            if tag != "body" or dropped[0] != "head" or "template" in dropped:
+                return
+            self._drop_at = None
         if tag in _DROPPED:
             self._drop_at = len(self.stack)
             return

@@ -73,35 +73,6 @@ def domain_block_flags(
     )
 
 
-def filter_blocked(
-    docs: DataFrame,
-    blocklist: DataFrame,
-    host_col: str = "host",
-    entry_col: str = "entry",
-) -> DataFrame:
-    """Keep only unblocked rows — the suffix-explode anti-join form (no
-    per-row flag materialization; same equi-join scale shape)."""
-    bl = F.broadcast(
-        blocklist.select(F.col(entry_col).alias("_suf")).distinct()
-    )
-    blocked_hosts = (
-        docs.select(
-            F.col(host_col).alias("_h"),
-            F.explode(host_suffixes(F.col(host_col))).alias("_suf"),
-        )
-        .join(bl, "_suf")
-        .select("_h")
-        .distinct()
-    )
-    return (
-        docs.join(
-            F.broadcast(blocked_hosts),
-            docs[host_col] == F.col("_h"),
-            "left_anti",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # token-level word blocklist (C4 / LDNOOBW discipline)
 # ---------------------------------------------------------------------------

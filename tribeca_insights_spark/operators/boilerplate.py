@@ -27,9 +27,7 @@ from __future__ import annotations
 
 from typing import List
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -39,9 +37,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..htmlx.blocks import segment_blocks
+from ..htmlx.blocks import segment_blocks, segment_blocks_with_spans
 from ..htmlx.tree import TreeWalker
-from .extract import _charset_expr, _decode
+from .extract import html_udf
 
 BLOCK_TYPE = ArrayType(
     StructType(
@@ -57,20 +55,11 @@ BLOCK_TYPE = ArrayType(
 )
 
 
-def _blocks_batch(html: pd.Series) -> pd.Series:
-    out: List[list] = []
-    for h in html:
-        out.append(
-            [
-                (b.idx, b.tag, b.text, b.n_words, b.n_link_words,
-                 b.is_heading)
-                for b in segment_blocks(_decode(h))
-            ]
-        )
-    return pd.Series(out)
-
-
-blocks_udf = pandas_udf(_blocks_batch, BLOCK_TYPE)
+def _blocks_of(html: str) -> List[tuple]:
+    return [
+        (b.idx, b.tag, b.text, b.n_words, b.n_link_words, b.is_heading)
+        for b in segment_blocks(html)
+    ]
 
 
 def _is_content(b: Column, min_words: int) -> Column:
@@ -79,14 +68,13 @@ def _is_content(b: Column, min_words: int) -> Column:
     )
 
 
-def with_blocks(docs: DataFrame, html_col: str = "html") -> DataFrame:
+def with_blocks(docs: DataFrame) -> DataFrame:
     """Append a ``blocks`` array column (one segmenter pass per page)."""
-    return docs.withColumn("blocks", blocks_udf(F.col(html_col)))
+    return docs.withColumn("blocks", html_udf(docs, _blocks_of, BLOCK_TYPE))
 
 
 def main_content(
     docs: DataFrame,
-    html_col: str = "html",
     min_words: int = 3,
 ) -> DataFrame:
     """Per-page main content: input columns + ``main_text`` (content blocks
@@ -95,10 +83,10 @@ def main_content(
     Zero-shuffle: the block array never explodes; selection and re-join are
     array-expression codegen over the Arrow batch output.
     """
-    d = with_blocks(docs, html_col)
+    d = with_blocks(docs)
     content = F.filter("blocks", lambda b: _is_content(b, min_words))
     return d.select(
-        *[c for c in docs.columns if c != html_col],
+        *[c for c in docs.columns if c != "html"],
         F.array_join(
             F.transform(content, lambda b: b["text"]), " "
         ).alias("main_text"),
@@ -109,13 +97,12 @@ def main_content(
 
 def boilerplate_stats(
     docs: DataFrame,
-    html_col: str = "html",
     min_words: int = 3,
 ) -> DataFrame:
     """Per-page boilerplate profile: block counts, word counts, and the
     boilerplate share of words — the report a content-extraction threshold
     decision reads. Same zero-shuffle shape as ``main_content``."""
-    d = with_blocks(docs, html_col)
+    d = with_blocks(docs)
     total_w = F.aggregate(
         "blocks", F.lit(0), lambda acc, b: acc + b["n_words"]
     )
@@ -124,7 +111,7 @@ def boilerplate_stats(
         content, F.lit(0), lambda acc, b: acc + b["n_words"]
     )
     return d.select(
-        *[c for c in docs.columns if c != html_col],
+        *[c for c in docs.columns if c != "html"],
         F.size("blocks").alias("n_blocks"),
         F.size(content).alias("n_content_blocks"),
         total_w.alias("n_words_total"),
@@ -137,8 +124,7 @@ def boilerplate_stats(
     )
 
 
-def exploded_blocks(docs: DataFrame, url_col: str = "url",
-                    html_col: str = "html") -> DataFrame:
+def exploded_blocks(docs: DataFrame, url_col: str = "url") -> DataFrame:
     """(url, idx, tag, text, n_words, n_link_words, is_heading) — one row
     per block, for corpus-level block analysis (e.g. boilerplate profile by
     tag). Widens rows; downstream aggs partial-combine like corpus TF.
@@ -147,7 +133,7 @@ def exploded_blocks(docs: DataFrame, url_col: str = "url",
     ``size(blocks) > 0`` pre-filter of a plain explode re-runs the
     Arrow-batched segmenter a second time (see operators/tables.py)."""
     return (
-        with_blocks(docs, html_col)
+        with_blocks(docs)
         .select(
             F.col(url_col).alias("url"),
             F.explode_outer("blocks").alias("b"),
@@ -183,30 +169,15 @@ SPAN_RESULT_TYPE = StructType(
 )
 
 
-def _span_blocks_batch(html: pd.Series, charset: pd.Series) -> pd.DataFrame:
-    from ..htmlx.blocks import segment_blocks_with_spans
-
-    pages: List[str] = []
-    blocks: List[list] = []
-    for h, cs in zip(html, charset):
-        page = _decode(h, cs)
-        pages.append(page)
-        blocks.append(
-            [
-                (b.idx, b.tag, b.n_words, b.n_link_words, b.is_heading,
-                 s, e)
-                for b, (s, e) in segment_blocks_with_spans(page)
-            ]
-        )
-    return pd.DataFrame({"page": pages, "blocks": blocks})
-
-
-span_blocks_udf = pandas_udf(_span_blocks_batch, SPAN_RESULT_TYPE)
+def _span_blocks_of(page: str) -> tuple:
+    return page, [
+        (b.idx, b.tag, b.n_words, b.n_link_words, b.is_heading, s, e)
+        for b, (s, e) in segment_blocks_with_spans(page)
+    ]
 
 
 def content_spans(
     docs: DataFrame,
-    html_col: str = "html",
     min_words: int = 3,
 ) -> DataFrame:
     """Per-document CONTENT-block source spans — one row per content
@@ -233,12 +204,13 @@ def content_spans(
     the per-block span columns stay 2 ints, so the exploded width is
     slim at corpus scale.
     """
-    cs = _charset_expr(docs)
-    d = docs.withColumn("_sr", span_blocks_udf(F.col(html_col), cs))
+    d = docs.withColumn(
+        "_sr", html_udf(docs, _span_blocks_of, SPAN_RESULT_TYPE)
+    )
     content = F.filter(
         F.col("_sr.blocks"), lambda b: _is_content(b, min_words)
     )
-    keep = [c for c in docs.columns if c != html_col]
+    keep = [c for c in docs.columns if c != "html"]
     return (
         d.select(
             *keep,
@@ -264,7 +236,6 @@ def template_blocks(
     docs: DataFrame,
     host_col: str = "host",
     page_col: str = "url",
-    html_col: str = "html",
     min_frac_micros: int = 500_000,
 ) -> DataFrame:
     """SITE-LEVEL template detection: blocks whose text recurs on at
@@ -287,7 +258,7 @@ def template_blocks(
     salt mega-hosts exactly like corpus TF (operators/tf.py:61).
     """
     b = (
-        with_blocks(docs, html_col)
+        with_blocks(docs)
         .select(
             F.col(host_col).alias("host"),
             F.col(page_col).alias("_page"),
@@ -327,7 +298,6 @@ def main_content_site_aware(
     docs: DataFrame,
     host_col: str = "host",
     page_col: str = "url",
-    html_col: str = "html",
     min_words: int = 3,
     min_frac_micros: int = 500_000,
     min_template_pages: int = 2,
@@ -357,14 +327,13 @@ def main_content_site_aware(
     the dim from an existing ``exploded_blocks`` materialization.
     """
     tmpl = (
-        template_blocks(docs, host_col, page_col, html_col,
-                        min_frac_micros)
+        template_blocks(docs, host_col, page_col, min_frac_micros)
         .filter(F.col("n_pages_with_block") >= min_template_pages)
         .groupBy("host")
         .agg(F.collect_list("block_text").alias("_tmpl"))
         .withColumnRenamed("host", "_tmpl_host")
     )
-    d = with_blocks(docs, html_col).join(
+    d = with_blocks(docs).join(
         F.broadcast(tmpl),
         F.col(host_col) == F.col("_tmpl_host"),
         "left",
@@ -378,7 +347,7 @@ def main_content_site_aware(
 
     content = F.filter("blocks", keep)
     return d.select(
-        *[c for c in docs.columns if c != html_col],
+        *[c for c in docs.columns if c != "html"],
         F.array_join(
             F.transform(content, lambda b: b["text"]), " "
         ).alias("main_text"),
@@ -407,20 +376,11 @@ class _TagSeq(TreeWalker):
         self.tags.append(tag)
 
 
-def _tag_sequences_batch(html: pd.Series, charset: pd.Series) -> pd.Series:
-    return pd.Series(
-        [">".join(_TagSeq().run(_decode(h, cs)).tags)
-         for h, cs in zip(html, charset)]
-    )
+def _tag_sequence(html: str) -> str:
+    return ">".join(_TagSeq().run(html).tags)
 
 
-tag_sequence_udf = pandas_udf(_tag_sequences_batch, StringType())
-
-
-def layout_fingerprint(
-    docs: DataFrame,
-    html_col: str = "html",
-) -> DataFrame:
+def layout_fingerprint(docs: DataFrame) -> DataFrame:
     """Per-page DOM structural fingerprint: input columns (minus the
     html payload) + ``layout_sig`` (the '>'-joined start-tag sequence),
     ``layout_hash`` (md5 of its UTF-8 bytes, computed JVM-side so the
@@ -438,10 +398,11 @@ def layout_fingerprint(
     smaller than the html payload it replaces); hashing stays in
     whole-stage codegen.
     """
-    cs = _charset_expr(docs)
-    d = docs.withColumn("layout_sig", tag_sequence_udf(F.col(html_col), cs))
+    d = docs.withColumn(
+        "layout_sig", html_udf(docs, _tag_sequence, StringType())
+    )
     return d.select(
-        *[c for c in docs.columns if c != html_col],
+        *[c for c in docs.columns if c != "html"],
         "layout_sig",
         F.md5(F.encode("layout_sig", "UTF-8")).alias("layout_hash"),
         F.when(F.col("layout_sig") == "", F.lit(0))
@@ -451,11 +412,7 @@ def layout_fingerprint(
     )
 
 
-def layout_clusters(
-    docs: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def layout_clusters(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Layout-cluster report: one row per distinct DOM skeleton —
     ``(layout_hash, n_pages, n_tags, min_id)``. The corpus-curation
     view: template farms surface as huge clusters, hand-written pages
@@ -468,7 +425,7 @@ def layout_clusters(
     a naive collect-per-key would hit never materializes; at 10^12
     pages this is one partial-agg shuffle of (hash, count) pairs.
     """
-    fp = layout_fingerprint(docs, html_col)
+    fp = layout_fingerprint(docs)
     return fp.groupBy("layout_hash").agg(
         F.count("*").cast("long").alias("n_pages"),
         F.min("n_tags").cast("int").alias("n_tags"),

@@ -24,13 +24,17 @@ extraction path, so both collections are re-derived JVM-side — literal
 for consumers that never touch them. Measured effect of the two changes:
 full-path extraction+TF 23.9k → 54.0k docs/sec at local[32].
 
-Charset policy: ``html`` is ``binary`` (input_hint); when the input carries
-a per-page declared ``charset`` column (the WARC/WET reader emits one from
-Content-Type / <meta charset>), every decode honors it — matching the
-reference, which consumes ``requests``' header-charset-decoded ``resp.text``
-(crawler.py:137-138). Absent/unknown charsets decode UTF-8 with
-``errors="replace"``, the Common-Crawl-standard fallback. Fixtures are
-UTF-8, making the byte-identity invariant well-posed.
+Charset policy, stated once for the package: ``html`` is UTF-8 by
+contract (FIXTURES.md §1) — the WARC/WET reader (sources/warc.py
+``read_warc``) transcodes every record to UTF-8 at ingestion and emits no
+``charset`` column. An input MAY carry a per-page declared ``charset``
+column; every Python walker honors it, because every walker UDF decodes
+through :func:`html_udf` (or, for this module's extraction UDF,
+:func:`_extract_batch`) with the one :func:`_decode`, matching the
+reference, which consumes ``requests``' header-charset-decoded
+``resp.text`` (crawler.py:137-138). Absent/unknown charsets decode UTF-8
+with ``errors="replace"``. The JVM-side regex operators (``meta.py``,
+``governance.py``) read ``html`` through a UTF-8 ``cast("string")``.
 """
 
 from __future__ import annotations
@@ -39,12 +43,12 @@ import hashlib
 import json
 from collections import Counter
 from functools import lru_cache
-from typing import Optional
+from typing import Callable, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructType
+from pyspark.sql.types import DataType, StringType, StructType
 
 from ..functions.slug import url_slug
 from ..functions.tokenize import clean_and_tokenize
@@ -60,12 +64,9 @@ _TOKEN_PROFILE = "compat"  # default stopword profile inside the UDFs
 
 
 def _decode(h: Optional[object], charset: Optional[str] = None) -> str:
-    """bytes → str with the page's DECLARED charset when one is carried
-    (the WARC/WET reader emits it per record from Content-Type / <meta
-    charset>, sources/warc.py:94-107) — mirroring the reference, which
-    inherits requests' header-charset decode (crawler.py:137-138,
-    ``response.text``). Unknown/absent charset falls back to
-    UTF-8(replace), the old behavior; decode NEVER raises (errors=replace,
+    """bytes → str with the page's declared charset when one is carried
+    (see the module docstring's charset policy). Unknown/absent charset
+    falls back to UTF-8(replace); decode NEVER raises (errors=replace,
     like requests)."""
     if h is None:
         return ""
@@ -159,6 +160,29 @@ def _charset_expr(docs: DataFrame):
     if "charset" in docs.columns:
         return F.col("charset")
     return F.lit(None).cast(StringType())
+
+
+def html_udf(docs: DataFrame, page_fn: Callable, return_type: DataType,
+             *extra: Column) -> Column:
+    """The Python HTML boundary of every walker operator: a pandas UDF
+    column over ``docs``' ``html`` (and charset, see the module docstring)
+    that decodes each page once with :func:`_decode` and returns
+    ``page_fn(page, *extra_values)`` per row. A struct ``return_type``
+    comes back as a DataFrame (``page_fn`` yields one tuple or dict per
+    page), any other type as a Series."""
+    struct = isinstance(return_type, StructType)
+
+    def batch(html: pd.Series, charset: pd.Series,
+              *cols: pd.Series) -> pd.Series:
+        rows = [page_fn(_decode(h, cs), *x)
+                for h, cs, *x in zip(html, charset, *cols)]
+        if struct:
+            return pd.DataFrame(rows, columns=return_type.names)
+        return pd.Series(rows)
+
+    return pandas_udf(batch, return_type)(
+        F.col("html"), _charset_expr(docs), *extra
+    )
 
 
 def _extract_col(docs: DataFrame, profile: str, tokens_only: bool):

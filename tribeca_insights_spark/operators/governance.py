@@ -31,8 +31,7 @@ _CC_RX = (
 _SPDX_RX = r"SPDX-License-Identifier:\s*([A-Za-z0-9.+-]+)"
 
 
-def license_signals(pages: DataFrame, url_col: str = "doc_id",
-                    html_col: str = "html") -> DataFrame:
+def license_signals(pages: DataFrame, url_col: str = "doc_id") -> DataFrame:
     """One row per detected license signal: ``(id, license, via)``.
 
     - ``via='link'``: any href (``<a>`` or ``<link>``, incl.
@@ -44,7 +43,7 @@ def license_signals(pages: DataFrame, url_col: str = "doc_id",
     Duplicate signals per (id, license, via) collapse — the relation
     answers "what licenses does this page declare", not "how often".
     """
-    html = F.col(html_col).cast("string")
+    html = F.col("html").cast("string")
     hrefs = pages.select(
         F.col(url_col),
         F.explode(
@@ -82,8 +81,7 @@ def license_signals(pages: DataFrame, url_col: str = "doc_id",
     )
 
 
-def ai_optout_flags(pages: DataFrame, id_col: str = "doc_id",
-                    html_col: str = "html") -> DataFrame:
+def ai_optout_flags(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per-page AI-use reservation flags: ``(id, noai, noimageai,
     tdm_reserved)``.
 
@@ -98,7 +96,7 @@ def ai_optout_flags(pages: DataFrame, id_col: str = "doc_id",
     (share of reserved pages per host) hang a partial-agg groupBy off
     it.
     """
-    m = meta_tags(pages, html_col=html_col, id_col=id_col)
+    m = meta_tags(pages, id_col=id_col)
     toks = m.filter(F.col("key") == "robots").select(
         id_col,
         F.explode(F.split(F.lower("content"), ",")).alias("_t"),

@@ -26,15 +26,11 @@ rounds to truncate lineage — both noted inline.
 
 from __future__ import annotations
 
-from typing import Optional
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from ..htmlx.anchors import extract_anchors
-from .extract import _decode
+from ..htmlx.anchors import extract_anchors, extract_anchors_rel
+from .extract import html_udf
 
 _PAIR = ArrayType(
     StructType(
@@ -44,15 +40,6 @@ _PAIR = ArrayType(
         ]
     )
 )
-
-
-def _anchor_batch(html: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_anchors(_decode(h)) for h in html]
-    )
-
-
-anchors_udf = pandas_udf(_anchor_batch, _PAIR)
 
 
 def resolve_href(url_col, href_col):
@@ -73,8 +60,7 @@ def resolve_href(url_col, href_col):
     )
 
 
-def anchor_pairs(docs: DataFrame, url_col: str = "url",
-                 html_col: str = "html") -> DataFrame:
+def anchor_pairs(docs: DataFrame, url_col: str = "url") -> DataFrame:
     """(url, target, anchor) — one row per resolvable link in the corpus.
 
     Arrow-batched parse (one pass per page, same batching regime as
@@ -82,7 +68,7 @@ def anchor_pairs(docs: DataFrame, url_col: str = "url",
     """
     pairs = docs.select(
         F.col(url_col).alias("url"),
-        F.explode(anchors_udf(F.col(html_col))).alias("p"),
+        F.explode(html_udf(docs, extract_anchors, _PAIR)).alias("p"),
     )
     return pairs.select(
         "url",
@@ -1306,17 +1292,7 @@ REL_PAIR = ArrayType(StructType([
 ]))
 
 
-def _rel_anchor_batch(html: pd.Series) -> pd.Series:
-    from ..htmlx.anchors import extract_anchors_rel
-
-    return pd.Series([extract_anchors_rel(h or "") for h in html])
-
-
-rel_anchors_udf = pandas_udf(_rel_anchor_batch, REL_PAIR)
-
-
-def rel_anchor_pairs(docs: DataFrame, url_col: str = "url",
-                     html_col: str = "html") -> DataFrame:
+def rel_anchor_pairs(docs: DataFrame, url_col: str = "url") -> DataFrame:
     """(url, target, anchor, followed) — anchor_pairs plus the edge
     semantics real link graphs honor: ``rel`` containing nofollow,
     ugc or sponsored (Google's 2019 triad) marks the edge
@@ -1325,7 +1301,7 @@ def rel_anchor_pairs(docs: DataFrame, url_col: str = "url",
     JVM array_contains codegen after the explode."""
     pairs = docs.select(
         F.col(url_col).alias("url"),
-        F.explode(rel_anchors_udf(F.col(html_col))).alias("p"),
+        F.explode(html_udf(docs, extract_anchors_rel, REL_PAIR)).alias("p"),
     )
     nofollow = (
         F.arrays_overlap(
@@ -1342,8 +1318,8 @@ def rel_anchor_pairs(docs: DataFrame, url_col: str = "url",
     ).where(F.col("target").isNotNull())
 
 
-def anchor_pairs_base_aware(docs: DataFrame, url_col: str = "url",
-                            html_col: str = "html") -> DataFrame:
+def anchor_pairs_base_aware(docs: DataFrame,
+                            url_col: str = "url") -> DataFrame:
     """(url, base, target, anchor) — anchor_pairs with ``<base href>``
     semantics: when a page declares a base element, RELATIVE hrefs
     resolve against the base, not the page url (the HTML rule CDN-
@@ -1358,7 +1334,7 @@ def anchor_pairs_base_aware(docs: DataFrame, url_col: str = "url",
     same single-parse Arrow regime, same zero-shuffle plan.
     """
     base = F.regexp_extract(
-        F.col(html_col).cast("string"),
+        F.col("html").cast("string"),
         r'<base\s[^>]*href\s*=\s*"([^"]*)"', 1,
     )
     eff = F.when(base.rlike(r"^https?://"), base) \
@@ -1366,7 +1342,7 @@ def anchor_pairs_base_aware(docs: DataFrame, url_col: str = "url",
     pairs = docs.select(
         F.col(url_col).alias("url"),
         eff.alias("_base"),
-        F.explode(anchors_udf(F.col(html_col))).alias("p"),
+        F.explode(html_udf(docs, extract_anchors, _PAIR)).alias("p"),
     )
     return pairs.select(
         "url",

@@ -8,24 +8,16 @@ tokenization/TF over it reuses the ordinary token path.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType
 
-from .extract import _decode
+from ..htmlx.markdown import html_to_markdown
+from .extract import html_udf
 
 
-def _markdown_batch(html: pd.Series) -> pd.Series:
-    from ..htmlx.markdown import html_to_markdown
-
-    return pd.Series([html_to_markdown(_decode(h)) for h in html])
-
-
-markdown_udf = pandas_udf(_markdown_batch, StringType())
-
-
-def pages_to_markdown(docs: DataFrame, html_col: str = "html") -> DataFrame:
+def pages_to_markdown(docs: DataFrame) -> DataFrame:
     """(…, html) → (…, markdown): headings/lists/links/images preserved
     as Markdown, chrome subtrees (head/script/style) dropped."""
-    return docs.withColumn("markdown", markdown_udf(F.col(html_col)))
+    return docs.withColumn(
+        "markdown", html_udf(docs, html_to_markdown, StringType())
+    )

@@ -31,7 +31,7 @@ def _attr(m, name: str):
     return F.when(dq != "", dq).otherwise(sq)
 
 
-def meta_tags(docs: DataFrame, html_col: str = "html",
+def meta_tags(docs: DataFrame,
               id_col: str = "doc_id") -> DataFrame:
     """One row per ``<meta>`` tag carrying a name= or property= key:
     ``(id, kind, key, content)`` with ``kind`` in {'name','property',
@@ -46,7 +46,7 @@ def meta_tags(docs: DataFrame, html_col: str = "html",
         F.col(id_col),
         F.explode(
             F.regexp_extract_all(
-                F.col(html_col).cast("string"), F.lit(_META_TAG), 0
+                F.col("html").cast("string"), F.lit(_META_TAG), 0
             )
         ).alias("_m"),
     )
@@ -67,7 +67,7 @@ def meta_tags(docs: DataFrame, html_col: str = "html",
     )
 
 
-def robots_meta_flags(docs: DataFrame, html_col: str = "html",
+def robots_meta_flags(docs: DataFrame,
                       id_col: str = "doc_id") -> DataFrame:
     """Per-page robots-directive flags from ``<meta name=robots>``:
     ``(id, noindex, nofollow, indexable)`` — content is a
@@ -76,7 +76,7 @@ def robots_meta_flags(docs: DataFrame, html_col: str = "html",
     indexable. One partial-agg groupBy over the (tiny) per-page meta
     rows; pages with NO meta tags at all re-enter via a left join on
     the id key."""
-    m = meta_tags(docs, html_col, id_col)
+    m = meta_tags(docs, id_col=id_col)
     toks = m.filter(F.col("key") == "robots").select(
         id_col,
         F.explode(F.split(F.lower("content"), ",")).alias("_t"),
@@ -101,7 +101,7 @@ def robots_meta_flags(docs: DataFrame, html_col: str = "html",
     )
 
 
-def jsonld_entities(docs: DataFrame, html_col: str = "html",
+def jsonld_entities(docs: DataFrame,
                     id_col: str = "doc_id",
                     schema: str = "`@type` string, name string"
                     ) -> DataFrame:
@@ -114,7 +114,7 @@ def jsonld_entities(docs: DataFrame, html_col: str = "html",
         F.col(id_col),
         F.posexplode(
             F.regexp_extract_all(
-                F.col(html_col).cast("string"),
+                F.col("html").cast("string"),
                 F.lit(r'<script type="application/ld\+json">(.*?)'
                       r"</script>"),
                 1,
@@ -133,7 +133,7 @@ def jsonld_entities(docs: DataFrame, html_col: str = "html",
 _LINK_TAG = r"<link\s[^>]*>"
 
 
-def link_tags(docs: DataFrame, html_col: str = "html",
+def link_tags(docs: DataFrame,
               id_col: str = "doc_id") -> DataFrame:
     """One row per ``<link>`` head element: ``(id, rel, href,
     hreflang)`` — rel lowercased, hreflang lowercased ('' when
@@ -144,7 +144,7 @@ def link_tags(docs: DataFrame, html_col: str = "html",
         F.col(id_col),
         F.explode(
             F.regexp_extract_all(
-                F.col(html_col).cast("string"), F.lit(_LINK_TAG), 0
+                F.col("html").cast("string"), F.lit(_LINK_TAG), 0
             )
         ).alias("_l"),
     )
@@ -161,8 +161,7 @@ def link_tags(docs: DataFrame, html_col: str = "html",
     )
 
 
-def hreflang_reciprocity(pages: DataFrame, url_col: str = "url",
-                         html_col: str = "html") -> DataFrame:
+def hreflang_reciprocity(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """hreflang return-tag audit (THE classic international-SEO check:
     if A lists B as an alternate, B must list A back or search engines
     ignore the pair): one row per alternate edge ``(url, alt_url,
@@ -174,8 +173,8 @@ def hreflang_reciprocity(pages: DataFrame, url_col: str = "url",
     it co-locates with any url-bucketed page store. No window, no
     Python."""
     alts = link_tags(
-        pages.select(F.col(url_col).alias("url"), F.col(html_col)),
-        html_col=html_col, id_col="url",
+        pages.select(F.col(url_col).alias("url"), F.col("html")),
+        id_col="url",
     ).filter(
         (F.col("rel") == "alternate") & (F.col("hreflang") != "")
     ).select(
@@ -197,7 +196,6 @@ def hreflang_reciprocity(pages: DataFrame, url_col: str = "url",
 
 
 def canonical_resolve(pages: DataFrame, url_col: str = "url",
-                      html_col: str = "html",
                       max_hops: int = 2) -> DataFrame:
     """rel=canonical CHAIN resolution: each page's canonical pointer
     followed to its terminal target via pointer jumping —
@@ -212,8 +210,8 @@ def canonical_resolve(pages: DataFrame, url_col: str = "url",
     audits flag — engines may ignore multi-hop canonicals entirely.
     """
     canon = link_tags(
-        pages.select(F.col(url_col).alias("url"), F.col(html_col)),
-        html_col=html_col, id_col="url",
+        pages.select(F.col(url_col).alias("url"), F.col("html")),
+        id_col="url",
     ).filter(F.col("rel") == "canonical").select(
         "url", F.col("href").alias("canonical")
     ).dropDuplicates(["url"])
@@ -258,7 +256,7 @@ def canonical_resolve(pages: DataFrame, url_col: str = "url",
 _IMG_TAG = r"<img\s[^>]*>"
 
 
-def image_sources(docs: DataFrame, html_col: str = "html",
+def image_sources(docs: DataFrame,
                   id_col: str = "doc_id") -> DataFrame:
     """Modern image-source inventory: one row per ``<img>`` —
     ``(id, img_idx, src, effective_src, n_variants, widest_src)``.
@@ -293,7 +291,7 @@ def image_sources(docs: DataFrame, html_col: str = "html",
         F.col(id_col),
         F.posexplode(
             F.regexp_extract_all(
-                F.col(html_col).cast("string"), F.lit(_IMG_TAG), 0
+                F.col("html").cast("string"), F.lit(_IMG_TAG), 0
             )
         ).alias("img_idx", "_i"),
     ).select(
@@ -309,15 +307,14 @@ def image_sources(docs: DataFrame, html_col: str = "html",
     )
 
 
-def mixed_content_audit(pages: DataFrame, url_col: str = "url",
-                        html_col: str = "html") -> DataFrame:
+def mixed_content_audit(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """Mixed-content audit: resources loaded over ``http://`` from an
     ``https://`` page — browsers block or warn on these, and SEO/
     security audits flag them. Counts per page over img src,
     data-src, srcset variants AND <link href>: ``(url, n_resources,
     n_insecure, mixed)``. Codegen end to end; one partial-agg groupBy
     on the page key."""
-    imgs = image_sources(pages, html_col=html_col, id_col=url_col)
+    imgs = image_sources(pages, id_col=url_col)
     img_urls = (
         imgs.select(F.col(url_col), F.col("effective_src").alias("_r"))
         .unionByName(
@@ -325,7 +322,7 @@ def mixed_content_audit(pages: DataFrame, url_col: str = "url",
             .select(F.col(url_col), F.col("widest_src").alias("_r"))
         )
     )
-    links = link_tags(pages, html_col=html_col, id_col=url_col).select(
+    links = link_tags(pages, id_col=url_col).select(
         F.col(url_col), F.col("href").alias("_r")
     )
     res = img_urls.unionByName(links).filter(F.col("_r") != "")
@@ -352,8 +349,7 @@ def mixed_content_audit(pages: DataFrame, url_col: str = "url",
     )
 
 
-def client_redirects(pages: DataFrame, id_col: str = "doc_id",
-                     html_col: str = "html") -> DataFrame:
+def client_redirects(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Client-side redirect extraction — the two channels crawlers
     must honor beyond HTTP 3xx: ``<meta http-equiv=refresh>`` (with
     its delay) and the ``window.location`` / ``location.href``
@@ -363,7 +359,7 @@ def client_redirects(pages: DataFrame, id_col: str = "doc_id",
     kind in {'meta','js'}; meta delay parses from the
     ``N;url=...`` content microsyntax (try_cast guards junk), JS
     redirects report delay 0. Codegen regexp end to end."""
-    html = F.col(html_col).cast("string")
+    html = F.col("html").cast("string")
     metas = pages.select(
         F.col(id_col),
         F.explode(
@@ -404,8 +400,7 @@ def client_redirects(pages: DataFrame, id_col: str = "doc_id",
     return meta_r.unionByName(js_r)
 
 
-def a11y_audit(pages: DataFrame, id_col: str = "doc_id",
-               html_col: str = "html") -> DataFrame:
+def a11y_audit(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Accessibility / document-outline audit per page: ``(id,
     n_images, n_missing_alt, n_h1, n_level_skips)`` — images without
     alt text and broken heading ladders (an h3 directly under an h1,
@@ -417,7 +412,7 @@ def a11y_audit(pages: DataFrame, id_col: str = "doc_id",
     regexp_extract_all + zip_with over the array and its shifted self
     (a level skip is next > prev + 1) — no walker pass, no Python,
     no shuffle."""
-    html = F.col(html_col).cast("string")
+    html = F.col("html").cast("string")
     imgs = F.regexp_extract_all(html, F.lit(_IMG_TAG), 0)
     n_images = F.size(imgs)
     n_missing_alt = F.size(
@@ -461,8 +456,7 @@ def a11y_audit(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def third_party_census(pages: DataFrame, url_col: str = "url",
-                       html_col: str = "html") -> DataFrame:
+def third_party_census(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """Third-party dependency census (the WebCensus-style privacy /
     performance measurement): which OFF-SITE hosts does each site
     embed? Resources = script src + link href + img src/srcset
@@ -475,7 +469,7 @@ def third_party_census(pages: DataFrame, url_col: str = "url",
     page_host = F.lower(
         F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/:]+)", 1)
     )
-    html = F.col(html_col).cast("string")
+    html = F.col("html").cast("string")
     res = F.concat(
         F.regexp_extract_all(
             html, F.lit(r'<script\s[^>]*src\s*=\s*"([^"]*)"'), 1
@@ -505,8 +499,8 @@ def third_party_census(pages: DataFrame, url_col: str = "url",
     )
 
 
-def broken_fragment_links(pages: DataFrame, id_col: str = "doc_id",
-                          html_col: str = "html") -> DataFrame:
+def broken_fragment_links(pages: DataFrame,
+                          id_col: str = "doc_id") -> DataFrame:
     """Broken in-page fragment links: ``<a href="#x">`` with no
     matching ``id="x"`` (or legacy ``<a name="x">``) anywhere on the
     page — dead table-of-contents entries, the link-integrity bug
@@ -517,7 +511,7 @@ def broken_fragment_links(pages: DataFrame, id_col: str = "doc_id",
     regexp_extract_all and the broken set is one array_except — no
     explode, no join, no shuffle; the page's link integrity is a
     per-row computation exactly as it should be."""
-    html = F.col(html_col).cast("string")
+    html = F.col("html").cast("string")
     frags = F.regexp_extract_all(
         html, F.lit(r'<a\s[^>]*href\s*=\s*"#([^"]+)"'), 1
     )
@@ -537,8 +531,7 @@ def broken_fragment_links(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def html_lang_attr(pages: DataFrame, id_col: str = "doc_id",
-                   html_col: str = "html") -> DataFrame:
+def html_lang_attr(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """``<html lang>`` attribute relation: ``(id, lang_attr,
     lang_primary)`` — the document-level language DECLARATION, the
     third vertex of the language-consistency triangle next to the
@@ -549,7 +542,7 @@ def html_lang_attr(pages: DataFrame, id_col: str = "doc_id",
     Codegen regexp on the root element only."""
     attr = F.lower(
         F.regexp_extract(
-            F.col(html_col).cast("string"),
+            F.col("html").cast("string"),
             r'(?i)<html\s[^>]*lang\s*=\s*["\x27]([^"\x27]*)["\x27]', 1,
         )
     )
@@ -560,8 +553,7 @@ def html_lang_attr(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def csp_directives(pages: DataFrame, id_col: str = "doc_id",
-                   html_col: str = "html") -> DataFrame:
+def csp_directives(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Content-Security-Policy directive relation from the meta
     http-equiv channel: ``(id, directive, source)`` — one row per
     (directive, source-expression) pair, the normalized form
@@ -571,7 +563,7 @@ def csp_directives(pages: DataFrame, id_col: str = "doc_id",
     drift). Source-less directives (``upgrade-insecure-requests``)
     emit one row with source ''. Codegen: meta extraction + two-level
     split/explode, no Python, no shuffle."""
-    m = meta_tags(pages, html_col=html_col, id_col=id_col)
+    m = meta_tags(pages, id_col=id_col)
     pol = m.filter(
         F.col("key") == "content-security-policy"
     ).select(id_col, F.explode(F.split("content", ";")).alias("_d"))
@@ -595,8 +587,7 @@ def csp_directives(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def form_census(pages: DataFrame, id_col: str = "doc_id",
-                html_col: str = "html") -> DataFrame:
+def form_census(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """FORM inventory per page: one row per ``<form>`` block —
     ``(id, form_idx, action, method, n_inputs, n_password, n_email,
     n_hidden, kind)`` with ``kind`` in {'login','search','newsletter',
@@ -618,7 +609,7 @@ def form_census(pages: DataFrame, id_col: str = "doc_id",
         F.col(id_col),
         F.posexplode(
             F.regexp_extract_all(
-                F.col(html_col).cast("string"),
+                F.col("html").cast("string"),
                 F.lit(r"(?s)<form\b[^>]*>.*?</form>"), 0,
             )
         ).alias("_p", "_f"),
@@ -657,8 +648,7 @@ def form_census(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def microdata_items(pages: DataFrame, id_col: str = "doc_id",
-                    html_col: str = "html") -> DataFrame:
+def microdata_items(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Schema.org MICRODATA extraction (the itemscope/itemprop channel
     — the third structured-data surface next to JSON-LD
     (jsonld_entities) and OpenGraph (meta_tags): older commerce and
@@ -673,7 +663,7 @@ def microdata_items(pages: DataFrame, id_col: str = "doc_id",
 
     Shape: two regexp channels + explode, zero shuffle, zero Python.
     """
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     itemtype = F.regexp_extract(
         h, r'itemtype\s*=\s*["\x27]?(?:https?://)?schema\.org/([A-Za-z]+)', 1
     )
@@ -699,8 +689,7 @@ def microdata_items(pages: DataFrame, id_col: str = "doc_id",
 
 
 def publish_dates(pages: DataFrame, id_col: str = "doc_id",
-                  url_col: str = "url",
-                  html_col: str = "html") -> DataFrame:
+                  url_col: str = "url") -> DataFrame:
     """Best-effort PUBLISH-DATE resolution per page with a declared
     precedence ladder — ``(id, pub_date, channel)``, channel in
     {'meta','jsonld','url'} or NULL when no signal exists:
@@ -718,7 +707,7 @@ def publish_dates(pages: DataFrame, id_col: str = "doc_id",
     testable. All channels are targeted regexp pulls + to_date /
     make_date in codegen; zero shuffle, zero Python.
     """
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     u = F.col(url_col)
     m_tag = F.regexp_extract(
         h,
@@ -745,8 +734,7 @@ def publish_dates(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def pagination_audit(pages: DataFrame, url_col: str = "url",
-                     html_col: str = "html") -> DataFrame:
+def pagination_audit(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """``rel=next`` / ``rel=prev`` PAGINATION audit: per page —
     ``(url, next_url, prev_url, next_reciprocal, is_first, is_last)``
     with ``next_reciprocal = 1`` iff the declared next page declares
@@ -764,7 +752,7 @@ def pagination_audit(pages: DataFrame, url_col: str = "url",
     — at 10^12 pages both sides are url-bucketed, co-partitioned with
     every other url-keyed state table). No windows, no Python.
     """
-    links = link_tags(pages, html_col=html_col, id_col=url_col)
+    links = link_tags(pages, id_col=url_col)
     ptrs = (
         links.filter(F.col("rel").isin("next", "prev"))
         .groupBy(url_col)
@@ -797,8 +785,7 @@ def pagination_audit(pages: DataFrame, url_col: str = "url",
     )
 
 
-def amp_pages(pages: DataFrame, url_col: str = "url",
-              html_col: str = "html") -> DataFrame:
+def amp_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """AMP variant detection and canonical pairing: ``(url, is_amp,
     amphtml_url, canonical_url, pair_url)`` — ``is_amp`` from the
     ``<html amp>`` / ``<html ⚡>`` attribute (the public AMP spec's
@@ -815,7 +802,7 @@ def amp_pages(pages: DataFrame, url_col: str = "url",
 
     Codegen: one html-tag attribute probe + the link_tags channel,
     zero shuffle beyond the per-page partial agg."""
-    tags = link_tags(pages, html_col=html_col, id_col=url_col)
+    tags = link_tags(pages, id_col=url_col)
     ptrs = (
         tags.filter(F.col("rel").isin("amphtml", "canonical"))
         .groupBy(url_col)
@@ -826,7 +813,7 @@ def amp_pages(pages: DataFrame, url_col: str = "url",
             .alias("canonical_url"),
         )
     )
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     is_amp = F.when(
         F.regexp_extract(
             h, r"(?s)<html[^>]*[\s](amp|⚡)[\s>=]", 1
@@ -844,7 +831,6 @@ def amp_pages(pages: DataFrame, url_col: str = "url",
 
 def noindex_inlink_audit(pages: DataFrame, edges: DataFrame,
                          url_col: str = "url",
-                         html_col: str = "html",
                          src_col: str = "src", dst_col: str = "dst",
                          ) -> DataFrame:
     """NOINDEX-but-LINKED contradiction audit: ``(url, noindex,
@@ -860,7 +846,7 @@ def noindex_inlink_audit(pages: DataFrame, edges: DataFrame,
     Shape: per-page codegen flags + ONE partial-agg in-degree groupBy
     on dst + a url-keyed left join — at 10^12 pages both sides are
     url-bucketed; no windows."""
-    flags = robots_meta_flags(pages, html_col=html_col, id_col=url_col)
+    flags = robots_meta_flags(pages, id_col=url_col)
     indeg = edges.groupBy(F.col(dst_col).alias(url_col)).agg(
         F.count("*").cast("bigint").alias("n_inlinks")
     )
@@ -902,8 +888,7 @@ def title_duplication(pages: DataFrame, host_col: str = "host",
 
 
 def article_completeness(pages: DataFrame, id_col: str = "doc_id",
-                         url_col: str = "url",
-                         html_col: str = "html") -> DataFrame:
+                         url_col: str = "url") -> DataFrame:
     """ARTICLE-METADATA completeness card: ``(id, has_title,
     has_date, has_author, completeness)`` — unifies every structured-
     data channel this engine extracts: title from ``<title>`` or
@@ -918,7 +903,7 @@ def article_completeness(pages: DataFrame, id_col: str = "doc_id",
     All channels are the already-audited codegen extractors composed
     on one row — zero shuffle, zero Python, no joins beyond
     publish_dates' none."""
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     has_title = F.when(
         (F.regexp_extract(h, r"<title[^>]*>\s*([^<\s][^<]*?)\s*</title>", 1)
          != "")
@@ -936,8 +921,7 @@ def article_completeness(pages: DataFrame, id_col: str = "doc_id",
             h, r'itemprop\s*=\s*["\x27]?author', 0) != ""),
         1,
     ).otherwise(0)
-    dated = publish_dates(pages, id_col=id_col, url_col=url_col,
-                          html_col=html_col)
+    dated = publish_dates(pages, id_col=id_col, url_col=url_col)
     base = pages.select(
         F.col(id_col),
         has_title.cast("int").alias("has_title"),
@@ -960,8 +944,7 @@ def article_completeness(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def page_roles(pages: DataFrame, url_col: str = "url",
-               html_col: str = "html") -> DataFrame:
+def page_roles(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """Unified PAGE-ROLE taxonomy: ``(url, role)`` with role ∈
     {'redirect-shell', 'amp-variant', 'pagination-continuation',
     'noindex', 'content'} by declared precedence — the single label a
@@ -977,15 +960,15 @@ def page_roles(pages: DataFrame, url_col: str = "url",
     robots_meta_flags (q267). Each channel is codegen; the
     composition is three url-keyed left joins against per-page
     relations (url-bucketed co-location at scale), no windows."""
-    red = client_redirects(pages, id_col=url_col, html_col=html_col) \
+    red = client_redirects(pages, id_col=url_col) \
         .select(F.col(url_col).alias("url")).distinct() \
         .withColumn("_redirect", F.lit(1))
-    amp = amp_pages(pages, url_col=url_col, html_col=html_col).select(
+    amp = amp_pages(pages, url_col=url_col).select(
         "url", F.col("is_amp").alias("_amp")
     )
-    pag = pagination_audit(pages, url_col=url_col, html_col=html_col) \
+    pag = pagination_audit(pages, url_col=url_col) \
         .select("url", F.col("is_first").alias("_first"))
-    rob = robots_meta_flags(pages, html_col=html_col, id_col=url_col) \
+    rob = robots_meta_flags(pages, id_col=url_col) \
         .select(F.col(url_col).alias("url"),
                 F.col("noindex").alias("_noindex"))
     base = pages.select(F.col(url_col).alias("url")).distinct()
@@ -1007,7 +990,6 @@ def page_roles(pages: DataFrame, url_col: str = "url",
 
 
 def jsonld_article_body(pages: DataFrame, id_col: str = "doc_id",
-                        html_col: str = "html",
                         text_col: str = "text") -> DataFrame:
     """JSON-LD ``articleBody`` as an extraction CROSS-CHECK channel:
     ``(id, has_articlebody, body_len, extracted_len,
@@ -1026,7 +1008,7 @@ def jsonld_article_body(pages: DataFrame, id_col: str = "doc_id",
     ``\"`` report a TRUNCATED body_len (ratio skews high, never
     low) — the full JSON parse (q269's from_json channel) is the
     escalation path when exact lengths matter."""
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     body = F.regexp_extract(h, r'"articleBody"\s*:\s*"([^"]*)"', 1)
     has = F.when(body != "", 1).otherwise(0)
     staged = pages.select(
@@ -1048,8 +1030,8 @@ def jsonld_article_body(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def social_profile_links(pages: DataFrame, id_col: str = "doc_id",
-                         html_col: str = "html") -> DataFrame:
+def social_profile_links(pages: DataFrame,
+                         id_col: str = "doc_id") -> DataFrame:
     """SOCIAL/DEVELOPER profile-link extraction: ``(id, platform,
     handle)`` for GitHub, X/Twitter, LinkedIn and Mastodon
     (``@user@host``) references — the author-identity channel next
@@ -1061,7 +1043,7 @@ def social_profile_links(pages: DataFrame, id_col: str = "doc_id",
     /i/, /intent/, /share excluded for x/twitter; /in/ required for
     LinkedIn profiles). Codegen regexp channels + flatten/explode;
     handles lowercased (all four platforms are case-insensitive)."""
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     # host boundary: the platform domain must start a host, not sit
     # inside one — without it 'x.com/' matches inside dropbox.com/
     # netflix.com and 'github.com/' matches mygithub.com, emitting
@@ -1105,8 +1087,8 @@ def social_profile_links(pages: DataFrame, id_col: str = "doc_id",
     return rows.select(id_col, "_e.platform", "_e.handle").distinct()
 
 
-def semantic_region_census(pages: DataFrame, id_col: str = "doc_id",
-                           html_col: str = "html") -> DataFrame:
+def semantic_region_census(pages: DataFrame,
+                           id_col: str = "doc_id") -> DataFrame:
     """HTML5 SEMANTIC-REGION census: ``(id, has_main, has_article,
     n_articles, has_nav, has_aside, has_header, has_footer,
     extraction_tier)`` — whether the page declares the regions that
@@ -1118,7 +1100,7 @@ def semantic_region_census(pages: DataFrame, id_col: str = "doc_id",
     extraction strategy by markup tier is how production pipelines
     cut the expensive scoring path to the pages that need it.
     Codegen regexp counts; zero shuffle."""
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
 
     def _n(tag):
         return F.size(
@@ -1149,8 +1131,7 @@ def semantic_region_census(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def hidden_text_audit(pages: DataFrame, id_col: str = "doc_id",
-                      html_col: str = "html") -> DataFrame:
+def hidden_text_audit(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """HIDDEN-TEXT audit: ``(id, n_hidden_elements, n_hidden_chars,
     cloaking_suspect)`` — elements carrying inline
     ``display:none`` / ``visibility:hidden`` / ``font-size:0``
@@ -1165,7 +1146,7 @@ def hidden_text_audit(pages: DataFrame, id_col: str = "doc_id",
     nested hidden subtrees need the walker, this is the cheap
     corpus-wide pass that finds the pages worth walking.
     Codegen regexp; zero shuffle."""
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     pat = (
         r'(?is)<[a-z][^>]*style\s*=\s*"[^"]*(?:display\s*:\s*none|'
         r'visibility\s*:\s*hidden|font-size\s*:\s*0(?:px|;|"))'

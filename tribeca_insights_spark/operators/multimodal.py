@@ -33,13 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..imagex import (
-    UnsupportedImageError,
-    decode_png,
-    encode_png,
-    resize_nearest,
-    sniff_image,
-)
+from ..imagex import sniff_image
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -166,152 +160,6 @@ def av_metadata(media: DataFrame, id_col: str = "media_id",
     return media.mapInPandas(_batches, schema=AV_META_SCHEMA)
 
 
-def frame_sample_stub(payload: bytes, every_n: int = 30,
-                      deterministic_fake: bool = False):
-    """Video frame-sample anchors: for MP4s with a sample table the
-    offsets are REAL — every ``every_n``-th chunk byte offset from the
-    ``stco`` box (mediax.frame_sample_mp4), exactly what a range-reading
-    sampler seeks to. Other containers: evenly-spaced fake offsets when
-    ``deterministic_fake=True`` (decoding frames needs ffmpeg —
-    production's seam), else raise."""
-    from ..mediax import frame_sample_mp4
-
-    offs = frame_sample_mp4(payload, every_n)
-    if offs:
-        return offs
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "no MP4 sample table in payload; frame decode for other "
-            "containers requires a media library — pass "
-            "deterministic_fake=True for plumbing tests"
-        )
-    n = max(1, len(payload) // max(1, every_n))
-    step = max(1, len(payload) // n)
-    return list(range(0, len(payload), step))[:n]
-
-
-def media_features(media: DataFrame, dim: int = 16, id_col: str = "media_id",
-                   payload_col: str = "payload",
-                   deterministic_fake: bool = True) -> DataFrame:
-    """binary payload → ``array<float>`` feature vector via ``mapInPandas``
-    (production drops a real vision/audio encoder into ``_embed``; the fake
-    derives a stable unit-norm vector from the payload hash). Output feeds
-    :mod:`..operators.similarity` ANN/near-dup directly."""
-    import math
-
-    from pyspark.sql.types import ArrayType, FloatType
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-
-    def _embed(payload: bytes):
-        try:
-            w, h_, ch, px = decode_png(payload)
-        except UnsupportedImageError:
-            if not deterministic_fake:
-                raise
-            hh = hashlib.sha256(payload).digest()
-            raw = [(hh[i % 32] - 127.5) / 127.5 for i in range(dim)]
-        else:
-            # real feature for decodable PNGs: L2-normalized luminance
-            # histogram (production swaps in a vision encoder here)
-            import numpy as np
-
-            arr = np.frombuffer(px, dtype=np.uint8)
-            if ch > 1:
-                arr = arr.reshape(-1, ch)[:, :3].mean(axis=1)
-            hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-            raw = hist.astype(float).tolist()
-        norm = math.sqrt(sum(x * x for x in raw)) or 1.0
-        return [x / norm for x in raw]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": [int(m) for m in pdf[id_col]],
-                    "embedding": [
-                        _embed(bytes(p) if p is not None else b"")
-                        for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(_batches, schema=schema)
-
-
-def media_resize(media: DataFrame, max_px: int = 256, id_col: str = "media_id",
-                 payload_col: str = "payload",
-                 deterministic_fake: bool = True) -> DataFrame:
-    """binary payload → resized binary payload + new dims, ``mapInPandas``
-    end to end so MB-scale blobs never materialize as a whole-partition list.
-    Decodable PNGs get a REAL nearest-neighbor thumbnail (decode → resample
-    → re-encode, pure python). Other recognized containers (JPEG/GIF/WebP/
-    BMP — sniffable dims, no re-encoder here): with
-    ``deterministic_fake=True`` the payload is byte-truncated to a
-    scale²-sized fake labeled with the scaled dims (plumbing tests only);
-    with ``deterministic_fake=False`` the payload passes through UNCHANGED
-    with its true dims — never a silently corrupted blob (production:
-    PIL/libvips in the same seam). Unrecognizable payloads raise unless
-    ``deterministic_fake=True``."""
-    from pyspark.sql.types import BinaryType
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-        ]
-    )
-
-    def _resize(payload: bytes):
-        try:
-            w, h, ch, px = decode_png(payload)
-        except UnsupportedImageError:
-            fmt, w, h = decode_image_stub(payload, deterministic_fake)
-            if w is None or h is None:
-                # recognized container but no parsable dims (e.g. JPEG
-                # without SOF): nothing to scale — pass through unchanged
-                return payload, None, None
-            if not deterministic_fake:
-                # real mode, recognized non-PNG container: no re-encoder
-                # available — pass through untouched with true dims rather
-                # than emit a truncated, corrupt payload.
-                return payload, w, h
-            scale = min(1.0, max_px / max(w, h, 1))
-            nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-            keep = max(1, int(len(payload) * scale * scale)) if payload else 0
-            return payload[:keep], nw, nh
-        scale = min(1.0, max_px / max(w, h, 1))
-        nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-        if (nw, nh) == (w, h):
-            return payload, w, h
-        return (
-            encode_png(resize_nearest(px, w, h, ch, nw, nh), nw, nh, ch),
-            nw,
-            nh,
-        )
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_id": [], "payload": [], "width": [], "height": []}
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(p) if p is not None else b""
-                out, w, h = _resize(b)
-                rows["media_id"].append(int(mid))
-                rows["payload"].append(out)
-                rows["width"].append(w)
-                rows["height"].append(h)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_batches, schema=schema)
-
-
 def _dhash_batch(payload: pd.Series) -> pd.Series:
     from ..imagex import dhash64_hex  # noqa: F811 — batch-local import
 
@@ -413,7 +261,7 @@ def frame_sample_anchors(media: DataFrame, every_n: int = 2,
     )
 
 
-def inline_image_dhash(docs: DataFrame, html_col: str = "html",
+def inline_image_dhash(docs: DataFrame,
                        id_col: str = "doc_id") -> DataFrame:
     """Inline ``data:`` URI images, end to end: extracted by the
     responsive-image inventory (operators/meta.image_sources),
@@ -431,7 +279,7 @@ def inline_image_dhash(docs: DataFrame, html_col: str = "html",
 
     from .meta import image_sources
 
-    imgs = image_sources(docs, html_col=html_col, id_col=id_col)
+    imgs = image_sources(docs, id_col=id_col)
     src = F.col("effective_src")
     payload = F.unbase64(
         F.regexp_extract(src, r"^data:[^;]*;base64,(.*)$", 1)

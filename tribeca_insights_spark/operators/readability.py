@@ -9,17 +9,16 @@ over the same scan when both outputs are wanted.
 
 from __future__ import annotations
 
-from typing import Optional
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     DoubleType,
     StringType,
     StructField,
     StructType,
 )
+
+from ..htmlx.readability import extract_main_content
+from .extract import html_udf
 
 MAIN_CONTENT_STRUCT = StructType(
     [
@@ -32,28 +31,12 @@ MAIN_CONTENT_STRUCT = StructType(
 )
 
 
-def _decode(h: Optional[object]) -> str:
-    if h is None:
-        return ""
-    if isinstance(h, (bytes, bytearray, memoryview)):
-        return bytes(h).decode("utf-8", errors="replace")
-    return str(h)
-
-
-def _main_batch(html: pd.Series) -> pd.DataFrame:
-    from ..htmlx.readability import extract_main_content
-
-    rows = [extract_main_content(_decode(h)) for h in html]
-    return pd.DataFrame(rows)
-
-
-main_content_udf = pandas_udf(_main_batch, returnType=MAIN_CONTENT_STRUCT)
-
-
-def extract_main(docs: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_main(docs: DataFrame) -> DataFrame:
     """docs(url, html, …) → (url, main_text, score, link_density,
     node_tag, node_hint)."""
-    e = docs.withColumn("_m", main_content_udf(F.col(html_col)))
+    e = docs.withColumn(
+        "_m", html_udf(docs, extract_main_content, MAIN_CONTENT_STRUCT)
+    )
     return e.select(
         "url",
         F.col("_m.main_text").alias("main_text"),

@@ -26,9 +26,7 @@ from __future__ import annotations
 
 from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -37,7 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .extract import _decode
+from ..htmlx.blocks import segment_blocks
+from .extract import html_udf
 
 _H_LEVELS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 
@@ -54,8 +53,6 @@ SECTIONS_TYPE = ArrayType(
 
 
 def _sections_of(html: str) -> List[tuple]:
-    from ..htmlx.blocks import segment_blocks
-
     stack: List[tuple] = []  # (level, title)
     out: List[tuple] = []
     for b in segment_blocks(html):
@@ -76,14 +73,7 @@ def _sections_of(html: str) -> List[tuple]:
     return out
 
 
-def _sections_batch(html: pd.Series) -> pd.Series:
-    return pd.Series([_sections_of(_decode(h)) for h in html])
-
-
-sections_udf = pandas_udf(_sections_batch, SECTIONS_TYPE)
-
-
-def section_tree(docs: DataFrame, html_col: str = "html") -> DataFrame:
+def section_tree(docs: DataFrame) -> DataFrame:
     """One row per non-heading content block:
     ``(…carried cols…, block_idx, depth, section_path, text)``.
 
@@ -92,10 +82,10 @@ def section_tree(docs: DataFrame, html_col: str = "html") -> DataFrame:
     any heading). ``block_idx`` is the walker's document-order block
     index, so joins back to span/boilerplate views line up.
     """
-    carried = [c for c in docs.columns if c != html_col]
+    carried = [c for c in docs.columns if c != "html"]
+    sections = html_udf(docs, _sections_of, SECTIONS_TYPE)
     return (
-        docs.select(*carried,
-                    F.explode(sections_udf(F.col(html_col))).alias("_s"))
+        docs.select(*carried, F.explode(sections).alias("_s"))
         .select(
             *carried,
             F.col("_s.block_idx").alias("block_idx"),

@@ -42,13 +42,13 @@ from collections import Counter
 from typing import Dict, List, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType
 
 from ..functions.slug import url_slug
 from ..functions.tokenize import clean_and_tokenize
 from ..htmlx.extractor import external_links, page_hash, parse_page, url_domain
+from .extract import html_udf
 
 JSON_DUMP_KWARGS = {"ensure_ascii": False, "indent": 2}
 
@@ -142,31 +142,24 @@ def render_page_json(url: str, html: str, lang: str) -> str:
     return json.dumps(build_page_data(url, html, lang), **JSON_DUMP_KWARGS)
 
 
-def _decode(h) -> str:
-    if h is None:
-        return ""
-    if isinstance(h, (bytes, bytearray, memoryview)):
-        return bytes(h).decode("utf-8", errors="replace")
-    return str(h)
+def _page_markdown(html: str, url: Optional[str]) -> str:
+    return render_page_markdown(url or "", html)
 
 
-def _md_batch(url: pd.Series, html: pd.Series) -> pd.Series:
-    return pd.Series(
-        [render_page_markdown(u or "", _decode(h)) for u, h in zip(url, html)]
+def _page_json(html: str, url: Optional[str], lang: Optional[str]) -> str:
+    return render_page_json(url or "", html, lang or "")
+
+
+def page_markdown_column(docs: DataFrame) -> Column:
+    """Per-page Markdown report column over docs(url, html)."""
+    return html_udf(docs, _page_markdown, StringType(), F.col("url"))
+
+
+def page_json_column(docs: DataFrame) -> Column:
+    """Per-page JSON body column over docs(url, html, lang)."""
+    return html_udf(
+        docs, _page_json, StringType(), F.col("url"), F.col("lang")
     )
-
-
-def _json_batch(url: pd.Series, html: pd.Series, lang: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            render_page_json(u or "", _decode(h), lg or "")
-            for u, h, lg in zip(url, html, lang)
-        ]
-    )
-
-
-page_markdown_udf = pandas_udf(_md_batch, returnType=StringType())
-page_json_udf = pandas_udf(_json_batch, returnType=StringType())
 
 
 # ---------------------------------------------------------------------------
@@ -338,10 +331,8 @@ def write_project_tree(
     rendered = docs.select(
         "url",
         "lang",
-        page_markdown_udf(F.col("url"), F.col("html")).alias("md_report"),
-        page_json_udf(F.col("url"), F.col("html"), F.col("lang")).alias(
-            "page_json"
-        ),
+        page_markdown_column(docs).alias("md_report"),
+        page_json_column(docs).alias("page_json"),
     )
     index_entries: List[Dict[str, str]] = []
     pages_data: List[Dict] = []

@@ -17,9 +17,7 @@ from __future__ import annotations
 
 from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -28,7 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .extract import _decode
+from ..htmlx.tables import extract_tables
+from .extract import html_udf
 
 TABLE_ROWS_TYPE = ArrayType(
     StructType(
@@ -41,28 +40,20 @@ TABLE_ROWS_TYPE = ArrayType(
 )
 
 
-def _table_rows_batch(html: pd.Series) -> pd.Series:
-    from ..htmlx.tables import extract_tables
-
-    out: List[list] = []
-    for h in html:
-        flat = []
-        for ti, rows in enumerate(extract_tables(_decode(h))):
-            for ri, cells in enumerate(rows):
-                flat.append((ti, ri, cells))
-        out.append(flat)
-    return pd.Series(out)
+def _table_rows_of(html: str) -> List[tuple]:
+    return [
+        (ti, ri, cells)
+        for ti, rows in enumerate(extract_tables(html))
+        for ri, cells in enumerate(rows)
+    ]
 
 
-table_rows_udf = pandas_udf(_table_rows_batch, TABLE_ROWS_TYPE)
-
-
-def table_rows(docs: DataFrame, html_col: str = "html") -> DataFrame:
+def table_rows(docs: DataFrame) -> DataFrame:
     """(…, html) → one output row per table row:
     ``(…, table_idx, row_idx, cells array<string>)`` — tables in document
     order, rows/cells in table order, browser-shaped recovery for
     unclosed markup (htmlx/tables.py)."""
-    keep = [c for c in docs.columns if c != html_col]
+    keep = [c for c in docs.columns if c != "html"]
     # explode_outer + post-filter, NOT explode: InferFiltersFromGenerate
     # turns a plain explode over a UDF-backed column into a
     # `size(udf(...)) > 0` pre-filter that re-runs the Python walker —
@@ -70,7 +61,9 @@ def table_rows(docs: DataFrame, html_col: str = "html") -> DataFrame:
     # outer variant infers no such filter; dropping the null rows after
     # the Generate is JVM-side and keeps the parse single-pass.
     return (
-        docs.withColumn("_trows", table_rows_udf(F.col(html_col)))
+        docs.withColumn(
+            "_trows", html_udf(docs, _table_rows_of, TABLE_ROWS_TYPE)
+        )
         .select(*keep, F.explode_outer("_trows").alias("r"))
         .filter(F.col("r").isNotNull())
         .select(

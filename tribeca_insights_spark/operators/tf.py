@@ -95,19 +95,6 @@ def doc_frequency(extracted: DataFrame) -> DataFrame:
     )
 
 
-def top_k_words_per_page(extracted: DataFrame, k: int = 50) -> DataFrame:
-    """Reference ``local_freq.most_common(50)`` (markdown.py:101) — computed
-    per-row with array ops (NO shuffle: tokens are already co-located with
-    the page). Ties broken by word asc, as Counter.most_common does for
-    equal counts via insertion order — we pin lexicographic for determinism."""
-    tf = per_page_tf(extracted)
-    w = Window.partitionBy("url").orderBy(F.desc("freq"), "word")
-    return (
-        tf.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def domain_top_keywords(
     extracted: DataFrame, k: int = 10, n_salts: int = 0
 ) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.extract import _extract_batch
+from ..operators.extract import _charset_expr, _extract_batch
 from ..schemas import EXTRACT_STRUCT
 from . import state as st
 
@@ -57,9 +57,8 @@ def _extract_partitions(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     pid = TaskContext.get().partitionId() if TaskContext.get() else -1
     t0 = time.time()
     for pdf in it:
-        cs = (pdf["charset"] if "charset" in pdf.columns
-              else pd.Series([None] * len(pdf)))
-        ex = _extract_batch(pdf["url"], pdf["html"], pdf["lang"], cs)
+        ex = _extract_batch(pdf["url"], pdf["html"], pdf["lang"],
+                            pdf["charset"])
         ex.insert(0, "url", pdf["url"].values)
         ex.insert(1, "warc_ts", pdf["warc_ts"].values)
         ex.insert(2, "lang", pdf["lang"].values)
@@ -72,13 +71,12 @@ def _extract_partitions(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def _extract_pending(todo: DataFrame) -> DataFrame:
     """todo(url, warc_ts, html, lang, bucket[, charset]) → EXTRACT_OUT_SCHEMA
-    rows, one parse per page; a declared ``charset`` column rides along."""
-    cols = ["url", "warc_ts", "html", "lang", "bucket"]
-    if "charset" in todo.columns:
-        cols.append("charset")
-    return todo.select(*cols).mapInPandas(
-        _extract_partitions, schema=EXTRACT_OUT_SCHEMA
-    )
+    rows, one parse per page; a declared ``charset`` column rides along
+    (NULL when the input has none)."""
+    return todo.select(
+        "url", "warc_ts", "html", "lang", "bucket",
+        _charset_expr(todo).alias("charset"),
+    ).mapInPandas(_extract_partitions, schema=EXTRACT_OUT_SCHEMA)
 
 
 def _partition_metrics(written: DataFrame, run_id: str) -> DataFrame:

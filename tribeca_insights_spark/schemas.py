@@ -104,32 +104,6 @@ SEO_STRUCT = StructType(
     ]
 )
 
-# Full per-page record (reference page_data, crawler.py:163-175) + provenance.
-PAGE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("slug", StringType()),
-        StructField("title", StringType()),
-        StructField("meta_description", StringType()),
-        StructField("headings", ArrayType(StringType())),
-        StructField("word_count", IntegerType()),
-        StructField("word_frequency", MapType(StringType(), IntegerType())),
-        StructField(
-            "images",
-            ArrayType(
-                StructType(
-                    [StructField("src", StringType()), StructField("alt", StringType())]
-                )
-            ),
-        ),
-        StructField("external_links", ArrayType(StringType())),
-        StructField("internal_links", ArrayType(StringType())),
-        StructField("page_hash", StringType()),
-        StructField("lang", StringType()),
-        StructField("bucket", IntegerType()),  # url-hash bucket (partition key)
-    ]
-)
-
 # Crawl/extract state table (reference visited_urls CSV, storage.py:65;
 # SURVEY.md §1.2): Status 2=pending, 1=done.
 STATE_SCHEMA = StructType(

@@ -73,7 +73,7 @@ def get_spark(
     arrow_batch_rows: int = 512,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = int(cpus) if cpus.isdigit() else 32
