@@ -33,7 +33,10 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+from tribeca_insights_spark.session import core_count  # noqa: E402
+
+CPUS = core_count()
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "256"))
 
 
@@ -205,7 +208,10 @@ def _quiet_daemon_conf() -> dict:
     ``quiet_daemon`` redirects its own stderr (inherited by every forked
     worker) to ``BENCH_DAEMON_STDERR.log``, which is committed alongside
     the main log and counted in the JSON line — moved off the parsed
-    tail, not discarded. Also drops
+    tail, not discarded. ``get_spark`` makes the package importable by
+    the daemon and its workers (``spark.executorEnv.PYTHONPATH``) and
+    already makes ``quiet_daemon`` the default for local masters; the
+    explicit setting keeps the side log for any master. Also drops
     ``PYTHON_DAEMON_KILL_WORKER_ON_FLUSH_FAILURE`` from the inherited
     env: any non-empty value (even "0") makes daemon.py RE-RAISE benign
     flush failures into full tracebacks + worker kills (daemon.py:87
@@ -214,13 +220,6 @@ def _quiet_daemon_conf() -> dict:
     os.environ["TRIBECA_DAEMON_STDERR"] = os.path.join(
         REPO, DAEMON_STDERR_LOG
     )
-    # the daemon process is launched `pythonExec -m <module>` with the
-    # JVM's env — the repo must be importable there
-    pp = os.environ.get("PYTHONPATH", "")
-    if REPO not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            REPO + (os.pathsep + pp if pp else "")
-        )
     return {
         "spark.python.daemon.module":
             "tribeca_insights_spark.quiet_daemon",

@@ -5,7 +5,7 @@ from tribeca_insights_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="tests")
     yield s
     s.stop()
 

@@ -36,14 +36,6 @@ def test_corpus_tf_matches_oracle_and_salting_is_transparent(golden, extracted):
     assert salted == plain
 
 
-def test_per_page_tf(golden, extracted):
-    got = {}
-    for r in tfops.per_page_tf(extracted).collect():
-        got.setdefault(r["url"], {})[r["word"]] = r["freq"]
-    for g in golden:
-        assert got.get(g["url"], {}) == g["word_frequency"], g["url"]
-
-
 def test_doc_frequency(golden, extracted):
     oracle = Counter()
     for g in golden:

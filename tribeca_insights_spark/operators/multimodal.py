@@ -56,24 +56,6 @@ def _fake_meta(payload: bytes):
     return fmt, 64 + h[1] % 192, 64 + h[2] % 192
 
 
-def decode_image_stub(payload: bytes, deterministic_fake: bool = False):
-    """Decode an image payload → (format, width, height).
-
-    Real header parsing (:func:`..imagex.sniff_image`) handles PNG/JPEG/
-    GIF/BMP/WebP. For unrecognizable payloads: ``deterministic_fake=True``
-    derives stable pseudo-dimensions from the payload hash (plumbing tests
-    over arbitrary bytes); otherwise raise."""
-    s = sniff_image(payload)
-    if s is not None:
-        return s
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "payload matches no known image signature; pass "
-            "deterministic_fake=True for plumbing tests on arbitrary bytes"
-        )
-    return _fake_meta(payload)
-
-
 def media_metadata(media: DataFrame, id_col: str = "media_id",
                    payload_col: str = "payload",
                    deterministic_fake: bool = True) -> DataFrame:

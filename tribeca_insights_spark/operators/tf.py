@@ -53,15 +53,6 @@ def exploded_tokens(extracted: DataFrame, extra_cols=()) -> DataFrame:
     return exploded_words(extracted, extra_cols=cols).select(*cols, "word")
 
 
-def per_page_tf(extracted: DataFrame) -> DataFrame:
-    """Reference per-page Counter (crawler.py:160-161) as long format."""
-    return (
-        exploded_tokens(extracted)
-        .groupBy("url", "word")
-        .agg(F.count("*").cast("int").alias("freq"))
-    )
-
-
 def corpus_tf(extracted: DataFrame, n_salts: int = 0) -> DataFrame:
     """Global (word, freq) desc — reference keyword_frequency table
     (exporters/csv.py:40-53). One shuffle; ``n_salts`` is accepted and

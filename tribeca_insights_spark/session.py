@@ -1,11 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local testing runs ``local[N]`` single-JVM; the config choices below are the
-ones that matter on a real multi-executor cluster and are harmless locally:
+Local testing runs ``local[N]`` single-JVM, N = :func:`core_count`; the
+config choices below are the ones that matter on a real multi-executor
+cluster and are harmless locally:
 
-* AQE on (runtime coalescing + skew-join splitting) — the north_rule calls
-  for explicit skew handling; AQE is the safety net under our explicit
-  salting (see operators/tf.py).
+* AQE on (runtime coalescing + skew-join splitting) — the safety net under
+  the explicit salting of ``joins.salted_skew_join``.
 * Arrow enabled for pandas UDFs, with ``maxRecordsPerBatch`` tuned DOWN:
   Common-Crawl HTML blobs run 10s of KB to MBs, so the 10k-row default
   would balloon Python-worker memory; 512 rows/batch keeps a batch in the
@@ -13,6 +13,15 @@ ones that matter on a real multi-executor cluster and are harmless locally:
 * shuffle partitions default to a small multiple of cores locally; on a
   cluster you'd size this to ~2-3× total cores (or let AQE coalesce from a
   higher number).
+
+Local masters (``local*``) boot their Python workers from the package's
+daemon, :mod:`.quiet_daemon`, which imports pyspark from its installed copy
+rather than the JVM's ``pyspark.zip`` and preloads the UDF runtime once
+before forking. ``spark.executorEnv.PYTHONPATH`` carries the package's
+parent directory, so the daemon and its workers import the package from
+any working directory, and no package zip is shipped. Other masters get
+the package as a ``--py-files``-style zip (:func:`package_zip`).
+``extra_conf`` overrides any of these settings.
 """
 
 from __future__ import annotations
@@ -25,15 +34,24 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+PKG_DIR = pathlib.Path(__file__).resolve().parent
+
+
+def core_count() -> int:
+    """Cores for local sessions: ``$SPARK_GRAFT_CPUS`` when it is a positive
+    integer, else the number of CPUs this process may run on."""
+    v = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(v) if v.isdigit() and int(v) > 0 else len(os.sched_getaffinity(0))
+
+
 def package_zip() -> str:
     """Zip this package for shipping to executors — the same artifact you
     would pass to ``spark-submit --py-files`` on a real cluster. Rebuilt on
     demand (the package is a few tens of KB)."""
-    pkg_dir = pathlib.Path(__file__).resolve().parent
     zpath = os.path.join(tempfile.gettempdir(), "tribeca_insights_spark.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-        for p in sorted(pkg_dir.rglob("*.py")):
-            zf.write(p, os.path.join(pkg_dir.name, p.relative_to(pkg_dir)))
+        for p in sorted(PKG_DIR.rglob("*.py")):
+            zf.write(p, os.path.join(PKG_DIR.name, p.relative_to(PKG_DIR)))
     return zpath
 
 
@@ -73,11 +91,11 @@ def get_spark(
     arrow_batch_rows: int = 512,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
-    master = master or f"local[{cpus}]"
+    n = core_count()
+    master = master or f"local[{n}]"
     if shuffle_partitions is None:
-        n = int(cpus) if cpus.isdigit() else 32
         shuffle_partitions = max(8, n)
+    local = master.startswith("local")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -106,10 +124,14 @@ def get_spark(
         b = b.config("spark.jars", jar)
         for k, v in catalog_conf(warehouse).items():
             b = b.config(k, v)
+    if local:
+        b = b.config(
+            "spark.python.daemon.module", "tribeca_insights_spark.quiet_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", str(PKG_DIR.parent))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    # Ship the package to Python workers — equivalent of --py-files; makes
-    # pandas UDFs importable regardless of the driver's working directory.
-    spark.sparkContext.addPyFile(package_zip())
+    if not local:
+        # Ship the package to Python workers — equivalent of --py-files.
+        spark.sparkContext.addPyFile(package_zip())
     return spark
