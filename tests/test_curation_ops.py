@@ -37,7 +37,7 @@ def test_keep_best_argmax_and_tiebreak(spark):
     )
     out = {
         r["ck"]: r
-        for r in keep_best(df, "ck", "doc_id", "score").collect()
+        for r in keep_best(df, "ck", "score").collect()
     }
     assert out["A"]["keeper_doc_id"] == 3 and out["A"]["cluster_size"] == 3
     assert out["A"]["score"] == 30
@@ -50,7 +50,7 @@ def test_keep_best_carry_cols(spark):
         [Row(doc_id=1, ck="A", score=1, url="u1"),
          Row(doc_id=2, ck="A", score=5, url="u2")]
     )
-    r = keep_best(df, "ck", "doc_id", "score", carry_cols=("url",)).collect()
+    r = keep_best(df, "ck", "score", carry_cols=("url",)).collect()
     assert r[0]["url"] == "u2"
 
 

@@ -46,7 +46,9 @@ def near_dup_docs(spark):
 def test_exact_dedup_groups(spark, near_dup_docs):
     out = {
         r["keeper_id"]: r["n_dups"]
-        for r in exact_dedup(near_dup_docs, text_col="tok_str").collect()
+        for r in exact_dedup(
+            near_dup_docs.withColumnRenamed("tok_str", "text")
+        ).collect()
     }
     assert out[1] == 1  # docs 1 and 4 collapse
     assert out[2] == 0 and out[3] == 0

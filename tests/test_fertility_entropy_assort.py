@@ -24,7 +24,7 @@ def test_bpe_fertility_closed_form(spark):
         ]
     )
     out = {r["lang"]: r for r in
-           bpe_fertility(docs, MERGES, group_col="lang").collect()}
+           bpe_fertility(docs, MERGES).collect()}
     en = out["en"]
     assert (en["n_words"], en["n_bpe_tokens"]) == (2, 2)
     assert en["fertility_micros"] == 1_000_000

@@ -12,14 +12,14 @@ from tribeca_insights_spark.sources.sitemap import sitemap_coverage
 def test_hierarchy_thin_host_on_thin_domain_borrows_from_corpus(spark):
     rows = (
         # big domain "big": 100 docs at metric 100
-        [Row(host="big-h", domain="big", m=100) for _ in range(100)]
+        [Row(host="big-h", domain="big", n_chars=100) for _ in range(100)]
         # thin domain "thin": ONE host, 2 docs at metric 1000
-        + [Row(host="thin-h", domain="thin", m=1000) for _ in range(2)]
+        + [Row(host="thin-h", domain="thin", n_chars=1000) for _ in range(2)]
     )
     out = {
         r["host"]: r
         for r in shrunk_hierarchy_quality(
-            spark.createDataFrame(rows), metric_col="m",
+            spark.createDataFrame(rows),
             alpha=20, beta=50,
         ).collect()
     }
@@ -37,13 +37,13 @@ def test_hierarchy_thin_host_on_thin_domain_borrows_from_corpus(spark):
 
 
 def test_hierarchy_exact_integer_recurrence(spark):
-    rows = [Row(host="h1", domain="d", m=10),
-            Row(host="h1", domain="d", m=20),
-            Row(host="h2", domain="d", m=40)]
+    rows = [Row(host="h1", domain="d", n_chars=10),
+            Row(host="h1", domain="d", n_chars=20),
+            Row(host="h2", domain="d", n_chars=40)]
     out = {
         r["host"]: r
         for r in shrunk_hierarchy_quality(
-            spark.createDataFrame(rows), metric_col="m",
+            spark.createDataFrame(rows),
             alpha=2, beta=3,
         ).collect()
     }

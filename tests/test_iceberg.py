@@ -5,6 +5,7 @@ create→run→resume cycle when an Iceberg runtime jar is on the classpath
 import pytest
 
 from tribeca_insights_spark.plans import iceberg as ib
+from tribeca_insights_spark.plans.pipeline import EXTRACT_OUT_SCHEMA
 
 
 def test_catalog_conf_shape():
@@ -23,6 +24,21 @@ def test_ddl_and_merge_builders():
     assert "PARTITIONED BY (bucket)" in stmts[1]
     assert "bucket(32, url)" in stmts[2]  # log partitioned by url hash-bucket
     assert "USING iceberg" in stmts[3]
+
+    # the output table is exactly what the extraction writes, plus run_id
+    body = stmts[1].split("(", 1)[1].rsplit(") USING", 1)[0]
+    cols, depth, cur = [], 0, ""
+    for ch in body:
+        depth += (ch == "<") - (ch == ">")
+        if ch == "," and depth == 0:
+            cols.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    cols.append(cur.strip())
+    want = [f"{f.name} {f.dataType.simpleString()}"
+            for f in EXTRACT_OUT_SCHEMA.fields] + ["run_id string"]
+    assert [" ".join(c.split()) for c in cols] == want
 
     merge = ib.merge_log_sql("web", "src_view")
     assert "MERGE INTO ti.web.extract_log t" in merge

@@ -308,7 +308,7 @@ def test_perplexity_buckets_per_group(spark):
             rows.append(Row(doc_id=len(rows), lang=lang,
                             text=(words + " ") * (i + 1)))
     docs = spark.createDataFrame(rows)
-    scored = bigram_lm_score_grouped(docs, group_col="lang")
+    scored = bigram_lm_score_grouped(docs)
     out = perplexity_buckets(scored, group_col="lang")
     got = out.collect()
     assert len(got) == 10
@@ -454,7 +454,7 @@ def _scd2(spark, rows):
              r["valid_to"].day if r["valid_to"] else None,
              r["is_current"])
             for r in scd2_history(
-                df, ["k"], "s", ts_col="ts", tiebreak_col="eid"
+                df, ["k"], "s", tiebreak_col="eid"
             ).collect()
         )
     )

@@ -260,7 +260,7 @@ def test_keyness_distinctive_word_ranks_first(spark):
          ("s2", "common pasta pasta")],
         "source string, text string",
     )
-    out = keyness_g2(docs, group_col="source", topk=2).collect()
+    out = keyness_g2(docs, topk=2).collect()
     top = {r["source"]: r["word"] for r in out if r["rank"] == 1}
     assert top["s1"] == "quantum"
     assert top["s2"] == "pasta"
@@ -276,7 +276,7 @@ def test_keyness_matches_python_formula(spark):
         [("x", "aa bb aa cc"), ("y", "bb bb cc dd")],
         "source string, text string",
     )
-    rows = keyness_g2(docs, group_col="source", topk=10).collect()
+    rows = keyness_g2(docs, topk=10).collect()
     # python replay
     from collections import Counter
 

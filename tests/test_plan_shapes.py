@@ -187,7 +187,7 @@ def test_keep_best_is_partial_agg_not_window(spark):
         "doc_id", F.md5("text").alias("ck"),
         F.length("text").cast("long").alias("n_chars"),
     )
-    p = _plan(keep_best(d, "ck", "doc_id", "n_chars"))
+    p = _plan(keep_best(d, "ck", "n_chars"))
     assert "HashAggregate" in p
     assert "Window" not in p
     assert "SortAggregate" not in p  # max(struct)/max_by would trip this

@@ -32,7 +32,7 @@ def test_redact_pii_masks_and_counts(spark):
 def test_redact_pii_order_email_before_phone(spark):
     # digits inside an email local part must not phone-match after masking
     df = spark.createDataFrame([(1, "x 415-555-0042@evil.com y")], ["i", "text"])
-    r = redact_pii(df, text_col="text").collect()[0]
+    r = redact_pii(df).collect()[0]
     assert r["redacted_text"] == "x <EMAIL> y"
     # counts run on the ORIGINAL text, so both patterns see their match
     assert r["n_emails"] == 1 and r["n_phones"] == 1

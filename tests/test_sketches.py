@@ -110,7 +110,7 @@ class TestCountMin:
         toks = self._toks(spark, words)
         cms = cms_build(toks, "key", depth=4, width=64)
         est = {r.key: r.est_count for r in cms_point_estimates(
-            cms, toks.distinct(), "key", depth=4, width=64).collect()}
+            cms, toks.distinct(), depth=4, width=64).collect()}
         exact = Counter(words)
         for k, n in exact.items():
             assert est[k] >= n          # CMS invariant
@@ -125,7 +125,7 @@ class TestCountMin:
 
         cms = cms_build(self._toks(spark, ["x"] * 5), "key")
         est = {r.key: r.est_count for r in cms_point_estimates(
-            cms, self._toks(spark, ["never-seen"]), "key").collect()}
+            cms, self._toks(spark, ["never-seen"])).collect()}
         assert est["never-seen"] == 0
 
     def test_merge_by_cellwise_sum(self, spark):

@@ -88,10 +88,10 @@ def test_histogram_quantiles_closed_form(spark):
     # p50: cum(bin1)=3 < 4, cum(bin2)=7 ≥ 4 → bin 2 → lo 4
     # p90: need cum ≥ 7.2 → bin 3 → lo 8
     docs = spark.createDataFrame(
-        [Row(lang="g", v=i) for i in range(1, 9)]
+        [Row(lang="g", n_chars=i) for i in range(1, 9)]
     )
     out = {(r["lang"], r["q_micros"]): r for r in
-           histogram_quantiles(docs, group_col="lang", value_col="v")
+           histogram_quantiles(docs)
            .collect()}
     assert out[("g", 500_000)]["bin_lo"] == 4
     assert out[("g", 900_000)]["bin_lo"] == 8
@@ -99,9 +99,8 @@ def test_histogram_quantiles_closed_form(spark):
 
 
 def test_histogram_quantiles_clamps_zero(spark):
-    docs = spark.createDataFrame([Row(lang="z", v=0), Row(lang="z", v=0)])
-    out = histogram_quantiles(docs, group_col="lang",
-                              value_col="v").collect()
+    docs = spark.createDataFrame([Row(lang="z", n_chars=0), Row(lang="z", n_chars=0)])
+    out = histogram_quantiles(docs).collect()
     assert all(r["bin_lo"] == 1 for r in out)
 
 

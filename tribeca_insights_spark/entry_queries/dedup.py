@@ -286,7 +286,7 @@ def q75_dedup_keep_best(spark, sf_dir):
         ),
         F.length("text").cast("long").alias("n_chars"),
     )
-    return keep_best(d, "cluster_key", "doc_id", "n_chars")
+    return keep_best(d, "cluster_key", "n_chars")
 
 
 @q(
@@ -872,7 +872,7 @@ def q155_line_dedup(spark, sf_dir):
             F.lit("subscribe"),
         ).alias("text"),
     )
-    return dedup_lines_within_doc(aug, id_col="doc_id")
+    return dedup_lines_within_doc(aug)
 
 
 @q(
@@ -1257,8 +1257,7 @@ def q183_dedup_shift(spark, sf_dir):
         "doc_id", F.md5("text").alias("ck"),
         F.length("text").cast("long").alias("n_chars"),
     )
-    kept = keep_best(t, cluster_col="ck", id_col="doc_id",
-                     score_col="n_chars")
+    kept = keep_best(t, cluster_col="ck", score_col="n_chars")
     before = t.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),

@@ -497,7 +497,7 @@ def q94_template_blocks(spark, sf_dir):
     docs = documents_as_pages(spark, sf_dir).withColumn(
         "host", F.regexp_extract("url", r"^https://([^/]+)/", 1)
     )
-    return template_blocks(docs, host_col="host", page_col="url")
+    return template_blocks(docs)
 
 
 @q(

@@ -165,7 +165,7 @@ def q188_pii_density(spark, sf_dir):
             ),
         ).otherwise(F.col("text")).alias("text"),
     )
-    return pii_density(aug, group_col="source").orderBy("source")
+    return pii_density(aug).orderBy("source")
 
 @q(
     "q190_badwords_filter",

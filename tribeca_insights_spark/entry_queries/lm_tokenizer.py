@@ -234,7 +234,7 @@ def q108_ccnet_per_lang(spark, sf_dir):
 
     docs = _read(spark, sf_dir, "documents")
     return perplexity_buckets(
-        bigram_lm_score_grouped(docs, group_col="lang"),
+        bigram_lm_score_grouped(docs),
         group_col="lang",
     )
 
@@ -316,8 +316,7 @@ def q117_pack_sequences(spark, sf_dir):
     from ..operators.chunking import pack_sequences
 
     return pack_sequences(
-        _read(spark, sf_dir, "documents"), ctx=256, group_col="source"
-    )
+        _read(spark, sf_dir, "documents"), ctx=256)
 
 
 @q(
@@ -574,7 +573,7 @@ def q173_packing_efficiency(spark, sf_dir):
     from ..operators.chunking import packing_efficiency
 
     d = _read(spark, sf_dir, "documents")
-    return packing_efficiency(d, ctx=256, group_col="source").orderBy(
+    return packing_efficiency(d, ctx=256).orderBy(
         "source"
     )
 
@@ -670,7 +669,7 @@ def q180_bpe_fertility(spark, sf_dir):
     from ..operators.bpe import bpe_fertility
 
     d = _read(spark, sf_dir, "documents")
-    return bpe_fertility(d, _BPE_MERGES, group_col="lang").orderBy(
+    return bpe_fertility(d, _BPE_MERGES).orderBy(
         "lang"
     )
 

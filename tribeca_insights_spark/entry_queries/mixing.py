@@ -119,7 +119,7 @@ def q104_stratified_sample(spark, sf_dir):
     from ..operators.mixing import stratified_topk_sample
 
     d = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    return stratified_topk_sample(d, stratum_col="lang", k=10).select(
+    return stratified_topk_sample(d, k=10).select(
         "doc_id", "lang", F.col("sample_rank").cast("int").alias(
             "sample_rank"
         )
@@ -153,7 +153,7 @@ def q110_split_assign(spark, sf_dir):
     from ..operators.mixing import split_assign
 
     d = _read(spark, sf_dir, "documents").select("doc_id", "source")
-    return split_assign(d, key_col="doc_id", salt="split",
+    return split_assign(d, salt="split",
                         train_micros=980_000, val_micros=10_000)
 
 
@@ -268,7 +268,7 @@ def q158_zipf_slope(spark, sf_dir):
     the oracle."""
     from ..operators.textstats import zipf_slope
 
-    return zipf_slope(_tokens_df(spark, sf_dir), group_col="lang")
+    return zipf_slope(_tokens_df(spark, sf_dir))
 
 
 @q(
@@ -336,7 +336,7 @@ def q162_split_leakage(spark, sf_dir):
     )
     corpus = d.unionByName(copies)
     s = split_assign(
-        corpus, key_col="doc_id", salt="split",
+        corpus, salt="split",
         train_micros=900_000, val_micros=50_000,
     )
     return split_leakage(s, n=13)
@@ -386,7 +386,7 @@ def q176_temperature_rates(spark, sf_dir):
     dt = d.groupBy("source").agg(
         F.sum(F.size(toks)).cast("long").alias("n_tokens")
     )
-    return sqrt_temperature_rates(dt, group_col="source").orderBy(
+    return sqrt_temperature_rates(dt).orderBy(
         "source"
     )
 
@@ -480,8 +480,7 @@ def q193_shard_assign(spark, sf_dir):
     from ..operators.mixing import shard_assign
 
     d = _read(spark, sf_dir, "documents")
-    return shard_assign(d, n_shards=16, key_col="doc_id",
-                        weight_col="n_chars")
+    return shard_assign(d, n_shards=16, weight_col="n_chars")
 
 
 @q(
@@ -1064,7 +1063,7 @@ def q355_domain_cap(spark, sf_dir):
     )
     docs = d.select("doc_id", reg.alias("registrable"))
     kept = stratified_topk_sample(
-        docs, stratum_col="registrable", id_col="doc_id", k=25
+        docs, stratum_col="registrable", k=25
     )
     n_kept = kept.groupBy("registrable").agg(
         F.count("*").cast("bigint").alias("n_kept")

@@ -223,7 +223,7 @@ def q107_image_neardup_pairs(spark, sf_dir):
     # once, not once per side (at corpus scale you materialize exactly
     # this index: id + 16 hex chars per image)
     hashes = (
-        image_dhash(media, payload_col="payload")
+        image_dhash(media)
         .select("media_id", "dhash")
         .persist()
     )

@@ -320,7 +320,7 @@ def q213_aligned_spans(spark, sf_dir):
         .join(ids.select(F.col("doc_id").alias("b_id")), "b_id")
         .select("a_id", "b_id")
     )
-    return aligned_span_pairs(d, pairs, text_col="tok_str", k=3)
+    return aligned_span_pairs(d, pairs, k=3)
 
 
 @q(

@@ -612,8 +612,7 @@ def q131_scd2_history(spark, sf_dir):
 
     ev = _read(spark, sf_dir, "events")
     return scd2_history(
-        ev, ["user_id"], "event_type", ts_col="ts",
-        tiebreak_col="event_id",
+        ev, ["user_id"], "event_type", tiebreak_col="event_id",
     )
 
 

@@ -418,7 +418,7 @@ def q146_keyness_g2(spark, sf_dir):
     from ..operators.textstats import keyness_g2
 
     return keyness_g2(_read(spark, sf_dir, "documents"),
-                      group_col="source", topk=5)
+                      topk=5)
 
 
 @q(

@@ -185,7 +185,7 @@ def q126_cms_point_estimates(spark, sf_dir):
     )
     cms = cms_build(toks, "key", depth=4, width=64)
     probes = toks.distinct()
-    return cms_point_estimates(cms, probes, "key", depth=4, width=64)
+    return cms_point_estimates(cms, probes, depth=4, width=64)
 
 
 @q(
@@ -352,9 +352,7 @@ def q179_histogram_quantiles(spark, sf_dir):
     from ..operators.textstats import histogram_quantiles
 
     d = _read(spark, sf_dir, "documents")
-    return histogram_quantiles(d, group_col="lang",
-                               value_col="n_chars",
-                               qs_micros=(500_000, 900_000))
+    return histogram_quantiles(d, qs_micros=(500_000, 900_000))
 
 
 @q(

@@ -443,7 +443,7 @@ def q157_wilson_quality(spark, sf_dir):
     d = _read(spark, sf_dir, "documents").select(
         "source", (F.length("text") >= 200).alias("is_good")
     )
-    return wilson_bounds(d, group_col="source", success_col="is_good")
+    return wilson_bounds(d)
 
 
 @q(
@@ -573,7 +573,7 @@ def q171_vocab_concentration(spark, sf_dir):
     from ..operators.textstats import vocab_concentration
 
     d = _read(spark, sf_dir, "documents")
-    return vocab_concentration(d, group_col="source").orderBy("source")
+    return vocab_concentration(d).orderBy("source")
 
 
 @q(
@@ -620,8 +620,7 @@ def q181_host_lang_entropy(spark, sf_dir):
         ).alias("host"),
         "lang",
     )
-    return group_label_entropy(d, group_col="host",
-                               label_col="lang").orderBy("host")
+    return group_label_entropy(d).orderBy("host")
 
 
 @q(

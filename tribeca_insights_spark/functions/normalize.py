@@ -36,13 +36,12 @@ def normalize_text_col(col) -> Column:
     return F.trim(F.regexp_replace(strip_controls(col), r"\s+", " "))
 
 
-def with_normalized_text(df, text_col: str = "text",
-                         out_col: str = "norm_text"):
-    """Adds ``out_col`` plus ``n_junk_chars`` (how many characters the
+def with_normalized_text(df):
+    """Adds ``norm_text`` plus ``n_junk_chars`` (how many characters the
     control/zero-width strip removed — a cheap corruption signal worth
     keeping as a quality feature)."""
-    c = F.col(text_col)
-    return df.withColumn(out_col, normalize_text_col(c)).withColumn(
+    c = F.col("text")
+    return df.withColumn("norm_text", normalize_text_col(c)).withColumn(
         "n_junk_chars",
         (F.length(c) - F.length(strip_controls(c))).cast("long"),
     )
@@ -72,8 +71,8 @@ def nfc_udf():
     return pandas_udf(_nfc_batch, StringType())
 
 
-def with_nfc_text(df, text_col: str = "text", out_col: str = "nfc_text"):
-    """Adds ``out_col`` = NFC(text) plus ``nfc_changed`` — canonical
+def with_nfc_text(df):
+    """Adds ``nfc_text`` = NFC(text) plus ``nfc_changed`` — canonical
     composition (combining marks fold into precomposed codepoints) so
     hash-based dedup and token matching treat 'e'+U+0301 and 'é' as the
     SAME text. Web corpora mix both forms (editor/OS dependent); skipping
@@ -81,9 +80,9 @@ def with_nfc_text(df, text_col: str = "text", out_col: str = "nfc_text"):
     ``unicodedata`` — the canonical tables themselves, not a
     reimplementation; the q101 oracle cross-checks against DuckDB's
     independent ``nfc_normalize`` implementation."""
-    c = F.col(text_col)
-    out = df.withColumn(out_col, nfc_udf()(c))
-    return out.withColumn("nfc_changed", F.col(out_col) != c)
+    c = F.col("text")
+    out = df.withColumn("nfc_text", nfc_udf()(c))
+    return out.withColumn("nfc_changed", F.col("nfc_text") != c)
 
 
 # ---------------------------------------------------------------------------
@@ -136,16 +135,15 @@ def repair_mojibake_col(col) -> Column:
     return out
 
 
-def with_repaired_text(df, text_col: str = "text",
-                       out_col: str = "repaired_text"):
-    """Adds ``out_col`` plus ``n_repairs`` = how many table hits were
+def with_repaired_text(df):
+    """Adds ``repaired_text`` plus ``n_repairs`` = how many table hits were
     rewritten, computed exactly from length deltas: every mapping
     shrinks the string by (len(bad) - len(good)) chars, so differencing
     lengths across each sequential replace step and dividing by that
     entry's shrink counts hits exactly -- shuffle-free arithmetic, no
     second scan, no regex count. The optimizer CSEs the shared chain
     prefixes so this stays one projection."""
-    c = F.col(text_col)
+    c = F.col("text")
     repaired = repair_mojibake_col(c)
     n = F.lit(0)
     prev = c
@@ -155,7 +153,7 @@ def with_repaired_text(df, text_col: str = "text",
         if shrink > 0:
             n = n + (F.length(prev) - F.length(step)) / F.lit(shrink)
         prev = step
-    return df.withColumn(out_col, repaired).withColumn(
+    return df.withColumn("repaired_text", repaired).withColumn(
         "n_repairs", n.cast("long")
     )
 
@@ -183,8 +181,8 @@ def nfkc_udf():
     return pandas_udf(_nfkc_batch, StringType())
 
 
-def with_nfkc_text(df, text_col: str = "text", out_col: str = "nfkc_text"):
-    """Adds ``out_col`` = NFKC(text) plus ``nfkc_changed`` —
+def with_nfkc_text(df):
+    """Adds ``nfkc_text`` = NFKC(text) plus ``nfkc_changed`` —
     COMPATIBILITY normalization on top of NFC's canonical folding:
     ligatures decompose (ﬁ→fi), fullwidth forms fold (Ａ４２→A42),
     superscripts/roman numerals/circled digits reduce to plain
@@ -194,9 +192,9 @@ def with_nfkc_text(df, text_col: str = "text", out_col: str = "nfkc_text"):
     presentation forms, while NFKC is intentionally LOSSY (q101's
     dedup keys stay on NFC; NFKC feeds tokenization and matching).
     Same Arrow-batched stdlib unicodedata regime as NFC."""
-    c = F.col(text_col)
-    out = df.withColumn(out_col, nfkc_udf()(c))
-    return out.withColumn("nfkc_changed", F.col(out_col) != c)
+    c = F.col("text")
+    out = df.withColumn("nfkc_text", nfkc_udf()(c))
+    return out.withColumn("nfkc_changed", F.col("nfkc_text") != c)
 
 
 # --- line-break de-hyphenation (PDF/columnar text repair) -------------------
@@ -222,9 +220,7 @@ def dehyphenate_col(text_col):
     return F.regexp_replace(unwrapped, r" {2,}", " ")
 
 
-def canonical_dedup_key(df, text_col: str = "text",
-                        out_col: str = "dedup_key",
-                        hash_col: str = "dedup_md5"):
+def canonical_dedup_key(df):
     """CANONICAL DEDUP-KEY pipeline — the composition every exact-
     dedup pass (q16) should key on instead of raw bytes:
     de-hyphenate line breaks (column-wrapped words rejoin,
@@ -234,14 +230,14 @@ def canonical_dedup_key(df, text_col: str = "text",
     renderings of ONE document — different wrap points, different
     accent encoding, a stray BOM, case-mapped navigation — collapse
     to one key; NFKC is deliberately NOT applied (it is lossy — q337
-    keeps it tokenizer-side). Adds ``out_col`` and its md5
-    ``hash_col`` (the groupBy key at corpus scale).
+    keeps it tokenizer-side). Adds ``dedup_key`` and its md5
+    ``dedup_md5`` (the groupBy key at corpus scale).
 
     Plan: codegen regexp chain → one ArrowEvalPython (NFC) → codegen
     lower/md5 — the extractor's zero-shuffle shape."""
-    c = F.col(text_col)
+    c = F.col("text")
     staged = normalize_text_col(dehyphenate_col(c))
     keyed = F.lower(nfc_udf()(staged))
-    return df.withColumn(out_col, keyed).withColumn(
-        hash_col, F.md5(F.col(out_col))
+    return df.withColumn("dedup_key", keyed).withColumn(
+        "dedup_md5", F.md5(F.col("dedup_key"))
     )

@@ -123,9 +123,7 @@ def stopwords_df(spark, languages, profile: str = "compat"):
     return spark.createDataFrame(rows, "lang string, stops array<string>")
 
 
-def with_tokens(df, languages=None, profile: str = "compat",
-                text_col: str = "text", lang_col: str = "lang",
-                out_col: str = "tokens"):
+def with_tokens(df, languages=None, profile: str = "compat"):
     """documents(text, lang, …) → + tokens column, fully native.
 
     Broadcast-joins the per-language stopword dim (a few KB) so the plan is
@@ -136,9 +134,9 @@ def with_tokens(df, languages=None, profile: str = "compat",
     if languages is None:
         languages = list(LANGUAGE_CODES)
     dim = stopwords_df(df.sparkSession, languages, profile)
-    joined = df.join(F.broadcast(dim), df[lang_col] == dim["lang"], "left").drop(dim["lang"])
+    joined = df.join(F.broadcast(dim), df["lang"] == dim["lang"], "left").drop(dim["lang"])
     stops = F.coalesce(F.col("stops"), F.array().cast("array<string>"))
-    return joined.withColumn(out_col, tokens_col(F.col(text_col), stops)).drop("stops")
+    return joined.withColumn("tokens", tokens_col(F.col("text"), stops)).drop("stops")
 
 
 LANGUAGE_CODES = (
@@ -160,8 +158,7 @@ def stop_pairs_df(spark, languages=None, profile: str = "compat"):
     return spark.createDataFrame(rows, "lang string, word string")
 
 
-def exploded_words(df, profile: str = "compat", text_col: str = "text",
-                   lang_col: str = "lang", extra_cols=("url",)):
+def exploded_words(df, profile: str = "compat", extra_cols=("url",)):
     """Long-format tokenization — the TF-pipeline hot path.
 
     ``explode(split(text, CLEAN)) → lower → length>=2 filter → broadcast
@@ -178,16 +175,15 @@ def exploded_words(df, profile: str = "compat", text_col: str = "text",
 
     spark = df.sparkSession
     raw = df.select(
-        *extra_cols, lang_col,
-        F.explode(F.split(F.col(text_col), CLEAN_PATTERN_SQL)).alias("_w0"),
+        *extra_cols, "lang",
+        F.explode(F.split(F.col("text"), CLEAN_PATTERN_SQL)).alias("_w0"),
     )
     words = raw.select(
-        *extra_cols, lang_col, F.lower(F.col("_w0")).alias("word")
+        *extra_cols, "lang", F.lower(F.col("_w0")).alias("word")
     ).filter(F.length("word") >= MIN_TOKEN_LENGTH)
     stops = stop_pairs_df(spark, profile=profile)
     return words.join(
         F.broadcast(stops),
-        [lang_col, "word"] if lang_col == "lang" else
-        [words[lang_col] == stops["lang"], words["word"] == stops["word"]],
+        ["lang", "word"],
         "left_anti",
     )

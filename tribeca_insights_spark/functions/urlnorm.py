@@ -72,7 +72,7 @@ def canonical_url(url, sort_query: bool = True,
     )
 
 
-def canonical_url_dedup(df, url_col: str = "url", **canon_kwargs):
+def canonical_url_dedup(df, **canon_kwargs):
     """URL-cluster dedup over canonical forms:
     (canon, keeper_url, n_variants) — every distinct raw URL mapped
     through :func:`canonical_url`, clustered by the canonical string,
@@ -87,7 +87,7 @@ def canonical_url_dedup(df, url_col: str = "url", **canon_kwargs):
     """
     from pyspark.sql import functions as F
 
-    c = df.select(F.col(url_col).alias("_u")).distinct().select(
+    c = df.select(F.col("url").alias("_u")).distinct().select(
         "_u", canonical_url(F.col("_u"), **canon_kwargs).alias("canon")
     )
     return c.groupBy("canon").agg(
@@ -96,10 +96,7 @@ def canonical_url_dedup(df, url_col: str = "url", **canon_kwargs):
     )
 
 
-def url_path_templates(
-    df,
-    url_col: str = "url",
-) -> "DataFrame":
+def url_path_templates(df) -> "DataFrame":
     """URL PATH-TEMPLATE mining per host: every path with digit runs
     masked to ``{n}`` becomes a template key, counted per host — the
     crawl-frontier diagnostic behind "this host is a calendar /
@@ -117,14 +114,14 @@ def url_path_templates(
     """
     from pyspark.sql import functions as F
 
-    host = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)
-    path = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://[^/?#]+(/[^?#]*)?", 1)
+    host = F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)
+    path = F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.-]*://[^/?#]+(/[^?#]*)?", 1)
     tpl = F.regexp_replace(path, "[0-9]+", "{n}")
     return (
         df.select(
             host.alias("host"),
             tpl.alias("path_template"),
-            F.col(url_col).alias("_u"),
+            F.col("url").alias("_u"),
         )
         .groupBy("host", "path_template")
         .agg(
@@ -134,8 +131,7 @@ def url_path_templates(
     )
 
 
-def param_significance(pages, url_col: str = "url",
-                       hash_col: str = "content_hash"):
+def param_significance(pages):
     """DATA-DRIVEN URL-parameter significance mining: which query
     parameters never change the content they address?
 
@@ -158,13 +154,13 @@ def param_significance(pages, url_col: str = "url",
     host-prefixed, so the shuffle co-locates with a host-bucketed
     frontier store.
     """
-    host = F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/]+)", 1)
-    path = F.regexp_extract(F.col(url_col), r"^[a-z]+://[^/]+([^?#]*)", 1)
-    qs = F.regexp_extract(F.col(url_col), r"\?([^#]*)", 1)
+    host = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
+    path = F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+([^?#]*)", 1)
+    qs = F.regexp_extract(F.col("url"), r"\?([^#]*)", 1)
     pairs = F.filter(F.split(qs, "&"), lambda kv: kv != "")
     exploded = pages.select(
         host.alias("host"), path.alias("path"), pairs.alias("_ps"),
-        F.col(hash_col).alias("_h"),
+        F.col("content_hash").alias("_h"),
         F.explode(pairs).alias("_kv"),
     )
     pname = F.split(F.col("_kv"), "=")[0]
@@ -200,7 +196,7 @@ def param_significance(pages, url_col: str = "url",
     )
 
 
-def host_script_audit(pages, url_col: str = "url"):
+def host_script_audit(pages):
     """IDN-homograph audit: hostnames mixing Unicode scripts
     (``exаmple.com`` with a Cyrillic а) are the classic phishing /
     crawler-trap spoof, and raw punycode labels (``xn--…``) deserve a
@@ -209,7 +205,7 @@ def host_script_audit(pages, url_col: str = "url"):
     ``suspicious = mixed-script OR punycode``. Pure codegen rlike —
     the audit costs a Project on the url stream, nothing more."""
     host = F.lower(
-        F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/:]+)", 1)
+        F.regexp_extract(F.col("url"), r"^[a-z]+://([^/:]+)", 1)
     )
     has_lat = host.rlike("[a-z]")
     has_cyr = host.rlike("[Ѐ-ӿ]")
@@ -217,7 +213,7 @@ def host_script_audit(pages, url_col: str = "url"):
     flag = (has_lat & has_cyr) | puny
     b = lambda c: F.when(c, 1).otherwise(0).cast("int")  # noqa: E731
     return pages.select(
-        F.col(url_col).alias("url"), host.alias("host"),
+        F.col("url"), host.alias("host"),
         b(has_lat).alias("has_latin"),
         b(has_cyr).alias("has_cyrillic"),
         b(puny).alias("punycode"),
@@ -225,9 +221,7 @@ def host_script_audit(pages, url_col: str = "url"):
     )
 
 
-def crawl_trap_score(pages, url_col: str = "url",
-                     hash_col: str = "content_hash",
-                     min_urls: int = 8) -> DataFrame:
+def crawl_trap_score(pages, min_urls: int = 8) -> DataFrame:
     """Crawl-trap detection: hosts where a URL path template fans out
     into many URLs but barely any distinct content — infinite
     calendars, session-id paginators, faceted-search explosions. Per
@@ -240,12 +234,12 @@ def crawl_trap_score(pages, url_col: str = "url",
     broadcast anti-join BEFORE fetching — the only way to win against
     a trap is to never enqueue it. Two partial-agg groupBys on
     host-prefixed keys; codegen template normalization."""
-    host = F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/]+)", 1)
-    path = F.regexp_extract(F.col(url_col), r"^[a-z]+://[^/]+([^?#]*)", 1)
+    host = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
+    path = F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+([^?#]*)", 1)
     tmpl = F.regexp_replace(path, r"\d+", "N")
     per = pages.select(
         host.alias("host"), tmpl.alias("template"),
-        F.col(url_col).alias("_u"), F.col(hash_col).alias("_h"),
+        F.col("url").alias("_u"), F.col("content_hash").alias("_h"),
     ).groupBy("host", "template").agg(
         F.countDistinct("_u").cast("bigint").alias("n_urls"),
         F.countDistinct("_h").cast("bigint").alias("n_hashes"),
@@ -360,7 +354,7 @@ DEFAULT_PUBLIC_SUFFIXES = (
 ).split()
 
 
-def registrable_domains(df, host_col: str = "host", suffixes=None):
+def registrable_domains(df, suffixes=None):
     """Registrable-domain (eTLD+1) extraction with Public-Suffix-List
     semantics: for each distinct host, the LONGEST matching public
     suffix wins (``a.b.co.uk`` → suffix ``co.uk``, registrable
@@ -388,7 +382,7 @@ def registrable_domains(df, host_col: str = "host", suffixes=None):
     sfx_df = spark.createDataFrame(
         [(s, 1) for s in sorted(set(sfx))], "suffix string, _m int"
     )
-    hosts = df.select(F.lower(F.col(host_col)).alias("host")).distinct()
+    hosts = df.select(F.lower(F.col("host")).alias("host")).distinct()
     cand = hosts.select(
         "host", F.explode(host_suffixes(F.col("host"))).alias("suffix")
     ).join(F.broadcast(sfx_df), "suffix", "left")
@@ -422,7 +416,7 @@ def registrable_domains(df, host_col: str = "host", suffixes=None):
     )
 
 
-def embedded_url_params(pages, url_col: str = "url"):
+def embedded_url_params(pages):
     """EMBEDDED-URL query-parameter audit: rows for every query
     parameter whose value is itself an absolute http(s) URL, plain or
     percent-encoded — ``(url, param, embedded_host, is_external)``.
@@ -437,7 +431,7 @@ def embedded_url_params(pages, url_col: str = "url"):
     decode (%3A/%2F, case-insensitive) + host regexp pulls. Zero
     shuffle, zero Python.
     """
-    u = F.col(url_col)
+    u = F.col("url")
     page_host = F.lower(
         F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]*)", 1)
     )

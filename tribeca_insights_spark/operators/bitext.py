@@ -50,14 +50,7 @@ def url_lang_template(url_col, lang_col):
     return F.regexp_replace(url_col, _LANG_SEG, "/{L}/")
 
 
-def bitext_candidates(
-    pages: DataFrame,
-    url_col: str = "url",
-    lang_col: str = "lang",
-    size_col: str = "n_chars",
-    id_col: str = "doc_id",
-    max_ratio_x2: int = 4,
-) -> DataFrame:
+def bitext_candidates(pages: DataFrame, max_ratio_x2: int = 4) -> DataFrame:
     """Candidate parallel-document pairs from URL structure.
 
     Input: one row per page with ``url``, declared ``lang``, a cheap size
@@ -71,10 +64,10 @@ def bitext_candidates(
     scale it partitions by site section; nothing global, no windows.
     """
     t = pages.select(
-        F.col(id_col).alias("_id"),
-        F.col(lang_col).alias("_lang"),
-        F.col(size_col).cast("bigint").alias("_size"),
-        url_lang_template(F.col(url_col), F.col(lang_col)).alias("tpl"),
+        F.col("doc_id").alias("_id"),
+        F.col("lang").alias("_lang"),
+        F.col("n_chars").cast("bigint").alias("_size"),
+        url_lang_template(F.col("url"), F.col("lang")).alias("tpl"),
     )
     a = t.select(
         F.col("tpl"),
@@ -101,9 +94,6 @@ def bitext_margin_scores(
     emb: DataFrame,
     k: int = 4,
     bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    side_col: str = "side",
 ) -> DataFrame:
     """Margin-based bitext pair scoring (stage 2 — Artetxe & Schwenk
     2019's ratio margin, the CCMatrix / LASER mining criterion):
@@ -140,10 +130,10 @@ def bitext_margin_scores(
     from .similarity import _dbl, cosine_col, sign_lsh_bucket
 
     base = emb.select(
-        F.col(id_col).cast("long").alias("_id"),
-        _dbl(F.col(vec_col)).alias("_v"),
-        sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
-        F.col(side_col).cast("int").alias("_side"),
+        F.col("vec_id").cast("long").alias("_id"),
+        _dbl(F.col("embedding")).alias("_v"),
+        sign_lsh_bucket(F.col("embedding"), bits).alias("bucket"),
+        F.col("side").cast("int").alias("_side"),
     )
     x = base.filter(F.col("_side") == 0).select(
         "bucket", F.col("_id").alias("id_x"), F.col("_v").alias("_vx")

@@ -34,39 +34,33 @@ def host_suffixes(host_col):
     )
 
 
-def domain_block_flags(
-    docs: DataFrame,
-    blocklist: DataFrame,
-    id_col: str = "doc_id",
-    host_col: str = "host",
-    entry_col: str = "entry",
-) -> DataFrame:
+def domain_block_flags(docs: DataFrame, blocklist: DataFrame) -> DataFrame:
     """(id, host, blocked, matched_entry) for every input row.
 
     ``matched_entry`` is the lexicographically-first matching blocklist
     entry (deterministic under any join order), NULL when unblocked.
     """
     sufs = docs.select(
-        F.col(id_col),
-        F.col(host_col),
-        F.explode(host_suffixes(F.col(host_col))).alias("_suf"),
+        F.col("doc_id"),
+        F.col("host"),
+        F.explode(host_suffixes(F.col("host"))).alias("_suf"),
     )
     hits = (
         sufs.join(
             F.broadcast(
-                blocklist.select(F.col(entry_col).alias("_suf")).distinct()
+                blocklist.select(F.col("entry").alias("_suf")).distinct()
             ),
             "_suf",
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.min("_suf").alias("matched_entry"))
     )
     return (
-        docs.select(id_col, host_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id", "host")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
-            host_col,
+            "doc_id",
+            "host",
             F.col("matched_entry").isNotNull().alias("blocked"),
             "matched_entry",
         )
@@ -91,8 +85,6 @@ SPAM_WORDS = (
 def badword_stats(
     docs: DataFrame,
     words: tuple[str, ...] = SPAM_WORDS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, n_tokens, n_bad, bad_per_mtoken, blocked) — C4's word-level
     blocklist gate: a document is dropped when ANY token (lowercased,
@@ -109,18 +101,18 @@ def badword_stats(
     domain_block_flags shape above.
     """
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), " ", -1),
+            F.filter(F.split(F.lower(F.col("text")), " ", -1),
                      lambda w: F.length(w) > 0)
         ).alias("w"),
     )
-    agg = toks.groupBy(id_col).agg(
+    agg = toks.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.sum(F.when(F.col("w").isin(*words), 1).otherwise(0)).alias("n_bad"),
     )
     return agg.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("n_bad").cast("long").alias("n_bad"),
         F.expr("n_bad * 1000000L div n_tokens").alias("bad_per_mtoken"),
@@ -147,9 +139,6 @@ def ip_to_int(ip_col):
 def cidr_block_flags(
     docs: DataFrame,
     cidrs: DataFrame,
-    id_col: str = "doc_id",
-    ip_col: str = "ip",
-    cidr_col: str = "cidr",
     prefix_lens: tuple[int, ...] = (8, 12, 16, 20, 24, 32),
 ) -> DataFrame:
     """(id, ip, blocked, matched_cidr) — CIDR blocklist matching (server
@@ -169,8 +158,8 @@ def cidr_block_flags(
     non-matching would be a blocklist hole.
     """
     c = cidrs.select(
-        F.col(cidr_col).alias("_cidr"),
-        F.split(F.col(cidr_col), "/").alias("_p"),
+        F.col("cidr").alias("_cidr"),
+        F.split(F.col("cidr"), "/").alias("_p"),
     ).select(
         "_cidr",
         ip_to_int(F.element_at("_p", 1)).alias("_base"),
@@ -184,12 +173,12 @@ def cidr_block_flags(
         F.expr("shiftright(_base, 32 - _plen)").alias("_pref"),
     )
     probes = docs.select(
-        F.col(id_col),
-        F.col(ip_col),
-        ip_to_int(F.col(ip_col)).alias("_ip"),
+        F.col("doc_id"),
+        F.col("ip"),
+        ip_to_int(F.col("ip")).alias("_ip"),
     ).select(
-        id_col,
-        ip_col,
+        "doc_id",
+        "ip",
         F.explode(
             F.array(
                 *[
@@ -201,18 +190,18 @@ def cidr_block_flags(
                 ]
             )
         ).alias("_e"),
-    ).select(id_col, ip_col, "_e._plen", "_e._pref")
+    ).select("doc_id", "ip", "_e._plen", "_e._pref")
     hits = (
         probes.join(F.broadcast(cdim), ["_plen", "_pref"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.min("_cidr").alias("matched_cidr"))
     )
     out = (
-        docs.select(id_col, ip_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id", "ip")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
-            ip_col,
+            "doc_id",
+            "ip",
             F.col("matched_cidr").isNotNull().alias("blocked"),
             "matched_cidr",
         )
@@ -228,13 +217,7 @@ def cidr_block_flags(
     return out
 
 
-def outlink_spam_ratio(
-    links: DataFrame,
-    blocklist: DataFrame,
-    id_col: str = "doc_id",
-    host_col: str = "target_host",
-    entry_col: str = "entry",
-) -> DataFrame:
+def outlink_spam_ratio(links: DataFrame, blocklist: DataFrame) -> DataFrame:
     """(id, n_outlinks, n_blocked, blocked_ppm): per-page fraction of
     external-link targets whose host hits the domain blocklist — a
     standard spam/adult-adjacency signal (a clean page linking mostly
@@ -251,14 +234,14 @@ def outlink_spam_ratio(
     (multi-level suffix matches collapse in the distinct, no per-link
     identity needed). Then ONE partial-agg groupBy on the page key.
     """
-    lk = links.select(F.col(id_col), F.col(host_col).alias("_h"))
+    lk = links.select(F.col("doc_id"), F.col("target_host").alias("_h"))
     blocked_hosts = (
         lk.select("_h")
         .distinct()
         .select("_h", F.explode(host_suffixes(F.col("_h"))).alias("_suf"))
         .join(
             F.broadcast(
-                blocklist.select(F.col(entry_col).alias("_suf")).distinct()
+                blocklist.select(F.col("entry").alias("_suf")).distinct()
             ),
             "_suf",
             "left_semi",
@@ -268,9 +251,9 @@ def outlink_spam_ratio(
         .withColumn("_b", F.lit(1))
     )
     per_link = lk.join(blocked_hosts, "_h", "left").select(
-        id_col, F.coalesce("_b", F.lit(0)).alias("_b")
+        "doc_id", F.coalesce("_b", F.lit(0)).alias("_b")
     )
-    return per_link.groupBy(id_col).agg(
+    return per_link.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_outlinks"),
         F.sum("_b").cast("long").alias("n_blocked"),
         F.expr("sum(_b) * 1000000L div count(*)").alias("blocked_ppm"),

@@ -160,8 +160,7 @@ def _grams(df: DataFrame, id_col: str, text_col: str, out_id: str,
 
 
 def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                        id_col: str = "doc_id",
-                        text_col: str = "tokens_str", n: int = 13,
+                        n: int = 13,
                         expected_bench_grams: int | None = None,
                         fpp: float = 0.01) -> DataFrame:
     """``decontaminate()`` with a Bloom pre-filter on the corpus side.
@@ -179,7 +178,7 @@ def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     # verify join) — persist it so the gram explode runs once; it is
     # the SMALL side by contract, so caching it is cheap at any scale
     bg = (
-        _grams(benchmark, id_col, text_col, "benchmark_id", n)
+        _grams(benchmark, "doc_id", "tokens_str", "benchmark_id", n)
         .distinct()
         .persist()
     )
@@ -190,7 +189,7 @@ def bloom_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     mc = might_contain_udf(spark, bitmap, m_bits, k)
 
     cg = (
-        _grams(corpus, id_col, text_col, "corpus_id", n)
+        _grams(corpus, "doc_id", "tokens_str", "corpus_id", n)
         .filter(mc(F.col("gkey_h")))          # map-side, pre-shuffle
         .select("corpus_id", "gkey")
         .distinct()                            # shuffles survivors only
@@ -264,7 +263,6 @@ def bloom_shard_index(
 def bloom_shard_prune(
     index: DataFrame,
     probes: DataFrame,
-    key_col: str = "key",
     m_bits: int = 640,
     k: int = 7,
 ) -> DataFrame:
@@ -282,9 +280,9 @@ def bloom_shard_prune(
     explicit, mergeable table.
     """
     pr = probes.select(
-        F.col(key_col).alias("key"),
+        F.col("key"),
         F.explode(
-            F.array(*_md5_probe_cols(F.col(key_col), m_bits, k))
+            F.array(*_md5_probe_cols(F.col("key"), m_bits, k))
         ).alias("pos"),
     ).select(
         "key",

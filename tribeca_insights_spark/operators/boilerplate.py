@@ -124,7 +124,7 @@ def boilerplate_stats(
     )
 
 
-def exploded_blocks(docs: DataFrame, url_col: str = "url") -> DataFrame:
+def exploded_blocks(docs: DataFrame) -> DataFrame:
     """(url, idx, tag, text, n_words, n_link_words, is_heading) — one row
     per block, for corpus-level block analysis (e.g. boilerplate profile by
     tag). Widens rows; downstream aggs partial-combine like corpus TF.
@@ -135,7 +135,7 @@ def exploded_blocks(docs: DataFrame, url_col: str = "url") -> DataFrame:
     return (
         with_blocks(docs)
         .select(
-            F.col(url_col).alias("url"),
+            F.col("url"),
             F.explode_outer("blocks").alias("b"),
         )
         .filter(F.col("b").isNotNull())
@@ -234,8 +234,6 @@ def content_spans(
 
 def template_blocks(
     docs: DataFrame,
-    host_col: str = "host",
-    page_col: str = "url",
     min_frac_micros: int = 500_000,
 ) -> DataFrame:
     """SITE-LEVEL template detection: blocks whose text recurs on at
@@ -260,15 +258,15 @@ def template_blocks(
     b = (
         with_blocks(docs)
         .select(
-            F.col(host_col).alias("host"),
-            F.col(page_col).alias("_page"),
+            F.col("host"),
+            F.col("url").alias("_page"),
             F.explode_outer("blocks").alias("b"),
         )
         .filter(F.col("b").isNotNull())
         .select("host", "_page", F.col("b.text").alias("block_text"))
         .distinct()
     )
-    n_pages = docs.groupBy(F.col(host_col).alias("host")).agg(
+    n_pages = docs.groupBy(F.col("host")).agg(
         F.count("*").alias("n_pages")
     )
     cnt = b.groupBy("host", "block_text").agg(
@@ -296,8 +294,6 @@ def template_blocks(
 
 def main_content_site_aware(
     docs: DataFrame,
-    host_col: str = "host",
-    page_col: str = "url",
     min_words: int = 3,
     min_frac_micros: int = 500_000,
     min_template_pages: int = 2,
@@ -327,7 +323,7 @@ def main_content_site_aware(
     the dim from an existing ``exploded_blocks`` materialization.
     """
     tmpl = (
-        template_blocks(docs, host_col, page_col, min_frac_micros)
+        template_blocks(docs, min_frac_micros)
         .filter(F.col("n_pages_with_block") >= min_template_pages)
         .groupBy("host")
         .agg(F.collect_list("block_text").alias("_tmpl"))
@@ -335,7 +331,7 @@ def main_content_site_aware(
     )
     d = with_blocks(docs).join(
         F.broadcast(tmpl),
-        F.col(host_col) == F.col("_tmpl_host"),
+        F.col("host") == F.col("_tmpl_host"),
         "left",
     )
 
@@ -412,7 +408,7 @@ def layout_fingerprint(docs: DataFrame) -> DataFrame:
     )
 
 
-def layout_clusters(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def layout_clusters(docs: DataFrame) -> DataFrame:
     """Layout-cluster report: one row per distinct DOM skeleton —
     ``(layout_hash, n_pages, n_tags, min_id)``. The corpus-curation
     view: template farms surface as huge clusters, hand-written pages
@@ -429,13 +425,11 @@ def layout_clusters(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return fp.groupBy("layout_hash").agg(
         F.count("*").cast("long").alias("n_pages"),
         F.min("n_tags").cast("int").alias("n_tags"),
-        F.min(id_col).cast("long").alias("min_id"),
+        F.min("doc_id").cast("long").alias("min_id"),
     )
 
 
-def extraction_eval(extracted: DataFrame, gold: DataFrame,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def extraction_eval(extracted: DataFrame, gold: DataFrame) -> DataFrame:
     """Token-level extraction-quality eval: compare an extractor's
     output text against gold main content per document, CleanEval-style
     (Baroni et al. 2008 score the token bag overlap; boilerpipe's eval
@@ -462,13 +456,13 @@ def extraction_eval(extracted: DataFrame, gold: DataFrame,
 
     def _counts(df: DataFrame, total_name: str, cnt_name: str):
         tok = df.select(
-            F.col(id_col),
-            F.explode(_words(F.col(text_col))).alias("_w"),
+            F.col("doc_id"),
+            F.explode(_words(F.col("text"))).alias("_w"),
         )
-        per = tok.groupBy(id_col, "_w").agg(
+        per = tok.groupBy("doc_id", "_w").agg(
             F.count("*").alias(cnt_name)
         )
-        tot = per.groupBy(id_col).agg(
+        tot = per.groupBy("doc_id").agg(
             F.sum(cnt_name).cast("bigint").alias(total_name)
         )
         return per, tot
@@ -477,15 +471,15 @@ def extraction_eval(extracted: DataFrame, gold: DataFrame,
     g_per, g_tot = _counts(gold, "n_gold", "_cg")
 
     inter = (
-        e_per.join(g_per, [id_col, "_w"])
-        .groupBy(id_col)
+        e_per.join(g_per, ["doc_id", "_w"])
+        .groupBy("doc_id")
         .agg(F.sum(F.least("_ce", "_cg")).cast("bigint").alias("n_inter"))
     )
     base = (
-        e_tot.join(g_tot, id_col, "full_outer")
-        .join(inter, id_col, "left")
+        e_tot.join(g_tot, "doc_id", "full_outer")
+        .join(inter, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_ext", F.lit(0)).alias("n_ext"),
             F.coalesce("n_gold", F.lit(0)).alias("n_gold"),
             F.coalesce("n_inter", F.lit(0)).alias("n_inter"),
@@ -494,7 +488,7 @@ def extraction_eval(extracted: DataFrame, gold: DataFrame,
     i, e, g = F.col("n_inter"), F.col("n_ext"), F.col("n_gold")
     zero = F.lit(0).cast("bigint")
     return base.select(
-        id_col, "n_ext", "n_gold", "n_inter",
+        "doc_id", "n_ext", "n_gold", "n_inter",
         F.when(e > 0, F.floor(F.lit(1e6) * i / e)).otherwise(zero)
         .alias("p_micros"),
         F.when(g > 0, F.floor(F.lit(1e6) * i / g)).otherwise(zero)

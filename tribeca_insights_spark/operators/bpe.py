@@ -27,12 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def bpe_pair_counts(
-    docs: DataFrame,
-    topk: int = 30,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame, topk: int = 30) -> DataFrame:
     """(pair, pair_count, n_words): top-``topk`` adjacent character
     pairs across the corpus, weighted by word occurrence count.
 
@@ -42,7 +37,7 @@ def bpe_pair_counts(
     the number of distinct vocabulary words containing the pair.
     Ties at the k boundary break on pair ascending.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
+    toks = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
     # corpus-sized shuffle #1 and only: word frequencies (|V|-row output)
     vocab = (
         docs.select(F.explode(toks).alias("word"))
@@ -78,12 +73,7 @@ _SL = "\x1f"   # symbol start
 _SR = "\x1e"   # symbol end
 
 
-def bpe_train_merges(
-    docs: DataFrame,
-    n_merges: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_train_merges(docs: DataFrame, n_merges: int = 3) -> DataFrame:
     """The full BPE training LOOP for the first ``n_merges`` merges:
     (step, left, right, pair_count) — the merge table a tokenizer
     trainer emits, learned greedily (argmax pair count, ties on
@@ -115,7 +105,7 @@ def bpe_train_merges(
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    toks = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
+    toks = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
     vocab = (
         docs.select(F.explode(toks).alias("word"))
         .filter(~F.col("word").contains(_SL) & ~F.col("word").contains(_SR))
@@ -176,12 +166,7 @@ def bpe_train_merges(
     return out
 
 
-def bpe_encode(
-    docs: DataFrame,
-    merges,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, merges) -> DataFrame:
     """ENCODE every document with a fixed, ordered BPE merge list —
     tokenizer APPLICATION, the counterpart of :func:`bpe_train_merges`
     (train once, encode the corpus; this is the corpus-sized half).
@@ -213,7 +198,7 @@ def bpe_encode(
     outs = ["".join(p) for p in merges]
     if len(set(outs)) != len(outs):
         raise ValueError("merge outputs must be distinct symbols")
-    toks = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
+    toks = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
 
     def enc(w):
         s = F.regexp_replace(w, "(.)", f"{_SL}$1{_SR}")
@@ -235,16 +220,13 @@ def bpe_encode(
         )
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         symbols.alias("symbols"),
         F.size(symbols).cast("int").alias("n_bpe_tokens"),
     )
 
 
-def bpe_fertility(docs: DataFrame, merges,
-                  group_col: str = "lang",
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def bpe_fertility(docs: DataFrame, merges) -> DataFrame:
     """Per-group tokenizer fertility report over :func:`bpe_encode`:
     (group, n_words, n_bpe_tokens, n_word_chars, fertility_micros,
     chars_per_token_micros) — tokens-per-word and chars-per-token, THE
@@ -259,27 +241,27 @@ def bpe_fertility(docs: DataFrame, merges,
     the id-keyed join decorates it with the group + word stats from
     the same scan; one group-sized rollup.
     """
-    enc = bpe_encode(docs, merges, id_col=id_col, text_col=text_col)
+    enc = bpe_encode(docs, merges)
     words = F.filter(
-        F.split(F.col(text_col), " "), lambda w: F.length(w) > 0
+        F.split(F.col("text"), " "), lambda w: F.length(w) > 0
     )
     base = docs.select(
-        F.col(id_col),
-        F.col(group_col).alias("_g"),
+        F.col("doc_id"),
+        F.col("lang").alias("_g"),
         F.size(words).cast("long").alias("_nw"),
         F.aggregate(
             words, F.lit(0).cast("long"),
             lambda acc, w: acc + F.length(w),
         ).alias("_nc"),
     )
-    j = base.join(enc.select(id_col, "n_bpe_tokens"), id_col)
+    j = base.join(enc.select("doc_id", "n_bpe_tokens"), "doc_id")
     agg = j.groupBy("_g").agg(
         F.sum("_nw").cast("bigint").alias("n_words"),
         F.sum("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
         F.sum("_nc").cast("bigint").alias("n_word_chars"),
     )
     return agg.select(
-        F.col("_g").alias(group_col),
+        F.col("_g").alias("lang"),
         "n_words", "n_bpe_tokens", "n_word_chars",
         F.expr("n_bpe_tokens * 1000000L div n_words")
         .alias("fertility_micros"),

@@ -41,8 +41,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk: int = 32,
     stride: int = 24,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, chunk_id, start_token, n_tokens, chunk_text): overlapping
     token-window chunks, whitespace tokenization.
@@ -65,7 +63,7 @@ def chunk_documents(
         / F.lit(stride)
     ).cast("long")
     base = docs.select(
-        F.col(id_col).alias("doc_id"), _tokens(text_col).alias("_t")
+        F.col("doc_id"), _tokens("text").alias("_t")
     ).select(
         "doc_id",
         "_t",
@@ -93,17 +91,11 @@ def chunk_documents(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    ctx: int = 256,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, ctx: int = 256) -> DataFrame:
     """(doc_id, group, n_tokens, stream_offset, start_seq, end_seq,
     n_seqs_spanned, offset_in_seq): GPT-style sequence packing.
 
-    Documents within a group are concatenated in ``id_col`` order into
+    Documents within a group are concatenated in ``doc_id`` order into
     one token stream; the stream is cut into consecutive ``ctx``-token
     training sequences.  Each document reports its byte-…er, token
     placement: ``stream_offset`` (tokens before it in the group's
@@ -119,15 +111,15 @@ def pack_sequences(
     """
     if ctx <= 0:
         raise ValueError("ctx must be positive")
-    n = F.size(_tokens(text_col)).cast("long")
+    n = F.size(_tokens("text")).cast("long")
     w = (
         Window.partitionBy("group")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(group_col).alias("group"),
+        F.col("doc_id"),
+        F.col("source").alias("group"),
         n.alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
     off = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
@@ -153,10 +145,7 @@ def pack_sequences(
     )
 
 
-def packing_efficiency(docs: DataFrame, ctx: int = 256,
-                       group_col: str = "source",
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def packing_efficiency(docs: DataFrame, ctx: int = 256) -> DataFrame:
     """Packing-efficiency report over :func:`pack_sequences`: per
     group, how well the ctx-token training sequences are filled and
     how many documents straddle a sequence boundary — the numbers that
@@ -172,8 +161,7 @@ def packing_efficiency(docs: DataFrame, ctx: int = 256,
     above pack_sequences' single group-keyed Exchange.
     """
     packed = pack_sequences(
-        docs, ctx=ctx, group_col=group_col, id_col=id_col,
-        text_col=text_col,
+        docs, ctx=ctx,
     )
     agg = packed.groupBy("group").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -183,7 +171,7 @@ def packing_efficiency(docs: DataFrame, ctx: int = 256,
         .cast("bigint").alias("n_boundary_docs"),
     )
     return agg.select(
-        F.col("group").alias(group_col),
+        F.col("group").alias("source"),
         "n_docs", "total_tokens", "n_seqs",
         F.expr(f"total_tokens * 1000000L div (n_seqs * {ctx}L)")
         .alias("fill_micros"),
@@ -227,13 +215,7 @@ def cdc_cuts_udf(gram: int = 4, mod: int = 64):
     return pandas_udf(_cuts, "array<long>")
 
 
-def cdc_chunks(
-    docs: DataFrame,
-    gram: int = 4,
-    mod: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunks(docs: DataFrame, gram: int = 4, mod: int = 64) -> DataFrame:
     """(doc_id, chunk_idx, start, chunk_len, chunk_md5): content-defined
     chunks — the dedup granularity that survives edits. Exact dedup
     hashes whole documents (one changed byte = a new hash); CDC chunk
@@ -250,9 +232,9 @@ def cdc_chunks(
     test SF where DuckDB replays the identical rule).
     """
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_t"),
-        cdc_cuts_udf(gram, mod)(F.col(text_col)).alias("_cuts"),
+        F.col("doc_id"),
+        F.col("text").alias("_t"),
+        cdc_cuts_udf(gram, mod)(F.col("text")).alias("_cuts"),
     ).filter(F.length("_t") > 0)
     # starts = [1] ++ cuts ; ends[i] = starts[i+1]-1, last = len
     starts = F.concat(F.array(F.lit(1).cast("long")), F.col("_cuts"))
@@ -292,8 +274,7 @@ def cdc_chunks(
     )
 
 
-def contrastive_triplets(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def contrastive_triplets(docs: DataFrame) -> DataFrame:
     """Deterministic contrastive-triplet mining for embedding-model
     training (the DPR/SimCSE data shape): per document, anchor = the
     first half of its tokens, positive = the second half (two views of
@@ -316,29 +297,29 @@ def contrastive_triplets(docs: DataFrame, id_col: str = "doc_id",
 
     n_row = docs.select(F.count("*").alias("_N"))
     toks = docs.select(
-        F.col(id_col), _words(F.col(text_col)).alias("_l")
+        F.col("doc_id"), _words(F.col("text")).alias("_l")
     ).filter(F.size("_l") >= 2)
     half = (F.size("_l") / 2).cast("int")
     halves = toks.select(
-        id_col,
+        "doc_id",
         F.array_join(F.slice("_l", 1, half), " ").alias("anchor"),
         F.array_join(
             F.slice("_l", half + 1, F.size("_l") - half), " "
         ).alias("positive"),
     )
     neg_src = halves.select(
-        F.col(id_col).alias("neg_id"), F.col("anchor").alias("negative")
+        F.col("doc_id").alias("neg_id"), F.col("anchor").alias("negative")
     )
     return (
         halves.crossJoin(F.broadcast(n_row))
         .select(
-            id_col, "anchor", "positive",
-            ((F.col(id_col)
+            "doc_id", "anchor", "positive",
+            ((F.col("doc_id")
               + F.floor(F.col("_N") / 2).cast("bigint"))
              % F.col("_N").cast("bigint")).alias("neg_id"),
         )
         .join(neg_src, "neg_id")
-        .select(id_col, "anchor", "positive", "neg_id", "negative")
+        .select("doc_id", "anchor", "positive", "neg_id", "negative")
     )
 
 
@@ -346,9 +327,6 @@ def stitch_chunks(
     chunks: DataFrame,
     chunk: int = 32,
     stride: int = 24,
-    id_col: str = "doc_id",
-    chunk_id_col: str = "chunk_id",
-    text_col: str = "chunk_text",
 ) -> DataFrame:
     """INVERSE of :func:`chunk_documents` — reassemble each document
     from its overlapping token-window chunks and VERIFY the overlaps:
@@ -370,13 +348,13 @@ def stitch_chunks(
     if stride <= 0 or chunk <= 0 or stride > chunk:
         raise ValueError("need 0 < stride <= chunk")
     overlap = chunk - stride
-    toks = F.filter(F.split(F.col(text_col), " "),
+    toks = F.filter(F.split(F.col("chunk_text"), " "),
                     lambda w: F.length(w) > 0)
     grouped = (
         chunks.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.struct(
-                F.col(chunk_id_col).alias("i"), toks.alias("t")
+                F.col("chunk_id").alias("i"), toks.alias("t")
             ).alias("_c"),
         )
         .groupBy("doc_id")

@@ -45,9 +45,7 @@ def bucket_weight_micros(tok, n_buckets: int = 1 << 20):
     return (_bucket(tok, n_buckets) * _KNUTH) % _SPAN - (_SPAN - 1) // 2
 
 
-def hashed_linear_score(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        n_buckets: int = 1 << 20) -> DataFrame:
+def hashed_linear_score(docs: DataFrame, n_buckets: int = 1 << 20) -> DataFrame:
     """Score every document with the hashed linear model.
 
     Tokenization matches the corpus tokenizer's keep-class
@@ -58,7 +56,7 @@ def hashed_linear_score(docs: DataFrame, id_col: str = "doc_id",
     """
     toks = F.filter(
         F.split(
-            F.lower(F.trim(F.regexp_replace(F.col(text_col),
+            F.lower(F.trim(F.regexp_replace(F.col("text"),
                                             "[^A-Za-zÀ-ÿ]+", " "))),
             " ", -1,
         ),
@@ -70,13 +68,13 @@ def hashed_linear_score(docs: DataFrame, id_col: str = "doc_id",
         lambda acc, w: acc + bucket_weight_micros(w, n_buckets),
     )
     out = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("n_tokens"),
         score.alias("score_micros"),
     )
     mean = F.col("score_micros") / 1e6 / F.col("n_tokens")
     return out.select(
-        id_col, "n_tokens", "score_micros",
+        "doc_id", "n_tokens", "score_micros",
         F.when(F.col("n_tokens") > 0, F.round(mean, 6)).alias("mean_weight"),
         F.when(
             F.col("n_tokens") > 0,
@@ -85,9 +83,7 @@ def hashed_linear_score(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def hashed_features(docs: DataFrame, label, n_buckets: int = 64,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def hashed_features(docs: DataFrame, label, n_buckets: int = 64) -> DataFrame:
     """(doc_id, y, bucket, x): hashed bag-of-words feature rows.
     ``label`` is a Column evaluating to +1/-1; it rides along from the
     projection so no label join ever touches the corpus. One
@@ -96,7 +92,7 @@ def hashed_features(docs: DataFrame, label, n_buckets: int = 64,
     rows or on K-row weight tables)."""
     toks = F.filter(
         F.split(
-            F.lower(F.trim(F.regexp_replace(F.col(text_col),
+            F.lower(F.trim(F.regexp_replace(F.col("text"),
                                             "[^A-Za-zÀ-ÿ]+", " "))),
             " ", -1,
         ),
@@ -104,7 +100,7 @@ def hashed_features(docs: DataFrame, label, n_buckets: int = 64,
     )
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             label.cast("long").alias("y"),
             F.explode(toks).alias("_tok"),
         )
@@ -117,9 +113,7 @@ def hashed_features(docs: DataFrame, label, n_buckets: int = 64,
 
 
 def train_hashed_classifier(docs: DataFrame, label,
-                            n_buckets: int = 64, rounds: int = 2,
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
+                            n_buckets: int = 64, rounds: int = 2) -> DataFrame:
     """(bucket, weight): full-batch perceptron over hashed token
     features — the TRAINING counterpart of :func:`hashed_linear_score`
     (which is the serving side). The production pattern this mirrors:
@@ -143,8 +137,7 @@ def train_hashed_classifier(docs: DataFrame, label,
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    feats = hashed_features(docs, label, n_buckets=n_buckets,
-                            id_col=id_col, text_col=text_col).persist()
+    feats = hashed_features(docs, label, n_buckets=n_buckets).persist()
     w = feats.select("bucket").distinct().select(
         "bucket", F.lit(0).cast("long").alias("w")
     )
@@ -301,7 +294,6 @@ def roc_points(
 
 
 def calibration_bins(docs: DataFrame, label,
-                     id_col: str = "doc_id", text_col: str = "text",
                      n_bins: int = 10,
                      n_buckets: int = 1 << 20) -> DataFrame:
     """Reliability diagram for the hashed linear classifier: fixed-width
@@ -327,10 +319,10 @@ def calibration_bins(docs: DataFrame, label,
     """
     width = 2_000_000 // n_bins
     scored = hashed_linear_score(
-        docs, id_col=id_col, text_col=text_col, n_buckets=n_buckets,
+        docs, n_buckets=n_buckets,
     )
-    labeled = docs.select(F.col(id_col), label.cast("long").alias("_y"))
-    j = scored.filter(F.col("n_tokens") > 0).join(labeled, id_col)
+    labeled = docs.select(F.col("doc_id"), label.cast("long").alias("_y"))
+    j = scored.filter(F.col("n_tokens") > 0).join(labeled, "doc_id")
     binned = j.select(
         "_y",
         F.expr(
@@ -360,10 +352,7 @@ def calibration_bins(docs: DataFrame, label,
     )
 
 
-def isotonic_calibration(bins: DataFrame, group_col: str = "grp",
-                         bin_col: str = "bin_idx",
-                         pos_col: str = "n_pos",
-                         tot_col: str = "n_tot") -> DataFrame:
+def isotonic_calibration(bins: DataFrame) -> DataFrame:
     """Isotonic (PAV) probability calibration over score bins — the
     nonparametric calibrator production quality-classifiers use when
     Platt's sigmoid is too rigid (Zadrozny & Elkan, KDD 2002): fit
@@ -389,9 +378,9 @@ def isotonic_calibration(bins: DataFrame, group_col: str = "grp",
     import pandas as pd
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(bin_col).reset_index(drop=True)
-        pos = [int(x) for x in pdf[pos_col]]
-        tot = [int(x) for x in pdf[tot_col]]
+        pdf = pdf.sort_values("bin_idx").reset_index(drop=True)
+        pos = [int(x) for x in pdf["n_pos"]]
+        tot = [int(x) for x in pdf["n_tot"]]
         n = len(pos)
         cp = [0] * (n + 1)
         ct = [0] * (n + 1)
@@ -413,21 +402,21 @@ def isotonic_calibration(bins: DataFrame, group_col: str = "grp",
             import math
             out.append(int(math.floor(1e6 * best)))
         return pd.DataFrame({
-            group_col: pdf[group_col],
-            bin_col: pdf[bin_col],
-            pos_col: pos,
-            tot_col: tot,
+            "grp": pdf["grp"],
+            "bin_idx": pdf["bin_idx"],
+            "n_pos": pos,
+            "n_tot": tot,
             "p_hat_micros": out,
         })
 
     schema = (
-        f"{group_col} string, {bin_col} bigint, {pos_col} bigint, "
-        f"{tot_col} bigint, p_hat_micros bigint"
+        "grp string, bin_idx bigint, n_pos bigint, "
+        "n_tot bigint, p_hat_micros bigint"
     )
     sel = bins.select(
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(bin_col).cast("bigint").alias(bin_col),
-        F.col(pos_col).cast("bigint").alias(pos_col),
-        F.col(tot_col).cast("bigint").alias(tot_col),
+        F.col("grp").cast("string").alias("grp"),
+        F.col("bin_idx").cast("bigint").alias("bin_idx"),
+        F.col("n_pos").cast("bigint").alias("n_pos"),
+        F.col("n_tot").cast("bigint").alias("n_tot"),
     )
-    return sel.groupBy(sel[group_col]).applyInPandas(_fit, schema)
+    return sel.groupBy(sel["grp"]).applyInPandas(_fit, schema)

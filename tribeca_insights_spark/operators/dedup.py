@@ -24,27 +24,25 @@ from pyspark.sql import DataFrame, functions as F
 HEX = "0123456789abcdef"
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup by content hash: (content_hash, keeper_id, n_dups).
     Keeper = min id per group (deterministic)."""
     return (
-        df.select(F.col(id_col), F.sha2(F.col(text_col).cast("string"), 256).alias("content_hash"))
+        df.select(F.col("doc_id"), F.sha2(F.col("text").cast("string"), 256).alias("content_hash"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             (F.count("*") - 1).alias("n_dups"),
         )
     )
 
 
-def char_shingles(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "tokens_str", k: int = 12) -> DataFrame:
+def char_shingles(df: DataFrame, text_col: str = "tokens_str", k: int = 12) -> DataFrame:
     """Distinct character k-grams per doc over the normalized token string
     (standard web-dedup shingling). Docs shorter than k yield one shingle
     (the whole string); empty strings yield none."""
     pos = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(text_col).alias("_s"),
         F.explode(
             F.sequence(
@@ -54,7 +52,7 @@ def char_shingles(df: DataFrame, id_col: str = "doc_id",
     )
     return (
         pos.filter(F.length("_s") > 0)
-        .select(F.col(id_col), F.substring(F.col("_s"), F.col("_i"), k).alias("gram"))
+        .select(F.col("doc_id"), F.substring(F.col("_s"), F.col("_i"), k).alias("gram"))
         .distinct()
     )
 
@@ -129,24 +127,23 @@ def lsh_candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(shingles: DataFrame, id_col: str = "doc_id",
-                        min_jaccard: float = 0.0) -> DataFrame:
+def ngram_jaccard_pairs(shingles: DataFrame, min_jaccard: float = 0.0) -> DataFrame:
     """Exact Jaccard over shingle sets via shared-shingle equi-join:
     (a_id, b_id, jaccard). |A∪B| = |A|+|B|−|A∩B|. Rounded to 6 decimals for
     cross-engine determinism. Quadratic in bucket co-occurrence — use on LSH
     candidates or bounded samples; at corpus scale run after
     :func:`lsh_candidate_pairs`."""
-    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = shingles.select(F.col(id_col).alias("a_id"), "gram")
-    b = shingles.select(F.col(id_col).alias("b_id"), "gram")
+    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    a = shingles.select(F.col("doc_id").alias("a_id"), "gram")
+    b = shingles.select(F.col("doc_id").alias("b_id"), "gram")
     inter = (
         a.join(b, "gram")
         .filter(F.col("a_id") < F.col("b_id"))
         .groupBy("a_id", "b_id")
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("a_id"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("b_id"), F.col("sz").alias("sz_b"))
+    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"))
     return (
         inter.join(sa, "a_id")
         .join(sb, "b_id")
@@ -163,24 +160,23 @@ def ngram_jaccard_pairs(shingles: DataFrame, id_col: str = "doc_id",
     )
 
 
-def simhash32(token_counts: DataFrame, id_col: str = "doc_id",
-              word_col: str = "word", cnt_col: str = "cnt") -> DataFrame:
+def simhash32(token_counts: DataFrame) -> DataFrame:
     """32-bit SimHash over weighted tokens: (id, simhash).
 
     bit_j = sign of Σ_tokens cnt·(2·bit_j(md5(token))−1); value = Σ 2^j·bit_j.
     Hex-digit arithmetic only — byte-identical across engines."""
     h = token_counts.select(
-        F.col(id_col), F.col(cnt_col),
-        F.substring(F.md5(F.encode(F.col(word_col), "UTF-8")), 1, 8).alias("h8"),
+        F.col("doc_id"), F.col("cnt"),
+        F.substring(F.md5(F.encode(F.col("word"), "UTF-8")), 1, 8).alias("h8"),
     )
     bits = h.select(
-        F.col(id_col), F.col(cnt_col), "h8",
+        F.col("doc_id"), F.col("cnt"), "h8",
         F.explode(F.sequence(F.lit(0), F.lit(31))).alias("j"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         "j",
         (
-            F.col(cnt_col)
+            F.col("cnt")
             * (
                 2 * (
                     F.floor(
@@ -194,9 +190,9 @@ def simhash32(token_counts: DataFrame, id_col: str = "doc_id",
         ).alias("contrib"),
     )
     return (
-        bits.groupBy(id_col, "j")
+        bits.groupBy("doc_id", "j")
         .agg(F.sum("contrib").alias("s"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(
                 F.when(F.col("s") > 0, F.pow(F.lit(2.0), F.col("j"))).otherwise(0.0)
@@ -205,22 +201,21 @@ def simhash32(token_counts: DataFrame, id_col: str = "doc_id",
     )
 
 
-def simhash_near_pairs(sim: DataFrame, id_col: str = "doc_id",
-                       max_hamming: int = 3, band_bits: int = 8) -> DataFrame:
+def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3, band_bits: int = 8) -> DataFrame:
     """Hamming-near pairs via banded equality (pigeonhole: distance ≤ 3 over
     4 bands of 8 bits ⇒ at least one band equal), verified with
     bit_count(xor): (a_id, b_id, hamming)."""
     n_bands = 32 // band_bits
     bands = sim.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "simhash",
         F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
     ).withColumn(
         "band_val",
         F.expr(f"cast(simhash / cast(pow(2, band * {band_bits}) as bigint) as bigint) % {2 ** band_bits}"),
     )
-    a = bands.select(F.col(id_col).alias("a_id"), F.col("simhash").alias("sh_a"), "band", "band_val")
-    b = bands.select(F.col(id_col).alias("b_id"), F.col("simhash").alias("sh_b"), "band", "band_val")
+    a = bands.select(F.col("doc_id").alias("a_id"), F.col("simhash").alias("sh_a"), "band", "band_val")
+    b = bands.select(F.col("doc_id").alias("b_id"), F.col("simhash").alias("sh_b"), "band", "band_val")
     return (
         a.join(b, ["band", "band_val"])
         .filter(F.col("a_id") < F.col("b_id"))
@@ -233,8 +228,7 @@ def simhash_near_pairs(sim: DataFrame, id_col: str = "doc_id",
     )
 
 
-def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", sep: str = "\n") -> DataFrame:
+def paragraph_dedup(df: DataFrame, sep: str = "\n") -> DataFrame:
     """C4-style paragraph-level dedup: (id, text) → (id, kept_text,
     n_paras, n_dropped) where every paragraph that occurs in MORE than one
     document corpus-wide is dropped from all of them (C4 keeps three-
@@ -250,24 +244,24 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
     docs — and none at all when AQE broadcasts that dim); only hashes and
     ints shuffle otherwise. No broadcast hint anywhere: at web scale both
     dims can be huge and AQE decides."""
-    parts = F.split(F.col(text_col), sep)
+    parts = F.split(F.col("text"), sep)
     slim = df.select(
-        F.col(id_col), F.posexplode(parts)
+        F.col("doc_id"), F.posexplode(parts)
     ).select(
-        id_col, "pos",
+        "doc_id", "pos",
         F.md5(F.col("col")).alias("pkey"),
         F.length(F.trim("col")).alias("_len"),
     ).filter(F.col("_len") > 0)
 
     dup_keys = (
         slim.groupBy("pkey")
-        .agg(F.countDistinct(id_col).alias("_nd"))
+        .agg(F.countDistinct("doc_id").alias("_nd"))
         .filter(F.col("_nd") > 1)
         .select("pkey")
     )
     dropped = (
         slim.join(dup_keys, "pkey")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_list("pos").alias("_dpos"))
     )
     nonempty = lambda p: F.length(F.trim(p)) > 0  # noqa: E731
@@ -275,9 +269,9 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
         F.array_contains(F.col("_dpos"), i), F.lit(False)
     )
     return (
-        df.join(dropped, id_col, "left")
+        df.join(dropped, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.concat_ws(
                 sep,
                 F.filter(
@@ -298,7 +292,6 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
 
 
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "tokens_str",
                   n: int = 13) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing any word
     ``n``-gram with a benchmark/eval set (the standard 13-gram rule from
@@ -313,8 +306,8 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
         # docs shorter than n tokens have no n-grams; filter BEFORE the
         # sequence explode (sequence(1, 0) would DESCEND in Spark)
         base = df.select(
-            F.col(id_col).alias(out_id),
-            F.split(F.col(text_col), " ").alias("_t"),
+            F.col("doc_id").alias(out_id),
+            F.split(F.col("tokens_str"), " ").alias("_t"),
         ).filter(F.size("_t") >= n)
         return base.select(
             out_id,
@@ -338,8 +331,7 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     )
 
 
-def connected_components(pairs: DataFrame, a_col: str = "a_id",
-                         b_col: str = "b_id", max_iter: int = 50) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """(node, rep): connected components of an undirected pair list —
     the step that turns near-dup PAIRS into duplicate CLUSTERS (keep the
     min-id representative, drop the rest).
@@ -380,9 +372,9 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id",
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     spark = pairs.sparkSession
     edges = (
-        pairs.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
+        pairs.select(F.col("a_id").alias("x"), F.col("b_id").alias("y"))
         .unionByName(
-            pairs.select(F.col(b_col).alias("x"), F.col(a_col).alias("y"))
+            pairs.select(F.col("b_id").alias("x"), F.col("a_id").alias("y"))
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -454,8 +446,7 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id",
     return labels
 
 
-def dedup_clusters(pairs: DataFrame, all_ids: DataFrame,
-                   id_col: str = "doc_id") -> DataFrame:
+def dedup_clusters(pairs: DataFrame, all_ids: DataFrame) -> DataFrame:
     """(id, rep, is_keeper): every document labeled with its duplicate-
     cluster representative (min id; singletons keep themselves). Join this
     back to the corpus and filter ``is_keeper`` to deduplicate.
@@ -465,21 +456,20 @@ def dedup_clusters(pairs: DataFrame, all_ids: DataFrame,
     it when done."""
     cc = connected_components(pairs)
     out = (
-        all_ids.select(F.col(id_col))
-        .join(cc, all_ids[id_col] == cc.node, "left")
+        all_ids.select(F.col("doc_id"))
+        .join(cc, all_ids["doc_id"] == cc.node, "left")
         .select(
-            F.col(id_col),
-            F.coalesce("rep", F.col(id_col)).alias("rep"),
+            F.col("doc_id"),
+            F.coalesce("rep", F.col("doc_id")).alias("rep"),
         )
-        .withColumn("is_keeper", F.col(id_col) == F.col("rep"))
+        .withColumn("is_keeper", F.col("doc_id") == F.col("rep"))
         .cache()
     )
     out.count()  # materialize so cc's checkpoint blocks can be GC-freed
     return out
 
 
-def survivor_weights(clusters: DataFrame, id_col: str = "doc_id",
-                     rep_col: str = "rep") -> DataFrame:
+def survivor_weights(clusters: DataFrame) -> DataFrame:
     """Deduplicate-but-DOWNWEIGHT (the SlimPajama/loss-weighting
     alternative to hard removal): from cluster labels ``(id, rep)`` emit
     one row per surviving representative — ``(doc_id, multiplicity,
@@ -495,7 +485,7 @@ def survivor_weights(clusters: DataFrame, id_col: str = "doc_id",
     cluster-count-sized; exact integer weights (q129 discipline), no
     windows, no joins."""
     return (
-        clusters.groupBy(F.col(rep_col).alias(id_col))
+        clusters.groupBy(F.col("rep").alias("doc_id"))
         .agg(F.count("*").cast("long").alias("multiplicity"))
         .withColumn(
             "weight_micros",
@@ -504,12 +494,11 @@ def survivor_weights(clusters: DataFrame, id_col: str = "doc_id",
     )
 
 
-def keep_best(df: DataFrame, cluster_col: str, id_col: str = "doc_id",
-              score_col: str | None = None,
+def keep_best(df: DataFrame, cluster_col: str, score_col: str | None = None,
               carry_cols: tuple = ()) -> DataFrame:
     """Duplicate-cluster retention: pick ONE survivor per cluster —
     highest ``score_col`` (NULL scores lose), ties broken by lowest
-    ``id_col`` — plus the cluster size. This is the "which copy
+    ``doc_id`` — plus the cluster size. This is the "which copy
     survives" stage every web dedup pipeline runs after clustering (the
     reference stops at raw ``drop_duplicates``, storage.py:80;
     quality-aware retention is the beyond-reference extension).
@@ -537,7 +526,7 @@ def keep_best(df: DataFrame, cluster_col: str, id_col: str = "doc_id",
     """
     score = F.col(score_col) if score_col else F.lit(0)
     slim = df.select(
-        F.col(cluster_col), F.col(id_col), score.alias("_kb_score")
+        F.col(cluster_col), F.col("doc_id"), score.alias("_kb_score")
     )
     per_cluster = slim.groupBy(cluster_col).agg(
         F.max("_kb_score").alias("_kb_max"),
@@ -546,10 +535,10 @@ def keep_best(df: DataFrame, cluster_col: str, id_col: str = "doc_id",
     tied = slim.join(per_cluster, cluster_col).filter(
         F.col("_kb_score").eqNullSafe(F.col("_kb_max"))
     )
-    keeper = f"keeper_{id_col}"
+    keeper = "keeper_doc_id"
     out = (
         tied.groupBy(cluster_col, "_kb_max", "cluster_size")
-        .agg(F.min(id_col).alias(keeper))
+        .agg(F.min("doc_id").alias(keeper))
         .select(
             cluster_col, keeper,
             F.col("_kb_max").alias(score_col or "score"), "cluster_size",
@@ -557,7 +546,7 @@ def keep_best(df: DataFrame, cluster_col: str, id_col: str = "doc_id",
     )
     if carry_cols:
         payload = df.select(
-            F.col(cluster_col), F.col(id_col).alias(keeper), *carry_cols
+            F.col(cluster_col), F.col("doc_id").alias(keeper), *carry_cols
         )
         out = out.join(payload, [cluster_col, keeper])
     return out
@@ -565,8 +554,6 @@ def keep_best(df: DataFrame, cluster_col: str, id_col: str = "doc_id",
 
 def dedup_exact_substring(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     hash_grams: bool = False,
 ) -> DataFrame:
@@ -605,8 +592,8 @@ def dedup_exact_substring(
     # drop empty tokens so an empty/whitespace-only document tokenizes
     # to [] (n_tokens 0, not 1 — ADVICE r3) and runs of spaces collapse
     # consistently with the single-space re-assembly below
-    tk = F.array_remove(F.split(F.trim(F.col(text_col)), " "), "")
-    base = docs.select(F.col(id_col).alias("doc_id"), tk.alias("tk"))
+    tk = F.array_remove(F.split(F.trim(F.col("text")), " "), "")
+    base = docs.select(F.col("doc_id"), tk.alias("tk"))
     gram_arr = F.expr(
         f"transform(slice(sequence(1, greatest(size(tk) - {k} + 1, 1)),"
         f" 1, greatest(size(tk) - {k} + 1, 0)),"
@@ -673,8 +660,7 @@ def dedup_exact_substring(
     )
 
 
-def dedup_against_index(new_bands: DataFrame, index: DataFrame,
-                        id_col: str = "doc_id") -> DataFrame:
+def dedup_against_index(new_bands: DataFrame, index: DataFrame) -> DataFrame:
     """INCREMENTAL (cross-run) dedup — the production shape
     RefinedWeb/FineWeb-style pipelines actually run: run N persists its
     MinHash band-bucket table (``lsh_bands`` output) as the corpus
@@ -705,42 +691,39 @@ def dedup_against_index(new_bands: DataFrame, index: DataFrame,
     (band, band_key) at write time the big shuffle disappears entirely.
     """
     i = index.select(
-        F.col(id_col).alias("_old_id"), "band", "band_key"
+        F.col("doc_id").alias("_old_id"), "band", "band_key"
     )
-    n = new_bands.select(F.col(id_col), "band", "band_key")
+    n = new_bands.select(F.col("doc_id"), "band", "band_key")
     hits = (
         n.join(i, ["band", "band_key"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.min("_old_id").alias("matched_old_id"))
     )
     return (
-        n.select(id_col)
+        n.select("doc_id")
         .distinct()
-        .join(hits, id_col, "left")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("matched_old_id").isNotNull().alias("is_dup"),
             "matched_old_id",
         )
     )
 
 
-def index_increment(new_bands: DataFrame, verdicts: DataFrame,
-                    id_col: str = "doc_id") -> DataFrame:
+def index_increment(new_bands: DataFrame, verdicts: DataFrame) -> DataFrame:
     """The rows run N+1 appends to the persisted band index: the bands of
     its KEPT documents only (dropped docs are represented by the prior
     doc they matched). ``verdicts`` is :func:`dedup_against_index`
     output. Join is id-keyed with the batch-sized verdict side —
     broadcast-eligible; AQE picks it."""
-    kept = verdicts.filter(~F.col("is_dup")).select(id_col)
-    return new_bands.join(kept, id_col).select(
-        id_col, "band", "band_key"
+    kept = verdicts.filter(~F.col("is_dup")).select("doc_id")
+    return new_bands.join(kept, "doc_id").select(
+        "doc_id", "band", "band_key"
     )
 
 
-def dhash_near_pairs(hashes: DataFrame, id_col: str = "media_id",
-                     hash_col: str = "dhash",
-                     max_hamming: int = 2) -> DataFrame:
+def dhash_near_pairs(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
     """Near-duplicate IMAGE pairs from 64-bit perceptual dHashes
     (``multimodal.image_dhash`` output — 16 lowercase hex chars):
     (a_id, b_id, hamming) for every pair within ``max_hamming`` bits.
@@ -767,14 +750,14 @@ def dhash_near_pairs(hashes: DataFrame, id_col: str = "media_id",
         raise ValueError("max_hamming must be <= 15 for hex banding")
     lens = [16 // nb + (1 if i < 16 % nb else 0) for i in range(nb)]
     starts = [1 + sum(lens[:i]) for i in range(nb)]
-    h = hashes.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col),
-        F.col(hash_col).alias("_dh"),
-        F.conv(F.substring(hash_col, 1, 8), 16, 10).cast("long").alias("_hi"),
-        F.conv(F.substring(hash_col, 9, 8), 16, 10).cast("long").alias("_lo"),
+    h = hashes.filter(F.col("dhash").isNotNull()).select(
+        F.col("media_id"),
+        F.col("dhash").alias("_dh"),
+        F.conv(F.substring("dhash", 1, 8), 16, 10).cast("long").alias("_hi"),
+        F.conv(F.substring("dhash", 9, 8), 16, 10).cast("long").alias("_lo"),
     )
     bands = h.select(
-        id_col, "_hi", "_lo",
+        "media_id", "_hi", "_lo",
         F.posexplode(
             F.array(
                 *[
@@ -785,11 +768,11 @@ def dhash_near_pairs(hashes: DataFrame, id_col: str = "media_id",
         ).alias("band", "band_sub"),
     )
     a = bands.select(
-        F.col(id_col).alias("a_id"), F.col("_hi").alias("_hi_a"),
+        F.col("media_id").alias("a_id"), F.col("_hi").alias("_hi_a"),
         F.col("_lo").alias("_lo_a"), "band", "band_sub",
     )
     b = bands.select(
-        F.col(id_col).alias("b_id"), F.col("_hi").alias("_hi_b"),
+        F.col("media_id").alias("b_id"), F.col("_hi").alias("_hi_b"),
         F.col("_lo").alias("_lo_b"), "band", "band_sub",
     )
     return (
@@ -810,7 +793,6 @@ def dhash_near_pairs(hashes: DataFrame, id_col: str = "media_id",
 def prefix_jaccard_join(
     tokens: DataFrame,
     threshold_micros: int = 500_000,
-    id_col: str = "doc_id",
     token_col: str = "token",
     materialize: bool = False,
 ) -> DataFrame:
@@ -844,7 +826,7 @@ def prefix_jaccard_join(
     """
     if not 0 < threshold_micros <= 1_000_000:
         raise ValueError("threshold_micros must be in (0, 1e6]")
-    t = tokens.select(F.col(id_col).alias("_id"),
+    t = tokens.select(F.col("doc_id").alias("_id"),
                       F.col(token_col).alias("token")).distinct()
     if materialize:
         # the distinct token table feeds FIVE consumers (sizes, df,
@@ -939,8 +921,6 @@ def banded_jaccard_pairs(
     threshold_micros: int = 500_000,
     n_hashes: int = 12,
     rows_per_band: int = 3,
-    id_col: str = "doc_id",
-    token_col: str = "gram",
 ) -> DataFrame:
     """MinHash-LSH generator + EXACT Jaccard verification confined to the
     banded candidates — the corpus-scale composition of
@@ -965,8 +945,8 @@ def banded_jaccard_pairs(
     Scale shape: candidate generation is band-bucket equi-joins (never a
     product); verification drives FROM the candidate list so the shared-
     token join is candidate-bounded; all arithmetic exact BIGINT."""
-    sh = tokens.select(F.col(id_col).alias("_id"),
-                       F.col(token_col).alias("gram")).distinct()
+    sh = tokens.select(F.col("doc_id").alias("_id"),
+                       F.col("gram")).distinct()
     bands = lsh_bands(
         minhash_signatures(sh, id_col="_id", n_hashes=n_hashes),
         id_col="_id", rows_per_band=rows_per_band,
@@ -1007,8 +987,6 @@ def edit_distance_verify(
     pairs: DataFrame,
     docs: DataFrame,
     min_sim_micros: int = 500_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """EXACT Levenshtein verification of candidate near-dup pairs:
     input (a_id, b_id, …) candidates from any generator (SimHash
@@ -1028,10 +1006,10 @@ def edit_distance_verify(
     candidate rows (doc-keyed, AQE-broadcast when the candidate set is
     small); everything else is per-row codegen.
     """
-    ta = docs.select(F.col(id_col).alias("a_id"),
-                     F.col(text_col).alias("_ta"))
-    tb = docs.select(F.col(id_col).alias("b_id"),
-                     F.col(text_col).alias("_tb"))
+    ta = docs.select(F.col("doc_id").alias("a_id"),
+                     F.col("text").alias("_ta"))
+    tb = docs.select(F.col("doc_id").alias("b_id"),
+                     F.col("text").alias("_tb"))
     mx = F.greatest(F.length("_ta"), F.length("_tb"))
     # two cost gates before the O(n·m) distance:
     # 1. length gate — lev >= |len_a − len_b|, so a pair whose length
@@ -1069,12 +1047,7 @@ def edit_distance_verify(
     )
 
 
-def gram_novelty(
-    docs: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def gram_novelty(docs: DataFrame, n: int = 13) -> DataFrame:
     """Per-document n-gram NOVELTY profile: (id, n_grams, n_shared,
     novelty_micros) where ``n_shared`` counts the doc's distinct word
     ``n``-grams that also occur in at least one OTHER document and
@@ -1095,21 +1068,21 @@ def gram_novelty(
     doc". Docs with fewer than ``n`` tokens emit no row.
     """
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.filter(
-            F.split(F.col(text_col), " "), lambda w: F.length(w) > 0
+            F.split(F.col("text"), " "), lambda w: F.length(w) > 0
         ).alias("_t"),
     ).filter(F.size("_t") >= n)
     g = (
         base.select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.sequence(F.lit(1), F.size("_t") - (n - 1))
             ).alias("_i"),
             "_t",
         )
         .select(
-            id_col,
+            "doc_id",
             F.md5(
                 F.concat_ws(" ", F.slice(F.col("_t"), F.col("_i"), n))
             ).alias("gkey"),
@@ -1117,7 +1090,7 @@ def gram_novelty(
         .distinct()
     )
     df_tab = g.groupBy("gkey").agg(F.count("*").alias("_df"))
-    per = g.join(df_tab, "gkey").groupBy(id_col).agg(
+    per = g.join(df_tab, "gkey").groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_grams"),
         F.sum(F.when(F.col("_df") >= 2, 1).otherwise(0))
         .cast("bigint").alias("n_shared"),
@@ -1190,8 +1163,6 @@ def gram_accumulation_curve(
     docs: DataFrame,
     n: int = 13,
     n_buckets: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Novel-text accumulation curve: partition the corpus into
     ``n_buckets`` doc-id ranges and count how many word ``n``-grams
@@ -1212,9 +1183,9 @@ def gram_accumulation_curve(
     even over the n_buckets rows.
     """
     base = docs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.filter(
-            F.split(F.col(text_col), " "), lambda w: F.length(w) > 0
+            F.split(F.col("text"), " "), lambda w: F.length(w) > 0
         ).alias("_t"),
     ).filter(F.size("_t") >= n)
     g = (
@@ -1267,7 +1238,6 @@ def gram_accumulation_curve(
 def containment_join(
     tokens: DataFrame,
     threshold_micros: int = 800_000,
-    id_col: str = "doc_id",
     token_col: str = "token",
     materialize: bool = False,
 ) -> DataFrame:
@@ -1305,7 +1275,7 @@ def containment_join(
     """
     if not 0 < threshold_micros <= 1_000_000:
         raise ValueError("threshold_micros must be in (0, 1e6]")
-    t = tokens.select(F.col(id_col).alias("_id"),
+    t = tokens.select(F.col("doc_id").alias("_id"),
                       F.col(token_col).alias("token")).distinct()
     if materialize:
         t = t.persist()
@@ -1371,12 +1341,7 @@ def containment_join(
     return out
 
 
-def dedup_lines_within_doc(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
+def dedup_lines_within_doc(docs: DataFrame, sep: str = "\n") -> DataFrame:
     """WITHIN-document repeated-line removal, first occurrence kept in
     document order — the CCNet/RefinedWeb page-cleaning step that strips
     per-page repeated chrome (cookie banners, "subscribe" interstitials,
@@ -1393,22 +1358,18 @@ def dedup_lines_within_doc(
     test); no Python, no Exchange, no state. Embarrassingly parallel at
     any corpus size.
     """
-    lines = F.split(F.col(text_col), sep, -1)
+    lines = F.split(F.col("text"), sep, -1)
     kept = F.array_distinct(lines)
-    others = [c for c in docs.columns if c != text_col]
+    others = [c for c in docs.columns if c != "text"]
     return docs.select(
         *others,
-        F.array_join(kept, sep).alias(text_col),
+        F.array_join(kept, sep).alias("text"),
         F.size(lines).cast("int").alias("n_lines"),
         F.size(kept).cast("int").alias("n_kept"),
     )
 
 
-def mirror_hosts(
-    docs: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-) -> DataFrame:
+def mirror_hosts(docs: DataFrame) -> DataFrame:
     """Cross-host MIRROR detection: content (by md5 of the text) that
     appears verbatim on two or more distinct hosts — the www/apex
     mirrors, CDN clones and scraper farms that exact dedup collapses
@@ -1426,8 +1387,8 @@ def mirror_hosts(
     shuffles — only (hash, host) pairs.
     """
     pairs = docs.select(
-        F.md5(F.col(text_col)).alias("content_key"),
-        F.col(host_col).alias("_h"),
+        F.md5(F.col("text")).alias("content_key"),
+        F.col("host").alias("_h"),
     )
     agg = pairs.groupBy("content_key").agg(
         F.count("*").cast("bigint").alias("n_pages"),
@@ -1441,10 +1402,7 @@ def mirror_hosts(
 
 def split_leakage(
     docs: DataFrame,
-    split_col: str = "split",
     train_value: str = "train",
-    id_col: str = "doc_id",
-    text_col: str = "tokens_str",
     n: int = 13,
 ) -> DataFrame:
     """Train→eval LEAKAGE check across an assigned split — the eval-
@@ -1463,9 +1421,9 @@ def split_leakage(
     """
     def grams(df, out_id):
         base = df.select(
-            F.col(id_col).alias(out_id),
-            F.col(split_col).alias("_sp"),
-            F.split(F.col(text_col), " ").alias("_t"),
+            F.col("doc_id").alias(out_id),
+            F.col("split").alias("_sp"),
+            F.split(F.col("tokens_str"), " ").alias("_t"),
         ).filter(F.size("_t") >= n)
         return base.select(
             out_id,
@@ -1491,7 +1449,7 @@ def split_leakage(
     )
     return (
         ev.join(tr, "gkey")
-        .groupBy(F.col("eval_id").alias(id_col), F.col("_sp").alias(split_col))
+        .groupBy(F.col("eval_id").alias("doc_id"), F.col("_sp").alias("split"))
         .agg(
             F.countDistinct("gkey").cast("bigint").alias("n_shared_grams"),
             F.countDistinct("train_id").cast("bigint").alias("n_train_docs"),
@@ -1499,11 +1457,7 @@ def split_leakage(
     )
 
 
-def host_dup_rate(
-    docs: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-) -> DataFrame:
+def host_dup_rate(docs: DataFrame) -> DataFrame:
     """Per-host duplicate-rate report card: (host, n_pages,
     n_unique_texts, dup_rate_micros = (n_pages − n_unique)·1e6 div
     n_pages) — the "this host is 90% duplicated chrome, drop or cap it"
@@ -1517,7 +1471,7 @@ def host_dup_rate(
     (approx_count_distinct) with the same output schema.
     """
     h = docs.select(
-        F.col(host_col).alias("host"), F.md5(F.col(text_col)).alias("_k")
+        F.col("host"), F.md5(F.col("text")).alias("_k")
     )
     agg = h.groupBy("host").agg(
         F.count("*").cast("bigint").alias("n_pages"),
@@ -1533,8 +1487,7 @@ def host_dup_rate(
     )
 
 
-def dedup_agreement(flags_a: DataFrame, flags_b: DataFrame,
-                    id_col: str = "doc_id") -> DataFrame:
+def dedup_agreement(flags_a: DataFrame, flags_b: DataFrame) -> DataFrame:
     """Cohen's kappa between two per-document duplicate verdicts —
     chance-corrected agreement of two dedup methods on the SAME corpus
     (e.g. exact content-hash vs MinHash-LSH candidates). Raw overlap
@@ -1561,10 +1514,10 @@ def dedup_agreement(flags_a: DataFrame, flags_b: DataFrame,
     partial-agg contingency count — the whole statistic is four sums.
     """
     a = flags_a.select(
-        F.col(id_col).alias("_id"), F.col("flag").alias("_fa")
+        F.col("doc_id").alias("_id"), F.col("flag").alias("_fa")
     )
     b = flags_b.select(
-        F.col(id_col).alias("_id"), F.col("flag").alias("_fb")
+        F.col("doc_id").alias("_id"), F.col("flag").alias("_fb")
     )
     j = a.join(b, "_id")
     cont = j.agg(
@@ -1602,8 +1555,7 @@ def dedup_agreement(flags_a: DataFrame, flags_b: DataFrame,
     )
 
 
-def minhash_jaccard_eval(shingles: DataFrame, id_col: str = "doc_id",
-                         n_hashes: int = 12,
+def minhash_jaccard_eval(shingles: DataFrame, n_hashes: int = 12,
                          rows_per_band: int = 3) -> DataFrame:
     """Sketch-quality audit: for every LSH candidate pair, the MinHash
     ESTIMATE of Jaccard (fraction of agreeing signature slots) next to
@@ -1622,15 +1574,13 @@ def minhash_jaccard_eval(shingles: DataFrame, id_col: str = "doc_id",
     the shared-shingle equi-join restricted to candidates (the same
     verifier-only discipline as ngram_jaccard_pairs).
     """
-    sigs = minhash_signatures(shingles, id_col=id_col,
-                              n_hashes=n_hashes)
+    sigs = minhash_signatures(shingles, n_hashes=n_hashes)
     cand = lsh_candidate_pairs(
-        lsh_bands(sigs, id_col=id_col, rows_per_band=rows_per_band),
-        id_col=id_col,
+        lsh_bands(sigs, rows_per_band=rows_per_band),
     )
-    sa = sigs.select(F.col(id_col).alias("a_id"), "seed",
+    sa = sigs.select(F.col("doc_id").alias("a_id"), "seed",
                      F.col("minhash").alias("_ma"))
-    sb = sigs.select(F.col(id_col).alias("b_id"), "seed",
+    sb = sigs.select(F.col("doc_id").alias("b_id"), "seed",
                      F.col("minhash").alias("_mb"))
     est = (
         cand.join(sa, "a_id").join(sb, ["b_id", "seed"])
@@ -1645,7 +1595,7 @@ def minhash_jaccard_eval(shingles: DataFrame, id_col: str = "doc_id",
             .alias("est_micros"),
         )
     )
-    g = shingles.select(F.col(id_col).alias("_id"), "gram").distinct()
+    g = shingles.select(F.col("doc_id").alias("_id"), "gram").distinct()
     sizes = g.groupBy("_id").agg(F.count("*").cast("bigint").alias("_n"))
     ga = g.select(F.col("_id").alias("a_id"), "gram")
     gb = g.select(F.col("_id").alias("b_id"), "gram")
@@ -1801,8 +1751,6 @@ def minhash_band_structs(
 def aligned_span_pairs(
     docs: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "tok_str",
     k: int = 3,
 ) -> DataFrame:
     """(a_id, b_id, diag, start_a, start_b, run_tokens): the LONGEST
@@ -1830,9 +1778,9 @@ def aligned_span_pairs(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.filter(
-            F.split(F.col(text_col), " "), lambda w: F.length(w) > 0
+            F.split(F.col("tok_str"), " "), lambda w: F.length(w) > 0
         ).alias("_t"),
     )
     grams = toks.select(
@@ -1888,9 +1836,7 @@ def aligned_span_pairs(
     )
 
 
-def pair_transitivity_audit(pairs: DataFrame,
-                            a_col: str = "id_a",
-                            b_col: str = "id_b") -> DataFrame:
+def pair_transitivity_audit(pairs: DataFrame) -> DataFrame:
     """Transitivity audit of a near-duplicate PAIR relation — the
     dedup-quality number cluster-based dedup silently assumes: when
     (x,y) and (y,z) are called duplicates, connected-components (q50)
@@ -1908,8 +1854,8 @@ def pair_transitivity_audit(pairs: DataFrame,
     wedge-free).
     """
     canon = pairs.select(
-        F.least(F.col(a_col), F.col(b_col)).alias("u"),
-        F.greatest(F.col(a_col), F.col(b_col)).alias("v"),
+        F.least(F.col("id_a"), F.col("id_b")).alias("u"),
+        F.greatest(F.col("id_a"), F.col("id_b")).alias("v"),
     ).distinct()
     sym = canon.unionByName(
         canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1948,7 +1894,6 @@ def pair_transitivity_audit(pairs: DataFrame,
 
 def jaccard_threshold_sweep(
     pairs: DataFrame,
-    sim_micros_col: str = "jacc_micros",
     thresholds_micros: tuple = (
         500_000, 600_000, 700_000, 800_000, 900_000,
     ),
@@ -1975,7 +1920,7 @@ def jaccard_threshold_sweep(
     ts = sorted(int(t) for t in thresholds_micros)
     if not ts:
         raise ValueError("need at least one threshold")
-    sim = F.col(sim_micros_col).cast("bigint")
+    sim = F.col("jacc_micros").cast("bigint")
     out = None
     for t in ts:
         hit = pairs.filter(sim >= t)
@@ -2001,9 +1946,7 @@ def jaccard_threshold_sweep(
     return out
 
 
-def survivor_enrichment(members: DataFrame,
-                        cluster_col: str = "cluster",
-                        id_col: str = "doc_id") -> DataFrame:
+def survivor_enrichment(members: DataFrame) -> DataFrame:
     """Post-dedup survivor consolidation: when a near-dup cluster
     keeps one document, the losers' signals should not vanish —
     production pipelines fold them onto the survivor (FineWeb merges
@@ -2022,8 +1965,8 @@ def survivor_enrichment(members: DataFrame,
     ``inlinks`` columns. One partial-agg groupBy on the cluster key —
     min/max/sum/count all combine map-side, survivor = min id (the
     q50/q75 convention)."""
-    return members.groupBy(F.col(cluster_col).alias("cluster")).agg(
-        F.min(id_col).cast("bigint").alias("survivor_id"),
+    return members.groupBy(F.col("cluster")).agg(
+        F.min("doc_id").cast("bigint").alias("survivor_id"),
         F.count("*").cast("bigint").alias("n_members"),
         F.min("ts_epoch").cast("bigint").alias("earliest_ts_epoch"),
         F.max("quality_micros").cast("bigint")
@@ -2034,8 +1977,7 @@ def survivor_enrichment(members: DataFrame,
     )
 
 
-def apply_tombstones(index: DataFrame, tombstones: DataFrame,
-                     id_col: str = "doc_id") -> DataFrame:
+def apply_tombstones(index: DataFrame, tombstones: DataFrame) -> DataFrame:
     """Delete propagation into a persisted dedup index — the
     right-to-be-forgotten path: when documents are removed from the
     corpus (takedown, opt-out via q279's reservations, GDPR
@@ -2048,13 +1990,12 @@ def apply_tombstones(index: DataFrame, tombstones: DataFrame,
     rows, so the index stays an append+retract log, never a rebuild.
     """
     return index.join(
-        F.broadcast(tombstones.select(id_col).distinct()),
-        id_col, "left_anti",
+        F.broadcast(tombstones.select("doc_id").distinct()),
+        "doc_id", "left_anti",
     )
 
 
-def shared_quotes(df, id_col: str = "doc_id", text_col: str = "text",
-                  min_chars: int = 20):
+def shared_quotes(df, min_chars: int = 20):
     """Cross-document QUOTATION mining: extract every straight- or
     curly-quoted span of at least ``min_chars`` characters and roll
     up by quote — ``(quote, quote_md5, n_docs, n_occurrences,
@@ -2072,7 +2013,7 @@ def shared_quotes(df, id_col: str = "doc_id", text_col: str = "text",
     """
     from pyspark.sql import functions as F
 
-    t = F.col(text_col)
+    t = F.col("text")
     straight = F.regexp_extract_all(
         t, F.lit('"([^"]{%d,})"' % int(min_chars)), 1
     )
@@ -2080,7 +2021,7 @@ def shared_quotes(df, id_col: str = "doc_id", text_col: str = "text",
         t, F.lit("“([^”]{%d,})”" % int(min_chars)), 1
     )
     q = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(F.concat(straight, curly)).alias("quote"),
     )
     return q.groupBy("quote").agg(
@@ -2093,7 +2034,7 @@ def shared_quotes(df, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def dedup_sentences(df, id_col: str = "doc_id", text_col: str = "text"):
+def dedup_sentences(df):
     """Corpus-wide SENTENCE-level dedup, keep-first (the C4 discipline
     at sentence granularity — line dedup (q155) splits on newlines,
     this splits on linguistic boundaries via
@@ -2112,21 +2053,21 @@ def dedup_sentences(df, id_col: str = "doc_id", text_col: str = "text"):
 
     from .textstats import sentence_spans
 
-    sents = sentence_spans(df, id_col=id_col, text_col=text_col)
+    sents = sentence_spans(df)
     canon = sents.groupBy("sentence").agg(
         F.min(
-            F.struct(F.col(id_col).alias("i"),
+            F.struct(F.col("doc_id").alias("i"),
                      F.col("sent_idx").alias("x"))
         ).alias("own")
     )
     marked = sents.join(canon, "sentence").select(
-        id_col, "sent_idx", "sentence",
+        "doc_id", "sent_idx", "sentence",
         F.when(
-            (F.col("own.i") == F.col(id_col))
+            (F.col("own.i") == F.col("doc_id"))
             & (F.col("own.x") == F.col("sent_idx")), 1
         ).otherwise(0).alias("_keep"),
     )
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -2146,9 +2087,7 @@ def dedup_sentences(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def pair_diff_spans(pairs, docs, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    a_col: str = "a_id", b_col: str = "b_id"):
+def pair_diff_spans(pairs, docs):
     """NEAR-DUP PAIR EXPLANATION: for each candidate pair, the
     longest common PREFIX and SUFFIX character lengths and the
     differing middles — ``(a_id, b_id, lcp, lcs, mid_a, mid_b,
@@ -2167,11 +2106,11 @@ def pair_diff_spans(pairs, docs, id_col: str = "doc_id",
     no corpus-pair blowup (input IS the candidate relation)."""
     from pyspark.sql import functions as F
 
-    t = docs.select(F.col(id_col).alias("_id"),
-                    F.col(text_col).alias("_t"))
+    t = docs.select(F.col("doc_id").alias("_id"),
+                    F.col("text").alias("_t"))
     j = (
-        pairs.select(F.col(a_col).alias("a_id"),
-                     F.col(b_col).alias("b_id"))
+        pairs.select(F.col("a_id"),
+                     F.col("b_id"))
         .join(t.withColumnsRenamed({"_id": "a_id", "_t": "_ta"}), "a_id")
         .join(t.withColumnsRenamed({"_id": "b_id", "_t": "_tb"}), "b_id")
     )

@@ -41,7 +41,6 @@ def _words(text_col):
 
 
 def dsir_importance(docs: DataFrame, target_col,
-                    id_col: str = "doc_id", text_col: str = "text",
                     n_buckets: int = 1024) -> DataFrame:
     """Per-document DSIR importance: (id, n_tokens, dsir_score_micros).
 
@@ -54,17 +53,17 @@ def dsir_importance(docs: DataFrame, target_col,
     zero tokens after cleanup produce no output row.
     """
     words = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         target_col.alias("_is_t"),
-        F.explode(_words(F.col(text_col))).alias("_w"),
+        F.explode(_words(F.col("text"))).alias("_w"),
     )
     bucket = (
         F.conv(F.substring(F.md5("_w"), 1, 8), 16, 10).cast("long")
         % n_buckets
     ).alias("_b")
     # one wide shuffle: (doc, bucket) counts; map-side partial agg applies
-    per_doc = words.select(id_col, "_is_t", bucket).groupBy(
-        id_col, "_is_t", "_b"
+    per_doc = words.select("doc_id", "_is_t", bucket).groupBy(
+        "doc_id", "_is_t", "_b"
     ).agg(F.count("*").alias("_cnt"))
 
     # tiny derived dims: <=n_buckets rows, then a 1-row total
@@ -90,7 +89,7 @@ def dsir_importance(docs: DataFrame, target_col,
     )
     return (
         per_doc.join(F.broadcast(weights), "_b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_cnt").alias("n_tokens"),
             F.sum(F.col("_cnt") * F.col("_w_micros"))

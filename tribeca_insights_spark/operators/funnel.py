@@ -26,13 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def funnel_stages(
-    events: DataFrame,
-    steps,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel_stages(events: DataFrame, steps) -> DataFrame:
     """Per-user ordered funnel: (user, t1..tk, stage_reached) where
     ``t_i`` is the EARLIEST occurrence of ``steps[i]`` STRICTLY AFTER
     ``t_{i-1}`` (t1 = earliest occurrence of steps[0] overall) and
@@ -46,21 +40,21 @@ def funnel_stages(
     if not steps:
         raise ValueError("steps must be non-empty")
     out = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t1"))
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
     )
     for i, step in enumerate(steps[1:], start=2):
         nxt = (
-            events.filter(F.col(type_col) == step)
-            .select(user_col, F.col(ts_col).alias("_ts"))
-            .join(out.select(user_col, F.col(f"t{i - 1}").alias("_prev")),
-                  user_col)
+            events.filter(F.col("event_type") == step)
+            .select("user_id", F.col("ts").alias("_ts"))
+            .join(out.select("user_id", F.col(f"t{i - 1}").alias("_prev")),
+                  "user_id")
             .filter(F.col("_ts") > F.col("_prev"))
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("_ts").alias(f"t{i}"))
         )
-        out = out.join(nxt, user_col, "left")
+        out = out.join(nxt, "user_id", "left")
     stage = None
     for i in range(1, len(steps) + 1):
         this = F.when(F.col(f"t{i}").isNotNull(), 1).otherwise(0)
@@ -68,27 +62,23 @@ def funnel_stages(
     return out.withColumn("stage_reached", stage.cast("int"))
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Cohort-retention matrix: (cohort_date, day_offset, n_users) —
     users are cohorted by the DATE of their first event; a user counts
     toward offset k if they have any event k days after their cohort
     date. Offset 0 row = cohort size (every user is active on their
     first day by construction)."""
-    first = events.groupBy(user_col).agg(
-        F.to_date(F.min(ts_col)).alias("cohort_date")
+    first = events.groupBy("user_id").agg(
+        F.to_date(F.min("ts")).alias("cohort_date")
     )
     return (
-        events.select(user_col, F.to_date(ts_col).alias("_d"))
-        .join(first, user_col)
+        events.select("user_id", F.to_date("ts").alias("_d"))
+        .join(first, "user_id")
         .select(
             "cohort_date",
             F.datediff("_d", "cohort_date").alias("day_offset"),
-            F.col(user_col),
+            F.col("user_id"),
         )
         .groupBy("cohort_date", "day_offset")
-        .agg(F.countDistinct(user_col).cast("bigint").alias("n_users"))
+        .agg(F.countDistinct("user_id").cast("bigint").alias("n_users"))
     )

@@ -31,7 +31,7 @@ _CC_RX = (
 _SPDX_RX = r"SPDX-License-Identifier:\s*([A-Za-z0-9.+-]+)"
 
 
-def license_signals(pages: DataFrame, url_col: str = "doc_id") -> DataFrame:
+def license_signals(pages: DataFrame) -> DataFrame:
     """One row per detected license signal: ``(id, license, via)``.
 
     - ``via='link'``: any href (``<a>`` or ``<link>``, incl.
@@ -45,7 +45,7 @@ def license_signals(pages: DataFrame, url_col: str = "doc_id") -> DataFrame:
     """
     html = F.col("html").cast("string")
     hrefs = pages.select(
-        F.col(url_col),
+        F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(
                 html, F.lit(r'href\s*=\s*"([^"]*)"'), 1
@@ -53,13 +53,13 @@ def license_signals(pages: DataFrame, url_col: str = "doc_id") -> DataFrame:
         ).alias("_h"),
     )
     cc = hrefs.select(
-        url_col,
+        "doc_id",
         F.regexp_extract("_h", _CC_RX, 1).alias("_c1"),
         F.regexp_extract("_h", _CC_RX, 2).alias("_v1"),
         F.regexp_extract("_h", _CC_RX, 3).alias("_c2"),
         F.regexp_extract("_h", _CC_RX, 4).alias("_v2"),
     ).filter((F.col("_c1") != "") | (F.col("_c2") != "")).select(
-        url_col,
+        "doc_id",
         F.concat(
             F.lit("cc-"),
             F.when(F.col("_c1") != "", F.col("_c1"))
@@ -71,17 +71,17 @@ def license_signals(pages: DataFrame, url_col: str = "doc_id") -> DataFrame:
         F.lit("link").alias("via"),
     )
     spdx = pages.select(
-        F.col(url_col),
+        F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(html, F.lit(_SPDX_RX), 1)
         ).alias("license"),
-    ).select(url_col, "license", F.lit("spdx").alias("via"))
+    ).select("doc_id", "license", F.lit("spdx").alias("via"))
     return cc.unionByName(spdx).dropDuplicates(
-        [url_col, "license", "via"]
+        ["doc_id", "license", "via"]
     )
 
 
-def ai_optout_flags(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def ai_optout_flags(pages: DataFrame) -> DataFrame:
     """Per-page AI-use reservation flags: ``(id, noai, noimageai,
     tdm_reserved)``.
 
@@ -96,29 +96,29 @@ def ai_optout_flags(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (share of reserved pages per host) hang a partial-agg groupBy off
     it.
     """
-    m = meta_tags(pages, id_col=id_col)
+    m = meta_tags(pages)
     toks = m.filter(F.col("key") == "robots").select(
-        id_col,
+        "doc_id",
         F.explode(F.split(F.lower("content"), ",")).alias("_t"),
-    ).select(id_col, F.trim("_t").alias("_t"))
-    robots_flags = toks.groupBy(id_col).agg(
+    ).select("doc_id", F.trim("_t").alias("_t"))
+    robots_flags = toks.groupBy("doc_id").agg(
         F.max(F.when(F.col("_t") == "noai", 1).otherwise(0))
         .alias("_noai"),
         F.max(F.when(F.col("_t") == "noimageai", 1).otherwise(0))
         .alias("_noimg"),
     )
     tdm = m.filter(F.col("key") == "tdm-reservation").groupBy(
-        id_col
+        "doc_id"
     ).agg(
         F.max(F.when(F.trim(F.col("content")) == "1", 1).otherwise(0))
         .alias("_tdm")
     )
     return (
-        pages.select(F.col(id_col))
-        .join(robots_flags, id_col, "left")
-        .join(tdm, id_col, "left")
+        pages.select(F.col("doc_id"))
+        .join(robots_flags, "doc_id", "left")
+        .join(tdm, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("_noai", F.lit(0)).cast("int").alias("noai"),
             F.coalesce("_noimg", F.lit(0)).cast("int")
             .alias("noimageai"),
@@ -128,8 +128,7 @@ def ai_optout_flags(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def k_anonymize_hosts(docs: DataFrame, host_col: str = "host",
-                      k: int = 5) -> DataFrame:
+def k_anonymize_hosts(docs: DataFrame, k: int = 5) -> DataFrame:
     """k-anonymity for released per-host metadata: publishing host
     counts straight from a crawl leaks k=1 facts ("we crawled exactly
     this one blog"), so release tables suppress small groups and
@@ -147,7 +146,7 @@ def k_anonymize_hosts(docs: DataFrame, host_col: str = "host",
     which is intentionally maximal-entropy. Three partial-agg
     groupBys, codegen TLD extraction, no window.
     """
-    hc = docs.groupBy(F.col(host_col).alias("host")).agg(
+    hc = docs.groupBy(F.col("host")).agg(
         F.count("*").cast("bigint").alias("n")
     )
     rel_host = hc.filter(F.col("n") >= k).select(

@@ -21,9 +21,6 @@ def bucketed_interval_join(
     events: DataFrame,
     windows: DataFrame,
     keys,
-    ts_col: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     bucket_secs: int = 3600,
 ) -> DataFrame:
     """Rows of ``events`` matched to ``windows`` with
@@ -39,19 +36,19 @@ def bucketed_interval_join(
     bucket = "_b"
     while bucket in taken:
         bucket = "_" + bucket
-    ev_epoch = F.unix_timestamp(F.col(ts_col))
+    ev_epoch = F.unix_timestamp(F.col("ts"))
     w = windows.withColumn(
         bucket,
         F.explode(
             F.sequence(
-                F.floor(F.unix_timestamp(F.col(start_col)) / bucket_secs),
-                F.floor(F.unix_timestamp(F.col(end_col)) / bucket_secs),
+                F.floor(F.unix_timestamp(F.col("start_ts")) / bucket_secs),
+                F.floor(F.unix_timestamp(F.col("end_ts")) / bucket_secs),
             )
         ),
     )
     e = events.withColumn(bucket, F.floor(ev_epoch / bucket_secs))
     joined = e.join(w, [*keys, bucket]).filter(
-        (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col))
+        (F.col("ts") >= F.col("start_ts")) & (F.col("ts") < F.col("end_ts"))
     )
     return joined.drop(bucket)
 

@@ -121,9 +121,7 @@ def _update(assigned: DataFrame, dim: int) -> DataFrame:
     )
 
 
-def kmeans_fit(emb: DataFrame, k: int = 4, iters: int = 2,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> tuple[DataFrame, DataFrame]:
+def kmeans_fit(emb: DataFrame, k: int = 4, iters: int = 2) -> tuple[DataFrame, DataFrame]:
     """(base, centroids): run ``iters`` Lloyd rounds from md5-rank seeds.
     ``base`` is the integer-micros projection (vec_id, v); ``centroids``
     is (cid, c). All arithmetic integer-micros exact; no actions inside
@@ -131,9 +129,9 @@ def kmeans_fit(emb: DataFrame, k: int = 4, iters: int = 2,
     shallow: iters is small by contract, 1-5 rounds train an IVF
     quantizer)."""
     base = emb.select(
-        F.col(id_col).alias("vec_id"), to_micros(F.col(vec_col)).alias("v")
+        F.col("vec_id"), to_micros(F.col("embedding")).alias("v")
     )
-    dim = _infer_dim(emb, vec_col)
+    dim = _infer_dim(emb, "embedding")
     cents = _seed_cids(
         base.select(
             "vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("_rk")
@@ -145,20 +143,16 @@ def kmeans_fit(emb: DataFrame, k: int = 4, iters: int = 2,
     return base, cents
 
 
-def kmeans_assign(emb: DataFrame, k: int = 4, iters: int = 2,
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
+def kmeans_assign(emb: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
     """Train via :func:`kmeans_fit`, then return the final assignment
     (vec_id, cid, dist2) against the trained centroids."""
-    base, cents = kmeans_fit(emb, k=k, iters=iters, id_col=id_col,
-                             vec_col=vec_col)
+    base, cents = kmeans_fit(emb, k=k, iters=iters)
     return _assign(base, cents).select("vec_id", "cid", "dist2")
 
 
 def ann_ivf_trained_topk(emb: DataFrame, query_ids, k: int = 5,
                          n_cells: int = 4, iters: int = 2,
-                         n_probe: int = 2, id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         n_probe: int = 2) -> DataFrame:
     """(query_id, neighbor_id, rank, dist2): IVF ANN whose coarse
     quantizer is the TRAINED deterministic Lloyd k-means above — the
     fully oracle-able counterpart of similarity.ann_ivf_topk (whose
@@ -172,8 +166,7 @@ def ann_ivf_trained_topk(emb: DataFrame, query_ids, k: int = 5,
     corpus), ranked by exact integer squared-L2. Never all-pairs."""
     from pyspark.sql import Window
 
-    base, cents = kmeans_fit(emb, k=n_cells, iters=iters, id_col=id_col,
-                             vec_col=vec_col)
+    base, cents = kmeans_fit(emb, k=n_cells, iters=iters)
     # the trained centroid set (k rows) feeds both the corpus assignment
     # and the query probes — persist it so training runs once, not once
     # per consumer; k·d longs, negligible at any scale
@@ -208,9 +201,7 @@ def ann_ivf_trained_topk(emb: DataFrame, query_ids, k: int = 5,
     )
 
 
-def pq_codes(emb: DataFrame, m: int = 4, k: int = 4, iters: int = 1,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+def pq_codes(emb: DataFrame, m: int = 4, k: int = 4, iters: int = 1) -> DataFrame:
     """(vec_id, codes, recon_err): product-quantization codes — the
     vector-compression step production ANN indexes (IVF-PQ) run after
     the coarse quantizer. The d-dim vector splits into ``m`` contiguous
@@ -228,15 +219,15 @@ def pq_codes(emb: DataFrame, m: int = 4, k: int = 4, iters: int = 1,
     at 10^12 vectors that is the difference between an index that fits
     the cluster and one that doesn't.
     """
-    dim = _infer_dim(emb, vec_col)
+    dim = _infer_dim(emb, "embedding")
     if m <= 0 or dim % m != 0:
         raise ValueError(f"m={m} must divide dim={dim}")
     sub = dim // m
     parts = []
     for s in range(m):
         sl = emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.slice(F.col(vec_col), s * sub + 1, sub).alias("embedding"),
+            F.col("vec_id"),
+            F.slice(F.col("embedding"), s * sub + 1, sub).alias("embedding"),
         )
         base, cents = kmeans_fit(sl, k=k, iters=iters)
         parts.append(
@@ -271,13 +262,7 @@ def _infer_dim(emb: DataFrame, vec_col: str) -> int:
     return int(row[0]["d"])
 
 
-def embedding_outliers(
-    vecs: DataFrame,
-    topk: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def embedding_outliers(vecs: DataFrame, topk: int = 5) -> DataFrame:
     """Per-group embedding OUTLIERS: the ``topk`` vectors farthest from
     their own group's centroid — (label, vec_id, dist2, rank).
 
@@ -302,9 +287,9 @@ def embedding_outliers(
     from pyspark.sql import Window
 
     ex = vecs.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("label"),
-        F.posexplode(to_micros(F.col(vec_col))).alias("dim", "x"),
+        F.col("vec_id"),
+        F.col("label"),
+        F.posexplode(to_micros(F.col("embedding"))).alias("dim", "x"),
     )
     # floor-division centroid with the pmod adjustment: sums of micros
     # go NEGATIVE (embeddings are signed), where Spark's `div` truncates
@@ -337,13 +322,7 @@ def embedding_outliers(
     )
 
 
-def kcenter_greedy(
-    emb: DataFrame,
-    k: int = 4,
-    start_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kcenter_greedy(emb: DataFrame, k: int = 4, start_id: int = 0) -> DataFrame:
     """Greedy k-center coreset selection (Gonzalez 1985 farthest-point
     traversal — the 2-approximation): repeatedly add the point FARTHEST
     from the chosen set. The diversity-sampling primitive behind
@@ -370,8 +349,8 @@ def kcenter_greedy(
     if k < 1:
         raise ValueError("k must be >= 1")
     pts = emb.select(
-        F.col(id_col).cast("long").alias("_id"),
-        to_micros(F.col(vec_col)).alias("_v"),
+        F.col("vec_id").cast("long").alias("_id"),
+        to_micros(F.col("embedding")).alias("_v"),
     )
     first = pts.filter(F.col("_id") == start_id).select("_v").head()
     if first is None:

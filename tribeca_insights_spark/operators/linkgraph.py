@@ -60,14 +60,14 @@ def resolve_href(url_col, href_col):
     )
 
 
-def anchor_pairs(docs: DataFrame, url_col: str = "url") -> DataFrame:
+def anchor_pairs(docs: DataFrame) -> DataFrame:
     """(url, target, anchor) — one row per resolvable link in the corpus.
 
     Arrow-batched parse (one pass per page, same batching regime as
     operators/extract.py) → explode → native resolution expressions.
     """
     pairs = docs.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         F.explode(html_udf(docs, extract_anchors, _PAIR)).alias("p"),
     )
     return pairs.select(
@@ -661,7 +661,6 @@ def trustrank_micros(
     seeds: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    seed_col: str = "node",
     n_iter: int = 3,
     damping_pct: int = 85,
 ) -> DataFrame:
@@ -689,7 +688,7 @@ def trustrank_micros(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    sd = seeds.select(F.col(seed_col).alias("node")).distinct()
+    sd = seeds.select(F.col("node")).distinct()
     scal = nodes.agg(F.count("*").alias("_N")).crossJoin(
         sd.agg(F.count("*").alias("_S"))
     )
@@ -877,41 +876,9 @@ def _ball_estimates(sk: DataFrame, p: int) -> DataFrame:
     """Per-node raw HLL estimate from a (node, register, max_rho)
     sketch table — the shared reduction under hyperball_estimates and
     neighborhood_function."""
-    from .sketches import _alpha
+    from .sketches import _hll_reduce
 
-    m = 1 << p
-    agg = sk.groupBy("node").agg(
-        F.count("*").cast("long").alias("n_registers_hit"),
-        F.sum(
-            F.expr(
-                "CASE WHEN max_rho <= 29 THEN"
-                " shiftleft(cast(1 as bigint), cast(29 - max_rho as int))"
-                " ELSE cast(0 as bigint) END"
-            )
-        ).alias("harmonic_hi"),
-        F.sum(
-            F.expr(
-                "CASE WHEN max_rho >= 30 THEN"
-                " shiftleft(cast(1 as bigint), cast(61 - max_rho as int))"
-                " ELSE cast(0 as bigint) END"
-            )
-        ).alias("harmonic_lo"),
-    )
-    denom = (
-        F.col("harmonic_hi").cast("double") * F.lit(float(1 << 32))
-        + F.col("harmonic_lo").cast("double")
-        + (F.lit(m) - F.col("n_registers_hit")).cast("double")
-        * F.lit(float(1 << 61))
-    )
-    return agg.select(
-        "node",
-        "n_registers_hit",
-        "harmonic_hi",
-        "harmonic_lo",
-        F.floor(F.lit(1e6 * _alpha(m) * m * m * float(1 << 61)) / denom)
-        .cast("long")
-        .alias("ball_estimate_micros"),
-    )
+    return _hll_reduce(sk, p, ("node",), "ball_estimate_micros")
 
 
 def neighborhood_function(
@@ -1058,7 +1025,6 @@ def personalized_pagerank_micros(
     seeds: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    seed_col: str = "node",
     n_iter: int = 3,
     damping_pct: int = 85,
 ) -> DataFrame:
@@ -1086,7 +1052,7 @@ def personalized_pagerank_micros(
     if n_iter < 0:
         raise ValueError("n_iter must be >= 0")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    s = seeds.select(F.col(seed_col).alias("node")).distinct()
+    s = seeds.select(F.col("node")).distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -1229,10 +1195,7 @@ def indegree_gini(
 
 
 def anchor_expansion(body: DataFrame, anchors: DataFrame,
-                     anchor_weight: int = 2,
-                     id_col: str = "doc_id",
-                     text_col: str = "text",
-                     anchor_col: str = "anchor") -> DataFrame:
+                     anchor_weight: int = 2) -> DataFrame:
     """Anchor-text document expansion (classic web IR — Craswell et al.
     2001, "Effective Site Finding using Link Anchor Information"; the
     anchor field of BM25F): terms from INBOUND anchor text are routed
@@ -1258,22 +1221,22 @@ def anchor_expansion(body: DataFrame, anchors: DataFrame,
     from .dsir import _words
 
     tf_b = (
-        body.select(F.col(id_col),
-                    F.explode(_words(F.col(text_col))).alias("term"))
-        .groupBy(id_col, "term")
+        body.select(F.col("doc_id"),
+                    F.explode(_words(F.col("text"))).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count("*").cast("bigint").alias("tf_body"))
     )
     tf_a = (
-        anchors.select(F.col(id_col),
-                       F.explode(_words(F.col(anchor_col))).alias("term"))
-        .groupBy(id_col, "term")
+        anchors.select(F.col("doc_id"),
+                       F.explode(_words(F.col("anchor"))).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count("*").cast("bigint").alias("tf_anchor"))
     )
     w = F.lit(int(anchor_weight)).cast("bigint")
     return (
-        tf_b.join(tf_a, [id_col, "term"], "full_outer")
+        tf_b.join(tf_a, ["doc_id", "term"], "full_outer")
         .select(
-            id_col, "term",
+            "doc_id", "term",
             F.coalesce("tf_body", F.lit(0)).cast("bigint")
             .alias("tf_body"),
             F.coalesce("tf_anchor", F.lit(0)).cast("bigint")
@@ -1292,7 +1255,7 @@ REL_PAIR = ArrayType(StructType([
 ]))
 
 
-def rel_anchor_pairs(docs: DataFrame, url_col: str = "url") -> DataFrame:
+def rel_anchor_pairs(docs: DataFrame) -> DataFrame:
     """(url, target, anchor, followed) — anchor_pairs plus the edge
     semantics real link graphs honor: ``rel`` containing nofollow,
     ugc or sponsored (Google's 2019 triad) marks the edge
@@ -1300,7 +1263,7 @@ def rel_anchor_pairs(docs: DataFrame, url_col: str = "url") -> DataFrame:
     it. Same Arrow-batched single-parse regime; the rel token check is
     JVM array_contains codegen after the explode."""
     pairs = docs.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         F.explode(html_udf(docs, extract_anchors_rel, REL_PAIR)).alias("p"),
     )
     nofollow = (
@@ -1318,8 +1281,7 @@ def rel_anchor_pairs(docs: DataFrame, url_col: str = "url") -> DataFrame:
     ).where(F.col("target").isNotNull())
 
 
-def anchor_pairs_base_aware(docs: DataFrame,
-                            url_col: str = "url") -> DataFrame:
+def anchor_pairs_base_aware(docs: DataFrame) -> DataFrame:
     """(url, base, target, anchor) — anchor_pairs with ``<base href>``
     semantics: when a page declares a base element, RELATIVE hrefs
     resolve against the base, not the page url (the HTML rule CDN-
@@ -1338,9 +1300,9 @@ def anchor_pairs_base_aware(docs: DataFrame,
         r'<base\s[^>]*href\s*=\s*"([^"]*)"', 1,
     )
     eff = F.when(base.rlike(r"^https?://"), base) \
-        .otherwise(F.col(url_col))
+        .otherwise(F.col("url"))
     pairs = docs.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         eff.alias("_base"),
         F.explode(html_udf(docs, extract_anchors, _PAIR)).alias("p"),
     )
@@ -1352,10 +1314,7 @@ def anchor_pairs_base_aware(docs: DataFrame,
     ).where(F.col("target").isNotNull())
 
 
-def host_cocitation(edges, src_col: str = "src_host",
-                    dst_col: str = "dst_host",
-                    max_fanout: int | None = None,
-                    min_shared: int = 1):
+def host_cocitation(edges, max_fanout: int | None = None, min_shared: int = 1):
     """HOST co-citation similarity: two hosts are similar when they
     link to overlapping sets of destination hosts — ``(host_a,
     host_b, n_shared, n_a, n_b, jaccard_micros)`` for every ordered
@@ -1378,7 +1337,7 @@ def host_cocitation(edges, src_col: str = "src_host",
     from pyspark.sql import functions as F
 
     e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
     ).distinct()
     if max_fanout is not None:
         indeg = e.groupBy("dst").agg(F.count("*").alias("_in"))

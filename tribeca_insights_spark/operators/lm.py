@@ -28,9 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 from .dsir import _words
 
 
-def bigram_lm_score(docs: DataFrame, target_col,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def bigram_lm_score(docs: DataFrame, target_col) -> DataFrame:
     """Per-document bigram-LM log-prob: (id, n_bigrams, lm_logprob_micros).
 
     ``target_col`` is a boolean Column selecting the training slice (the
@@ -41,22 +39,22 @@ def bigram_lm_score(docs: DataFrame, target_col,
     tokens produce no output row.
     """
     toks = docs.select(
-        F.col(id_col), target_col.alias("_is_t"),
-        _words(F.col(text_col)).alias("_l"),
+        F.col("doc_id"), target_col.alias("_is_t"),
+        _words(F.col("text")).alias("_l"),
     )
     uni = toks.select(
-        id_col, "_is_t", F.explode("_l").alias("_w")
+        "doc_id", "_is_t", F.explode("_l").alias("_w")
     )
     n = F.size("_l")
     big = toks.filter(n >= 2).select(
-        id_col, "_is_t",
+        "doc_id", "_is_t",
         F.explode(
             F.arrays_zip(
                 F.slice("_l", 1, n - 1).alias("w1"),
                 F.slice("_l", 2, n - 1).alias("w2"),
             )
         ).alias("_p"),
-    ).select(id_col, "_is_t", F.col("_p.w1").alias("_w1"),
+    ).select("doc_id", "_is_t", F.col("_p.w1").alias("_w1"),
              F.col("_p.w2").alias("_w2"))
 
     c1 = uni.filter("_is_t").groupBy(F.col("_w").alias("_w1")).agg(
@@ -74,7 +72,7 @@ def bigram_lm_score(docs: DataFrame, target_col,
         .join(c1, "_w1", "left")
         .crossJoin(F.broadcast(vocab))
         .select(
-            id_col,
+            "doc_id",
             F.floor(
                 F.lit(1e6)
                 * (
@@ -84,14 +82,13 @@ def bigram_lm_score(docs: DataFrame, target_col,
             ).alias("_lp_micros"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         F.sum("_lp_micros").alias("lm_logprob_micros"),
     )
 
 
-def perplexity_buckets(scored: DataFrame, id_col: str = "doc_id",
-                       accuracy: int = 1_000_000,
+def perplexity_buckets(scored: DataFrame, accuracy: int = 1_000_000,
                        group_col: str | None = None) -> DataFrame:
     """CCNet-style head/middle/tail split (Wenzek et al. 2020 §4.3) over
     :func:`bigram_lm_score` output — the SCALE-SAFE threshold form.
@@ -156,7 +153,7 @@ def perplexity_buckets(scored: DataFrame, id_col: str = "doc_id",
         .when(bucket == 3, F.lit("tail"))
         .otherwise(F.lit("middle"))
     )
-    keys = [id_col] if group_col is None else [id_col, group_col]
+    keys = ["doc_id"] if group_col is None else ["doc_id", group_col]
     return out.select(
         *keys, "n_bigrams", "lm_logprob_micros",
         F.round(avg, 6).alias("avg_logprob"),
@@ -165,8 +162,7 @@ def perplexity_buckets(scored: DataFrame, id_col: str = "doc_id",
     )
 
 
-def perplexity_buckets_ntile(scored: DataFrame, n_buckets: int = 3,
-                             id_col: str = "doc_id") -> DataFrame:
+def perplexity_buckets_ntile(scored: DataFrame, n_buckets: int = 3) -> DataFrame:
     """Exact equal-frequency reference form of :func:`perplexity_buckets`
     — global NTILE over mean per-bigram log-prob, ties broken by doc id.
 
@@ -185,7 +181,7 @@ def perplexity_buckets_ntile(scored: DataFrame, n_buckets: int = 3,
     # order by the UNROUNDED ratio (IEEE division of the same integer
     # pair is bit-identical on every engine); the rounded copy is
     # display-only, so a rounding-boundary can never flip the ordering
-    w = Window.orderBy(F.desc("_avg_raw"), F.col(id_col))
+    w = Window.orderBy(F.desc("_avg_raw"), F.col("doc_id"))
     out = (
         scored.withColumn("_avg_raw", avg)
         .withColumn("avg_logprob", F.round(avg, 6))
@@ -197,14 +193,12 @@ def perplexity_buckets_ntile(scored: DataFrame, n_buckets: int = 3,
         .otherwise(F.lit("middle"))
     )
     return out.select(
-        id_col, "n_bigrams", "lm_logprob_micros", "avg_logprob",
+        "doc_id", "n_bigrams", "lm_logprob_micros", "avg_logprob",
         "ppl_bucket", label.alias("bucket_label"),
     )
 
 
-def bigram_lm_score_grouped(docs: DataFrame, group_col: str = "lang",
-                            target_col=None, id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
+def bigram_lm_score_grouped(docs: DataFrame, target_col=None) -> DataFrame:
     """Per-GROUP bigram-LM scoring — the faithful CCNet shape: Wenzek
     et al. 2020 train ONE language model per language and score each
     document against its own language's model. Output:
@@ -227,22 +221,22 @@ def bigram_lm_score_grouped(docs: DataFrame, group_col: str = "lang",
     """
     tgt = F.lit(True) if target_col is None else target_col
     toks = docs.select(
-        F.col(id_col), F.col(group_col).alias("_g"), tgt.alias("_is_t"),
-        _words(F.col(text_col)).alias("_l"),
+        F.col("doc_id"), F.col("lang").alias("_g"), tgt.alias("_is_t"),
+        _words(F.col("text")).alias("_l"),
     )
     uni = toks.select(
-        id_col, "_g", "_is_t", F.explode("_l").alias("_w")
+        "doc_id", "_g", "_is_t", F.explode("_l").alias("_w")
     )
     n = F.size("_l")
     big = toks.filter(n >= 2).select(
-        id_col, "_g", "_is_t",
+        "doc_id", "_g", "_is_t",
         F.explode(
             F.arrays_zip(
                 F.slice("_l", 1, n - 1).alias("w1"),
                 F.slice("_l", 2, n - 1).alias("w2"),
             )
         ).alias("_p"),
-    ).select(id_col, "_g", "_is_t", F.col("_p.w1").alias("_w1"),
+    ).select("doc_id", "_g", "_is_t", F.col("_p.w1").alias("_w1"),
              F.col("_p.w2").alias("_w2"))
 
     c1 = uni.filter("_is_t").groupBy(
@@ -260,7 +254,7 @@ def bigram_lm_score_grouped(docs: DataFrame, group_col: str = "lang",
         .join(c1, ["_g", "_w1"], "left")
         .join(F.broadcast(vocab), "_g")
         .select(
-            id_col, "_g",
+            "doc_id", "_g",
             F.floor(
                 F.lit(1e6)
                 * (
@@ -270,15 +264,13 @@ def bigram_lm_score_grouped(docs: DataFrame, group_col: str = "lang",
             ).alias("_lp_micros"),
         )
     )
-    return scored.groupBy(id_col, "_g").agg(
+    return scored.groupBy("doc_id", "_g").agg(
         F.count("*").alias("n_bigrams"),
         F.sum("_lp_micros").alias("lm_logprob_micros"),
-    ).withColumnRenamed("_g", group_col)
+    ).withColumnRenamed("_g", "lang")
 
 
-def stupid_backoff_score(docs: DataFrame, target_col,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def stupid_backoff_score(docs: DataFrame, target_col) -> DataFrame:
     """Per-document TRIGRAM Stupid-Backoff log-score:
     (id, n_trigrams, sb_logprob_micros).
 
@@ -303,12 +295,12 @@ def stupid_backoff_score(docs: DataFrame, target_col,
     from .dsir import _words
 
     toks = docs.select(
-        F.col(id_col), target_col.alias("_is_t"),
-        _words(F.col(text_col)).alias("_l"),
+        F.col("doc_id"), target_col.alias("_is_t"),
+        _words(F.col("text")).alias("_l"),
     )
     n = F.size("_l")
     tri = toks.filter(n >= 3).select(
-        id_col, "_is_t",
+        "doc_id", "_is_t",
         F.explode(
             F.arrays_zip(
                 F.slice("_l", 1, n - 2).alias("w1"),
@@ -316,20 +308,20 @@ def stupid_backoff_score(docs: DataFrame, target_col,
                 F.slice("_l", 3, n - 2).alias("w3"),
             )
         ).alias("_t"),
-    ).select(id_col, "_is_t",
+    ).select("doc_id", "_is_t",
              F.col("_t.w1").alias("_w1"),
              F.col("_t.w2").alias("_w2"),
              F.col("_t.w3").alias("_w3"))
-    uni = toks.select(id_col, "_is_t", F.explode("_l").alias("_w"))
+    uni = toks.select("doc_id", "_is_t", F.explode("_l").alias("_w"))
     big = toks.filter(n >= 2).select(
-        id_col, "_is_t",
+        "doc_id", "_is_t",
         F.explode(
             F.arrays_zip(
                 F.slice("_l", 1, n - 1).alias("w1"),
                 F.slice("_l", 2, n - 1).alias("w2"),
             )
         ).alias("_p"),
-    ).select(id_col, "_is_t", F.col("_p.w1").alias("_w1"),
+    ).select("doc_id", "_is_t", F.col("_p.w1").alias("_w1"),
              F.col("_p.w2").alias("_w2"))
 
     t = lambda df: df.filter("_is_t")
@@ -370,16 +362,15 @@ def stupid_backoff_score(docs: DataFrame, target_col,
         .join(c2, "_w2", "left")
         .join(c3, "_w3", "left")
         .crossJoin(F.broadcast(ntot))
-        .select(id_col, F.floor(F.lit(1e6) * lp).alias("_lp"))
+        .select("doc_id", F.floor(F.lit(1e6) * lp).alias("_lp"))
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_trigrams"),
         F.sum("_lp").alias("sb_logprob_micros"),
     )
 
 
-def heldout_lm_eval(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", salt: str = "split",
+def heldout_lm_eval(docs: DataFrame, salt: str = "split",
                     train_micros: int = 800_000,
                     val_micros: int = 100_000) -> DataFrame:
     """Held-out LM evaluation: fit the Laplace bigram LM on the TRAIN
@@ -402,15 +393,14 @@ def heldout_lm_eval(docs: DataFrame, id_col: str = "doc_id",
     """
     from .mixing import split_assign
 
-    tagged = split_assign(docs, key_col=id_col, salt=salt,
+    tagged = split_assign(docs, salt=salt,
                           train_micros=train_micros,
                           val_micros=val_micros)
     scored = bigram_lm_score(
         tagged, F.col("split") == "train",
-        id_col=id_col, text_col=text_col,
     )
     j = scored.join(
-        tagged.select(F.col(id_col), "split"), id_col
+        tagged.select(F.col("doc_id"), "split"), "doc_id"
     )
     agg = j.groupBy("split").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -429,7 +419,6 @@ def heldout_lm_eval(docs: DataFrame, id_col: str = "doc_id",
 
 
 def kneser_ney_bigram(docs: DataFrame, target_col,
-                      text_col: str = "text",
                       discount: float = 0.75) -> DataFrame:
     """Interpolated Kneser-Ney bigram model table (Kneser & Ney 1995;
     Chen & Goodman 1999 eq. 4.25) fit on the ``target_col`` slice.
@@ -466,7 +455,7 @@ def kneser_ney_bigram(docs: DataFrame, target_col,
     integer micros — order-free and hash-stable.
     """
     toks = docs.filter(target_col).select(
-        _words(F.col(text_col)).alias("_l")
+        _words(F.col("text")).alias("_l")
     )
     n = F.size("_l")
     big = toks.filter(n >= 2).select(
@@ -506,8 +495,7 @@ def kneser_ney_bigram(docs: DataFrame, target_col,
     )
 
 
-def good_turing_counts(docs: DataFrame, target_col,
-                       text_col: str = "text") -> DataFrame:
+def good_turing_counts(docs: DataFrame, target_col) -> DataFrame:
     """Good-Turing count-of-counts table over the training slice's
     unigrams: ``(r, n_types, r_star_micros)``.
 
@@ -528,7 +516,7 @@ def good_turing_counts(docs: DataFrame, target_col,
     """
     cnt = (
         docs.filter(target_col)
-        .select(F.explode(_words(F.col(text_col))).alias("_w"))
+        .select(F.explode(_words(F.col("text"))).alias("_w"))
         .groupBy("_w").agg(F.count("*").alias("_r"))
     )
     coc = cnt.groupBy(F.col("_r").alias("r")).agg(

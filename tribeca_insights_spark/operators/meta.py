@@ -102,7 +102,6 @@ def robots_meta_flags(docs: DataFrame,
 
 
 def jsonld_entities(docs: DataFrame,
-                    id_col: str = "doc_id",
                     schema: str = "`@type` string, name string"
                     ) -> DataFrame:
     """schema.org JSON-LD entities: every
@@ -111,7 +110,7 @@ def jsonld_entities(docs: DataFrame,
     tolerant-reader behavior structured-data pipelines want):
     ``(id, block_idx, entity_type, entity_name)``."""
     blocks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.regexp_extract_all(
                 F.col("html").cast("string"),
@@ -123,7 +122,7 @@ def jsonld_entities(docs: DataFrame,
     )
     e = F.from_json(F.col("_payload"), schema)
     return blocks.select(
-        id_col,
+        "doc_id",
         F.col("block_idx").cast("int").alias("block_idx"),
         e.getField("@type").alias("entity_type"),
         e.getField("name").alias("entity_name"),
@@ -161,7 +160,7 @@ def link_tags(docs: DataFrame,
     )
 
 
-def hreflang_reciprocity(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def hreflang_reciprocity(pages: DataFrame) -> DataFrame:
     """hreflang return-tag audit (THE classic international-SEO check:
     if A lists B as an alternate, B must list A back or search engines
     ignore the pair): one row per alternate edge ``(url, alt_url,
@@ -173,7 +172,7 @@ def hreflang_reciprocity(pages: DataFrame, url_col: str = "url") -> DataFrame:
     it co-locates with any url-bucketed page store. No window, no
     Python."""
     alts = link_tags(
-        pages.select(F.col(url_col).alias("url"), F.col("html")),
+        pages.select(F.col("url"), F.col("html")),
         id_col="url",
     ).filter(
         (F.col("rel") == "alternate") & (F.col("hreflang") != "")
@@ -195,8 +194,7 @@ def hreflang_reciprocity(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def canonical_resolve(pages: DataFrame, url_col: str = "url",
-                      max_hops: int = 2) -> DataFrame:
+def canonical_resolve(pages: DataFrame, max_hops: int = 2) -> DataFrame:
     """rel=canonical CHAIN resolution: each page's canonical pointer
     followed to its terminal target via pointer jumping —
     ``max_hops`` doublings resolve chains up to 2^max_hops links, the
@@ -210,14 +208,14 @@ def canonical_resolve(pages: DataFrame, url_col: str = "url",
     audits flag — engines may ignore multi-hop canonicals entirely.
     """
     canon = link_tags(
-        pages.select(F.col(url_col).alias("url"), F.col("html")),
+        pages.select(F.col("url"), F.col("html")),
         id_col="url",
     ).filter(F.col("rel") == "canonical").select(
         "url", F.col("href").alias("canonical")
     ).dropDuplicates(["url"])
 
     cur = (
-        pages.select(F.col(url_col).alias("url"))
+        pages.select(F.col("url"))
         .join(canon, "url", "left")
         .select(
             "url",
@@ -307,42 +305,42 @@ def image_sources(docs: DataFrame,
     )
 
 
-def mixed_content_audit(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def mixed_content_audit(pages: DataFrame) -> DataFrame:
     """Mixed-content audit: resources loaded over ``http://`` from an
     ``https://`` page — browsers block or warn on these, and SEO/
     security audits flag them. Counts per page over img src,
     data-src, srcset variants AND <link href>: ``(url, n_resources,
     n_insecure, mixed)``. Codegen end to end; one partial-agg groupBy
     on the page key."""
-    imgs = image_sources(pages, id_col=url_col)
+    imgs = image_sources(pages, id_col="url")
     img_urls = (
-        imgs.select(F.col(url_col), F.col("effective_src").alias("_r"))
+        imgs.select(F.col("url"), F.col("effective_src").alias("_r"))
         .unionByName(
             imgs.filter(F.col("widest_src").isNotNull())
-            .select(F.col(url_col), F.col("widest_src").alias("_r"))
+            .select(F.col("url"), F.col("widest_src").alias("_r"))
         )
     )
-    links = link_tags(pages, id_col=url_col).select(
-        F.col(url_col), F.col("href").alias("_r")
+    links = link_tags(pages, id_col="url").select(
+        F.col("url"), F.col("href").alias("_r")
     )
     res = img_urls.unionByName(links).filter(F.col("_r") != "")
-    flags = res.groupBy(url_col).agg(
+    flags = res.groupBy("url").agg(
         F.count("*").cast("bigint").alias("n_resources"),
         F.sum(
             F.when(F.col("_r").startswith("http://"), 1).otherwise(0)
         ).cast("bigint").alias("n_insecure"),
     )
     return (
-        pages.select(F.col(url_col))
-        .join(flags, url_col, "left")
+        pages.select(F.col("url"))
+        .join(flags, "url", "left")
         .select(
-            url_col,
+            "url",
             F.coalesce("n_resources", F.lit(0)).cast("bigint")
             .alias("n_resources"),
             F.coalesce("n_insecure", F.lit(0)).cast("bigint")
             .alias("n_insecure"),
             F.when(
-                F.col(url_col).startswith("https://")
+                F.col("url").startswith("https://")
                 & (F.coalesce("n_insecure", F.lit(0)) > 0), 1
             ).otherwise(0).cast("int").alias("mixed"),
         )
@@ -400,7 +398,7 @@ def client_redirects(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return meta_r.unionByName(js_r)
 
 
-def a11y_audit(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def a11y_audit(pages: DataFrame) -> DataFrame:
     """Accessibility / document-outline audit per page: ``(id,
     n_images, n_missing_alt, n_h1, n_level_skips)`` — images without
     alt text and broken heading ladders (an h3 directly under an h1,
@@ -447,7 +445,7 @@ def a11y_audit(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
         (n >= 1) & (F.element_at(levels, 1) > 1), 1
     ).otherwise(0)
     return pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_images.cast("int").alias("n_images"),
         n_missing_alt.cast("int").alias("n_missing_alt"),
         F.size(F.filter(levels, lambda v: v == 1)).cast("int")
@@ -456,7 +454,7 @@ def a11y_audit(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def third_party_census(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def third_party_census(pages: DataFrame) -> DataFrame:
     """Third-party dependency census (the WebCensus-style privacy /
     performance measurement): which OFF-SITE hosts does each site
     embed? Resources = script src + link href + img src/srcset
@@ -467,7 +465,7 @@ def third_party_census(pages: DataFrame, url_col: str = "url") -> DataFrame:
     report. Codegen extraction + one distinct + one partial-agg
     groupBy on the site-host-prefixed key."""
     page_host = F.lower(
-        F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/:]+)", 1)
+        F.regexp_extract(F.col("url"), r"^[a-z]+://([^/:]+)", 1)
     )
     html = F.col("html").cast("string")
     res = F.concat(
@@ -482,7 +480,7 @@ def third_party_census(pages: DataFrame, url_col: str = "url") -> DataFrame:
         ),
     )
     rows = pages.select(
-        F.col(url_col).alias("_page"),
+        F.col("url").alias("_page"),
         page_host.alias("site_host"),
         F.explode(res).alias("_r"),
     )
@@ -499,8 +497,7 @@ def third_party_census(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def broken_fragment_links(pages: DataFrame,
-                          id_col: str = "doc_id") -> DataFrame:
+def broken_fragment_links(pages: DataFrame) -> DataFrame:
     """Broken in-page fragment links: ``<a href="#x">`` with no
     matching ``id="x"`` (or legacy ``<a name="x">``) anywhere on the
     page — dead table-of-contents entries, the link-integrity bug
@@ -525,13 +522,13 @@ def broken_fragment_links(pages: DataFrame,
     )
     broken = F.array_except(F.array_distinct(frags), ids)
     return pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(frags).cast("int").alias("n_fragment_links"),
         F.size(broken).cast("int").alias("n_broken"),
     )
 
 
-def html_lang_attr(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def html_lang_attr(pages: DataFrame) -> DataFrame:
     """``<html lang>`` attribute relation: ``(id, lang_attr,
     lang_primary)`` — the document-level language DECLARATION, the
     third vertex of the language-consistency triangle next to the
@@ -547,13 +544,13 @@ def html_lang_attr(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
     )
     return pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         attr.alias("lang_attr"),
         F.split(attr, "-")[0].alias("lang_primary"),
     )
 
 
-def csp_directives(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def csp_directives(pages: DataFrame) -> DataFrame:
     """Content-Security-Policy directive relation from the meta
     http-equiv channel: ``(id, directive, source)`` — one row per
     (directive, source-expression) pair, the normalized form
@@ -563,20 +560,20 @@ def csp_directives(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     drift). Source-less directives (``upgrade-insecure-requests``)
     emit one row with source ''. Codegen: meta extraction + two-level
     split/explode, no Python, no shuffle."""
-    m = meta_tags(pages, id_col=id_col)
+    m = meta_tags(pages)
     pol = m.filter(
         F.col("key") == "content-security-policy"
-    ).select(id_col, F.explode(F.split("content", ";")).alias("_d"))
+    ).select("doc_id", F.explode(F.split("content", ";")).alias("_d"))
     toks = F.filter(
         F.split(F.trim("_d"), r"\s+"), lambda t: t != ""
     )
     return (
         pol.select(
-            id_col, toks.alias("_t")
+            "doc_id", toks.alias("_t")
         )
         .filter(F.size("_t") >= 1)
         .select(
-            id_col,
+            "doc_id",
             F.lower(F.element_at("_t", 1)).alias("directive"),
             F.explode(
                 F.when(
@@ -587,7 +584,7 @@ def csp_directives(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def form_census(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def form_census(pages: DataFrame) -> DataFrame:
     """FORM inventory per page: one row per ``<form>`` block —
     ``(id, form_idx, action, method, n_inputs, n_password, n_email,
     n_hidden, kind)`` with ``kind`` in {'login','search','newsletter',
@@ -606,7 +603,7 @@ def form_census(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Zero shuffle, zero Python; rows stay in their input partition.
     """
     forms = pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.regexp_extract_all(
                 F.col("html").cast("string"),
@@ -633,7 +630,7 @@ def form_census(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
     n_inputs = F.size(inputs)
     return forms.select(
-        id_col,
+        "doc_id",
         (F.col("_p") + 1).cast("int").alias("form_idx"),
         F.coalesce(_attr(head, "action"), F.lit("")).alias("action"),
         F.when(method == "", "get").otherwise(method).alias("method"),
@@ -648,7 +645,7 @@ def form_census(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def microdata_items(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def microdata_items(pages: DataFrame) -> DataFrame:
     """Schema.org MICRODATA extraction (the itemscope/itemprop channel
     — the third structured-data surface next to JSON-LD
     (jsonld_entities) and OpenGraph (meta_tags): older commerce and
@@ -671,7 +668,7 @@ def microdata_items(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
         h, F.lit(r"(?s)<[a-zA-Z][^>]*\bitemprop\s*=[^>]*>[^<]*"), 0
     )
     rows = pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         itemtype.alias("itemtype"),
         F.explode(props).alias("_e"),
     )
@@ -681,15 +678,14 @@ def microdata_items(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
     content = _attr(tag, "content")
     text = F.trim(F.regexp_extract(e, r">([^<]*)$", 1))
     return rows.select(
-        id_col,
+        "doc_id",
         "itemtype",
         prop.alias("prop"),
         F.when(content != "", content).otherwise(text).alias("value"),
     )
 
 
-def publish_dates(pages: DataFrame, id_col: str = "doc_id",
-                  url_col: str = "url") -> DataFrame:
+def publish_dates(pages: DataFrame) -> DataFrame:
     """Best-effort PUBLISH-DATE resolution per page with a declared
     precedence ladder — ``(id, pub_date, channel)``, channel in
     {'meta','jsonld','url'} or NULL when no signal exists:
@@ -708,7 +704,7 @@ def publish_dates(pages: DataFrame, id_col: str = "doc_id",
     make_date in codegen; zero shuffle, zero Python.
     """
     h = F.col("html").cast("string")
-    u = F.col(url_col)
+    u = F.col("url")
     m_tag = F.regexp_extract(
         h,
         r'<meta\s[^>]*property\s*=\s*["\x27]article:published_time'
@@ -730,11 +726,11 @@ def publish_dates(pages: DataFrame, id_col: str = "doc_id",
         .when(yr != "", "url")
     )
     return pages.select(
-        F.col(id_col), pub.alias("pub_date"), channel.alias("channel")
+        F.col("doc_id"), pub.alias("pub_date"), channel.alias("channel")
     )
 
 
-def pagination_audit(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def pagination_audit(pages: DataFrame) -> DataFrame:
     """``rel=next`` / ``rel=prev`` PAGINATION audit: per page —
     ``(url, next_url, prev_url, next_reciprocal, is_first, is_last)``
     with ``next_reciprocal = 1`` iff the declared next page declares
@@ -752,10 +748,10 @@ def pagination_audit(pages: DataFrame, url_col: str = "url") -> DataFrame:
     — at 10^12 pages both sides are url-bucketed, co-partitioned with
     every other url-keyed state table). No windows, no Python.
     """
-    links = link_tags(pages, id_col=url_col)
+    links = link_tags(pages, id_col="url")
     ptrs = (
         links.filter(F.col("rel").isin("next", "prev"))
-        .groupBy(url_col)
+        .groupBy("url")
         .agg(
             F.max(F.when(F.col("rel") == "next", F.col("href")))
             .alias("next_url"),
@@ -763,8 +759,8 @@ def pagination_audit(pages: DataFrame, url_col: str = "url") -> DataFrame:
             .alias("prev_url"),
         )
     )
-    base = pages.select(F.col(url_col).alias("url")).distinct().join(
-        ptrs.withColumnRenamed(url_col, "url"), "url", "left"
+    base = pages.select(F.col("url")).distinct().join(
+        ptrs, "url", "left"
     )
     nxt = base.select(
         F.col("url").alias("_nu"), F.col("prev_url").alias("_nprev")
@@ -785,7 +781,7 @@ def pagination_audit(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def amp_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def amp_pages(pages: DataFrame) -> DataFrame:
     """AMP variant detection and canonical pairing: ``(url, is_amp,
     amphtml_url, canonical_url, pair_url)`` — ``is_amp`` from the
     ``<html amp>`` / ``<html ⚡>`` attribute (the public AMP spec's
@@ -802,10 +798,10 @@ def amp_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
 
     Codegen: one html-tag attribute probe + the link_tags channel,
     zero shuffle beyond the per-page partial agg."""
-    tags = link_tags(pages, id_col=url_col)
+    tags = link_tags(pages, id_col="url")
     ptrs = (
         tags.filter(F.col("rel").isin("amphtml", "canonical"))
-        .groupBy(url_col)
+        .groupBy("url")
         .agg(
             F.max(F.when(F.col("rel") == "amphtml", F.col("href")))
             .alias("amphtml_url"),
@@ -820,8 +816,8 @@ def amp_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
         ) != "", 1
     ).otherwise(0)
     base = pages.select(
-        F.col(url_col).alias("url"), is_amp.cast("int").alias("is_amp")
-    ).join(ptrs.withColumnRenamed(url_col, "url"), "url", "left")
+        F.col("url"), is_amp.cast("int").alias("is_amp")
+    ).join(ptrs, "url", "left")
     return base.select(
         "url", "is_amp", "amphtml_url", "canonical_url",
         F.when(F.col("is_amp") == 1, F.col("canonical_url"))
@@ -829,10 +825,7 @@ def amp_pages(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def noindex_inlink_audit(pages: DataFrame, edges: DataFrame,
-                         url_col: str = "url",
-                         src_col: str = "src", dst_col: str = "dst",
-                         ) -> DataFrame:
+def noindex_inlink_audit(pages: DataFrame, edges: DataFrame) -> DataFrame:
     """NOINDEX-but-LINKED contradiction audit: ``(url, noindex,
     n_inlinks, wasted)`` — pages whose robots meta says noindex yet
     receive internal links. The two consumers: SEO (link equity
@@ -846,14 +839,14 @@ def noindex_inlink_audit(pages: DataFrame, edges: DataFrame,
     Shape: per-page codegen flags + ONE partial-agg in-degree groupBy
     on dst + a url-keyed left join — at 10^12 pages both sides are
     url-bucketed; no windows."""
-    flags = robots_meta_flags(pages, id_col=url_col)
-    indeg = edges.groupBy(F.col(dst_col).alias(url_col)).agg(
+    flags = robots_meta_flags(pages, id_col="url")
+    indeg = edges.groupBy(F.col("dst").alias("url")).agg(
         F.count("*").cast("bigint").alias("n_inlinks")
     )
     return (
-        flags.join(indeg, url_col, "left")
+        flags.join(indeg, "url", "left")
         .select(
-            url_col, "noindex",
+            "url", "noindex",
             F.coalesce("n_inlinks", F.lit(0)).cast("bigint")
             .alias("n_inlinks"),
             F.when(
@@ -864,8 +857,7 @@ def noindex_inlink_audit(pages: DataFrame, edges: DataFrame,
     )
 
 
-def title_duplication(pages: DataFrame, host_col: str = "host",
-                      title_col: str = "title") -> DataFrame:
+def title_duplication(pages: DataFrame) -> DataFrame:
     """Per-host DUPLICATE-TITLE clusters: ``(host, title, n_pages,
     is_dup)`` — the metadata-level template-farm signal (every page
     of a scraped site shares one boilerplate title) and the classic
@@ -876,7 +868,7 @@ def title_duplication(pages: DataFrame, host_col: str = "host",
     other host-bucketed rollup; no windows, no Python."""
     return (
         pages.groupBy(
-            F.col(host_col).alias("host"), F.col(title_col).alias("title")
+            F.col("host"), F.col("title")
         )
         .agg(F.count("*").cast("bigint").alias("n_pages"))
         .select(
@@ -887,8 +879,7 @@ def title_duplication(pages: DataFrame, host_col: str = "host",
     )
 
 
-def article_completeness(pages: DataFrame, id_col: str = "doc_id",
-                         url_col: str = "url") -> DataFrame:
+def article_completeness(pages: DataFrame) -> DataFrame:
     """ARTICLE-METADATA completeness card: ``(id, has_title,
     has_date, has_author, completeness)`` — unifies every structured-
     data channel this engine extracts: title from ``<title>`` or
@@ -921,30 +912,30 @@ def article_completeness(pages: DataFrame, id_col: str = "doc_id",
             h, r'itemprop\s*=\s*["\x27]?author', 0) != ""),
         1,
     ).otherwise(0)
-    dated = publish_dates(pages, id_col=id_col, url_col=url_col)
+    dated = publish_dates(pages)
     base = pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         has_title.cast("int").alias("has_title"),
         has_author.cast("int").alias("has_author"),
     )
     return (
-        base.join(dated.select(id_col, "channel"), id_col)
+        base.join(dated.select("doc_id", "channel"), "doc_id")
         .select(
-            id_col,
+            "doc_id",
             "has_title",
             F.when(F.col("channel").isNotNull(), 1).otherwise(0)
             .cast("int").alias("has_date"),
             "has_author",
         )
         .select(
-            id_col, "has_title", "has_date", "has_author",
+            "doc_id", "has_title", "has_date", "has_author",
             (F.col("has_title") + F.col("has_date") + F.col("has_author"))
             .cast("int").alias("completeness"),
         )
     )
 
 
-def page_roles(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def page_roles(pages: DataFrame) -> DataFrame:
     """Unified PAGE-ROLE taxonomy: ``(url, role)`` with role ∈
     {'redirect-shell', 'amp-variant', 'pagination-continuation',
     'noindex', 'content'} by declared precedence — the single label a
@@ -960,18 +951,18 @@ def page_roles(pages: DataFrame, url_col: str = "url") -> DataFrame:
     robots_meta_flags (q267). Each channel is codegen; the
     composition is three url-keyed left joins against per-page
     relations (url-bucketed co-location at scale), no windows."""
-    red = client_redirects(pages, id_col=url_col) \
-        .select(F.col(url_col).alias("url")).distinct() \
+    red = client_redirects(pages, id_col="url") \
+        .select(F.col("url")).distinct() \
         .withColumn("_redirect", F.lit(1))
-    amp = amp_pages(pages, url_col=url_col).select(
+    amp = amp_pages(pages).select(
         "url", F.col("is_amp").alias("_amp")
     )
-    pag = pagination_audit(pages, url_col=url_col) \
+    pag = pagination_audit(pages) \
         .select("url", F.col("is_first").alias("_first"))
-    rob = robots_meta_flags(pages, id_col=url_col) \
-        .select(F.col(url_col).alias("url"),
+    rob = robots_meta_flags(pages, id_col="url") \
+        .select(F.col("url"),
                 F.col("noindex").alias("_noindex"))
-    base = pages.select(F.col(url_col).alias("url")).distinct()
+    base = pages.select(F.col("url")).distinct()
     j = (
         base.join(red, "url", "left")
         .join(amp, "url", "left")
@@ -989,8 +980,7 @@ def page_roles(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def jsonld_article_body(pages: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def jsonld_article_body(pages: DataFrame) -> DataFrame:
     """JSON-LD ``articleBody`` as an extraction CROSS-CHECK channel:
     ``(id, has_articlebody, body_len, extracted_len,
     len_ratio_micros)`` — news publishers embed the full article
@@ -1012,13 +1002,13 @@ def jsonld_article_body(pages: DataFrame, id_col: str = "doc_id",
     body = F.regexp_extract(h, r'"articleBody"\s*:\s*"([^"]*)"', 1)
     has = F.when(body != "", 1).otherwise(0)
     staged = pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         has.cast("int").alias("has_articlebody"),
         F.length(body).cast("long").alias("_blen"),
-        F.length(F.col(text_col)).cast("long").alias("_elen"),
+        F.length(F.col("text")).cast("long").alias("_elen"),
     )
     return staged.select(
-        id_col,
+        "doc_id",
         "has_articlebody",
         F.when(F.col("has_articlebody") == 1, F.col("_blen"))
         .cast("int").alias("body_len"),
@@ -1030,8 +1020,7 @@ def jsonld_article_body(pages: DataFrame, id_col: str = "doc_id",
     )
 
 
-def social_profile_links(pages: DataFrame,
-                         id_col: str = "doc_id") -> DataFrame:
+def social_profile_links(pages: DataFrame) -> DataFrame:
     """SOCIAL/DEVELOPER profile-link extraction: ``(id, platform,
     handle)`` for GitHub, X/Twitter, LinkedIn and Mastodon
     (``@user@host``) references — the author-identity channel next
@@ -1068,7 +1057,7 @@ def social_profile_links(pages: DataFrame,
     chans = [("github", gh), ("x", tw), ("linkedin", li),
              ("mastodon", ma)]
     rows = pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.flatten(
                 F.array(*[
@@ -1084,11 +1073,10 @@ def social_profile_links(pages: DataFrame,
             )
         ).alias("_e"),
     )
-    return rows.select(id_col, "_e.platform", "_e.handle").distinct()
+    return rows.select("doc_id", "_e.platform", "_e.handle").distinct()
 
 
-def semantic_region_census(pages: DataFrame,
-                           id_col: str = "doc_id") -> DataFrame:
+def semantic_region_census(pages: DataFrame) -> DataFrame:
     """HTML5 SEMANTIC-REGION census: ``(id, has_main, has_article,
     n_articles, has_nav, has_aside, has_header, has_footer,
     extraction_tier)`` — whether the page declares the regions that
@@ -1115,7 +1103,7 @@ def semantic_region_census(pages: DataFrame,
         .otherwise("heuristic")
     )
     return pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(n_main > 0, 1).otherwise(0).cast("int").alias("has_main"),
         F.when(n_article > 0, 1).otherwise(0).cast("int")
         .alias("has_article"),
@@ -1131,7 +1119,7 @@ def semantic_region_census(pages: DataFrame,
     )
 
 
-def hidden_text_audit(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def hidden_text_audit(pages: DataFrame) -> DataFrame:
     """HIDDEN-TEXT audit: ``(id, n_hidden_elements, n_hidden_chars,
     cloaking_suspect)`` — elements carrying inline
     ``display:none`` / ``visibility:hidden`` / ``font-size:0``
@@ -1158,7 +1146,7 @@ def hidden_text_audit(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
         hits, F.lit(0), lambda acc, s: acc + F.length(F.trim(s))
     )
     return pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_el.cast("int").alias("n_hidden_elements"),
         n_chars.cast("int").alias("n_hidden_chars"),
         F.when(n_chars >= 200, 1).otherwise(0).cast("int")

@@ -39,19 +39,17 @@ def hash_bucket_micros(col, salt: str = ""):
     )
 
 
-def mixture_sample(df: DataFrame, rates: DataFrame,
-                   key_col: str = "doc_id",
-                   group_col: str = "source") -> DataFrame:
+def mixture_sample(df: DataFrame, rates: DataFrame) -> DataFrame:
     """Keep each row iff hash_bucket(key) < its group's rate_micros.
 
-    ``rates`` is a small (group_col, rate_micros) dimension — broadcast
+    ``rates`` is a small (source, rate_micros) dimension — broadcast
     so the filter stays a narrow op over the scan. Adds ``rate_micros``
     and ``sample_weight`` (1e6 / rate, the inverse-probability weight a
     training loop uses to de-bias the mix) to the surviving rows.
     """
-    bucket = hash_bucket_micros(F.col(key_col))
+    bucket = hash_bucket_micros(F.col("doc_id"))
     return (
-        df.join(F.broadcast(rates), group_col)
+        df.join(F.broadcast(rates), "source")
         .filter(bucket < F.col("rate_micros"))
         .withColumn(
             "sample_weight", F.lit(float(MICROS)) / F.col("rate_micros")
@@ -60,8 +58,7 @@ def mixture_sample(df: DataFrame, rates: DataFrame,
 
 
 def token_budget_rates(domain_tokens: DataFrame, weights: DataFrame,
-                       budget: int,
-                       group_col: str = "source") -> DataFrame:
+                       budget: int) -> DataFrame:
     """Turn a target mixture (per-group weights) + a global token budget
     into per-group keep-rates, with one water-filling redistribution
     round for groups too small to supply their share.
@@ -87,12 +84,12 @@ def token_budget_rates(domain_tokens: DataFrame, weights: DataFrame,
     round-trip and the heavy corpus never reshuffles — apply the
     resulting rates with ``mixture_sample``.
     """
-    j = domain_tokens.join(weights, group_col)
+    j = domain_tokens.join(weights, "source")
     tot = j.agg(F.sum("weight_micros").cast("long").alias("w_total"))
     # exact integer floor-div (``div``), not float ``/`` + floor —
     # budget*weight exceeds 2^53 at real budgets and doubles round
     r1 = j.crossJoin(F.broadcast(tot)).select(
-        group_col, "n_tokens", "weight_micros",
+        "source", "n_tokens", "weight_micros",
         F.expr(f"(CAST({int(budget)} AS BIGINT) * weight_micros)"
                " div w_total").alias("desired1"),
     )
@@ -113,7 +110,7 @@ def token_budget_rates(domain_tokens: DataFrame, weights: DataFrame,
         ).alias("w_uncapped"),
     )
     r2 = r1.crossJoin(F.broadcast(pool)).select(
-        group_col, "n_tokens",
+        "source", "n_tokens",
         F.when(
             F.col("desired1") >= F.col("n_tokens"), F.col("desired1")
         ).otherwise(
@@ -125,7 +122,7 @@ def token_budget_rates(domain_tokens: DataFrame, weights: DataFrame,
         ).alias("desired_tokens"),
     )
     return r2.select(
-        group_col, "n_tokens", "desired_tokens",
+        "source", "n_tokens", "desired_tokens",
         F.least("desired_tokens", "n_tokens").alias("kept_tokens"),
         F.when(
             F.col("n_tokens") > 0,
@@ -135,8 +132,7 @@ def token_budget_rates(domain_tokens: DataFrame, weights: DataFrame,
     )
 
 
-def split_assign(df: DataFrame, key_col: str = "doc_id",
-                 salt: str = "split",
+def split_assign(df: DataFrame, salt: str = "split",
                  train_micros: int = 980_000,
                  val_micros: int = 10_000) -> DataFrame:
     """Deterministic train/val/test assignment: md5-bucket the stable
@@ -153,7 +149,7 @@ def split_assign(df: DataFrame, key_col: str = "doc_id",
     remains above train+val, so the three fractions always partition
     the corpus exactly.
     """
-    bucket = hash_bucket_micros(F.col(key_col), salt=salt)
+    bucket = hash_bucket_micros(F.col("doc_id"), salt=salt)
     return df.withColumn("split_bucket", bucket).withColumn(
         "split",
         F.when(F.col("split_bucket") < train_micros, F.lit("train"))
@@ -167,7 +163,6 @@ def priority_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    key_col: str = "doc_id",
     salt: str = "prio",
 ) -> DataFrame:
     """Priority sampling (Duffield, Lund & Thorup, JACM 2007): a
@@ -201,7 +196,7 @@ def priority_sample(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    u = (hash_bucket_micros(F.col(key_col), salt=salt) + 1).alias(
+    u = (hash_bucket_micros(F.col("doc_id"), salt=salt) + 1).alias(
         "u_micros"
     )
     with_pri = df.withColumn("u_micros", u).withColumn(
@@ -210,7 +205,7 @@ def priority_sample(
         .cast("long"),
     )
     topk1 = with_pri.orderBy(
-        F.desc("priority"), F.asc(key_col)
+        F.desc("priority"), F.asc("doc_id")
     ).limit(k + 1)
     tau = topk1.agg(
         F.when(F.count("*") > k, F.min("priority"))
@@ -219,7 +214,7 @@ def priority_sample(
         .alias("tau")
     )
     return (
-        topk1.orderBy(F.desc("priority"), F.asc(key_col))
+        topk1.orderBy(F.desc("priority"), F.asc("doc_id"))
         .limit(k)
         .crossJoin(F.broadcast(tau))
         .withColumn(
@@ -235,7 +230,6 @@ def priority_sample(
 def stratified_topk_sample(
     df: DataFrame,
     stratum_col: str = "lang",
-    id_col: str = "doc_id",
     k: int = 10,
 ) -> DataFrame:
     """EXACT-k per-stratum sample, deterministic: rank documents inside
@@ -253,8 +247,8 @@ def stratified_topk_sample(
     """
     from pyspark.sql import Window
 
-    rk = F.md5(F.col(id_col).cast("string").cast("binary"))
-    w = Window.partitionBy(stratum_col).orderBy(rk.asc(), F.col(id_col))
+    rk = F.md5(F.col("doc_id").cast("string").cast("binary"))
+    w = Window.partitionBy(stratum_col).orderBy(rk.asc(), F.col("doc_id"))
     return (
         df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
@@ -262,9 +256,7 @@ def stratified_topk_sample(
     )
 
 
-def sqrt_temperature_rates(domain_tokens: DataFrame,
-                           group_col: str = "source",
-                           token_col: str = "n_tokens") -> DataFrame:
+def sqrt_temperature_rates(domain_tokens: DataFrame) -> DataFrame:
     """Temperature-scaled mixture rates at T = 2 (α = 1/2): each
     group's sampling share ∝ √(token count) — the standard multilingual
     rebalance (mBERT/XLM-R exponent-smooth corpus sizes so
@@ -281,23 +273,21 @@ def sqrt_temperature_rates(domain_tokens: DataFrame,
     here ever touches corpus rows.
     """
     scaled = domain_tokens.select(
-        F.col(group_col),
-        F.col(token_col).cast("long").alias("n_tokens"),
-        F.floor(F.sqrt(F.col(token_col).cast("double") * 1e6))
+        F.col("source"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.floor(F.sqrt(F.col("n_tokens").cast("double") * 1e6))
         .cast("long").alias("sqrt_scale"),
     )
     tot = scaled.agg(
         F.sum("sqrt_scale").cast("long").alias("_tot")
     )
     return scaled.crossJoin(F.broadcast(tot)).select(
-        group_col, "n_tokens", "sqrt_scale",
+        "source", "n_tokens", "sqrt_scale",
         F.expr("sqrt_scale * 1000000L div _tot").alias("rate_micros"),
     )
 
 
-def frequency_subsample(docs: DataFrame, t_micros: int = 1000,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def frequency_subsample(docs: DataFrame, t_micros: int = 1000) -> DataFrame:
     """word2vec-style frequent-word subsampling report (Mikolov et al.
     2013): occurrences of word w are kept with probability
     √(t / f(w)) where f is corpus frequency — the downsampling that
@@ -324,8 +314,8 @@ def frequency_subsample(docs: DataFrame, t_micros: int = 1000,
     from .dsir import _words
 
     toks = docs.select(
-        F.col(id_col).alias("_doc"),
-        F.posexplode(_words(F.col(text_col))).alias("pos", "w"),
+        F.col("doc_id").alias("_doc"),
+        F.posexplode(_words(F.col("text"))).alias("pos", "w"),
     )
     cf = toks.groupBy("w").agg(
         F.count("*").cast("bigint").alias("cf")
@@ -372,7 +362,6 @@ def frequency_subsample(docs: DataFrame, t_micros: int = 1000,
 def shard_assign(
     df: DataFrame,
     n_shards: int = 16,
-    key_col: str = "doc_id",
     weight_col: str | None = None,
 ) -> DataFrame:
     """Per-shard layout report for a deterministic hash-sharded write:
@@ -394,7 +383,7 @@ def shard_assign(
          else F.lit(1)).cast("long")
     shard = (
         F.conv(
-            F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
         ).cast("long")
         % n_shards
     )
@@ -426,8 +415,6 @@ def ipf_raking(
     row_targets: DataFrame,
     col_targets: DataFrame,
     iters: int = 2,
-    row_col: str = "row_key",
-    col_col: str = "col_key",
 ) -> DataFrame:
     """(row_key, col_key, n, weight_micros): iterative proportional
     fitting (raking) of a contingency table toward target marginals —
@@ -469,21 +456,21 @@ def ipf_raking(
         F.sum(F.col("n").cast("long")).alias("_tot")
     )
     w = counts.crossJoin(F.broadcast(tot)).select(
-        F.col(row_col).alias("row_key"),
-        F.col(col_col).alias("col_key"),
+        F.col("row_key"),
+        F.col("col_key"),
         F.col("n").cast("long").alias("n"),
         F.expr("cast(n as bigint) * 1000000L div _tot").alias("n_micros"),
         F.lit(1_000_000).cast("long").alias("weight_micros"),
     )
     rt = F.broadcast(
         row_targets.select(
-            F.col(row_col).alias("row_key"),
+            F.col("row_key"),
             F.col("target_micros").cast("long").alias("_rt"),
         )
     )
     ct = F.broadcast(
         col_targets.select(
-            F.col(col_col).alias("col_key"),
+            F.col("col_key"),
             F.col("target_micros").cast("long").alias("_ct"),
         )
     )

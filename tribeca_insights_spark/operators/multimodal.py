@@ -56,9 +56,7 @@ def _fake_meta(payload: bytes):
     return fmt, 64 + h[1] % 192, 64 + h[2] % 192
 
 
-def media_metadata(media: DataFrame, id_col: str = "media_id",
-                   payload_col: str = "payload",
-                   deterministic_fake: bool = True) -> DataFrame:
+def media_metadata(media: DataFrame, deterministic_fake: bool = True) -> DataFrame:
     """binary payload table → typed metadata via mapInPandas.
 
     Format and dimensions come from real header parsing; payloads the
@@ -78,7 +76,7 @@ def media_metadata(media: DataFrame, id_col: str = "media_id",
                 "format_guess": [], "width": [], "height": [],
                 "is_sniffed": [],
             }
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 b = bytes(payload) if payload is not None else b""
                 s = sniff_image(b)
                 if s is not None:
@@ -111,8 +109,7 @@ AV_META_SCHEMA = StructType(
 )
 
 
-def av_metadata(media: DataFrame, id_col: str = "media_id",
-                payload_col: str = "payload") -> DataFrame:
+def av_metadata(media: DataFrame) -> DataFrame:
     """Audio/video payload table → typed metadata via mapInPandas, with
     REAL container parsing (mediax: WAV fmt/data chunks, MP3 frame
     headers, MP4 mvhd boxes). Unrecognized payloads → ('unknown', NULLs);
@@ -125,7 +122,7 @@ def av_metadata(media: DataFrame, id_col: str = "media_id",
                 "media_id": [], "n_bytes": [], "container": [],
                 "duration_ms": [], "sample_rate": [], "channels": [],
             }
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 b = bytes(payload) if payload is not None else b""
                 s = sniff_av(b)
                 cont, dur, rate, ch = s if s is not None else (
@@ -160,7 +157,7 @@ from pyspark.sql.functions import pandas_udf as _pandas_udf
 dhash_udf = _pandas_udf(_dhash_batch, StringType())
 
 
-def image_dhash(media: DataFrame, payload_col: str = "payload") -> DataFrame:
+def image_dhash(media: DataFrame) -> DataFrame:
     """(…, payload binary) → (…, dhash string): 64-bit perceptual
     difference hash per image (imagex.dhash64_hex — REAL decode +
     downscale, not a stub), NULL for undecodable payloads. Near-dup
@@ -168,7 +165,7 @@ def image_dhash(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     (operators/dedup.py pigeonhole banding — ≤ k differing bits ⇒ one of
     k+1 bands matches exactly) and equi-join on (band_idx, band_bits);
     never all-pairs."""
-    return media.withColumn("dhash", dhash_udf(_F.col(payload_col)))
+    return media.withColumn("dhash", dhash_udf(_F.col("payload")))
 
 
 def make_mp4_udf(duration_col, n_chunks_col, base_col, co64_col):
@@ -196,9 +193,7 @@ def make_mp4_udf(duration_col, n_chunks_col, base_col, co64_col):
     return _build(duration_col, n_chunks_col, base_col, co64_col)
 
 
-def frame_sample_anchors(media: DataFrame, every_n: int = 2,
-                         id_col: str = "media_id",
-                         payload_col: str = "payload") -> DataFrame:
+def frame_sample_anchors(media: DataFrame, every_n: int = 2) -> DataFrame:
     """Video frame-sample anchors as a DataFrame op: one row per
     sampled chunk ``(id, frame_idx, chunk_offset)`` — the byte
     positions a production frame sampler range-reads (decoding the
@@ -231,20 +226,19 @@ def frame_sample_anchors(media: DataFrame, every_n: int = 2,
 
     return (
         media.select(
-            F.col(id_col),
-            F.posexplode(_anchors(F.col(payload_col)))
+            F.col("media_id"),
+            F.posexplode(_anchors(F.col("payload")))
             .alias("frame_idx", "chunk_offset"),
         )
         .select(
-            id_col,
+            "media_id",
             F.col("frame_idx").cast("int").alias("frame_idx"),
             F.col("chunk_offset").cast("bigint").alias("chunk_offset"),
         )
     )
 
 
-def inline_image_dhash(docs: DataFrame,
-                       id_col: str = "doc_id") -> DataFrame:
+def inline_image_dhash(docs: DataFrame) -> DataFrame:
     """Inline ``data:`` URI images, end to end: extracted by the
     responsive-image inventory (operators/meta.image_sources),
     base64-decoded ENTIRELY JVM-side (unbase64 in codegen — the bytes
@@ -261,7 +255,7 @@ def inline_image_dhash(docs: DataFrame,
 
     from .meta import image_sources
 
-    imgs = image_sources(docs, id_col=id_col)
+    imgs = image_sources(docs)
     src = F.col("effective_src")
     payload = F.unbase64(
         F.regexp_extract(src, r"^data:[^;]*;base64,(.*)$", 1)
@@ -269,16 +263,14 @@ def inline_image_dhash(docs: DataFrame,
     return (
         imgs.filter(src.startswith("data:"))
         .select(
-            id_col, "img_idx",
+            "doc_id", "img_idx",
             F.regexp_extract(src, r"^data:([^;,]*)", 1).alias("mime"),
             dhash_udf(payload).alias("dhash64"),
         )
     )
 
 
-def mime_sniff_mismatch(docs, id_col: str = "doc_id",
-                        declared_col: str = "content_type",
-                        payload_col: str = "payload"):
+def mime_sniff_mismatch(docs):
     """DECLARED-vs-SNIFFED MIME audit: ``(id, declared, sniffed,
     mismatch)`` — the content-smuggling / broken-origin check every
     archive pipeline runs on WARC payloads (q289 carries the
@@ -296,7 +288,7 @@ def mime_sniff_mismatch(docs, id_col: str = "doc_id",
     Zero Python, zero shuffle."""
     from pyspark.sql import functions as F
 
-    p = F.col(payload_col)
+    p = F.col("payload")
     hx = F.upper(F.hex(F.substring(p, 1, 12)))
     # regexp strip, not ltrim: leading newlines/tabs count as markup
     # whitespace and ltrim only removes spaces
@@ -321,7 +313,7 @@ def mime_sniff_mismatch(docs, id_col: str = "doc_id",
         .otherwise("application/octet-stream")
     )
     declared = F.lower(
-        F.trim(F.regexp_extract(F.col(declared_col), r"^([^;]+)", 1))
+        F.trim(F.regexp_extract(F.col("content_type"), r"^([^;]+)", 1))
     )
     # markup is a sniff CLASS, not one type: a leading '<' cannot
     # distinguish html from xml/svg/rss/atom/xhtml, so any declared
@@ -332,7 +324,7 @@ def mime_sniff_mismatch(docs, id_col: str = "doc_id",
                                 "image/svg+xml")
     decl_markup = declared.contains("html") | declared.contains("xml")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         declared.alias("declared"),
         sniffed.alias("sniffed"),
         F.when(

@@ -41,9 +41,9 @@ def _make_pdf_batch(text: pd.Series, compress: pd.Series) -> pd.Series:
 make_pdf_udf = pandas_udf(_make_pdf_batch, returnType=BinaryType())
 
 
-def extract_pdf_pages(docs: DataFrame, pdf_col: str = "pdf") -> DataFrame:
+def extract_pdf_pages(docs: DataFrame) -> DataFrame:
     """(…, pdf binary) → (…, pdf_text string)."""
-    return docs.withColumn("pdf_text", pdf_text_udf(F.col(pdf_col)))
+    return docs.withColumn("pdf_text", pdf_text_udf(F.col("pdf")))
 
 
 def _pdf_layout_batch(pdf: pd.Series) -> pd.Series:
@@ -55,13 +55,12 @@ def _pdf_layout_batch(pdf: pd.Series) -> pd.Series:
 pdf_layout_udf = pandas_udf(_pdf_layout_batch, returnType=StringType())
 
 
-def extract_pdf_layout_pages(docs: DataFrame,
-                             pdf_col: str = "pdf") -> DataFrame:
+def extract_pdf_layout_pages(docs: DataFrame) -> DataFrame:
     """(…, pdf binary) → (…, pdf_layout_text string): column-major
     reading order recovered from Tm/Td/TD/T* positions (htmlx/pdfx.py
     extract_pdf_text_layout) — multi-column pages read left column
     top-down first, regardless of content-stream emission order."""
-    return docs.withColumn("pdf_layout_text", pdf_layout_udf(F.col(pdf_col)))
+    return docs.withColumn("pdf_layout_text", pdf_layout_udf(F.col("pdf")))
 
 
 def _make_pdf_columns_batch(col1: pd.Series, col2: pd.Series,

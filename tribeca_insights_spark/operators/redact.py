@@ -34,17 +34,16 @@ IPV4_TOKEN = "<IP>"
 PHONE_TOKEN = "<PHONE>"
 
 
-def redact_pii(df: DataFrame, text_col: str = "text",
-               out_col: str = "redacted_text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Mask emails / IPv4s / phone numbers; count each on the raw text.
 
-    Adds four columns: ``out_col`` (the masked text, replacements applied
+    Adds four columns: ``redacted_text`` (the masked text, replacements applied
     email → ip → phone) and ``n_emails`` / ``n_ips`` / ``n_phones``
     (match counts on the ORIGINAL text, so the counts are independent of
     replacement order). Counts are ints, the masked text is a pure
     function of the input — both engines of an oracle pair agree exactly.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     masked = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(t, EMAIL_RE, EMAIL_TOKEN),
@@ -54,7 +53,7 @@ def redact_pii(df: DataFrame, text_col: str = "text",
     )
     return df.withColumns(
         {
-            out_col: masked,
+            "redacted_text": masked,
             "n_emails": F.size(F.regexp_extract_all(t, F.lit(EMAIL_RE), 0)),
             "n_ips": F.size(F.regexp_extract_all(t, F.lit(IPV4_RE), 0)),
             "n_phones": F.size(F.regexp_extract_all(t, F.lit(PHONE_RE), 0)),
@@ -62,8 +61,7 @@ def redact_pii(df: DataFrame, text_col: str = "text",
     )
 
 
-def pii_density(df: DataFrame, group_col: str = "source",
-                text_col: str = "text") -> DataFrame:
+def pii_density(df: DataFrame) -> DataFrame:
     """Per-group PII density report over :func:`redact_pii`'s counts:
     (group, n_docs, n_docs_with_pii, n_emails, n_ips, n_phones,
     pii_per_mchar) — matches per MILLION characters, the unit release
@@ -75,8 +73,8 @@ def pii_density(df: DataFrame, group_col: str = "source",
     codegen scan; the rollup is group-sized. All-integer output
     (density = 1e6·total_matches div total_chars).
     """
-    counted = redact_pii(df, text_col=text_col)
-    agg = counted.groupBy(group_col).agg(
+    counted = redact_pii(df)
+    agg = counted.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(
             (
@@ -87,10 +85,10 @@ def pii_density(df: DataFrame, group_col: str = "source",
         F.sum("n_emails").cast("bigint").alias("n_emails"),
         F.sum("n_ips").cast("bigint").alias("n_ips"),
         F.sum("n_phones").cast("bigint").alias("n_phones"),
-        F.sum(F.length(text_col)).cast("bigint").alias("_chars"),
+        F.sum(F.length("text")).cast("bigint").alias("_chars"),
     )
     return agg.select(
-        group_col, "n_docs", "n_docs_with_pii",
+        "source", "n_docs", "n_docs_with_pii",
         "n_emails", "n_ips", "n_phones",
         F.expr(
             "(n_emails + n_ips + n_phones) * 1000000L div _chars"
@@ -98,8 +96,7 @@ def pii_density(df: DataFrame, group_col: str = "source",
     )
 
 
-def pii_pseudonyms(df: DataFrame, salt: str, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def pii_pseudonyms(df: DataFrame, salt: str) -> DataFrame:
     """Keyed PII pseudonymization relation: every detected email
     becomes a stable salted-hash pseudonym ``(id, kind, pseudonym)``
     — the privacy-pipeline upgrade over plain redaction (q71): the
@@ -112,15 +109,15 @@ def pii_pseudonyms(df: DataFrame, salt: str, text_col: str = "text",
     sha2 in codegen; one explode of per-doc matches. Pair with
     ``redact_pii`` on the text itself — this relation carries the
     linkage the redacted text loses."""
-    t = F.col(text_col).cast("string")
+    t = F.col("text").cast("string")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(t, F.lit(EMAIL_RE), 0)
         ).alias("_m"),
     ).select(
-        id_col,
+        "doc_id",
         F.lit("email").alias("kind"),
         F.sha2(F.concat(F.lit(salt), F.lower(F.col("_m"))), 256)
         .alias("pseudonym"),
-    ).dropDuplicates([id_col, "kind", "pseudonym"])
+    ).dropDuplicates(["doc_id", "kind", "pseudonym"])

@@ -43,8 +43,6 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     topk: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, score_micros, n_terms_hit, dl): top-``topk`` documents
     by Okapi BM25 against ``query_terms``, whitespace tokenization.
@@ -59,8 +57,8 @@ def bm25_topk(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    toks = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
-    base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
+    toks = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
+    base = docs.select(F.col("doc_id"), toks.alias("_t"))
 
     # 1-row corpus stats; broadcast onto the hit stream
     totals = base.select(F.size("_t").cast("long").alias("dl")).agg(
@@ -115,12 +113,7 @@ def bm25_topk(
     ).limit(topk)
 
 
-def inverted_index(
-    docs: DataFrame,
-    block_size: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def inverted_index(docs: DataFrame, block_size: int = 100) -> DataFrame:
     """(term, block, df_block, postings, gaps): blocked inverted index
     with gap-encoded posting lists — the search-index build step.
 
@@ -140,10 +133,10 @@ def inverted_index(
     """
     if block_size <= 0:
         raise ValueError("block_size must be positive")
-    toks = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
+    toks = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
     hits = (
         docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
+            F.col("doc_id").cast("long").alias("doc_id"),
             F.explode(toks).alias("term"),
         )
         .distinct()
@@ -170,11 +163,7 @@ def inverted_index(
         gaps.alias("gaps"),
     )
 
-def positional_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def positional_postings(docs: DataFrame) -> DataFrame:
     """(term, doc_id, pos) positional posting rows — the index form
     phrase and proximity queries need (inverted_index's doc-level
     postings can only answer bag-of-words queries).
@@ -183,19 +172,14 @@ def positional_postings(
     parallel, zero shuffle — materialize it partitioned/bucketed by
     ``term`` and every downstream phrase join is co-located.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
+    toks = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(toks).alias("pos", "term"),
     ).select("term", "doc_id", "pos")
 
 
-def phrase_search(
-    docs: DataFrame,
-    phrase: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def phrase_search(docs: DataFrame, phrase: str) -> DataFrame:
     """Exact phrase matching via positional-posting self-joins — the
     classic search-engine phrase plan (Manning IR §2.4): the i-th
     phrase term's postings join the first term's on
@@ -215,7 +199,7 @@ def phrase_search(
     terms = [t for t in phrase.split(" ") if t]
     if not terms:
         raise ValueError("phrase must contain at least one term")
-    post = positional_postings(docs, id_col, text_col)
+    post = positional_postings(docs)
     hits = post.filter(F.col("term") == terms[0]).select(
         "doc_id", F.col("pos").alias("p0")
     )
@@ -230,13 +214,7 @@ def phrase_search(
     )
 
 
-def ranking_metrics(
-    ranked: DataFrame,
-    k: int = 10,
-    query_col: str = "query_id",
-    rank_col: str = "rank",
-    rel_col: str = "rel",
-) -> DataFrame:
+def ranking_metrics(ranked: DataFrame, k: int = 10) -> DataFrame:
     """Per-query ranking quality — MRR, precision@k, nDCG@k — over any
     (query, rank, relevance) table (BM25 q114, hybrid rerank, ANN
     q184's recall companion). The offline-eval primitive next to
@@ -262,9 +240,9 @@ def ranking_metrics(
     from pyspark.sql import Window
 
     r = ranked.select(
-        F.col(query_col).alias("q"),
-        F.col(rank_col).cast("int").alias("rank"),
-        F.col(rel_col).cast("bigint").alias("rel"),
+        F.col("query_id").alias("q"),
+        F.col("rank").cast("int").alias("rank"),
+        F.col("rel").cast("bigint").alias("rel"),
     )
     gain = F.col("rel").cast("double") / F.log(F.col("rank") + 1)
     base = r.groupBy("q").agg(
@@ -329,7 +307,6 @@ def bm25f_topk(
     fields: dict[str, tuple[float, float]] | None = None,
     k1: float = 1.2,
     topk: int = 20,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """BM25F fielded ranking (Robertson & Zaragoza's simple-BM25F —
     the web-search standard where a title hit outweighs a body hit
@@ -365,7 +342,7 @@ def bm25f_topk(
         toks = F.filter(F.split(F.coalesce(F.col(col), F.lit("")),
                                 " "),
                         lambda w: F.length(w) > 0)
-        base = docs.select(F.col(id_col).alias("doc_id"),
+        base = docs.select(F.col("doc_id"),
                            toks.alias("_t"))
         len_parts.append(base.select(
             F.lit(col).alias("field"),

@@ -51,8 +51,6 @@ def semdedup(
     k=8,
     iters: int = 2,
     tau: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, cid, keep, n_dup_smaller, max_cos_micros): SemDeDup over
     an embedding table. ``keep`` is false iff a same-cluster vector with
@@ -72,8 +70,7 @@ def semdedup(
         raise TypeError(f"semdedup: k must be an int or 'auto', got {k!r}")
     if k == "auto":
         k = max(8, emb.count() // 256)
-    base, cents = kmeans_fit(emb, k=int(k), iters=iters, id_col=id_col,
-                             vec_col=vec_col)
+    base, cents = kmeans_fit(emb, k=int(k), iters=iters)
     # the assignment feeds three consumers (both join sides + the final
     # report) — persist so training runs once; at 10^12 rows this is
     # "write the assignment to a cid-bucketed table", after which the

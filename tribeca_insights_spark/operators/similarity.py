@@ -28,22 +28,20 @@ def cosine_col(a, b):
     return dot / (na * nb)
 
 
-def ann_bruteforce_topk(emb: DataFrame, query_ids, k: int = 5,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+def ann_bruteforce_topk(emb: DataFrame, query_ids, k: int = 5) -> DataFrame:
     """(query_id, neighbor_id, rank, sim): exact top-k by cosine for the
     given query ids (self excluded). Broadcast the (small) query side —
     the corpus side streams, no shuffle of the big table."""
-    base = emb.select(F.col(id_col), _dbl(F.col(vec_col)).alias("v"))
-    q = base.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
+    base = emb.select(F.col("vec_id"), _dbl(F.col("embedding")).alias("v"))
+    q = base.filter(F.col("vec_id").isin(list(query_ids))).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     pairs = base.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = pairs.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_col(F.col("qv"), F.col("v")), 4).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -64,24 +62,22 @@ def sign_lsh_bucket(vec_col, bits: int = 8):
     return b
 
 
-def ann_bucketed_topk(emb: DataFrame, query_ids, k: int = 3, bits: int = 8,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+def ann_bucketed_topk(emb: DataFrame, query_ids, k: int = 3, bits: int = 8) -> DataFrame:
     """Approximate top-k: candidates share the query's sign-LSH bucket.
     Bucket equi-join — scales as Σ bucket², not n²."""
     base = emb.select(
-        F.col(id_col),
-        _dbl(F.col(vec_col)).alias("v"),
+        F.col("vec_id"),
+        _dbl(F.col("embedding")).alias("v"),
     ).withColumn("bucket", sign_lsh_bucket(F.col("v"), bits))
-    q = base.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), "bucket"
+    q = base.filter(F.col("vec_id").isin(list(query_ids))).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket"
     )
     cands = base.join(F.broadcast(q), "bucket").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cands.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_col(F.col("qv"), F.col("v")), 4).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -92,8 +88,7 @@ def ann_bucketed_topk(emb: DataFrame, query_ids, k: int = 3, bits: int = 8,
 
 
 def ann_ivf_topk(emb: DataFrame, query_ids, k: int = 5, n_cells: int = 16,
-                 n_probe: int = 3, seed: int = 42, sample_fraction: float = 1.0,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                 n_probe: int = 3, seed: int = 42, sample_fraction: float = 1.0) -> DataFrame:
     """IVF-style ANN: MLlib KMeans coarse quantizer → inverted cells.
 
     Index: fit K centroids (on a sample at scale), assign every vector to
@@ -106,7 +101,7 @@ def ann_ivf_topk(emb: DataFrame, query_ids, k: int = 5, n_cells: int = 16,
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    base = emb.select(F.col(id_col), _dbl(F.col(vec_col)).alias("v"))
+    base = emb.select(F.col("vec_id"), _dbl(F.col("embedding")).alias("v"))
     fit_on = base if sample_fraction >= 1.0 else base.sample(
         fraction=sample_fraction, seed=seed
     )
@@ -123,8 +118,8 @@ def ann_ivf_topk(emb: DataFrame, query_ids, k: int = 5, n_cells: int = 16,
         model.transform(base.withColumn("feat", array_to_vector("v")))
         .drop("feat")
     )
-    q = assigned.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
+    q = assigned.filter(F.col("vec_id").isin(list(query_ids))).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     # multi-probe: n_probe nearest centroids per query (tiny cross join:
     # |queries| × K, both broadcast-scale)
@@ -139,11 +134,11 @@ def ann_ivf_topk(emb: DataFrame, query_ids, k: int = 5, n_cells: int = 16,
         .select("query_id", "qv", "cell")
     )
     cands = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cands.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_col(F.col("qv"), F.col("v")), 4).alias("sim"),
     ).dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -154,8 +149,7 @@ def ann_ivf_topk(emb: DataFrame, query_ids, k: int = 5, n_cells: int = 16,
 
 
 def ann_ivf_grid_topk(emb: DataFrame, query_ids, k: int = 5, bits: int = 4,
-                      hamming: int = 1, id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+                      hamming: int = 1) -> DataFrame:
     """IVF ANN with a closed-form coarse quantizer — the driver-checkable
     twin of :func:`ann_ivf_topk`.
 
@@ -174,10 +168,10 @@ def ann_ivf_grid_topk(emb: DataFrame, query_ids, k: int = 5, bits: int = 4,
             "you want more bits or the KMeans IVF, not a wider probe)"
         )
     base = emb.select(
-        F.col(id_col), _dbl(F.col(vec_col)).alias("v")
+        F.col("vec_id"), _dbl(F.col("embedding")).alias("v")
     ).withColumn("cell", sign_lsh_bucket(F.col("v"), bits).cast("int"))
-    q = base.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), "cell"
+    q = base.filter(F.col("vec_id").isin(list(query_ids))).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell"
     )
     masks = [0]
     if hamming >= 1:
@@ -195,11 +189,11 @@ def ann_ivf_grid_topk(emb: DataFrame, query_ids, k: int = 5, bits: int = 4,
         ).alias("cell"),
     )
     cands = base.join(F.broadcast(probes), "cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cands.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_col(F.col("qv"), F.col("v")), 4).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -210,8 +204,7 @@ def ann_ivf_grid_topk(emb: DataFrame, query_ids, k: int = 5, bits: int = 4,
 
 
 def embedding_near_dup_pairs_lsh(emb: DataFrame, threshold: float = 0.95,
-                                 bits: int = 8, id_col: str = "vec_id",
-                                 vec_col: str = "embedding") -> DataFrame:
+                                 bits: int = 8) -> DataFrame:
     """(a_id, b_id, sim ≥ threshold): embedding near-dup detection at
     corpus scale — candidates come from a sign-LSH bucket EQUI-JOIN
     (Σ bucket² work, never n²), then exact cosine verify + threshold.
@@ -223,11 +216,11 @@ def embedding_near_dup_pairs_lsh(emb: DataFrame, threshold: float = 0.95,
     same trade as MinHash bands. This is the 10^12-row path; the bounded
     cross-join verifier below is for candidate lists only."""
     base = emb.select(
-        F.col(id_col), _dbl(F.col(vec_col)).alias("v")
+        F.col("vec_id"), _dbl(F.col("embedding")).alias("v")
     ).withColumn("bucket", sign_lsh_bucket(F.col("v"), bits))
-    a = base.select(F.col(id_col).alias("a_id"), F.col("v").alias("va"),
+    a = base.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va"),
                     "bucket")
-    b = base.select(F.col(id_col).alias("b_id"), F.col("v").alias("vb"),
+    b = base.select(F.col("vec_id").alias("b_id"), F.col("v").alias("vb"),
                     "bucket")
     return (
         a.join(b, "bucket")
@@ -242,8 +235,6 @@ def embedding_near_dup_pairs_lsh(emb: DataFrame, threshold: float = 0.95,
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                              max_left_id: int | None = None,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              vectorized: bool = True) -> DataFrame:
     """(a_id, b_id, sim ≥ threshold): embedding-cosine near-dup VERIFIER.
     Bounded left side keeps the pair space tractable; at corpus scale use
@@ -259,11 +250,11 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     paths emit IDENTICAL rows (rounding semantics stay Spark's, and
     borderline pairs are never lost to float noise). The expression path
     (``vectorized=False``) remains as the engine-pure reference."""
-    base = emb.select(F.col(id_col), _dbl(F.col(vec_col)).alias("v"))
-    left = base if max_left_id is None else base.filter(F.col(id_col) < max_left_id)
+    base = emb.select(F.col("vec_id"), _dbl(F.col("embedding")).alias("v"))
+    left = base if max_left_id is None else base.filter(F.col("vec_id") < max_left_id)
     if not vectorized:
-        a = left.select(F.col(id_col).alias("a_id"), F.col("v").alias("va"))
-        b = base.select(F.col(id_col).alias("b_id"), F.col("v").alias("vb"))
+        a = left.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va"))
+        b = base.select(F.col("vec_id").alias("b_id"), F.col("v").alias("vb"))
         return (
             a.crossJoin(b)
             .filter(F.col("a_id") < F.col("b_id"))
@@ -305,7 +296,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
             })
 
     cand = base.select(
-        F.col(id_col).alias("_bid"), "v"
+        F.col("vec_id").alias("_bid"), "v"
     ).mapInPandas(score, schema="a_id long, b_id long, sim_raw double")
     return (
         cand.select(
@@ -314,9 +305,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     )
 
 
-def ann_recall_eval(truth: DataFrame, approx: DataFrame, k: int,
-                    query_col: str = "query_id",
-                    neighbor_col: str = "neighbor_id") -> DataFrame:
+def ann_recall_eval(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
     """Recall@k of an approximate neighbor search against exact
     ground truth: per query, how many of the true top-k the ANN path
     returned — the acceptance gate every IVF/LSH deployment runs on a
@@ -331,14 +320,14 @@ def ann_recall_eval(truth: DataFrame, approx: DataFrame, k: int,
     Shape: one equi-join on (query, neighbor) + a query-sized agg —
     both inputs are already top-k tables (query-count × k rows).
     """
-    t = truth.select(F.col(query_col), F.col(neighbor_col))
-    a = approx.select(F.col(query_col), F.col(neighbor_col))
-    hits = t.join(a, [query_col, neighbor_col]).groupBy(query_col).agg(
+    t = truth.select(F.col("query_id"), F.col("neighbor_id"))
+    a = approx.select(F.col("query_id"), F.col("neighbor_id"))
+    hits = t.join(a, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
         F.count("*").cast("bigint").alias("n_hits")
     )
-    qlist = t.select(query_col).distinct()
-    return qlist.join(hits, query_col, "left").select(
-        query_col,
+    qlist = t.select("query_id").distinct()
+    return qlist.join(hits, "query_id", "left").select(
+        "query_id",
         F.coalesce("n_hits", F.lit(0).cast("bigint")).alias("n_hits"),
         F.expr(f"coalesce(n_hits, 0L) * 1000000L div {k}L")
         .alias("recall_micros"),
@@ -349,8 +338,6 @@ def tfidf_cosine_pairs(
     docs: DataFrame,
     cos_threshold_micros: int = 500_000,
     df_cap_ppm: int = 100_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """EXACT sparse tf-idf cosine similarity self-join — (a_id, b_id,
     dot, cos_micros) for every pair with cosine >= threshold — without
@@ -376,15 +363,15 @@ def tfidf_cosine_pairs(
     window, no collect, never corpus².
     """
     toks = docs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), " ", -1),
+            F.filter(F.split(F.lower(F.col("text")), " ", -1),
                      lambda w: F.length(w) > 0)
         ).alias("term"),
     )
     tf = toks.groupBy("_id", "term").agg(F.count("*").alias("tf"))
     n_docs = docs.select(
-        F.countDistinct(F.col(id_col)).alias("_n")
+        F.countDistinct(F.col("doc_id")).alias("_n")
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     kept = (
@@ -435,8 +422,6 @@ def semantic_decontaminate(
     bench: DataFrame,
     threshold: float = 0.99,
     bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(train_id, bench_id, sim): training documents whose embedding is
     near-identical to a BENCHMARK document — the semantic complement of
@@ -455,14 +440,14 @@ def semantic_decontaminate(
     q24/q55 oracles pin).
     """
     tb = train.select(
-        F.col(id_col).alias("train_id"),
-        F.col(vec_col).alias("_vt"),
-        sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
+        F.col("vec_id").alias("train_id"),
+        F.col("embedding").alias("_vt"),
+        sign_lsh_bucket(F.col("embedding"), bits).alias("bucket"),
     )
     bb = bench.select(
-        F.col(id_col).alias("bench_id"),
-        F.col(vec_col).alias("_vb"),
-        sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
+        F.col("vec_id").alias("bench_id"),
+        F.col("embedding").alias("_vb"),
+        sign_lsh_bucket(F.col("embedding"), bits).alias("bucket"),
     )
     hits = (
         tb.join(bb, "bucket")
@@ -483,11 +468,7 @@ def semantic_decontaminate(
     )
 
 
-def embedding_moments(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    quant: int = 1000,
-) -> DataFrame:
+def embedding_moments(emb: DataFrame, quant: int = 1000) -> DataFrame:
     """Exact corpus mean + covariance of the embedding matrix, as one
     (dim_i, dim_j) row per upper-triangle pair — the sufficient
     statistics behind embedding whitening / PCA projection that
@@ -555,7 +536,7 @@ def embedding_moments(
                 }
             )
 
-    parts = emb.select(F.col(vec_col).alias("_v")).mapInPandas(
+    parts = emb.select(F.col("embedding").alias("_v")).mapInPandas(
         _partials, schema=schema
     )
     tot = parts.groupBy("i", "j").agg(
@@ -578,8 +559,6 @@ def jl_random_projection(
     emb: DataFrame,
     out_dim: int = 16,
     quant: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection of the embedding matrix
     to ``out_dim`` dimensions with a DETERMINISTIC ±1 sign matrix
@@ -662,14 +641,13 @@ def jl_random_projection(
             )
 
     return emb.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(vec_col).alias("_v"),
+        F.col("vec_id").cast("long").alias("_id"),
+        F.col("embedding").alias("_v"),
     ).mapInPandas(_project, schema=schema)
 
 def embedding_drift(
     emb: DataFrame,
     batch_col: str,
-    vec_col: str = "embedding",
     quant: int = 1000,
     top_dims: int = 5,
 ) -> DataFrame:
@@ -725,7 +703,7 @@ def embedding_drift(
 
     parts = emb.select(
         F.col(batch_col).cast("string").alias("_b"),
-        F.col(vec_col).alias("_v"),
+        F.col("embedding").alias("_v"),
     ).mapInPandas(_partials, schema=schema)
     sums = parts.groupBy("batch", "dim").agg(
         F.sum("n").alias("n"), F.sum("sx").alias("sx")
@@ -782,8 +760,6 @@ def embedding_drift(
 
 def embedding_quality_audit(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     quant: int = 1000,
     norm_bin_width: int = 1_000_000,
 ) -> DataFrame:
@@ -800,7 +776,7 @@ def embedding_quality_audit(
     corpus-level counts repeated (n_vectors, n_nonfinite, n_zero) —
     value-determined bins, exact integers, strict-oracle-safe.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     xm = F.transform(
         v, lambda x: F.floor(x.cast("double") * quant).cast("long")
     )
@@ -844,8 +820,7 @@ def embedding_quality_audit(
     )
 
 
-def int8_quantization_audit(embs: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding") -> DataFrame:
+def int8_quantization_audit(embs: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization with reconstruction-error
     audit — the compression every serving-scale vector index applies
     (FAISS SQ8 / scalar quantization), and the error report that
@@ -864,7 +839,7 @@ def int8_quantization_audit(embs: DataFrame, id_col: str = "vec_id",
     doubles, and floor(x + 0.5) half-rounding is engine-independent —
     so the micros columns hash-match. Pure array codegen; zero
     shuffle, zero Python."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     scale = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
     q = F.transform(
         v,
@@ -884,7 +859,7 @@ def int8_quantization_audit(embs: DataFrame, id_col: str = "vec_id",
     zero = F.lit(0).cast("bigint")
     is_zero = scale == 0.0
     return embs.select(
-        F.col(id_col),
+        F.col("vec_id"),
         dim.cast("int").alias("dim"),
         F.when(is_zero, zero)
         .otherwise(F.floor(F.lit(1e6) * scale)).cast("bigint")

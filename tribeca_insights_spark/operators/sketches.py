@@ -93,8 +93,18 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
 
 def hll_estimate(sketch: DataFrame, p: int = 6) -> DataFrame:
     """One row (m, n_registers_hit, harmonic_hi, harmonic_lo,
-    estimate_micros): the raw HLL estimate alpha_m · m² / Σ 2^(-rho_j)
-    with empty registers contributing 2^0.
+    estimate_micros): the raw HLL estimate of a (register, max_rho)
+    sketch table (see :func:`_hll_reduce`)."""
+    return _hll_reduce(sketch, p, (), "estimate_micros").select(
+        F.lit(1 << p).cast("long").alias("m"), "*"
+    )
+
+
+def _hll_reduce(sketch: DataFrame, p: int, keys, out: str) -> DataFrame:
+    """``keys`` + (n_registers_hit, harmonic_hi, harmonic_lo, ``out``)
+    per group of a (``keys``, register, max_rho) sketch table: the raw
+    HLL estimate alpha_m · m² / Σ 2^(-rho_j) with empty registers
+    contributing 2^0. No keys reduces the whole table to one row.
 
     The harmonic sum is kept EXACT in units of 2^-61 as a 96-bit value
     split across two BIGINTs (Σ can reach m·2^60 > int64):
@@ -108,11 +118,10 @@ def hll_estimate(sketch: DataFrame, p: int = 6) -> DataFrame:
     as such (both engines apply none, so parity is exact).
     """
     m = 1 << p
-    alpha = _alpha(m)
     # python-API shiftleft wants a literal bit count; the SQL form
     # takes a column exponent
-    agg = sketch.agg(
-        F.count("*").cast("long").alias("n_hit"),
+    agg = sketch.groupBy(*keys).agg(
+        F.count("*").cast("long").alias("n_registers_hit"),
         F.sum(
             F.expr(
                 "CASE WHEN max_rho <= 29 THEN"
@@ -131,16 +140,16 @@ def hll_estimate(sketch: DataFrame, p: int = 6) -> DataFrame:
     denom = (
         F.col("harmonic_hi").cast("double") * F.lit(float(1 << 32))
         + F.col("harmonic_lo").cast("double")
-        + (F.lit(m) - F.col("n_hit")).cast("double")
+        + (F.lit(m) - F.col("n_registers_hit")).cast("double")
         * F.lit(float(1 << 61))
     )
     return agg.select(
-        F.lit(m).cast("long").alias("m"),
-        F.col("n_hit").alias("n_registers_hit"),
+        *keys,
+        "n_registers_hit",
         "harmonic_hi",
         "harmonic_lo",
-        F.floor(F.lit(1e6 * alpha * m * m * float(1 << 61)) / denom)
-        .cast("long").alias("estimate_micros"),
+        F.floor(F.lit(1e6 * _alpha(m) * m * m * float(1 << 61)) / denom)
+        .cast("long").alias(out),
     )
 
 
@@ -183,7 +192,7 @@ def cms_build(df: DataFrame, key_col: str, depth: int = 4,
 
 
 def cms_point_estimates(cms: DataFrame, probes: DataFrame,
-                        key_col: str = "key", depth: int = 4,
+                        depth: int = 4,
                         width: int = 64) -> DataFrame:
     """(key, est_count): count-min point queries — min over each row's
     counter at the key's column. The probe set is a dim (broadcast);
@@ -191,10 +200,10 @@ def cms_point_estimates(cms: DataFrame, probes: DataFrame,
     probe key whose cells were never incremented estimates 0 (absent
     cells are zero by construction)."""
     cells = F.array(*[
-        _cms_col(F.col(key_col), r, width) for r in range(depth)
+        _cms_col(F.col("key"), r, width) for r in range(depth)
     ])
     want = probes.select(
-        F.col(key_col).alias("key"), F.posexplode(cells).alias("row", "col")
+        F.col("key"), F.posexplode(cells).alias("row", "col")
     ).select("key", F.col("row").cast("long").alias("row"), "col")
     hit = want.join(cms, ["row", "col"], "left").select(
         "key", F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("c")

@@ -76,9 +76,6 @@ def grouped_ols(
 def decayed_activity(
     events: DataFrame,
     anchor_date,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_micros_col: str = "value_micros",
     half_life_days: int = 1,
 ) -> DataFrame:
     """Exponentially time-decayed activity score per key:
@@ -99,7 +96,7 @@ def decayed_activity(
     """
     age = F.greatest(
         F.datediff(F.lit(anchor_date).cast("date"),
-                   F.to_date(F.col(ts_col))),
+                   F.to_date(F.col("ts"))),
         F.lit(0),
     )
     k = F.least(
@@ -108,9 +105,9 @@ def decayed_activity(
     # div by 2^k == arithmetic right shift: exact, no float anywhere
     # (call_function: the F.shiftright wrapper only takes literal bits)
     per_row = F.call_function(
-        "shiftright", F.col(value_micros_col).cast("bigint"), k
+        "shiftright", F.col("value_micros").cast("bigint"), k
     )
-    return events.groupBy(key_col).agg(
+    return events.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("n_events"),
         F.sum(per_row).cast("bigint").alias("decayed_micros"),
     )
@@ -180,7 +177,6 @@ def robust_outliers_mad(
     df: DataFrame,
     value_col: str,
     group_col: str,
-    id_col: str = "doc_id",
     z_threshold: float = 3.5,
 ) -> DataFrame:
     """Per-group robust outlier detection via the median / MAD z-score
@@ -229,7 +225,7 @@ def robust_outliers_mad(
     )
     return (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.col(group_col).alias("grp"),
             v.alias("x"),
         )
@@ -632,8 +628,7 @@ def table_profile(
     return out
 
 
-def kleinberg_bursts(events: DataFrame, term_col: str = "term",
-                     t_col: str = "t", s: float = 2.0,
+def kleinberg_bursts(events: DataFrame, s: float = 2.0,
                      gamma_micros: int = 2_000_000) -> DataFrame:
     """Kleinberg 2-state burst detection (Kleinberg KDD 2002, the
     batched/enumerating variant) over per-window event counts — the
@@ -680,15 +675,15 @@ def kleinberg_bursts(events: DataFrame, term_col: str = "term",
     sd = float(s)
     costs = events.sparkSession.sql(
         f"""
-        WITH nt AS (SELECT {t_col} AS _t, count(*) AS _N
-                    FROM {{ev}} GROUP BY {t_col}),
-        ntt AS (SELECT {term_col} AS _tm, {t_col} AS _t, count(*) AS _n
-                FROM {{ev}} GROUP BY {term_col}, {t_col}),
-        tt AS (SELECT {term_col} AS _tm, CAST(count(*) AS BIGINT)
+        WITH nt AS (SELECT t AS _t, count(*) AS _N
+                    FROM {{ev}} GROUP BY t),
+        ntt AS (SELECT term AS _tm, t AS _t, count(*) AS _n
+                FROM {{ev}} GROUP BY term, t),
+        tt AS (SELECT term AS _tm, CAST(count(*) AS BIGINT)
                         AS _n_tot
-               FROM {{ev}} GROUP BY {term_col}),
+               FROM {{ev}} GROUP BY term),
         gg AS (SELECT CAST(count(*) AS BIGINT) AS _N_tot FROM {{ev}})
-        SELECT tt._tm AS {term_col}, nt._t AS {t_col},
+        SELECT tt._tm AS term, nt._t AS t,
                CAST(coalesce(ntt._n, 0) AS BIGINT) AS n,
                CAST(-floor(1e6 * (coalesce(ntt._n, 0)
                     * ln(CAST(tt._n_tot AS DOUBLE) / gg._N_tot)
@@ -712,7 +707,7 @@ def kleinberg_bursts(events: DataFrame, term_col: str = "term",
     gamma = int(gamma_micros)
 
     def _viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(t_col).reset_index(drop=True)
+        pdf = pdf.sort_values("t").reset_index(drop=True)
         c0 = [int(x) for x in pdf["_c0"]]
         c1 = [int(x) for x in pdf["_c1"]]
         w = len(c0)
@@ -731,16 +726,14 @@ def kleinberg_bursts(events: DataFrame, term_col: str = "term",
         ]
         return pd.DataFrame(
             {
-                term_col: pdf[term_col],
-                t_col: pdf[t_col],
+                "term": pdf["term"],
+                "t": pdf["t"],
                 "n": pdf["n"],
                 "burst": burst,
             }
         )
 
-    out_schema = (
-        f"{term_col} string, {t_col} bigint, n bigint, burst int"
-    )
-    return costs.groupBy(costs[term_col]).applyInPandas(
+    out_schema = "term string, t bigint, n bigint, burst int"
+    return costs.groupBy(costs["term"]).applyInPandas(
         _viterbi, out_schema
     )

@@ -75,8 +75,7 @@ def table_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def table_column_profile(rows: DataFrame,
-                         id_col: str = "doc_id") -> DataFrame:
+def table_column_profile(rows: DataFrame) -> DataFrame:
     """WebTables-style column profiling (Cafarella et al., VLDB 2008
     §4 — the attribute statistics that make a web-table corpus
     queryable): over :func:`table_rows` output, per (doc, table,
@@ -91,7 +90,7 @@ def table_column_profile(rows: DataFrame,
     so profiling co-locates with the extraction output.
     """
     cells = rows.select(
-        id_col, "table_idx", "row_idx",
+        "doc_id", "table_idx", "row_idx",
         F.posexplode("cells").alias("col_idx", "_cell"),
     )
     c = F.trim(F.col("_cell"))
@@ -102,22 +101,22 @@ def table_column_profile(rows: DataFrame,
         .otherwise(F.lit("string"))
     )
     data = cells.filter(F.col("row_idx") > 0).select(
-        id_col, "table_idx", "col_idx", typ.alias("_t")
+        "doc_id", "table_idx", "col_idx", typ.alias("_t")
     )
-    per_type = data.groupBy(id_col, "table_idx", "col_idx", "_t").agg(
+    per_type = data.groupBy("doc_id", "table_idx", "col_idx", "_t").agg(
         F.count("*").alias("_n")
     )
-    best = per_type.groupBy(id_col, "table_idx", "col_idx").agg(
+    best = per_type.groupBy("doc_id", "table_idx", "col_idx").agg(
         F.max(F.struct(F.col("_n"), F.col("_t"))).alias("_b"),
         F.sum("_n").cast("bigint").alias("n_values"),
     )
     headers = cells.filter(F.col("row_idx") == 0).select(
-        id_col, "table_idx", "col_idx", F.col("_cell").alias("header")
+        "doc_id", "table_idx", "col_idx", F.col("_cell").alias("header")
     )
     return (
-        best.join(headers, [id_col, "table_idx", "col_idx"], "left")
+        best.join(headers, ["doc_id", "table_idx", "col_idx"], "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("table_idx").cast("int").alias("table_idx"),
             F.col("col_idx").cast("int").alias("col_idx"),
             F.coalesce("header", F.lit("")).alias("header"),

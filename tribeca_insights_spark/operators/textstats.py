@@ -33,14 +33,13 @@ def _ws_words(text_col):
     return F.filter(F.split(text_col, " ", -1), lambda w: F.length(w) > 0)
 
 
-def lang_guess(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def lang_guess(df: DataFrame) -> DataFrame:
     """(id, lang_guess, best_score): argmax of marker-word hits per language,
     ties broken by language code ascending ('none' when zero hits)."""
     words = df.select(
-        F.col(id_col), F.explode(_ws_words(F.lower(F.col(text_col)))).alias("w")
+        F.col("doc_id"), F.explode(_ws_words(F.lower(F.col("text")))).alias("w")
     )
-    scores = words.groupBy(id_col).agg(
+    scores = words.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.col("w").isin(*LANG_MARKERS[lang]), 1).otherwise(0)
@@ -57,30 +56,29 @@ def lang_guess(df: DataFrame, id_col: str = "doc_id",
         .when(a["lg"] < b["lg"], -1).when(a["lg"] > b["lg"], 1).otherwise(0)
     )[0]
     return scores.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(best["s"] > 0, best["lg"]).otherwise(F.lit("none")).alias("lang_guess"),
         best["s"].cast("bigint").alias("best_score"),
     )
 
 
-def quality_scores(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """(id, n_chars, n_words, n_distinct_words, type_token_ratio,
     stopword_ratio, mean_word_len, quality_ok) — standard pre-training
     quality gates (C4-style thresholds, closed-form)."""
     words = df.select(
-        F.col(id_col),
-        F.length(text_col).alias("n_chars"),
-        F.explode(_ws_words(F.lower(F.col(text_col)))).alias("w"),
+        F.col("doc_id"),
+        F.length("text").alias("n_chars"),
+        F.explode(_ws_words(F.lower(F.col("text")))).alias("w"),
     )
-    agg = words.groupBy(id_col, "n_chars").agg(
+    agg = words.groupBy("doc_id", "n_chars").agg(
         F.count("*").alias("n_words"),
         F.countDistinct("w").alias("n_distinct_words"),
         F.sum(F.when(F.col("w").isin(*_QUALITY_STOPS), 1).otherwise(0)).alias("n_stop"),
         F.sum(F.length("w")).alias("sum_len"),
     )
     return agg.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_chars",
         "n_words",
         "n_distinct_words",
@@ -100,37 +98,35 @@ def quality_scores(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def token_counts(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """(id, n_chars, n_ws_tokens, n_word_tokens): raw char count, whitespace
     chunks, and letter-run tokens (the BPE-ish pre-token count — letter runs
     approximate merge input units)."""
-    ws = _ws_words(F.col(text_col))
+    ws = _ws_words(F.col("text"))
     # letter runs via the same keep-class split as the tokenizer
     runs = F.filter(
-        F.split(F.col(text_col), "[^A-Za-zÀ-ÿ]+", -1), lambda w: F.length(w) > 0
+        F.split(F.col("text"), "[^A-Za-zÀ-ÿ]+", -1), lambda w: F.length(w) > 0
     )
     return df.select(
-        F.col(id_col),
-        F.length(text_col).alias("n_chars"),
+        F.col("doc_id"),
+        F.length("text").alias("n_chars"),
         F.size(ws).alias("n_ws_tokens"),
         F.size(runs).alias("n_word_tokens"),
     )
 
 
-def gopher_quality_flags(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """Gopher-style quality rules (Rae et al. 2021 §A1.1, closed-form
     subset): word-count window, mean-word-length window, symbol-to-word
     ratio, fraction of words with an alphabetic char, ellipsis-line
     fraction. Each rule a boolean column + the conjunction — filters stay
     inspectable instead of one opaque gate."""
-    ws = _ws_words(F.col(text_col))
+    ws = _ws_words(F.col("text"))
     words = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(ws).alias("w"),
     )
-    per_word = words.groupBy(id_col).agg(
+    per_word = words.groupBy("doc_id").agg(
         F.count("*").alias("n_words"),
         F.round(F.avg(F.length("w")), 4).alias("mean_word_len"),
         F.sum(
@@ -141,13 +137,13 @@ def gopher_quality_flags(df: DataFrame, id_col: str = "doc_id",
         ),
     )
     lines = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.col(text_col), "\n", -1),
+            F.filter(F.split(F.col("text"), "\n", -1),
                      lambda l: F.length(l) > 0)
         ).alias("line"),
     )
-    per_line = lines.groupBy(id_col).agg(
+    per_line = lines.groupBy("doc_id").agg(
         F.count("*").alias("n_lines"),
         F.sum(
             F.when(F.col("line").endswith("..."), 1)
@@ -155,11 +151,11 @@ def gopher_quality_flags(df: DataFrame, id_col: str = "doc_id",
             .otherwise(0)
         ).alias("n_ellipsis_lines"),
     )
-    j = per_word.join(per_line, id_col, "left").na.fill(
+    j = per_word.join(per_line, "doc_id", "left").na.fill(
         {"n_lines": 1, "n_ellipsis_lines": 0}
     )
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_words",
         "mean_word_len",
         F.round(F.col("n_alpha_words") / F.col("n_words").cast("double"), 4).alias(
@@ -192,33 +188,32 @@ def gopher_quality_flags(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def repetition_stats(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Repetition signals (C4/Gopher family): duplicate-line fraction and
     top-bigram fraction — boilerplate and listicle/spam detectors. All
     native: per-doc line/bigram frequency tables collapse before any join
     back, so the doc text is scanned once."""
     lines = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.col(text_col), "\n", -1),
+            F.filter(F.split(F.col("text"), "\n", -1),
                      lambda l: F.length(F.trim(l)) > 0)
         ).alias("line"),
     )
     line_stats = (
-        lines.groupBy(id_col, "line")
+        lines.groupBy("doc_id", "line")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_lines"),
             F.sum(F.col("c") - 1).alias("n_dup_lines"),
         )
     )
     toks = df.select(
-        F.col(id_col), _ws_words(F.lower(F.col(text_col))).alias("ws")
+        F.col("doc_id"), _ws_words(F.lower(F.col("text"))).alias("ws")
     )
     bigrams = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.zip_with(
                 F.slice(F.col("ws"), 1, F.greatest(F.size("ws") - 1, F.lit(0))),
@@ -228,14 +223,14 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
         ).alias("bg"),
     )
     bg_stats = (
-        bigrams.groupBy(id_col, "bg")
+        bigrams.groupBy("doc_id", "bg")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("c").alias("n_bigrams"), F.max("c").alias("top_bigram_c"))
     )
-    j = line_stats.join(bg_stats, id_col, "full")
+    j = line_stats.join(bg_stats, "doc_id", "full")
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
         F.round(
             F.coalesce(F.col("n_dup_lines") / F.col("n_lines").cast("double"),
@@ -251,31 +246,28 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def fingerprints(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", k: int = 16) -> DataFrame:
+def fingerprints(df: DataFrame, k: int = 16) -> DataFrame:
     """(id, content_md5, min_gram_hash): full-content hash plus the minimum
     md5 over character k-grams of the lowercased text — a 1-hash minhash
     usable as a cheap near-dup fingerprint (winnowing-lite)."""
-    norm = df.select(F.col(id_col), F.lower(F.col(text_col)).alias("s"))
+    norm = df.select(F.col("doc_id"), F.lower(F.col("text")).alias("s"))
     grams = norm.select(
-        F.col(id_col), "s",
+        F.col("doc_id"), "s",
         F.explode(
             F.sequence(F.lit(1), F.greatest(F.length("s") - (k - 1), F.lit(1)))
         ).alias("i"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(F.encode(F.substring(F.col("s"), F.col("i"), k), "UTF-8")).alias("gh"),
     )
-    mins = grams.groupBy(id_col).agg(F.min("gh").alias("min_gram_hash"))
+    mins = grams.groupBy("doc_id").agg(F.min("gh").alias("min_gram_hash"))
     full = norm.select(
-        F.col(id_col), F.md5(F.encode(F.col("s"), "UTF-8")).alias("content_md5")
+        F.col("doc_id"), F.md5(F.encode(F.col("s"), "UTF-8")).alias("content_md5")
     )
-    return full.join(mins, id_col)
+    return full.join(mins, "doc_id")
 
 
-def domain_stats(df: DataFrame, group_col: str = "source",
-                 id_col: str = "doc_id", text_col: str = "text",
-                 lang_col: str = "lang") -> DataFrame:
+def domain_stats(df: DataFrame) -> DataFrame:
     """Per-domain corpus report card: (group, n_docs, n_langs,
     total_word_tokens, n_dup_docs, avg_chars).
 
@@ -290,23 +282,23 @@ def domain_stats(df: DataFrame, group_col: str = "source",
     keys keep the window state fixed-width.
     """
     per_doc = df.select(
-        F.col(group_col), F.col(id_col), F.col(lang_col),
-        F.length(text_col).cast("long").alias("n_chars"),
+        F.col("source"), F.col("doc_id"), F.col("lang"),
+        F.length("text").cast("long").alias("n_chars"),
         F.size(
             F.filter(
-                F.split(F.col(text_col), "[^A-Za-zÀ-ÿ]+", -1),
+                F.split(F.col("text"), "[^A-Za-zÀ-ÿ]+", -1),
                 lambda w: F.length(w) > 0,
             )
         ).cast("long").alias("n_word_tokens"),
-        F.md5(F.col(text_col)).alias("h"),
+        F.md5(F.col("text")).alias("h"),
     )
     w = Window.partitionBy("h")
     flagged = per_doc.withColumn(
         "is_dup", (F.count("*").over(w) > 1).cast("int")
     )
-    return flagged.groupBy(group_col).agg(
+    return flagged.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.countDistinct(lang_col).cast("long").alias("n_langs"),
+        F.countDistinct("lang").cast("long").alias("n_langs"),
         F.sum("n_word_tokens").cast("long").alias("total_word_tokens"),
         F.sum("is_dup").cast("long").alias("n_dup_docs"),
         F.round(F.sum("n_chars") / F.count("*").cast("double"), 4).alias(
@@ -315,9 +307,7 @@ def domain_stats(df: DataFrame, group_col: str = "source",
     )
 
 
-def length_percentiles(df: DataFrame, group_col: str = "lang",
-                       value_col: str = "n_chars",
-                       percentiles=(0.5, 0.9, 0.99),
+def length_percentiles(df: DataFrame, percentiles=(0.5, 0.9, 0.99),
                        approx: bool = False,
                        accuracy: int = 10_000) -> DataFrame:
     """Per-group length distribution: (group, n_docs, p50, p90, p99).
@@ -340,7 +330,7 @@ def length_percentiles(df: DataFrame, group_col: str = "lang",
     order statistics near each cut. Same output schema either way;
     sketch-vs-exact agreement at sf0.01 is pinned in tests.
     """
-    col = F.col(value_col)
+    col = F.col("n_chars")
     if approx:
         pct = F.percentile_approx(
             col, F.array(*[F.lit(p) for p in percentiles]), F.lit(accuracy)
@@ -348,7 +338,7 @@ def length_percentiles(df: DataFrame, group_col: str = "lang",
     else:
         pct = F.percentile(col, F.lit(list(percentiles)))
     names = [f"p{int(p * 100)}" for p in percentiles]
-    return df.groupBy(group_col).agg(
+    return df.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),
         *[
             F.round(pct[i].cast("double"), 4).alias(names[i])
@@ -367,8 +357,7 @@ MOJIBAKE_SEQS = (
 )
 
 
-def encoding_quality(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def encoding_quality(df: DataFrame) -> DataFrame:
     """Per-document text-encoding quality signals — the curation gate that
     catches pages mangled upstream of extraction (wrong charset decode,
     double-encoded UTF-8, replacement-char damage). The reference inherits
@@ -387,7 +376,7 @@ def encoding_quality(df: DataFrame, id_col: str = "doc_id",
     zero shuffle); fixed-literal counting keeps the metric engine-portable
     and oracle-checkable, unlike locale-dependent regex classes.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     n_chars = F.length(c)
     n_repl = n_chars - F.length(F.replace(c, F.lit("�"), F.lit("")))
     moji = None
@@ -401,7 +390,7 @@ def encoding_quality(df: DataFrame, id_col: str = "doc_id",
         F.regexp_replace(c, r"[^\x00-\x7F]", "")
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.cast("int").alias("n_chars"),
         n_repl.cast("int").alias("n_replacement"),
         moji.cast("int").alias("mojibake_hits"),
@@ -415,8 +404,7 @@ def encoding_quality(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def reading_ease(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def reading_ease(df: DataFrame) -> DataFrame:
     """Flesch reading-ease per document — the readability gate
     education-quality corpus filters (FineWeb-Edu-style) threshold on.
     Deterministic proxy syllable model: one syllable per vowel GROUP
@@ -430,7 +418,7 @@ def reading_ease(df: DataFrame, id_col: str = "doc_id",
     zero shuffle); vowel-group and sentence counting use replace-length
     arithmetic shapes both Java regex and RE2 evaluate identically.
     """
-    t = F.lower(F.col(text_col))
+    t = F.lower(F.col("text"))
     words = F.size(F.split(F.trim(t), r"\s+"))
     words = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(words)
     syl = F.regexp_count(t, F.lit(r"[aeiouy]+"))
@@ -444,7 +432,7 @@ def reading_ease(df: DataFrame, id_col: str = "doc_id",
         - F.lit(84.6) * (syl.cast("double") / w)
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.cast("int").alias("n_words"),
         syl.cast("int").alias("n_syllables"),
         sents.cast("int").alias("n_sentences"),
@@ -454,8 +442,6 @@ def reading_ease(df: DataFrame, id_col: str = "doc_id",
 
 def curation_verdict(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_words: int = 5,
     max_words: int = 100_000,
     min_alpha_ratio: float = 0.6,
@@ -482,7 +468,7 @@ def curation_verdict(
     reasons are a comma-joined fixed-order string so the verdict is
     engine-portable and hash-comparable.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     words = F.when(
         F.length(F.trim(t)) == 0, F.lit(0)
@@ -515,7 +501,7 @@ def curation_verdict(
         *[F.when(cond, F.lit(name)) for name, cond in gates],
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.cast("int").alias("n_words"),
         alpha_ratio.alias("alpha_ratio"),
         (reasons == "").alias("keep"),
@@ -523,8 +509,7 @@ def curation_verdict(
     )
 
 
-def script_profile(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def script_profile(df: DataFrame) -> DataFrame:
     """Per-document Unicode script mix — the multilingual-curation signal
     lang_guess (n-gram heuristic) cannot give: WHAT WRITING SYSTEM the
     page is in, robust to short texts and code-mixed pages. Counts
@@ -544,7 +529,7 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
     DuckDB (``\\p{Latin}``), which is what makes the strict cross-engine
     oracle possible.
     """
-    t = F.regexp_replace(F.col(text_col), r"\s", "")
+    t = F.regexp_replace(F.col("text"), r"\s", "")
     total = F.length(t)
 
     def n_of(cls):
@@ -559,7 +544,7 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
         "digit": n_of(r"[0-9]"),
     }
     return df.select(
-        id_col,
+        "doc_id",
         total.cast("long").alias("n_chars"),
         *[
             F.floor(c.cast("long") * 1_000_000 / F.greatest(total, F.lit(1)))
@@ -570,8 +555,7 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def lexical_diversity(docs: DataFrame, group_col: str = "lang",
-                      text_col: str = "text") -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Per-group lexical-diversity profile: (group, n_tokens, n_types,
     n_hapax, ttr_micros, hapax_frac_micros).
 
@@ -591,8 +575,8 @@ def lexical_diversity(docs: DataFrame, group_col: str = "lang",
     from .dsir import _words
 
     words = docs.select(
-        F.col(group_col).alias("grp"),
-        F.explode(_words(F.col(text_col))).alias("w"),
+        F.col("lang").alias("grp"),
+        F.explode(_words(F.col("text"))).alias("w"),
     )
     wc = words.groupBy("grp", "w").agg(F.count("*").alias("c"))
     agg = wc.groupBy("grp").agg(
@@ -602,7 +586,7 @@ def lexical_diversity(docs: DataFrame, group_col: str = "lang",
         .cast("bigint").alias("n_hapax"),
     )
     return agg.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("lang"),
         "n_tokens",
         "n_types",
         "n_hapax",
@@ -612,8 +596,7 @@ def lexical_diversity(docs: DataFrame, group_col: str = "lang",
     )
 
 
-def keyness_g2(docs: DataFrame, group_col: str = "source",
-               text_col: str = "text", topk: int = 5) -> DataFrame:
+def keyness_g2(docs: DataFrame, topk: int = 5) -> DataFrame:
     """Per-group keyword KEYNESS: the ``topk`` terms most
     over-represented in each group vs the rest of the corpus by
     Dunning's log-likelihood G² (the corpus-linguistics standard that
@@ -637,8 +620,8 @@ def keyness_g2(docs: DataFrame, group_col: str = "source",
     from .dsir import _words
 
     w = docs.select(
-        F.col(group_col).alias("grp"),
-        F.explode(_words(F.col(text_col))).alias("w"),
+        F.col("source").alias("grp"),
+        F.explode(_words(F.col("text"))).alias("w"),
     )
     a = w.groupBy("grp", "w").agg(F.count("*").alias("a"))
     wt = a.groupBy("w").agg(F.sum("a").alias("wt"))
@@ -674,7 +657,7 @@ def keyness_g2(docs: DataFrame, group_col: str = "source",
         scored.withColumn("rank", F.row_number().over(rk))
         .filter(F.col("rank") <= topk)
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             F.col("w").alias("word"),
             F.col("a").cast("bigint").alias("n_in"),
             F.col("b").cast("bigint").alias("n_out"),
@@ -684,12 +667,7 @@ def keyness_g2(docs: DataFrame, group_col: str = "source",
     )
 
 
-def wilson_bounds(
-    df: DataFrame,
-    group_col: str = "source",
-    success_col: str = "is_good",
-    z: float = 1.96,
-) -> DataFrame:
+def wilson_bounds(df: DataFrame, z: float = 1.96) -> DataFrame:
     """Per-group success rate with its Wilson-score LOWER bound
     (Wilson 1927) — the statistically honest "is this domain's quality
     rate really above the cutoff?" answer for domain-level curation
@@ -705,11 +683,11 @@ def wilson_bounds(
     codegen on the GROUP-cardinality result. Nothing else touches the
     corpus.
     """
-    g = F.col(group_col)
-    s = F.when(F.col(success_col).cast("boolean"), F.lit(1)).otherwise(
+    g = F.col("source")
+    s = F.when(F.col("is_good").cast("boolean"), F.lit(1)).otherwise(
         F.lit(0)
     )
-    agg = df.groupBy(g.alias(group_col)).agg(
+    agg = df.groupBy(g.alias("source")).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(s).cast("bigint").alias("successes"),
     )
@@ -722,7 +700,7 @@ def wilson_bounds(
     )
     lo = (center - rad) / (F.lit(1.0) + z2 / n)
     return agg.select(
-        group_col,
+        "source",
         "n",
         "successes",
         F.round(ph, 6).alias("p_hat"),
@@ -730,11 +708,7 @@ def wilson_bounds(
     )
 
 
-def zipf_slope(
-    tokens_df: DataFrame,
-    group_col: str = "lang",
-    tokens_col: str = "tokens",
-) -> DataFrame:
+def zipf_slope(tokens_df: DataFrame) -> DataFrame:
     """Zipf's-law fit per group: OLS slope of ln(freq) on ln(rank)
     over the group's frequency-ranked vocabulary — the corpus-health
     diagnostic behind "does this source still look like natural
@@ -756,8 +730,8 @@ def zipf_slope(
     """
     freq = (
         tokens_df.select(
-            F.col(group_col).alias("grp"),
-            F.explode(tokens_col).alias("w"),
+            F.col("lang").alias("grp"),
+            F.explode("tokens").alias("w"),
         )
         .groupBy("grp", "w")
         .agg(F.count("*").cast("bigint").alias("freq"))
@@ -796,18 +770,14 @@ def zipf_slope(
         " / CAST(n AS DOUBLE)) END"
     )
     return s.selectExpr(
-        f"grp AS {group_col}",
+        "grp AS lang",
         "n",
         f"CAST({slope} AS BIGINT) AS slope_micros",
         f"CAST({intercept} AS BIGINT) AS intercept_micros",
     )
 
 
-def char_entropy(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon entropy of the CHARACTER distribution —
     the cheap "is this natural language or a base64/binary/minified
     blob?" curation signal (natural prose sits ~4.0-4.5 bits ≈
@@ -830,10 +800,10 @@ def char_entropy(
     # split('', '') yields [''] in Spark AND DuckDB — filter the empty
     # element so empty docs take the NULL-entropy path, not a 1-char one
     ch = docs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
             F.filter(
-                F.split(F.col(text_col), ""), lambda c: F.length(c) > 0
+                F.split(F.col("text"), ""), lambda c: F.length(c) > 0
             )
         ).alias("c"),
     )
@@ -851,11 +821,11 @@ def char_entropy(
             ).cast("bigint")
         ).alias("_s"),
     )
-    out = docs.select(F.col(id_col)).join(
-        agg, F.col(id_col) == F.col("_id"), "left"
+    out = docs.select(F.col("doc_id")).join(
+        agg, F.col("doc_id") == F.col("_id"), "left"
     )
     return out.select(
-        id_col,
+        "doc_id",
         F.coalesce("n_chars", F.lit(0).cast("bigint")).alias("n_chars"),
         F.coalesce("n_distinct_chars", F.lit(0).cast("bigint")).alias(
             "n_distinct_chars"
@@ -871,8 +841,6 @@ def char_entropy(
 
 def winnowing_fingerprints(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     w: int = 4,
 ) -> DataFrame:
@@ -900,7 +868,7 @@ def winnowing_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError("k and w must be >= 1")
-    t = F.col(text_col)
+    t = F.col("text")
     m = F.length(t) - F.lit(k - 1)  # number of k-grams
 
     def _seq(n):
@@ -915,7 +883,7 @@ def winnowing_fingerprints(
     # ONCE per row instead of once per window (measured 115 s → ~2 s
     # at sf0.01 — the inlined form is O(len·w·len) md5 calls)
     staged = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(
             _seq(m),
             lambda i: F.conv(
@@ -939,7 +907,7 @@ def winnowing_fingerprints(
     # decode: offset = w−1 − packed%w ; fp = packed div w ;
     # global pos = window start (j0+1) + offset
     out = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array_distinct(
                 F.transform(
@@ -958,13 +926,11 @@ def winnowing_fingerprints(
             )
         ).alias("_s"),
     )
-    return out.select(id_col, F.col("_s.pos").alias("pos"),
+    return out.select("doc_id", F.col("_s.pos").alias("pos"),
                       F.col("_s.fp").alias("fp"))
 
 
-def term_burstiness(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    min_cf: int = 2) -> DataFrame:
+def term_burstiness(docs: DataFrame, min_cf: int = 2) -> DataFrame:
     """Per-term burstiness (Fisher dispersion index over per-document
     counts, zeros included): (word, df, cf, burstiness_micros) with
 
@@ -995,10 +961,10 @@ def term_burstiness(docs: DataFrame, id_col: str = "doc_id",
     )
     per_doc = (
         docs.select(
-            F.col(id_col),
-            F.explode(_words(F.col(text_col))).alias("word"),
+            F.col("doc_id"),
+            F.explode(_words(F.col("text"))).alias("word"),
         )
-        .groupBy(id_col, "word")
+        .groupBy("doc_id", "word")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
     per_word = per_doc.groupBy("word").agg(
@@ -1019,8 +985,7 @@ def term_burstiness(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def vocab_concentration(docs: DataFrame, group_col: str = "source",
-                        text_col: str = "text") -> DataFrame:
+def vocab_concentration(docs: DataFrame) -> DataFrame:
     """Per-group vocabulary concentration: (group, n_tokens, n_types,
     hhi_micros) where ``hhi_micros = 1e6 · Σ_w c_w² div (Σ_w c_w)²``
     — the Simpson / Herfindahl–Hirschman index of the group's unigram
@@ -1040,8 +1005,8 @@ def vocab_concentration(docs: DataFrame, group_col: str = "source",
     from .dsir import _words
 
     words = docs.select(
-        F.col(group_col).alias("grp"),
-        F.explode(_words(F.col(text_col))).alias("w"),
+        F.col("source").alias("grp"),
+        F.explode(_words(F.col("text"))).alias("w"),
     )
     wc = words.groupBy("grp", "w").agg(
         F.count("*").cast("bigint").alias("c")
@@ -1052,7 +1017,7 @@ def vocab_concentration(docs: DataFrame, group_col: str = "source",
         F.sum(F.col("c") * F.col("c")).cast("bigint").alias("_c2"),
     )
     return agg.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("source"),
         "n_tokens",
         "n_types",
         F.expr("1000000L * _c2 div (n_tokens * n_tokens)")
@@ -1060,9 +1025,7 @@ def vocab_concentration(docs: DataFrame, group_col: str = "source",
     )
 
 
-def rake_keywords(docs: DataFrame, stopwords: list[str],
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def rake_keywords(docs: DataFrame, stopwords: list[str]) -> DataFrame:
     """RAKE keyword scores (Rose et al. 2010): content phrases are the
     maximal stopword-free token runs; each word scores
     ``rake_micros = 1e6 · deg(w) div freq(w)`` where deg sums the
@@ -1083,8 +1046,8 @@ def rake_keywords(docs: DataFrame, stopwords: list[str],
     from .dsir import _words
 
     t = docs.select(
-        F.col(id_col).alias("_doc"),
-        F.posexplode(_words(F.col(text_col))).alias("pos", "w"),
+        F.col("doc_id").alias("_doc"),
+        F.posexplode(_words(F.col("text"))).alias("pos", "w"),
     ).withColumn(
         "st", F.col("w").isin(stopwords).cast("int")
     )
@@ -1110,9 +1073,7 @@ def rake_keywords(docs: DataFrame, stopwords: list[str],
     )
 
 
-def kwic_concordance(docs: DataFrame, probe: str, ctx: int = 3,
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def kwic_concordance(docs: DataFrame, probe: str, ctx: int = 3) -> DataFrame:
     """Keyword-in-context concordance: every occurrence of ``probe``
     with ``ctx`` tokens of context either side — the corpus-linguistics
     staple for auditing how a term is actually used before writing a
@@ -1128,10 +1089,10 @@ def kwic_concordance(docs: DataFrame, probe: str, ctx: int = 3,
     from .dsir import _words
 
     base = docs.select(
-        F.col(id_col), _words(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), _words(F.col("text")).alias("_toks")
     )
     hits = base.select(
-        id_col, "_toks",
+        "doc_id", "_toks",
         F.posexplode("_toks").alias("pos", "_w"),
     ).filter(F.col("_w") == probe)
     left = F.slice(
@@ -1141,16 +1102,14 @@ def kwic_concordance(docs: DataFrame, probe: str, ctx: int = 3,
     )
     right = F.slice(F.col("_toks"), F.col("pos") + 2, ctx)
     return hits.select(
-        id_col,
+        "doc_id",
         F.col("pos").cast("long").alias("pos"),
         F.concat_ws(" ", left).alias("left_ctx"),
         F.concat_ws(" ", right).alias("right_ctx"),
     )
 
 
-def histogram_quantiles(df: DataFrame, group_col: str = "lang",
-                        value_col: str = "n_chars",
-                        qs_micros: tuple = (500_000, 900_000)) -> DataFrame:
+def histogram_quantiles(df: DataFrame, qs_micros: tuple = (500_000, 900_000)) -> DataFrame:
     """Mergeable power-of-2-histogram quantiles: per group, the lower
     bound of the first log2 bin whose cumulative count reaches each
     requested quantile — the shuffle-free alternative to exact
@@ -1169,9 +1128,9 @@ def histogram_quantiles(df: DataFrame, group_col: str = "lang",
     from pyspark.sql import Window
 
     binned = df.select(
-        F.col(group_col).alias("grp"),
+        F.col("lang").alias("grp"),
         F.greatest(
-            (F.length(F.bin(F.greatest(F.col(value_col).cast("long"),
+            (F.length(F.bin(F.greatest(F.col("n_chars").cast("long"),
                                        F.lit(1)))) - 1).cast("int"),
             F.lit(0),
         ).alias("bin"),
@@ -1180,7 +1139,7 @@ def histogram_quantiles(df: DataFrame, group_col: str = "lang",
         F.count("*").cast("bigint").alias("c")
     )
     return histogram_quantiles_from_counts(
-        counts, qs_micros=qs_micros, group_out=group_col
+        counts, qs_micros=qs_micros, group_out="lang"
     )
 
 
@@ -1227,8 +1186,7 @@ def histogram_quantiles_from_counts(counts: DataFrame,
     return out
 
 
-def group_label_entropy(df: DataFrame, group_col: str = "host",
-                        label_col: str = "lang") -> DataFrame:
+def group_label_entropy(df: DataFrame) -> DataFrame:
     """Per-group Shannon entropy of a LABEL distribution — here "how
     language-mixed is this host": monolingual hosts sit at 0 nats;
     hosts serving machine-translated mirror trees of every language at
@@ -1243,7 +1201,7 @@ def group_label_entropy(df: DataFrame, group_col: str = "host",
     site-count-sized output, never corpus-sized state.
     """
     per = df.groupBy(
-        F.col(group_col).alias("_g"), F.col(label_col).alias("_l")
+        F.col("host").alias("_g"), F.col("lang").alias("_l")
     ).agg(F.count("*").cast("bigint").alias("cnt"))
     agg = per.groupBy("_g").agg(
         F.sum("cnt").cast("bigint").alias("n_docs"),
@@ -1257,7 +1215,7 @@ def group_label_entropy(df: DataFrame, group_col: str = "host",
         ).alias("_s"),
     )
     return agg.select(
-        F.col("_g").alias(group_col),
+        F.col("_g").alias("host"),
         "n_docs", "n_labels",
         F.expr(
             "CAST(floor(1e6 * ln(CAST(n_docs AS DOUBLE)) "
@@ -1266,13 +1224,7 @@ def group_label_entropy(df: DataFrame, group_col: str = "host",
     )
 
 
-def soft404_flags(
-    pages: DataFrame,
-    id_col: str = "doc_id",
-    title_col: str = "title",
-    text_col: str = "text",
-    thin_words: int = 30,
-) -> DataFrame:
+def soft404_flags(pages: DataFrame, thin_words: int = 30) -> DataFrame:
     """(id, title_404, body_404, thin_content, soft404) — soft-404 /
     error-page detection: servers that answer HTTP 200 with a "page not
     found" body poison a crawl corpus with near-identical junk pages
@@ -1286,15 +1238,15 @@ def soft404_flags(
     UDF, no join; composes with curation_verdict as one more gate. The
     phrase set is a compile-time literal shared with the oracle.
     """
-    tl = F.lower(F.coalesce(F.col(title_col), F.lit("")))
-    bl = F.lower(F.col(text_col))
+    tl = F.lower(F.coalesce(F.col("title"), F.lit("")))
+    bl = F.lower(F.col("text"))
     phrase = (
         "(404 not found|page not found|error 404|no longer available"
         "|page cannot be found)"
     )
-    n_words = F.size(_ws_words(F.col(text_col)))
+    n_words = F.size(_ws_words(F.col("text")))
     return pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         tl.rlike(phrase).alias("title_404"),
         bl.rlike(phrase).alias("body_404"),
         (n_words < thin_words).alias("thin_content"),
@@ -1305,9 +1257,7 @@ def soft404_flags(
     )
 
 
-def line_quality_signals(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text",
-                         short_chars: int = 30) -> DataFrame:
+def line_quality_signals(df: DataFrame, short_chars: int = 30) -> DataFrame:
     """(id, n_lines, bullet_line_micros, end_punct_line_micros,
     short_line_micros, mean_line_len_micros) — the line-level half of the
     RefinedWeb/FineWeb quality recipe (Penedo et al. 2023) that the
@@ -1322,13 +1272,13 @@ def line_quality_signals(df: DataFrame, id_col: str = "doc_id",
     join, no window, no Python.
     """
     lines = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.col(text_col), "\n", -1),
+            F.filter(F.split(F.col("text"), "\n", -1),
                      lambda l: F.length(l) > 0)
         ).alias("line"),
     )
-    agg = lines.groupBy(id_col).agg(
+    agg = lines.groupBy("doc_id").agg(
         F.count("*").alias("n_lines"),
         F.sum(
             F.when(
@@ -1350,7 +1300,7 @@ def line_quality_signals(df: DataFrame, id_col: str = "doc_id",
         F.sum(F.length("line")).alias("_chars"),
     )
     return agg.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_lines").cast("long").alias("n_lines"),
         F.expr("_bullet * 1000000L div n_lines").alias(
             "bullet_line_micros"
@@ -1365,9 +1315,7 @@ def line_quality_signals(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def lang_mismatch_audit(df: DataFrame, id_col: str = "doc_id",
-                        lang_col: str = "lang",
-                        group_col: str = "source") -> DataFrame:
+def lang_mismatch_audit(df: DataFrame) -> DataFrame:
     """(group, n_docs, n_guessed, n_mismatch, mismatch_micros) — does the
     corpus's DECLARED language metadata agree with content-based language
     ID? Common-Crawl-style metadata lies (server-config defaults, CMS
@@ -1382,15 +1330,15 @@ def lang_mismatch_audit(df: DataFrame, id_col: str = "doc_id",
     on the doc key) + one group-sized rollup; no window, no broadcast
     bigger than the group dimension.
     """
-    g = lang_guess(df, id_col=id_col).select(
-        F.col(id_col), F.col("lang_guess")
+    g = lang_guess(df).select(
+        F.col("doc_id"), F.col("lang_guess")
     )
     base = df.select(
-        F.col(id_col),
-        F.col(group_col).alias("grp"),
-        F.substring_index(F.col(lang_col), "-", 1).alias("_decl"),
+        F.col("doc_id"),
+        F.col("source").alias("grp"),
+        F.substring_index(F.col("lang"), "-", 1).alias("_decl"),
     )
-    j = base.join(g, id_col)
+    j = base.join(g, "doc_id")
     agg = j.groupBy("grp").agg(
         F.count("*").alias("n_docs"),
         F.sum(
@@ -1405,7 +1353,7 @@ def lang_mismatch_audit(df: DataFrame, id_col: str = "doc_id",
         ).alias("n_mismatch"),
     )
     return agg.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("source"),
         F.col("n_docs").cast("long").alias("n_docs"),
         F.col("n_guessed").cast("long").alias("n_guessed"),
         F.col("n_mismatch").cast("long").alias("n_mismatch"),
@@ -1418,9 +1366,6 @@ def lang_mismatch_audit(df: DataFrame, id_col: str = "doc_id",
 
 def curation_funnel(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
     thin_words: int = 30,
     min_words: int = 50,
     max_words: int = 100_000,
@@ -1454,11 +1399,11 @@ def curation_funnel(
         "|page cannot be found)"
     )
     base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(group_col).alias("_grp"),
-        F.col(text_col).alias("_t"),
-        F.md5(F.col(text_col)).alias("_h"),
-        F.lower(F.col(text_col)).rlike(phrase).alias("_err"),
+        F.col("doc_id").alias("_id"),
+        F.col("source").alias("_grp"),
+        F.col("text").alias("_t"),
+        F.md5(F.col("text")).alias("_h"),
+        F.lower(F.col("text")).rlike(phrase).alias("_err"),
     )
     toks = base.select(
         "_id",
@@ -1512,7 +1457,7 @@ def curation_funnel(
         ],
     )
     return out.select(
-        F.col("_grp").alias(group_col),
+        F.col("_grp").alias("source"),
         F.col("n_docs").cast("long").alias("n_docs"),
         "n_soft404",
         "n_badwords",
@@ -1523,8 +1468,7 @@ def curation_funnel(
     )
 
 
-def code_detect_signals(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def code_detect_signals(df: DataFrame) -> DataFrame:
     """(id, symbol_density_micros, indent_line_micros, digit_micros,
     camel_token_micros, looks_like_code) — is this page prose or code?
     Web corpora route the two differently (code → a code pipeline with
@@ -1541,22 +1485,22 @@ def code_detect_signals(df: DataFrame, id_col: str = "doc_id",
     fractions reuse the one-explode partial-agg shape. One join on the
     doc key ties them; no window, no Python.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     symbols = n_chars - F.length(F.translate(t, "{}[]();=<>", ""))
     digits = n_chars - F.length(F.regexp_replace(t, "[0-9]", ""))
     row_side = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("_nc"),
         symbols.alias("_sym"),
         digits.alias("_dig"),
     )
     lines = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.filter(F.split(t, "\n", -1), lambda l: F.length(l) > 0)
         ).alias("line"),
-    ).groupBy(id_col).agg(
+    ).groupBy("doc_id").agg(
         F.count("*").alias("_nl"),
         F.sum(
             F.when(
@@ -1567,9 +1511,9 @@ def code_detect_signals(df: DataFrame, id_col: str = "doc_id",
         ).alias("_ind"),
     )
     toks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(_ws_words(t)).alias("w"),
-    ).groupBy(id_col).agg(
+    ).groupBy("doc_id").agg(
         F.count("*").alias("_nw"),
         F.sum(
             F.when(
@@ -1578,9 +1522,9 @@ def code_detect_signals(df: DataFrame, id_col: str = "doc_id",
             ).otherwise(0)
         ).alias("_camel"),
     )
-    j = row_side.join(lines, id_col).join(toks, id_col)
+    j = row_side.join(lines, "doc_id").join(toks, "doc_id")
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.expr("_sym * 1000000L div _nc").alias("symbol_density_micros"),
         F.expr("_ind * 1000000L div _nl").alias("indent_line_micros"),
         F.expr("_dig * 1000000L div _nc").alias("digit_micros"),
@@ -1595,9 +1539,7 @@ def code_detect_signals(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def release_datasheet(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", lang_col: str = "lang",
-                      group_col: str = "source", p: int = 6) -> DataFrame:
+def release_datasheet(df: DataFrame, p: int = 6) -> DataFrame:
     """ONE row — the corpus release datasheet (Gebru et al. 2021's
     "Datasheets for Datasets", the numbers section): n_docs, n_tokens,
     n_sources, n_langs (primary subtag), vocab_estimate_micros (HLL —
@@ -1617,7 +1559,7 @@ def release_datasheet(df: DataFrame, id_col: str = "doc_id",
     from .sketches import hll_estimate, hll_registers
 
     toks = df.select(
-        F.explode(_ws_words(F.col(text_col))).alias("key")
+        F.explode(_ws_words(F.col("text"))).alias("key")
     )
     tok_count = toks.agg(F.count("*").cast("long").alias("n_tokens"))
     vocab = hll_estimate(hll_registers(toks, "key", p=p), p=p).select(
@@ -1625,14 +1567,14 @@ def release_datasheet(df: DataFrame, id_col: str = "doc_id",
     )
     base = df.agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.countDistinct(group_col).cast("long").alias("n_sources"),
+        F.countDistinct("source").cast("long").alias("n_sources"),
         F.countDistinct(
-            F.substring_index(F.col(lang_col), "-", 1)
+            F.substring_index(F.col("lang"), "-", 1)
         ).cast("long").alias("n_langs"),
-        F.sum(F.length(text_col)).cast("long").alias("_chars"),
+        F.sum(F.length("text")).cast("long").alias("_chars"),
     )
     dups = df.agg(
-        F.countDistinct(F.md5(F.col(text_col))).cast("long").alias("_uniq")
+        F.countDistinct(F.md5(F.col("text"))).cast("long").alias("_uniq")
     )
     return (
         base.crossJoin(F.broadcast(tok_count))
@@ -1654,13 +1596,7 @@ def release_datasheet(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def shrunk_group_quality(
-    df: DataFrame,
-    host_col: str = "host",
-    domain_col: str = "domain",
-    metric_col: str = "n_chars",
-    alpha: int = 20,
-) -> DataFrame:
+def shrunk_group_quality(df: DataFrame, alpha: int = 20) -> DataFrame:
     """(host, domain, n_docs, mean_micros, domain_mean_micros,
     shrunk_micros): per-host quality with EMPIRICAL-BAYES shrinkage
     toward the registered-domain prior —
@@ -1683,10 +1619,10 @@ def shrunk_group_quality(
     Σ metric · 1e6 can exceed 2^63 (noted, not needed at test SFs).
     """
     host_agg = df.groupBy(
-        F.col(host_col).alias("host"), F.col(domain_col).alias("domain")
+        F.col("host"), F.col("domain")
     ).agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.col(metric_col).cast("long")).alias("_sum"),
+        F.sum(F.col("n_chars").cast("long")).alias("_sum"),
     )
     dom_agg = host_agg.groupBy("domain").agg(
         F.expr("sum(_sum) * 1000000L div sum(n_docs)").alias(
@@ -1706,12 +1642,7 @@ def shrunk_group_quality(
     )
 
 
-def oov_rate(
-    docs: DataFrame,
-    vocab_size: int = 100,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def oov_rate(docs: DataFrame, vocab_size: int = 100) -> DataFrame:
     """Per-group out-of-vocabulary rate at a top-``vocab_size``
     frequency vocabulary — the tokenizer-design number: what fraction
     of running tokens falls outside the V most frequent types if the
@@ -1727,9 +1658,9 @@ def oov_rate(
     deterministic cut the oracle replays.
     """
     toks = docs.select(
-        F.col(group_col).alias("grp"),
+        F.col("lang").alias("grp"),
         F.explode(
-            F.filter(F.split(F.col(text_col), " "),
+            F.filter(F.split(F.col("text"), " "),
                      lambda w: F.length(w) > 0)
         ).alias("w"),
     )
@@ -1816,8 +1747,6 @@ def gate_marginal_attribution(
 def char_coverage(
     docs: DataFrame,
     coverage_micros: int = 999_500,
-    group_col: str = "lang",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-group character coverage — how many distinct characters a
     tokenizer alphabet needs to cover ``coverage_micros``/1e6 of all
@@ -1838,8 +1767,8 @@ def char_coverage(
     from pyspark.sql import Window
 
     chars = docs.select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.col(text_col), "")).alias("ch"),
+        F.col("lang").alias("grp"),
+        F.explode(F.split(F.col("text"), "")).alias("ch"),
     ).filter(F.length("ch") > 0)
     cc = chars.groupBy("grp", "ch").agg(
         F.count("*").cast("bigint").alias("c")
@@ -1890,9 +1819,6 @@ def char_coverage(
 def heaps_law_fit(
     docs: DataFrame,
     checkpoints: tuple = (8, 16, 32, 64),
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Heaps'-law vocabulary-growth fit per group: V(T) ≈ K·T^β —
     the corpus-growth diagnostic (β ≈ 0.4–0.6 for natural text;
@@ -1922,11 +1848,11 @@ def heaps_law_fit(
     from .stats import grouped_ols
 
     toks = F.filter(
-        F.split(F.col(text_col), " "), lambda w: F.length(w) > 0
+        F.split(F.col("text"), " "), lambda w: F.length(w) > 0
     )
     d = docs.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("_id"),
+        F.col("source").alias("grp"),
+        F.col("doc_id").alias("_id"),
         toks.alias("_t"),
     )
     w = Window.partitionBy("grp").orderBy("_id")
@@ -1973,9 +1899,6 @@ def heaps_law_fit(
 
 def shrunk_hierarchy_quality(
     df: DataFrame,
-    host_col: str = "host",
-    domain_col: str = "domain",
-    metric_col: str = "n_chars",
     alpha: int = 20,
     beta: int = 50,
 ) -> DataFrame:
@@ -1999,10 +1922,10 @@ def shrunk_hierarchy_quality(
     n_docs, mean_micros, dom_shrunk_micros, shrunk_micros).
     """
     host_agg = df.groupBy(
-        F.col(host_col).alias("host"), F.col(domain_col).alias("domain")
+        F.col("host"), F.col("domain")
     ).agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.col(metric_col).cast("long")).alias("_sum"),
+        F.sum(F.col("n_chars").cast("long")).alias("_sum"),
     )
     dom_agg = host_agg.groupBy("domain").agg(
         F.sum("_sum").alias("_dsum"), F.sum("n_docs").alias("_dn")
@@ -2036,9 +1959,7 @@ def shrunk_hierarchy_quality(
     )
 
 
-def text_tiling(docs: DataFrame, block_tokens: int = 8,
-                id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def text_tiling(docs: DataFrame, block_tokens: int = 8) -> DataFrame:
     """TextTiling-style linear topic segmentation (Hearst 1997, CL 23(1))
     — lexical-cohesion valleys between fixed-size token blocks mark
     intra-document topic boundaries, the segmentation long-document
@@ -2070,36 +1991,36 @@ def text_tiling(docs: DataFrame, block_tokens: int = 8,
 
     k = int(block_tokens)
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(_words(F.col(text_col))).alias("_pos", "_w"),
+        F.col("doc_id"),
+        F.posexplode(_words(F.col("text"))).alias("_pos", "_w"),
     )
     cnt = (
-        toks.select(id_col, F.expr(f"_pos div {k}").alias("_blk"), "_w")
-        .groupBy(id_col, "_blk", "_w")
+        toks.select("doc_id", F.expr(f"_pos div {k}").alias("_blk"), "_w")
+        .groupBy("doc_id", "_blk", "_w")
         .agg(F.count("*").alias("_c"))
     )
-    sz = cnt.groupBy(id_col, "_blk").agg(
+    sz = cnt.groupBy("doc_id", "_blk").agg(
         F.sum("_c").cast("bigint").alias("_s")
     )
     r = cnt.select(
-        F.col(id_col), (F.col("_blk") - 1).alias("_blk"),
+        F.col("doc_id"), (F.col("_blk") - 1).alias("_blk"),
         F.col("_w"), F.col("_c").alias("_cr"),
     )
     inter = (
-        cnt.join(r, [id_col, "_blk", "_w"])
-        .groupBy(id_col, F.col("_blk").alias("_gap"))
+        cnt.join(r, ["doc_id", "_blk", "_w"])
+        .groupBy("doc_id", F.col("_blk").alias("_gap"))
         .agg(F.sum(F.least("_c", "_cr")).cast("bigint").alias("_i"))
     )
     szr = sz.select(
-        F.col(id_col), (F.col("_blk") - 1).alias("_blk"),
+        F.col("doc_id"), (F.col("_blk") - 1).alias("_blk"),
         F.col("_s").alias("_sr"),
     )
     gaps = (
-        sz.join(szr, [id_col, "_blk"])
+        sz.join(szr, ["doc_id", "_blk"])
         .join(inter.withColumnRenamed("_gap", "_blk"),
-              [id_col, "_blk"], "left")
+              ["doc_id", "_blk"], "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("_blk").cast("bigint").alias("gap_idx"),
             F.floor(
                 F.lit(2e6) * F.coalesce("_i", F.lit(0))
@@ -2107,7 +2028,7 @@ def text_tiling(docs: DataFrame, block_tokens: int = 8,
             ).alias("sim_micros"),
         )
     )
-    st = gaps.groupBy(id_col).agg(
+    st = gaps.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("_n"),
         F.sum("sim_micros").cast("bigint").alias("_sum"),
         F.sum(F.col("sim_micros") * F.col("sim_micros"))
@@ -2115,9 +2036,9 @@ def text_tiling(docs: DataFrame, block_tokens: int = 8,
     )
     dev = F.col("_sum") - F.col("_n") * F.col("sim_micros")
     return (
-        gaps.join(st, id_col)
+        gaps.join(st, "doc_id")
         .select(
-            id_col, "gap_idx", "sim_micros",
+            "doc_id", "gap_idx", "sim_micros",
             F.when(
                 (dev > 0)
                 & (4 * dev * dev
@@ -2129,10 +2050,7 @@ def text_tiling(docs: DataFrame, block_tokens: int = 8,
     )
 
 
-def seo_health_rollup(pages: DataFrame, host_col: str = "host",
-                      title_col: str = "title",
-                      desc_col: str = "meta_description",
-                      short_title_chars: int = 10) -> DataFrame:
+def seo_health_rollup(pages: DataFrame, short_title_chars: int = 10) -> DataFrame:
     """Per-host SEO health card — the Search-Console-style audit the
     reference's per-page reports imply but never aggregate: ``(host,
     n_pages, n_dup_title_pages, n_missing_desc, n_short_title)``.
@@ -2141,20 +2059,20 @@ def seo_health_rollup(pages: DataFrame, host_col: str = "host",
     descriptions and sub-``short_title_chars`` titles are codegen
     predicates."""
     per_title = pages.groupBy(
-        F.col(host_col).alias("host"), F.col(title_col).alias("_t")
+        F.col("host"), F.col("title").alias("_t")
     ).agg(F.count("*").alias("_n"))
     dup = per_title.filter(F.col("_n") > 1).groupBy("host").agg(
         F.sum("_n").cast("bigint").alias("n_dup_title_pages")
     )
-    base = pages.groupBy(F.col(host_col).alias("host")).agg(
+    base = pages.groupBy(F.col("host")).agg(
         F.count("*").cast("bigint").alias("n_pages"),
         F.sum(
-            F.when(F.coalesce(F.col(desc_col), F.lit("")) == "", 1)
+            F.when(F.coalesce(F.col("meta_description"), F.lit("")) == "", 1)
             .otherwise(0)
         ).cast("bigint").alias("n_missing_desc"),
         F.sum(
             F.when(
-                F.length(F.coalesce(F.col(title_col), F.lit("")))
+                F.length(F.coalesce(F.col("title"), F.lit("")))
                 < short_title_chars, 1
             ).otherwise(0)
         ).cast("bigint").alias("n_short_title"),
@@ -2167,8 +2085,7 @@ def seo_health_rollup(pages: DataFrame, host_col: str = "host",
     )
 
 
-def bidi_invisible_audit(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def bidi_invisible_audit(docs: DataFrame) -> DataFrame:
     """Trojan-Source / invisible-character audit (CVE-2021-42574;
     Boucher & Anderson 2021): Unicode bidi control characters can make
     source code READ differently than it parses, and zero-width
@@ -2187,7 +2104,7 @@ def bidi_invisible_audit(docs: DataFrame, id_col: str = "doc_id",
     unicode escapes so the source file itself stays free of the very
     characters it hunts.
     """
-    t = F.col(text_col).cast("string")
+    t = F.col("text").cast("string")
     bidi_rx = "[\u202a-\u202e\u2066-\u2069]"
     zw_rx = "[\u200b-\u200d\u2060\ufeff]"
     ctrl_rx = ("[\u0000-\u0008\u000b\u000c\u000e-\u001f"
@@ -2196,7 +2113,7 @@ def bidi_invisible_audit(docs: DataFrame, id_col: str = "doc_id",
     n_zw = F.size(F.regexp_extract_all(t, F.lit(zw_rx), 0))
     n_ctrl = F.size(F.regexp_extract_all(t, F.lit(ctrl_rx), 0))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_bidi.cast("int").alias("n_bidi"),
         n_zw.cast("int").alias("n_zero_width"),
         n_ctrl.cast("int").alias("n_other_ctrl"),
@@ -2205,8 +2122,7 @@ def bidi_invisible_audit(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def sentence_spans(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def sentence_spans(df: DataFrame) -> DataFrame:
     """SENTENCE segmentation relation: ``(id, sent_idx, sentence,
     n_chars)`` — one row per sentence in document order, 1-based
     index, whitespace-trimmed, empty pieces dropped. Rule-based
@@ -2227,14 +2143,14 @@ def sentence_spans(df: DataFrame, id_col: str = "doc_id",
     """
     marker = "\x00"
     marked = F.regexp_replace(
-        F.col(text_col), r"([.!?]+)(\s+)", "$1$2" + marker
+        F.col("text"), r"([.!?]+)(\s+)", "$1$2" + marker
     )
     pieces = F.split(marked, marker)
     rows = df.select(
-        F.col(id_col), F.posexplode(pieces).alias("_p", "_s")
+        F.col("doc_id"), F.posexplode(pieces).alias("_p", "_s")
     ).filter(F.trim("_s") != "")
     return rows.select(
-        id_col,
+        "doc_id",
         # idx by document order; empty pieces never occur mid-text
         # (the marker always follows non-empty punctuation), so _p is
         # already dense for the kept rows
@@ -2244,9 +2160,7 @@ def sentence_spans(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def paragraph_langs(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    sep: str = "\n\n") -> DataFrame:
+def paragraph_langs(df: DataFrame, sep: str = "\n\n") -> DataFrame:
     """PARAGRAPH-level language segmentation rolled up per document:
     ``(id, n_paragraphs, n_langs, dominant_lang, n_dominant_paras,
     is_mixed)``. Each paragraph gets the same marker-word argmax as
@@ -2265,14 +2179,14 @@ def paragraph_langs(df: DataFrame, id_col: str = "doc_id",
     no windows, no Python.
     """
     paras = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("_p", "_t"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), sep)).alias("_p", "_t"),
     ).filter(F.trim("_t") != "")
     words = paras.select(
-        id_col, "_p", F.explode(_ws_words(F.lower(F.col("_t")))).alias("w")
+        "doc_id", "_p", F.explode(_ws_words(F.lower(F.col("_t")))).alias("w")
     )
     langs = sorted(LANG_MARKERS)
-    scores = words.groupBy(id_col, "_p").agg(
+    scores = words.groupBy("doc_id", "_p").agg(
         *[
             F.sum(
                 F.when(F.col("w").isin(*LANG_MARKERS[lg]), 1).otherwise(0)
@@ -2290,27 +2204,27 @@ def paragraph_langs(df: DataFrame, id_col: str = "doc_id",
         .when(a["lg"] < b["lg"], -1).when(a["lg"] > b["lg"], 1).otherwise(0),
     )[0]
     per_para = scores.select(
-        id_col,
+        "doc_id",
         F.when(best["s"] > 0, best["lg"]).otherwise(F.lit("none"))
         .alias("plang"),
     )
-    n_paras = per_para.groupBy(id_col).agg(
+    n_paras = per_para.groupBy("doc_id").agg(
         F.count("*").cast("int").alias("n_paragraphs")
     )
     lang_counts = (
         per_para.filter(F.col("plang") != "none")
-        .groupBy(id_col, "plang")
+        .groupBy("doc_id", "plang")
         .agg(F.count("*").alias("cnt"))
     )
-    dom = lang_counts.groupBy(id_col).agg(
+    dom = lang_counts.groupBy("doc_id").agg(
         F.min(
             F.struct((-F.col("cnt")).alias("nc"),
                      F.col("plang").alias("lg"))
         ).alias("b"),
         F.countDistinct("plang").cast("int").alias("n_langs"),
     )
-    return n_paras.join(dom, id_col, "left").select(
-        id_col,
+    return n_paras.join(dom, "doc_id", "left").select(
+        "doc_id",
         "n_paragraphs",
         F.coalesce("n_langs", F.lit(0)).cast("int").alias("n_langs"),
         F.coalesce(F.col("b.lg"), F.lit("none")).alias("dominant_lang"),
@@ -2321,9 +2235,7 @@ def paragraph_langs(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def compression_signal(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       level: int = 6) -> DataFrame:
+def compression_signal(df: DataFrame, level: int = 6) -> DataFrame:
     """DEFLATE compression ratio per document: ``(id, n_bytes,
     n_compressed, ratio_micros)`` with ``ratio_micros = floor(1e6 ·
     compressed/raw)``. The long-range redundancy signal the unigram
@@ -2368,12 +2280,11 @@ def compression_signal(df: DataFrame, id_col: str = "doc_id",
     )
 
     return df.select(
-        F.col(id_col), _comp(F.col(text_col)).alias("_c")
-    ).select(id_col, "_c.n_bytes", "_c.n_compressed", "_c.ratio_micros")
+        F.col("doc_id"), _comp(F.col("text")).alias("_c")
+    ).select("doc_id", "_c.n_bytes", "_c.n_compressed", "_c.ratio_micros")
 
 
-def template_leak_audit(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def template_leak_audit(df: DataFrame) -> DataFrame:
     """UNRENDERED-TEMPLATE artifact audit: ``(id, n_mustache, n_erb,
     n_jinja_tags, n_php, leaky)`` — counts of template-engine syntax
     that should never reach served text: ``{{ var }}`` (mustache/
@@ -2385,7 +2296,7 @@ def template_leak_audit(df: DataFrame, id_col: str = "doc_id",
     whole sites at once, so the per-host rollup of ``leaky`` composes
     with q300's site health card). Four codegen regexp_extract_all
     counts; zero shuffle, zero Python."""
-    t = F.col(text_col)
+    t = F.col("text")
 
     def _n(pat):
         return F.size(F.regexp_extract_all(t, F.lit(pat), 0)).cast("int")
@@ -2395,7 +2306,7 @@ def template_leak_audit(df: DataFrame, id_col: str = "doc_id",
     n_jinja = _n(r"\{%[^%}]+%\}")
     n_php = _n(r"<\?php")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_mustache.alias("n_mustache"),
         n_erb.alias("n_erb"),
         n_jinja.alias("n_jinja_tags"),
@@ -2406,8 +2317,7 @@ def template_leak_audit(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def error_leak_audit(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def error_leak_audit(df: DataFrame) -> DataFrame:
     """SERVER-ERROR leak audit — soft-500 detection: ``(id, n_php,
     n_traceback, n_java, n_sql, leaky)`` counting the four dominant
     error-output families served as page text: PHP warnings/fatals,
@@ -2418,7 +2328,7 @@ def error_leak_audit(df: DataFrame, id_col: str = "doc_id",
     origin for the q300 health card (plus an operational-exposure
     signal — leaked traces reveal paths and versions). Four codegen
     regexp counts; zero shuffle, zero Python."""
-    t = F.col(text_col)
+    t = F.col("text")
 
     def _n(pat):
         return F.size(F.regexp_extract_all(t, F.lit(pat), 0)).cast("int")
@@ -2440,7 +2350,7 @@ def error_leak_audit(df: DataFrame, id_col: str = "doc_id",
         r"ORA-\d{5}|SQLSTATE\[\w+\])"
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_php.alias("n_php"),
         n_tb.alias("n_traceback"),
         n_java.alias("n_java"),
@@ -2450,8 +2360,7 @@ def error_leak_audit(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def noncontent_page_flags(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def noncontent_page_flags(df: DataFrame) -> DataFrame:
     """NON-CONTENT page-family flags: ``(id, parked, consent_wall,
     under_construction, paywall_hint, n_families)`` — the four
     remaining systematic junk families after soft-404 (q191),
@@ -2466,7 +2375,7 @@ def noncontent_page_flags(df: DataFrame, id_col: str = "doc_id",
     hit (a consent phrase on a real article page is fine — callers
     gate on n_words, composing with q26's quality scores).
     Codegen regexp probes; zero shuffle, zero Python."""
-    t = F.col(text_col)
+    t = F.col("text")
 
     def _has(pat):
         return F.when(t.rlike(pat), 1).otherwise(0)
@@ -2488,7 +2397,7 @@ def noncontent_page_flags(df: DataFrame, id_col: str = "doc_id",
         r"subscribers)"
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         parked.cast("int").alias("parked"),
         consent.cast("int").alias("consent_wall"),
         constr.cast("int").alias("under_construction"),
@@ -2498,8 +2407,7 @@ def noncontent_page_flags(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def citation_ids(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def citation_ids(df: DataFrame) -> DataFrame:
     """SCHOLARLY-IDENTIFIER extraction: ``(id, kind, ident)`` — one
     row per DOI (``10.NNNN/suffix``), arXiv id (new ``2403.01234``
     form with optional version, or old ``math.GT/0309136`` form) or
@@ -2514,7 +2422,7 @@ def citation_ids(df: DataFrame, id_col: str = "doc_id",
     Three codegen regexp_extract_all channels + explode; DOIs strip
     trailing punctuation (sentence-final periods aren't part of the
     id). Zero shuffle, zero Python."""
-    t = F.col(text_col)
+    t = F.col("text")
     doi = F.transform(
         F.regexp_extract_all(
             t, F.lit(r"\b(10\.\d{4,9}/[^\s\"<>]+)"), 1
@@ -2532,7 +2440,7 @@ def citation_ids(df: DataFrame, id_col: str = "doc_id",
     )
     chans = [("doi", doi), ("arxiv", arxiv), ("pmid", pmid)]
     rows = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.flatten(
                 F.array(*[
@@ -2547,11 +2455,10 @@ def citation_ids(df: DataFrame, id_col: str = "doc_id",
             )
         ).alias("_e"),
     )
-    return rows.select(id_col, "_e.kind", "_e.ident")
+    return rows.select("doc_id", "_e.kind", "_e.ident")
 
 
-def math_content_signals(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def math_content_signals(df: DataFrame) -> DataFrame:
     """MATH-CONTENT detection: ``(id, n_display, n_inline,
     n_environments, n_math_symbols, is_mathy)`` — display blocks
     (``$$…$$`` / ``\\[…\\]``), inline spans (``\\(…\\)``), LaTeX
@@ -2563,7 +2470,7 @@ def math_content_signals(df: DataFrame, id_col: str = "doc_id",
     prose heuristics like q26/q100). ``is_mathy`` = any structural
     channel hit, or ≥ 5 math symbols. Codegen regexp counts; zero
     shuffle."""
-    t = F.col(text_col)
+    t = F.col("text")
 
     def _n(pat):
         return F.size(F.regexp_extract_all(t, F.lit(pat), 0)).cast("int")
@@ -2576,7 +2483,7 @@ def math_content_signals(df: DataFrame, id_col: str = "doc_id",
     )
     n_sym = _n("[∑∫∂√≤≥≠±×·→∞∈∀∃]")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_display.alias("n_display"),
         n_inline.alias("n_inline"),
         n_env.alias("n_environments"),
@@ -2587,8 +2494,7 @@ def math_content_signals(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def checksum_ids(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def checksum_ids(df: DataFrame) -> DataFrame:
     """CHECKSUM-VALIDATED identifier extraction: ``(id, kind, ident,
     valid)`` for ORCIDs (ISO 7064 mod 11-2 check digit) and ISBN-13s
     (EAN-13 weighted mod 10). Pattern matching alone drowns in false
@@ -2604,9 +2510,9 @@ def checksum_ids(df: DataFrame, id_col: str = "doc_id",
     (12−total mod 11) mod 11 with 10→X; ISBN-13: Σ d_i·(1,3,1,…)
     mod 10 = 0) — no Python anywhere. Explode is candidate-sized,
     zero shuffle."""
-    t = F.col(text_col)
+    t = F.col("text")
     orcid_rows = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(
                 t, F.lit(r"\b(\d{4}-\d{4}-\d{4}-\d{3}[\dX])\b"), 1
@@ -2624,12 +2530,12 @@ def checksum_ids(df: DataFrame, id_col: str = "doc_id",
         o_check.cast("string")
     )
     orcid = orcid_rows.select(
-        id_col, F.lit("orcid").alias("kind"), "ident",
+        "doc_id", F.lit("orcid").alias("kind"), "ident",
         F.when(F.element_at(o_digits, 16) == o_expected, 1)
         .otherwise(0).cast("int").alias("valid"),
     )
     isbn_rows = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(
                 t, F.lit(r"\b(97[89](?:-?\d){10})\b"), 1
@@ -2648,7 +2554,7 @@ def checksum_ids(df: DataFrame, id_col: str = "doc_id",
         lambda acc, x: acc + x,
     )
     isbn = isbn_rows.select(
-        id_col, F.lit("isbn13").alias("kind"), "ident",
+        "doc_id", F.lit("isbn13").alias("kind"), "ident",
         F.when(i_sum % 10 == 0, 1).otherwise(0).cast("int")
         .alias("valid"),
     )

@@ -25,9 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def domain_col(url_col="url"):
+def domain_col():
     """Hostname, e.g. per-domain grouping key (native parse_url)."""
-    return F.parse_url(F.col(url_col), F.lit("HOST"))
+    return F.parse_url(F.col("url"), F.lit("HOST"))
 
 
 def exploded_tokens(extracted: DataFrame, extra_cols=()) -> DataFrame:
@@ -210,10 +210,10 @@ def index_entries(extracted: DataFrame) -> DataFrame:
     )
 
 
-def merge_pages_by_slug(pages: DataFrame, order_col: str = "warc_ts") -> DataFrame:
+def merge_pages_by_slug(pages: DataFrame) -> DataFrame:
     """Project-JSON merge-by-slug, last-wins (json.py:197-201) as a
     window dedup: row_number over slug ordered by recency desc."""
-    w = Window.partitionBy("slug").orderBy(F.desc(order_col), F.desc("url"))
+    w = Window.partitionBy("slug").orderBy(F.desc("warc_ts"), F.desc("url"))
     return (
         pages.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

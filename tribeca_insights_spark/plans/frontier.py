@@ -17,30 +17,26 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..operators.tf import domain_col
 
 
-def schedule_fetches(frontier: DataFrame, delays: DataFrame,
-                     url_col: str = "url",
-                     delay_col: str = "crawl_delay") -> DataFrame:
+def schedule_fetches(frontier: DataFrame, delays: DataFrame) -> DataFrame:
     """(url, …) pending set + (domain, crawl_delay) dim → + (domain,
     fetch_rank, scheduled_offset_sec). Deterministic: rank by url within
     domain. Domains absent from the dim get delay 0 (the reference
     default)."""
-    f = frontier.withColumn("domain", domain_col(url_col))
+    f = frontier.withColumn("domain", domain_col())
     joined = f.join(F.broadcast(delays), "domain", "left").withColumn(
-        delay_col, F.coalesce(F.col(delay_col), F.lit(0.0))
+        "crawl_delay", F.coalesce(F.col("crawl_delay"), F.lit(0.0))
     )
-    w = Window.partitionBy("domain").orderBy(url_col)
+    w = Window.partitionBy("domain").orderBy("url")
     return (
         joined.withColumn("fetch_rank", F.row_number().over(w))
         .withColumn(
             "scheduled_offset_sec",
-            ((F.col("fetch_rank") - 1) * F.col(delay_col)).cast("double"),
+            ((F.col("fetch_rank") - 1) * F.col("crawl_delay")).cast("double"),
         )
     )
 
 
-def cache_policy(headers: DataFrame, url_col: str = "url",
-                 fetch_ts_col: str = "fetch_ts",
-                 default_ttl: int = 86400) -> DataFrame:
+def cache_policy(headers: DataFrame, default_ttl: int = 86400) -> DataFrame:
     """HTTP cache-policy TTL for recrawl scheduling (RFC 9111
     precedence): per fetched page, how long its response said it stays
     fresh — the server-declared signal a recrawl scheduler (q95's
@@ -85,18 +81,16 @@ def cache_policy(headers: DataFrame, url_col: str = "url",
         | (F.coalesce(F.col("last_modified"), F.lit("")) != "")
     )
     return headers.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         ttl.alias("ttl_s"),
-        (F.col(fetch_ts_col).cast("long") + ttl).cast("long")
+        (F.col("fetch_ts").cast("long") + ttl).cast("long")
         .alias("recrawl_after"),
         F.when(has_val, 1).otherwise(0).cast("int")
         .alias("has_validator"),
     )
 
 
-def apportion_budget(weights, total_budget: int,
-                     key_col: str = "host",
-                     weight_col: str = "weight"):
+def apportion_budget(weights, total_budget: int):
     """INTEGER budget apportionment by the largest-remainder (Hamilton)
     method: split ``total_budget`` fetch slots across hosts
     proportionally to ``weight`` (e.g. the summed change rates from
@@ -124,8 +118,8 @@ def apportion_budget(weights, total_budget: int,
     # zero/negative weights carry no claim and would null the integer
     # division when they were ALL of the input — dropped, documented
     w = weights.select(
-        F.col(key_col).alias("key"),
-        F.col(weight_col).cast("long").alias("weight"),
+        F.col("host").alias("key"),
+        F.col("weight").cast("long").alias("weight"),
     ).filter(F.col("weight") > 0)
     tot = w.agg(F.sum("weight").alias("_tw"))
     q = w.crossJoin(F.broadcast(tot)).select(
@@ -161,7 +155,7 @@ def apportion_budget(weights, total_budget: int,
     return (
         ranked.crossJoin(F.broadcast(total_floor))
         .select(
-            F.col("key").alias(key_col), "weight", "quota_floor",
+            F.col("key").alias("host"), "weight", "quota_floor",
             F.when(F.col("_rk") <= F.col("_extra"), 1).otherwise(0)
             .cast("int").alias("extra"),
             (F.col("quota_floor")

@@ -33,6 +33,14 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .pipeline import (
+    EXTRACT_OUT_SCHEMA,
+    _extract_pending,
+    _log_entries,
+    _partition_metrics,
+    _run_stats,
+)
+
 CATALOG = "ti"  # catalog name used throughout
 
 
@@ -89,19 +97,19 @@ def ddl_statements(db: str, catalog: str = CATALOG, n_buckets: int = 64):
     """CREATE statements for the three tables. The output table is
     partitioned by the url-hash ``bucket`` (the north_star partitioning);
     the log is bucket-partitioned on url so MERGE touches only matching
-    files; metrics is small and unpartitioned."""
+    files; metrics is small and unpartitioned. The output columns are
+    :data:`~.pipeline.EXTRACT_OUT_SCHEMA` plus ``run_id``, so the table
+    cannot drift from what the extraction writes."""
     q = f"{catalog}.{db}"
+    extracted_cols = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in EXTRACT_OUT_SCHEMA.fields
+    )
     return [
         f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{db}",
         f"""
         CREATE TABLE IF NOT EXISTS {q}.extracted (
-          url string, warc_ts timestamp, lang string, text string,
-          title string, meta_description string, headings array<string>,
-          images array<string>, external_links array<string>,
-          internal_links array<string>, slug string, page_hash string,
-          tokens_str string, word_count int, wf_json string,
-          bucket int, partition_id int, bytes_in bigint, wall_ms bigint,
-          run_id string
+          {extracted_cols}, run_id string
         ) USING iceberg PARTITIONED BY (bucket)
         """,
         f"""
@@ -183,8 +191,6 @@ def run_extraction_iceberg(
     is a MERGE upsert: a crash between the output append and the log MERGE
     re-extracts at most one run's urls (output rows are run_id-tagged;
     re-runs MERGE the same urls to done — idempotent)."""
-    from ..plans.pipeline import _extract_pending, _partition_metrics
-
     _require(spark, catalog)
     run_id = run_id or uuid.uuid4().hex[:12]
     ensure_tables(spark, db, catalog, n_buckets)
@@ -199,25 +205,10 @@ def run_extraction_iceberg(
     out.writeTo(f"{q}.extracted").append()  # snapshot commit #1
 
     written = spark.table(f"{q}.extracted").filter(F.col("run_id") == run_id)
-    log_entries = written.select(
-        "url",
-        F.lit(1).alias("status"),
-        F.date_format(F.current_timestamp(), "yyyy-MM-dd").alias(
-            "processed_at"
-        ),
-        F.col("bucket").cast("int").alias("bucket"),
-        F.lit(run_id).alias("run_id"),
-        F.lit(int(time.time())).cast("long").alias("seq"),
-    )
+    log_entries = _log_entries(written, run_id, int(time.time()))
     upsert_log(spark, db, log_entries, catalog)  # snapshot commit #2 (MERGE)
 
     metrics = _partition_metrics(written, run_id)
     metrics.writeTo(f"{q}.metrics").append()  # snapshot commit #3
 
-    n = written.count()
-    return {
-        "run_id": run_id,
-        "n_processed": n,
-        "wall_sec": round(time.time() - t0, 3),
-        "docs_per_sec": round(n / max(time.time() - t0, 1e-9), 1),
-    }
+    return _run_stats(run_id, written.count(), t0)

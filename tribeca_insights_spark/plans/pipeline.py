@@ -108,6 +108,28 @@ def _partition_metrics(written: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+def _log_entries(written: DataFrame, run_id: str, seq: int) -> DataFrame:
+    """Crawl-state log rows (status 1 = done) for one run's written output."""
+    return written.select(
+        "url",
+        F.lit(1).alias("status"),
+        F.date_format(F.current_timestamp(), "yyyy-MM-dd").alias("processed_at"),
+        F.col("bucket").cast("int").alias("bucket"),
+        F.lit(run_id).alias("run_id"),
+        F.lit(seq).cast("long").alias("seq"),
+    )
+
+
+def _run_stats(run_id: str, n: int, t0: float) -> dict:
+    """The stats dict an extraction run returns."""
+    return {
+        "run_id": run_id,
+        "n_processed": n,
+        "wall_sec": round(time.time() - t0, 3),
+        "docs_per_sec": round(n / max(time.time() - t0, 1e-9), 1),
+    }
+
+
 def run_extraction(
     spark: SparkSession,
     docs: DataFrame,
@@ -153,24 +175,11 @@ def run_extraction(
     written = spark.read.parquet(f"{root}/extracted").filter(
         F.col("run_id") == run_id
     )
-    seq = st.next_seq(spark, root)
-    log_entries = written.select(
-        "url",
-        F.lit(1).alias("status"),
-        F.date_format(F.current_timestamp(), "yyyy-MM-dd").alias("processed_at"),
-        F.col("bucket").cast("int").alias("bucket"),
-        F.lit(run_id).alias("run_id"),
-        F.lit(seq).cast("long").alias("seq"),
+    st.append_log(
+        spark, root, _log_entries(written, run_id, st.next_seq(spark, root))
     )
-    st.append_log(spark, root, log_entries)
 
     # 3) per-partition lineage + metrics
     st.append_metrics(spark, root, _partition_metrics(written, run_id))
 
-    n = written.count()
-    return {
-        "run_id": run_id,
-        "n_processed": n,
-        "wall_sec": round(time.time() - t0, 3),
-        "docs_per_sec": round(n / max(time.time() - t0, 1e-9), 1),
-    }
+    return _run_stats(run_id, written.count(), t0)

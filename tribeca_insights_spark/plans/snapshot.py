@@ -103,7 +103,6 @@ def scd2_history(
     log: DataFrame,
     key_cols,
     state_col: str,
-    ts_col: str = "ts",
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension history from an append-only
@@ -131,7 +130,7 @@ def scd2_history(
     the partitioning) plus codegen projects.
     """
     keys = list(key_cols)
-    order = [F.asc(ts_col)] + (
+    order = [F.asc("ts")] + (
         [F.asc(tiebreak_col)] if tiebreak_col else []
     )
     from pyspark.sql import Window
@@ -149,14 +148,12 @@ def scd2_history(
     return collapsed.select(
         *keys,
         F.col(state_col).alias("state"),
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w2).alias("valid_to"),
+        F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w2).alias("valid_to"),
     ).withColumn("is_current", F.col("valid_to").isNull())
 
 
-def change_rate_schedule(captures: DataFrame, url_col: str = "url",
-                         ts_col: str = "warc_ts",
-                         hash_col: str = "content_hash") -> DataFrame:
+def change_rate_schedule(captures: DataFrame) -> DataFrame:
     """CHANGE-RATE estimation over capture history → revisit schedule
     (Cho & Garcia-Molina, "Estimating frequency of change", TOIT
     2003 — the published model behind adaptive recrawl): per url,
@@ -183,24 +180,24 @@ def change_rate_schedule(captures: DataFrame, url_col: str = "url",
     store's SURT layout (q305)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(url_col).orderBy(ts_col)
+    w = Window.partitionBy("url").orderBy("warc_ts")
     marked = captures.select(
-        F.col(url_col),
-        F.col(ts_col),
+        F.col("url"),
+        F.col("warc_ts"),
         F.when(
-            F.lag(hash_col).over(w).isNotNull()
-            & (F.col(hash_col) != F.lag(hash_col).over(w)), 1
+            F.lag("content_hash").over(w).isNotNull()
+            & (F.col("content_hash") != F.lag("content_hash").over(w)), 1
         ).otherwise(0).alias("_chg"),
     )
-    agg = marked.groupBy(url_col).agg(
+    agg = marked.groupBy("url").agg(
         F.count("*").cast("int").alias("n_captures"),
         F.sum("_chg").cast("int").alias("n_changes"),
-        (F.unix_timestamp(F.max(ts_col))
-         - F.unix_timestamp(F.min(ts_col))).cast("bigint").alias("span_s"),
+        (F.unix_timestamp(F.max("warc_ts"))
+         - F.unix_timestamp(F.min("warc_ts"))).cast("bigint").alias("span_s"),
     )
     day = 86_400
     return agg.select(
-        url_col, "n_captures", "n_changes", "span_s",
+        "url", "n_captures", "n_changes", "span_s",
         F.when(
             F.col("span_s") > 0,
             F.expr(f"1000000L * {day}L * n_changes div span_s"),

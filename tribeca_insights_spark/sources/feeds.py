@@ -44,11 +44,7 @@ def _first(block, pattern):
     return F.regexp_extract(block, pattern, 1)
 
 
-def feed_entries(
-    feeds: DataFrame,
-    xml_col: str = "feed_xml",
-    keep_cols: tuple = (),
-) -> DataFrame:
+def feed_entries(feeds: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """One row per feed entry: (…keep_cols, url, title, published).
 
     Blocks are isolated first (``<item>``/``<entry>``), THEN fields
@@ -63,8 +59,8 @@ def feed_entries(
         *keep_cols,
         F.explode(
             F.concat(
-                F.regexp_extract_all(F.col(xml_col), F.lit(_ITEM), 0),
-                F.regexp_extract_all(F.col(xml_col), F.lit(_ENTRY), 0),
+                F.regexp_extract_all(F.col("feed_xml"), F.lit(_ITEM), 0),
+                F.regexp_extract_all(F.col("feed_xml"), F.lit(_ENTRY), 0),
             )
         ).alias("_blk"),
     )
@@ -118,8 +114,7 @@ def _encl_attr(m, name: str):
     return F.when(dq != "", dq).otherwise(sq)
 
 
-def feed_enclosures(feeds: DataFrame, xml_col: str = "feed_xml",
-                    keep_cols: tuple = ()) -> DataFrame:
+def feed_enclosures(feeds: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """One row per RSS ``<enclosure>``: (…keys, enclosure_url, mime,
     n_bytes) — the podcast/video attachment relation a multimodal
     ingest pipeline (media_metadata / av_metadata, q29/q53) reads to
@@ -129,7 +124,7 @@ def feed_enclosures(feeds: DataFrame, xml_col: str = "feed_xml",
     rows = feeds.select(
         *keep_cols,
         F.explode(
-            F.regexp_extract_all(F.col(xml_col), F.lit(_ENCLOSURE), 0)
+            F.regexp_extract_all(F.col("feed_xml"), F.lit(_ENCLOSURE), 0)
         ).alias("_e"),
     )
     e = F.col("_e")
@@ -150,8 +145,7 @@ def feed_enclosures(feeds: DataFrame, xml_col: str = "feed_xml",
 _OUTLINE = r"<outline\s[^>]*/?>"
 
 
-def opml_feeds(opml: DataFrame, xml_col: str = "opml_xml",
-               keep_cols: tuple = ()) -> DataFrame:
+def opml_feeds(opml: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """OPML subscription-list source (the interchange format feed
     readers export): one row per ``<outline>`` carrying an xmlUrl —
     (…keys, feed_url, site_url, title). Category/folder outlines (no
@@ -162,7 +156,7 @@ def opml_feeds(opml: DataFrame, xml_col: str = "opml_xml",
     rows = opml.select(
         *keep_cols,
         F.explode(
-            F.regexp_extract_all(F.col(xml_col), F.lit(_OUTLINE), 0)
+            F.regexp_extract_all(F.col("opml_xml"), F.lit(_OUTLINE), 0)
         ).alias("_o"),
     )
     o = F.col("_o")

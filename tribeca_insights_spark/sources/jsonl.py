@@ -34,8 +34,7 @@ def parse_jsonl(df: DataFrame, json_col: str, schema_ddl: str,
     )
 
 
-def json_schema_audit(df: DataFrame, json_col: str, schema_ddl: str,
-                      batch_col: str = "batch_id") -> DataFrame:
+def json_schema_audit(df: DataFrame, json_col: str, schema_ddl: str) -> DataFrame:
     """Per-batch SCHEMA-DRIFT audit: ``(batch_id, field, n_rows,
     n_present, present_micros)`` — one row per expected field plus a
     ``_corrupt`` row counting unparseable lines. The monitoring
@@ -70,7 +69,7 @@ def json_schema_audit(df: DataFrame, json_col: str, schema_ddl: str,
         )
     ]
     rows = parsed.select(
-        F.col(batch_col).alias("batch_id"),
+        F.col("batch_id"),
         F.explode(F.array(*probes)).alias("_f"),
     )
     return (

@@ -37,7 +37,6 @@ def crawl_delay_for(txt: str, user_agent: str,
 
 
 def crawl_delays(robots: DataFrame, user_agent: str,
-                 txt_col: str = "robots_txt",
                  default: float = DEFAULT_CRAWL_DELAY) -> DataFrame:
     """(…, robots_txt) → (…, crawl_delay double) — a politeness dimension
     broadcastable onto the frontier."""
@@ -48,18 +47,17 @@ def crawl_delays(robots: DataFrame, user_agent: str,
         )
 
     udf = pandas_udf(_batch, returnType=DoubleType())
-    return robots.withColumn("crawl_delay", udf(F.col(txt_col)))
+    return robots.withColumn("crawl_delay", udf(F.col("robots_txt")))
 
 
-def sitemaps_from_robots(robots: DataFrame,
-                         txt_col: str = "robots_txt") -> DataFrame:
+def sitemaps_from_robots(robots: DataFrame) -> DataFrame:
     """Sitemap discovery: every ``Sitemap:`` directive in each robots.txt
     (the standard sitemap-autodiscovery mechanism, how crawls find the
     sitemaps :mod:`.sitemap` then parses). Fully native: split to lines,
     case-insensitive prefix match, trim — one row per (…, sitemap_url);
     feeds :func:`.sitemap.sitemap_locs` → seed anti-join."""
     lines = robots.withColumn(
-        "_line", F.explode(F.split(F.col(txt_col), "\r?\n"))
+        "_line", F.explode(F.split(F.col("robots_txt"), "\r?\n"))
     )
     return (
         lines.filter(F.lower(F.trim("_line")).rlike(r"^sitemap\s*:"))
@@ -68,12 +66,11 @@ def sitemaps_from_robots(robots: DataFrame,
             F.trim(F.regexp_replace(F.trim("_line"), r"(?i)^sitemap\s*:\s*", "")),
         )
         .filter(F.length("sitemap_url") > 0)
-        .drop("_line", txt_col)
+        .drop("_line", "robots_txt")
     )
 
 
-def disallow_rules(robots: DataFrame, user_agent: str,
-                   txt_col: str = "robots_txt") -> DataFrame:
+def disallow_rules(robots: DataFrame, user_agent: str) -> DataFrame:
     """(…, path_prefix) Disallow rules effective for ``user_agent``
     (specific UA group over ``*``, RobotFileParser group semantics) — a
     dimension the frontier anti-joins on ``url path startswith prefix``.
@@ -108,9 +105,9 @@ def disallow_rules(robots: DataFrame, user_agent: str,
 
     udf = pandas_udf(_batch, returnType=ArrayType(StringType()))
     return (
-        robots.withColumn("_rules", udf(F.col(txt_col)))
+        robots.withColumn("_rules", udf(F.col("robots_txt")))
         .withColumn("path_prefix", F.explode("_rules"))
-        .drop("_rules", txt_col)
+        .drop("_rules", "robots_txt")
     )
 
 
@@ -126,8 +123,7 @@ def _rep_pattern_to_regex(p: str) -> str:
     return rx + "$" if anchor else rx
 
 
-def google_robots_rules(robots: DataFrame, user_agent: str,
-                        txt_col: str = "robots_txt") -> DataFrame:
+def google_robots_rules(robots: DataFrame, user_agent: str) -> DataFrame:
     """RFC 9309 / Google-style rule dimension: one row per Allow or
     Disallow line in the effective UA group — ``(…, allow, pattern,
     specificity, _rx)`` with ``specificity`` = raw pattern octet length
@@ -185,9 +181,9 @@ def google_robots_rules(robots: DataFrame, user_agent: str,
 
     udf = pandas_udf(_batch, returnType=rule_t)
     rules = (
-        robots.withColumn("_r", udf(F.col(txt_col)))
+        robots.withColumn("_r", udf(F.col("robots_txt")))
         .withColumn("_e", F.explode("_r"))
-        .drop("_r", txt_col)
+        .drop("_r", "robots_txt")
         .select("*", F.col("_e.allow").alias("allow"),
                 F.col("_e.pattern").alias("pattern"))
         .drop("_e")
@@ -203,8 +199,7 @@ def google_robots_rules(robots: DataFrame, user_agent: str,
 
 
 def google_robots_verdict(urls: DataFrame, rules: DataFrame,
-                          key_cols: tuple = ("doc_id",),
-                          path_col: str = "path") -> DataFrame:
+                          key_cols: tuple = ("doc_id",)) -> DataFrame:
     """Per-url RFC 9309 verdict against a rule dimension: most
     specific (longest) matching pattern wins, Allow wins length ties
     (Google semantics), no match → allowed.
@@ -216,30 +211,29 @@ def google_robots_verdict(urls: DataFrame, rules: DataFrame,
     """
     keys = list(key_cols)
     j = urls.join(F.broadcast(rules), keys, "left")
-    matched = j.filter(F.expr(f"{path_col} rlike _rx")).groupBy(
-        *keys, path_col
+    matched = j.filter(F.expr("path rlike _rx")).groupBy(
+        *keys, "path"
     ).agg(
         F.max(F.struct(
             F.col("specificity"),
             F.col("allow").cast("int").alias("_a"),
         )).alias("_w")
     ).select(
-        *keys, path_col,
+        *keys, "path",
         F.col("_w._a").alias("allowed"),
         F.col("_w.specificity").alias("spec"),
     )
     return (
-        urls.join(matched, keys + [path_col], "left")
+        urls.join(matched, keys + ["path"], "left")
         .select(
-            *keys, path_col,
+            *keys, "path",
             F.coalesce("allowed", F.lit(1)).cast("int").alias("allowed"),
             F.coalesce("spec", F.lit(0)).cast("bigint").alias("spec"),
         )
     )
 
 
-def clean_param_rules(robots: DataFrame, host_col: str = "host",
-                      txt_col: str = "robots_txt") -> DataFrame:
+def clean_param_rules(robots: DataFrame) -> DataFrame:
     """``Clean-param`` directive extraction (the Yandex robots.txt
     extension — the only ROBOTS-DECLARED channel for "these query
     parameters don't change content"): ``(host, param, path_prefix)``
@@ -255,8 +249,8 @@ def clean_param_rules(robots: DataFrame, host_col: str = "host",
     directive-sized."""
     line = F.col("_l")
     rows = robots.select(
-        F.col(host_col).alias("host"),
-        F.explode(F.split(F.col(txt_col), "\n")).alias("_l"),
+        F.col("host"),
+        F.explode(F.split(F.col("robots_txt"), "\n")).alias("_l"),
     ).filter(F.trim(line).rlike(r"(?i)^clean-param\s*:"))
     body = F.trim(F.regexp_extract(line, r"(?i)^\s*clean-param\s*:(.*)$", 1))
     params = F.split(F.regexp_extract(body, r"^(\S+)", 1), "&")
@@ -268,9 +262,7 @@ def clean_param_rules(robots: DataFrame, host_col: str = "host",
     ).filter(F.col("param") != "")
 
 
-def robots_policy_drift(old: DataFrame, new: DataFrame,
-                        host_col: str = "host",
-                        txt_col: str = "robots_txt") -> DataFrame:
+def robots_policy_drift(old: DataFrame, new: DataFrame) -> DataFrame:
     """ROBOTS-POLICY drift between two snapshots: per host —
     ``(host, n_added, n_removed, tightened, loosened)`` over the
     Disallow rule sets (a rule ADDED tightens policy: previously
@@ -285,8 +277,8 @@ def robots_policy_drift(old: DataFrame, new: DataFrame,
     def rules(df):
         line = F.col("_l")
         return df.select(
-            F.col(host_col).alias("host"),
-            F.explode(F.split(F.col(txt_col), "\n")).alias("_l"),
+            F.col("host"),
+            F.explode(F.split(F.col("robots_txt"), "\n")).alias("_l"),
         ).filter(
             F.trim(line).rlike(r"(?i)^disallow\s*:")
         ).select(
@@ -301,8 +293,8 @@ def robots_policy_drift(old: DataFrame, new: DataFrame,
         .groupBy("host").agg(F.count("*").cast("int").alias("n_added"))
     removed = r_old.join(r_new, ["host", "rule"], "left_anti") \
         .groupBy("host").agg(F.count("*").cast("int").alias("n_removed"))
-    hosts = old.select(F.col(host_col).alias("host")).unionByName(
-        new.select(F.col(host_col).alias("host"))
+    hosts = old.select(F.col("host")).unionByName(
+        new.select(F.col("host"))
     ).distinct()
     return (
         hosts.join(added, "host", "left")

@@ -26,15 +26,14 @@ from pyspark.sql import DataFrame, functions as F
 _LOC_PATTERN = r"<(?:\w+:)?loc>([^<]*)</(?:\w+:)?loc>"
 
 
-def sitemap_locs(sitemaps: DataFrame, xml_col: str = "sitemap_xml",
-                 keep_cols: tuple = ()) -> DataFrame:
+def sitemap_locs(sitemaps: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """One row per ``<loc>`` URL found in each sitemap body (trimmed,
     empties dropped — reference skips falsy ``url.text``)."""
     return (
         sitemaps.select(
             *keep_cols,
             F.explode(
-                F.regexp_extract_all(F.col(xml_col), F.lit(_LOC_PATTERN), 1)
+                F.regexp_extract_all(F.col("sitemap_xml"), F.lit(_LOC_PATTERN), 1)
             ).alias("_loc"),
         )
         .select(*keep_cols, F.trim("_loc").alias("url"))
@@ -61,11 +60,7 @@ def seed_urls(locs: DataFrame, state: DataFrame) -> DataFrame:
     return state.unionByName(new)
 
 
-def sitemap_coverage(
-    locs: DataFrame,
-    crawled: DataFrame,
-    host_col: str = "host",
-) -> DataFrame:
+def sitemap_coverage(locs: DataFrame, crawled: DataFrame) -> DataFrame:
     """Per-host sitemap↔crawl coverage audit — the two gap lists every
     crawl review reads: sitemap urls never crawled (frontier debt or
     robots/error losses) and crawled urls absent from the sitemap
@@ -82,10 +77,10 @@ def sitemap_coverage(
     nothing crawled]).
     """
     s = locs.select(
-        F.col(host_col).alias("_hs"), F.col("url").alias("url")
+        F.col("host").alias("_hs"), F.col("url")
     ).distinct().withColumn("_in_s", F.lit(1))
     c = crawled.select(
-        F.col(host_col).alias("_hc"), F.col("url").alias("url")
+        F.col("host").alias("_hc"), F.col("url")
     ).distinct().withColumn("_in_c", F.lit(1))
     j = s.join(c, "url", "full_outer").select(
         F.coalesce(F.col("_hs"), F.col("_hc")).alias("host"),
@@ -122,9 +117,7 @@ def sitemap_coverage(
 
 
 def resolve_sitemap_tree(sitemaps: DataFrame,
-                         key_cols: tuple = ("host",),
-                         url_col: str = "sitemap_url",
-                         xml_col: str = "sitemap_xml") -> DataFrame:
+                         key_cols: tuple = ("host",)) -> DataFrame:
     """Sitemap-INDEX resolution (sitemaps.org ``<sitemapindex>`` — the
     file large sites actually serve at /sitemap.xml, pointing at up to
     50k child sitemaps): one row per page URL reachable from the
@@ -140,22 +133,20 @@ def resolve_sitemap_tree(sitemaps: DataFrame,
     state store shards by, so at 10^12 pages the hop co-locates.
     """
     keys = list(key_cols)
-    is_index = F.col(xml_col).contains("<sitemapindex")
+    is_index = F.col("sitemap_xml").contains("<sitemapindex")
 
     direct = sitemap_locs(
-        sitemaps.filter(~is_index), xml_col=xml_col,
-        keep_cols=tuple(keys),
+        sitemaps.filter(~is_index), keep_cols=tuple(keys),
     ).select(*keys, "url", F.lit("direct").alias("via"))
 
     child_refs = sitemap_locs(
-        sitemaps.filter(is_index), xml_col=xml_col,
-        keep_cols=tuple(keys),
-    ).select(*keys, F.col("url").alias(url_col))
+        sitemaps.filter(is_index), keep_cols=tuple(keys),
+    ).select(*keys, F.col("url").alias("sitemap_url"))
 
-    bodies = sitemaps.select(*keys, url_col, xml_col)
+    bodies = sitemaps.select(*keys, "sitemap_url", "sitemap_xml")
     resolved = sitemap_locs(
-        child_refs.join(bodies, keys + [url_col]),
-        xml_col=xml_col, keep_cols=tuple(keys),
+        child_refs.join(bodies, keys + ["sitemap_url"]),
+        keep_cols=tuple(keys),
     ).select(*keys, "url", F.lit("index").alias("via"))
 
     return direct.unionByName(resolved)
@@ -164,8 +155,7 @@ def resolve_sitemap_tree(sitemaps: DataFrame,
 _URL_BLOCK = r"<url>.*?</url>"
 
 
-def sitemap_url_meta(sitemaps: DataFrame, xml_col: str = "sitemap_xml",
-                     keep_cols: tuple = ()) -> DataFrame:
+def sitemap_url_meta(sitemaps: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Full per-URL sitemap metadata: ``(…keys, url, lastmod,
     priority_micros, changefreq)`` — the freshness fields
     :func:`sitemap_locs` deliberately drops for the seed path, but a
@@ -185,7 +175,7 @@ def sitemap_url_meta(sitemaps: DataFrame, xml_col: str = "sitemap_xml",
         *keep_cols,
         F.explode(
             F.regexp_extract_all(
-                F.col(xml_col), F.lit("(?s)" + _URL_BLOCK), 0
+                F.col("sitemap_xml"), F.lit("(?s)" + _URL_BLOCK), 0
             )
         ).alias("_b"),
     )

@@ -181,8 +181,6 @@ def stream_session_windows(spark: SparkSession, src_dir: str,
 def stream_dedup_gate(
     docs_stream: DataFrame,
     index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "tok_str",
     n_hashes: int = 12,
     rows_per_band: int = 3,
     k: int = 12,
@@ -209,24 +207,24 @@ def stream_dedup_gate(
     from ..operators.dedup import minhash_band_structs
 
     bands = docs_stream.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             minhash_band_structs(
-                text_col, n_hashes=n_hashes,
+                "tok_str", n_hashes=n_hashes,
                 rows_per_band=rows_per_band, k=k,
             )
         ).alias("_e"),
-    ).select(id_col, F.col("_e.band").alias("band"),
+    ).select("doc_id", F.col("_e.band").alias("band"),
              F.col("_e.band_key").alias("band_key"))
     idx = index.select(
-        F.col(id_col).alias("_old_id"), "band", "band_key"
+        F.col("doc_id").alias("_old_id"), "band", "band_key"
     )
     j = bands.join(idx, ["band", "band_key"], "left")
     return (
-        j.groupBy(id_col)
+        j.groupBy("doc_id")
         .agg(F.min("_old_id").alias("matched_old_id"))
         .select(
-            id_col,
+            "doc_id",
             F.col("matched_old_id").isNotNull().alias("is_dup"),
             "matched_old_id",
         )
